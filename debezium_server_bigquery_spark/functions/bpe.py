@@ -25,8 +25,8 @@ constant, so the DuckDB twin UNROLLS the K rounds into chained CTEs
 (``_build_bpe_train_sql``): per round, a pair-count aggregate, a 1-row
 argmax, and the greedy in-word merge as a ``list_reduce`` with a
 separator-joined string accumulator (exactly the Spark ``aggregate`` fold
-re-expressed; chr(31) never occurs in the corpus, asserted cheap in the
-reduce by construction of the tokenizer's whitespace split).  This turned
+re-expressed; chr(31) never occurs inside a symbol because both paths drop
+it where the initial symbol table is built).  This turned
 the registry's last rows-only gate entry into a hash-checked row (r8
 verdict ask #4).  tests/test_bpe.py additionally pins the trainer against
 a pure-Python reference BPE bit-for-bit, including tie-breaks, on both
@@ -49,7 +49,11 @@ def _sq(s: str) -> str:
 
 
 _SEP = "\x1f"  # unit separator; never inside a symbol — the SAME invariant
-# the DuckDB twin's list_reduce string accumulator already relies on
+# the DuckDB twin's list_reduce string accumulator already relies on.
+# _SYMS guards it: the initial symbols are single characters, and a chr(31)
+# character is dropped there (merges only concatenate symbols), exactly as
+# the twin's state0 drops it.
+_SYMS = "filter(split(word, ''), x -> x <> '' AND x <> chr(31))"
 
 
 def _merge_expr(a: str, b: str, col: str = "syms") -> str:
@@ -77,7 +81,12 @@ def _merge_expr(a: str, b: str, col: str = "syms") -> str:
     ``a`` is non-empty).  Equivalence: 0 mismatches vs the fold over a
     2M-word randomized vocabulary, plus the reference-BPE pins in
     tests/test_bpe.py; measured 6.3× faster on that vocabulary
-    (OPTIMIZATION_r14.md)."""
+    (OPTIMIZATION_r14.md).
+
+    Caveat: ``array_join`` without a null replacement silently drops NULL
+    elements, so a NULL symbol would vanish from its word instead of
+    failing.  Symbols come from ``split`` (see ``_SYMS``) and are never
+    NULL."""
     a, b, ab = _sq(a), _sq(b), _sq(a + b)
     s2 = _SEP * 2
     return (
@@ -137,7 +146,7 @@ def train_bpe_merges(
     # the symbol table is vocabulary-sized (every distinct word), so its
     # materialization must survive executor loss (sources/tables.py).
     syms = checkpoint_parquet(
-        words.withColumn("syms", F.expr("filter(split(word, ''), x -> x <> '')")),
+        words.withColumn("syms", F.expr(_SYMS)),
         "dsbq_bpe_",
     )
     merges: list[tuple[int, str, str, str, int]] = []
@@ -176,7 +185,7 @@ def bpe_encode_words(words: DataFrame, merges: list[tuple]) -> DataFrame:
     folds, no Python on the executors.
     """
     out = words.withColumn(
-        "tokens", F.expr("filter(split(word, ''), x -> x <> '')")
+        "tokens", F.expr(_SYMS)
     )
     for _rank, a, b, *_rest in merges:
         out = out.withColumn("tokens", F.expr(_merge_expr(a, b, col="tokens")))
@@ -222,7 +231,7 @@ def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     row alongside the rows-only ``bpe_train_merges``."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     syms = word_frequencies(docs).withColumn(
-        "syms", F.expr("filter(split(word, ''), x -> x <> '')")
+        "syms", F.expr(_SYMS)
     )
     return (
         _pair_counts(syms)
@@ -239,7 +248,7 @@ def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_FIRST_MERGE_SQL = r"""
 WITH words AS (
-  SELECT w AS word, COUNT(*) AS freq
+  SELECT replace(w, chr(31), '') AS word, COUNT(*) AS freq
   FROM documents, UNNEST(regexp_split_to_array(lower(text), '\s+')) AS t(w)
   WHERE w <> ''
   GROUP BY w
@@ -274,7 +283,7 @@ def _build_bpe_train_sql(k: int) -> str:
     parts = [
         r"""state0 AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS freq,
-    list_filter(regexp_split_to_array(w, ''), c -> c <> '') AS syms
+    list_filter(regexp_split_to_array(w, ''), c -> c <> '' AND c <> chr(31)) AS syms
   FROM documents, UNNEST(regexp_split_to_array(lower(text), '\s+')) AS t(w)
   WHERE w <> ''
   GROUP BY w

@@ -23,7 +23,8 @@ Plan shape (all declarative, Catalyst picks physical ops):
 4. delete semantics: winner rows with ``__op = 'd'`` are dropped unless
    ``keep_deletes`` (upsert-keep-deletes, StreamConsumerConfig.java:71-73),
    in which case they persist with ``__deleted = true``.
-5. dynamic-partition-overwrite the affected buckets only.
+5. rewrite the affected buckets only, in one table commit that also
+   records the epoch and the rows written (operators/table.py).
 
 PK-less tables fall back to append — ``doUpsert``/``doTableHasPrimaryKey``
 parity (StreamBigqueryChangeConsumer.java:163-174).
@@ -66,11 +67,10 @@ def merge_upsert(
     # target scan and bounds the partition rewrite.
     # bounded-collect: O(buckets) affected-bucket list; see comment above
     buckets = [r[0] for r in src.select(KEY_BUCKET).distinct().collect()]
-    live = table.read_raw() if table.exists() else None
-    table.guard_create(live is not None)
+    live = table.read_raw()
     # allow-field-addition gate: new batch columns are dropped instead of
     # evolving the target (StreamBigqueryChangeConsumer.java:300).
-    src = table.restrict_to_live(src, live).withColumn(_SRC_RANK, F.lit(1))
+    src = table.restrict_to_live(src).withColumn(_SRC_RANK, F.lit(1))
     if live is not None:
         live = live.filter(F.col(KEY_BUCKET).isin(buckets)).withColumn(
             _SRC_RANK, F.lit(0)
@@ -87,5 +87,6 @@ def merge_upsert(
         result = winner
     else:
         result = winner.filter(F.col("__op") != "d")
-    table.overwrite_partitions(result.drop(_SRC_RANK), expected_partitions=buckets)
-    table._commit_epoch(epoch_id, -1)
+    table.overwrite_partitions(
+        result.drop(_SRC_RANK), expected_partitions=buckets, epoch_id=epoch_id
+    )

@@ -6,11 +6,11 @@ stream appends back off 500 ms x1.1 for at most 5 retries
 (StreamDataWriter.java:73-79), and the stream writer is recreated at most
 3 times.  Spark already retries *task* failures inside a job; what it does
 not cover is a transient failure of the whole driver-side write action
-(filesystem hiccup between a bucket overwrite and its marker commit, a
+(filesystem hiccup between a data write and its log commit, a
 flaky object-store list, ...).  ``with_retry`` wraps those actions with the
-same budget shape; idempotency comes from the existing epoch markers —
-a replayed action observes the marker and no-ops, so retrying is always
-semantics-preserving.
+same budget shape; idempotency comes from the table commit log — a write
+is invisible until its commit publishes, and a replayed epoch finds its
+commit and no-ops, so retrying is always semantics-preserving.
 """
 
 from __future__ import annotations

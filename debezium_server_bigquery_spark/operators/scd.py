@@ -162,9 +162,9 @@ def scd2_merge_batch(
     open version per key through the window as a further optimization.
     Cost is bounded by churn × history depth per batch, never table size.
 
-    Idempotency: the same epoch marker scheme as merge_upsert guards
-    replayed micro-batches, and exact re-deliveries inside the window are
-    collapsed by a FULL-ROW dropDuplicates — deduping on the ordering key
+    Idempotency: the epoch rides in the table commit, as in merge_upsert,
+    so a replayed micro-batch is skipped; exact re-deliveries inside the
+    window are collapsed by a FULL-ROW dropDuplicates — deduping on the ordering key
     alone would collapse two genuinely different events sharing
     (key, ts, op) into one arbitrary survivor (silent data loss when the
     configured tiebreak does not uniquify the stream).
@@ -181,13 +181,13 @@ def scd2_merge_batch(
     keys = list(table.key_cols)
     if not keys:
         raise ValueError("scd2_merge_batch requires key columns")
-    live = table.read_raw() if table.exists() else None
-    table.guard_create(live is not None)
+    live = table.read_raw()
     # allow-field-addition gate: like merge_upsert, a disabled gate drops
     # batch columns the stored table does not know instead of evolving it.
-    batch = table.restrict_to_live(batch, live)
+    batch = table.restrict_to_live(batch)
+    buckets: list = []
     if live is None:
-        hist = scd2_from_changes(
+        result = scd2_from_changes(
             batch.dropDuplicates(),
             keys,
             order_col,
@@ -196,39 +196,32 @@ def scd2_merge_batch(
             tiebreak,
             keep_tombstones=True,
         )
-        table.overwrite_partitions(table.with_partition_col(hist))
-        table._commit_epoch(epoch_id, -1)
-        return
-
-    src = table.with_partition_col(batch)
-    # bounded-collect: O(buckets) affected-bucket list (fixed bucket count)
-    buckets = [r[0] for r in src.select(KEY_BUCKET).distinct().collect()]
-    if not buckets:  # empty micro-batch: nothing to rewrite
-        table._commit_epoch(epoch_id, -1)
-        return
-    live = live.filter(F.col(KEY_BUCKET).isin(buckets))
-    bkeys = batch.select(*keys).distinct()
-    touched = live.join(bkeys, keys, "left_semi")
-    untouched = live.join(bkeys, keys, "left_anti").drop(KEY_BUCKET)
-    # Replay ALL stored change columns (everything except the derived
-    # SCD2/bucket columns) — intersecting with batch.columns would NULL
-    # out stored-only columns for every touched key when a later batch
-    # stops carrying one.  unionByName fills each side's missing columns.
-    derived = {"valid_from", "valid_to", "is_current", "version_num", KEY_BUCKET}
-    stored_change_cols = [c for c in touched.columns if c not in derived]
-    redo_src = (
-        touched.select(*stored_change_cols)  # original change rows
-        .unionByName(batch, allowMissingColumns=True)
-        .dropDuplicates()  # full row: collapse only exact re-deliveries
-    )
-    recomputed = scd2_from_changes(
-        redo_src, keys, order_col, op_col, delete_op, tiebreak, keep_tombstones=True
-    )
-    result = untouched.unionByName(recomputed, allowMissingColumns=True)
+    else:
+        src = table.with_partition_col(batch)
+        # bounded-collect: O(buckets) affected-bucket list (fixed bucket count)
+        buckets = [r[0] for r in src.select(KEY_BUCKET).distinct().collect()]
+        live = live.filter(F.col(KEY_BUCKET).isin(buckets))
+        bkeys = batch.select(*keys).distinct()
+        touched = live.join(bkeys, keys, "left_semi")
+        untouched = live.join(bkeys, keys, "left_anti").drop(KEY_BUCKET)
+        # Replay ALL stored change columns (everything except the derived
+        # SCD2/bucket columns) — intersecting with batch.columns would NULL
+        # out stored-only columns for every touched key when a later batch
+        # stops carrying one.  unionByName fills each side's missing columns.
+        derived = {"valid_from", "valid_to", "is_current", "version_num", KEY_BUCKET}
+        stored_change_cols = [c for c in touched.columns if c not in derived]
+        redo_src = (
+            touched.select(*stored_change_cols)  # original change rows
+            .unionByName(batch, allowMissingColumns=True)
+            .dropDuplicates()  # full row: collapse only exact re-deliveries
+        )
+        recomputed = scd2_from_changes(
+            redo_src, keys, order_col, op_col, delete_op, tiebreak, keep_tombstones=True
+        )
+        result = untouched.unionByName(recomputed, allowMissingColumns=True)
     table.overwrite_partitions(
-        table.with_partition_col(result), expected_partitions=buckets
+        table.with_partition_col(result), expected_partitions=buckets, epoch_id=epoch_id
     )
-    table._commit_epoch(epoch_id, -1)
 
 
 def state_as_of(

@@ -27,13 +27,20 @@ path — ``(order_col, op-priority)`` with a monotone ``__stage_seq`` tie
 break so a later micro-batch beats an earlier one on exact ties, exactly
 like consecutive eager merges (reference ConcurrentHashMap.merge keeps
 the new value on ties, StreamBigqueryChangeConsumer.java:212-218).
+
+State lives in two commit logs (operators/table.py) and nowhere else.
+The staging table's log holds the staged epochs, and its version numbers
+are the stage sequence: a staged batch's ``__stage_seq`` is the version
+its append takes, and truncating staging is one commit that removes every
+file.  The base table's log holds the compactions: each compaction MERGE
+commits the epoch ``__compact_<v>``, where ``v`` is the version its
+staging truncation takes, so the largest such ``v`` says how far staging
+has been folded in.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +51,7 @@ from debezium_server_bigquery_spark.operators.table import ParquetTable
 
 _STAGE_SEQ = "__stage_seq"
 _SRC_RANK = "__src_rank"
+_COMPACT = "__compact_"
 
 
 class StagedUpsertTable:
@@ -71,128 +79,56 @@ class StagedUpsertTable:
         # pipeline's destination walk) skip underscore-prefixed entries, so
         # the staging area never masquerades as a destination table.
         base = table.path.rstrip("/")
-        self._staging_path = os.path.join(
-            os.path.dirname(base), "_staging_" + os.path.basename(base)
-        )
-        # Durable metadata OUTSIDE the staging data dir: epoch markers and
-        # the stage-seq high-water mark must survive compaction (which
-        # truncates staging wholesale).  Markers inside staging would lose
-        # exactly-once replay protection across a compaction boundary: a
-        # streaming retry of an already-staged epoch arriving just after an
-        # auto-compact would re-stage and re-merge the batch.
-        self._meta_dir = os.path.join(
-            os.path.dirname(base), "_stagemeta_" + os.path.basename(base)
-        )
-        self.staging = self._new_staging()
-        self._staged = self._staged_on_disk()
-
-    def _new_staging(self) -> ParquetTable:
-        return ParquetTable(
-            self.table.spark,
-            self._staging_path,
-            key_cols=self.table.key_cols,
+        self.staging = ParquetTable(
+            table.spark,
+            os.path.join(os.path.dirname(base), "_staging_" + os.path.basename(base)),
+            key_cols=table.key_cols,
             mode="upsert",
-            n_buckets=self.table.n_buckets,
-            clustering_field=self.table.clustering_field,
+            n_buckets=table.n_buckets,
+            clustering_field=table.clustering_field,
         )
-
-    # -- durable staging metadata (survives compaction truncation) ---------
-    def _stage_marker(self, epoch_id: int | str | None) -> str | None:
-        if epoch_id is None:
-            return None
-        return os.path.join(self._meta_dir, "_epochs", f"{epoch_id}.json")
-
-    def stage_epoch_committed(self, epoch_id: int | str | None) -> bool:
-        marker = self._stage_marker(epoch_id)
-        return marker is not None and os.path.exists(marker)
-
-    def _commit_stage_epoch(self, epoch_id: int | str | None) -> None:
-        marker = self._stage_marker(epoch_id)
-        if marker is None:
-            return
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        # Atomic publish — stage_epoch_committed checks existence, so a
-        # crash mid-write must not leave a truncated marker that reads as
-        # committed (same contract as ParquetTable._commit_epoch).
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"epoch": epoch_id, "seq": self._staged}, fh)
-        os.replace(tmp, marker)
-
-    @property
-    def _seq_path(self) -> str:
-        return os.path.join(self._meta_dir, "next_seq.json")
-
-    def _persist_seq(self) -> None:
-        os.makedirs(self._meta_dir, exist_ok=True)
-        with open(self._seq_path, "w", encoding="utf-8") as fh:
-            json.dump({"next_seq": self._staged}, fh)
-
-    def _staged_on_disk(self) -> int:
-        """Recover the stage counter after a restart.
-
-        The counter is GLOBALLY monotone (never reset by compaction) so a
-        compaction's MERGE epoch id derived from it is unique per
-        generation; recovery takes the max of the persisted high-water mark
-        and what the staged rows themselves say.
-        """
-        persisted = 0
-        try:
-            with open(self._seq_path, encoding="utf-8") as fh:
-                persisted = int(json.load(fh)["next_seq"])
-        except (OSError, ValueError, KeyError):
-            pass
-        raw = self.staging.read_raw() if self.staging.exists() else None
-        if raw is None or _STAGE_SEQ not in raw.columns:
-            return persisted
-        # bounded-collect: one-row max aggregate (O(1) scalar)
-        row = raw.agg(F.max(_STAGE_SEQ)).collect()[0][0]
-        return persisted if row is None else max(persisted, int(row) + 1)
 
     # -- write path ---------------------------------------------------------
     def apply(self, batch: DataFrame, epoch_id: int | str | None = None) -> None:
-        """Stage one micro-batch; auto-compact at the staleness bound."""
-        if self.stage_epoch_committed(epoch_id):
+        """Stage one micro-batch; auto-compact at the staleness bound.  The
+        staged epoch rides in the staging commit, which survives the
+        truncation, so a replay is skipped on either side of a compaction."""
+        if self.staging.epoch_committed(epoch_id):
             return
+        if self._pending_batches() < 0:
+            # a compaction merged but never truncated staging: finish it
+            # before staging more, so its rows are never merged twice
+            self.compact()
         deduped = dedup_last_writer(
             batch, self.table.key_cols, order_col=self.order_col, tiebreak=self.tiebreak
-        ).withColumn(_STAGE_SEQ, F.lit(self._staged))
-        # Marker lives in the durable meta dir, not the staging data dir; a
-        # crash between append and marker replays the append, which
-        # converges (identical rows, identical seq -> same LWW winner).
-        self.staging.append(deduped, epoch_id=None)
-        self._staged += 1
-        self._persist_seq()
-        self._commit_stage_epoch(epoch_id)
+        ).withColumn(_STAGE_SEQ, F.lit(self.staging.version() + 1))
+        self.staging.append(deduped, epoch_id=epoch_id)
         if self._pending_batches() >= self.staleness_batches:
             self.compact()
 
     def _pending_batches(self) -> int:
-        """Distinct staged (uncompacted) batch count, from the seq counter
-        vs the last compaction's high-water mark."""
-        return self._staged - self._compacted_through()
-
-    @property
-    def _compacted_path(self) -> str:
-        return os.path.join(self._meta_dir, "compacted_through.json")
-
-    def _compacted_through(self) -> int:
-        try:
-            with open(self._compacted_path, encoding="utf-8") as fh:
-                return int(json.load(fh)["through_seq"])
-        except (OSError, ValueError, KeyError):
-            return 0
+        """Batches staged since the last compaction: staging versions past
+        the one its truncation took."""
+        through = max(
+            (
+                int(m["epoch"][len(_COMPACT):])
+                for m in self.table.epoch_metrics()
+                if m["epoch"].startswith(_COMPACT)
+            ),
+            default=-1,
+        )
+        return self.staging.version() - through
 
     def compact(self) -> None:
         """Fold all staged rows into the base table; truncate staging.
 
-        The MERGE carries a deterministic epoch id derived from the
-        (globally monotone) stage-seq high-water mark, so a crash between
-        the MERGE and the staging truncation replays as a no-op MERGE on
-        restart instead of re-applying the staged rows.
+        The MERGE commits the epoch ``__compact_<v>`` with ``v`` the
+        staging version the truncation will take, so a crash between the
+        MERGE and the truncation replays as a no-op MERGE followed by the
+        truncation.
         """
-        staged = self.staging.read_raw() if self.staging.exists() else None
-        if staged is None or not staged.head(1):
+        staged = self.staging.read_raw()
+        if staged is None:
             return
         winner = dedup_last_writer(
             staged,
@@ -206,13 +142,9 @@ class StagedUpsertTable:
             keep_deletes=self.keep_deletes,
             order_col=self.order_col,
             tiebreak=self.tiebreak,
-            epoch_id=f"__compact_{self._staged}",
+            epoch_id=f"{_COMPACT}{self.staging.version() + 1}",
         )
-        shutil.rmtree(self.staging.path, ignore_errors=True)
-        os.makedirs(self._meta_dir, exist_ok=True)
-        with open(self._compacted_path, "w", encoding="utf-8") as fh:
-            json.dump({"through_seq": self._staged}, fh)
-        self.staging = self._new_staging()
+        self.staging.truncate()
 
     # -- read paths ---------------------------------------------------------
     def read_stale(self) -> DataFrame:
@@ -221,10 +153,10 @@ class StagedUpsertTable:
 
     def read_current(self) -> DataFrame:
         """Exact current state: base overlaid with staged rows."""
-        base = self.table.read_raw() if self.table.exists() else None
-        staged = self.staging.read_raw() if self.staging.exists() else None
-        if staged is None or not staged.head(1):
+        staged = self.staging.read_raw()
+        if staged is None:
             return self.read_stale()
+        base = self.table.read_raw()
         staged = staged.withColumn(_SRC_RANK, F.lit(1))
         if base is not None:
             base = base.withColumn(_SRC_RANK, F.lit(0)).withColumn(

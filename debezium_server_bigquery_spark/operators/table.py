@@ -19,13 +19,30 @@ Spark-native equivalent: a directory-backed parquet table.
   write, so parquet row-group min/max stats give data skipping on PK
   lookups — the BigQuery clustering analog.
 - **Schema evolution** -> ``unionByName(allowMissingColumns=True)`` against
-  the live schema + ``mergeSchema`` on read (reference: stream mode ALTERs
-  the table :314-345; batch mode sets ALLOW_FIELD_ADDITION :72-77).
+  the live schema; the table schema is the union of every batch's columns
+  (reference: stream mode ALTERs the table :314-345; batch mode sets
+  ALLOW_FIELD_ADDITION :72-77).
 
-Exactly-once: appends are guarded by an epoch marker file per
-(table, epoch_id) — replaying a failed micro-batch skips already-committed
-epochs, the parquet-native version of Delta's ``txnAppId`` guard
-(risk noted in SURVEY §7).
+Commit log.  Each table keeps one append-only log, ``_log/<version>.json``.
+An entry lists the data files it adds and removes (relative path,
+partition value, bytes, rows), the epoch it commits with the row count the
+write job observed, and — only where they change — the schema and layout.
+The table is the replay of its log: a handle caches that snapshot and reads
+only newer entries, readers scan exactly the live files with the logged
+schema (no directory listing, no footer inference), and an epoch some
+entry carries is never applied twice — Delta's ``txnAppId`` guard, the
+idempotent-sink half of Structured Streaming's exactly-once contract.  A
+batch lands whole or not at all, like the reference's one Load Job or one
+Storage Write commit.
+
+Crash contract: a write puts its files under fresh names, then publishes
+the next version with one atomic no-clobber create (temp file +
+``os.link``).  Nothing the latest version references is deleted or
+overwritten before the next version is published; the files a version
+removes are deleted right after it.  A failure before the publish leaves
+the previous version intact, and readers ignore the unreferenced files it
+left behind; after the publish the commit is durable and a replay of its
+epoch is skipped.
 """
 
 from __future__ import annotations
@@ -33,10 +50,16 @@ from __future__ import annotations
 import json
 import logging
 import os
-from collections.abc import Sequence
+import shutil
+import threading
+import uuid
+from collections import Counter
+from collections.abc import Iterable, Sequence
+from contextlib import suppress
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from debezium_server_bigquery_spark.operators.retry import (
     DEFAULT_POLICY,
@@ -48,6 +71,7 @@ log = logging.getLogger(__name__)
 
 PART_MONTH = "__part_month"
 KEY_BUCKET = "__kb"
+LOG_DIR = "_log"
 
 # Time-partition granularities, parity with the reference's partition-type
 # HOUR/DAY/MONTH/YEAR (BatchConsumerConfig.java:39-49,
@@ -63,12 +87,12 @@ PART_FORMATS = {
 
 
 class ParquetTable:
-    """A destination table: parquet directory + engine-tracked metadata.
+    """A destination table: parquet data files + their commit log.
 
-    Metadata (primary key, partition mode, clustering columns) lives in
-    ``_engine_meta.json`` beside the data — Spark does not enforce
-    constraints, but the engine tracks PK like the reference declares
-    BigQuery ``tableConstraints`` (BaseRecordConverter.java:181-196).
+    The log also records the layout (primary key, partition mode,
+    clustering columns) — Spark does not enforce constraints, but the
+    engine tracks PK like the reference declares BigQuery
+    ``tableConstraints`` (BaseRecordConverter.java:181-196).
     """
 
     def __init__(
@@ -128,71 +152,174 @@ class ParquetTable:
             # fail at construction, not on the first write
             validate_zorder(self.zorder_cols)
         self._zcache: DataFrame | None = None
+        # Log snapshot as of ``_version`` (-1: no table yet), advanced only
+        # by _refresh, under _lock: an upload thread that outlived its
+        # batch timeout may still use this handle while the replay does.
+        # _files maps each live file's relative path to [partition value,
+        # bytes, rows]; _epochs maps each committed epoch to what its
+        # commit wrote.
+        self._lock = threading.Lock()
+        self._version = -1
+        self._files: dict[str, list] = {}
+        self._epochs: dict[str, dict] = {}
+        self._schema: T.StructType | None = None
+        self._layout: dict | None = None
 
     @classmethod
     def open(cls, spark: SparkSession, path: str) -> "ParquetTable":
-        """Reconstruct a table handle from its stored ``_engine_meta.json``
-        — what an out-of-band maintenance command (CLI ``optimize``) uses
-        to operate on a table the pipeline created."""
-        with open(os.path.join(path, "_engine_meta.json"), encoding="utf-8") as fh:
-            meta = json.load(fh)
-        return cls(
-            spark,
-            path,
-            key_cols=tuple(meta.get("key_cols", ())),
-            mode=meta.get("mode", "append"),
-            n_buckets=meta.get("n_buckets", 32),
-            # clustering_field is stored explicitly — the derived
-            # "clustering" list also embeds PK columns, so it cannot be
-            # used to recover the field; without this an `optimize`
-            # compaction would re-sort rewritten partitions with the
-            # default clustering even on custom-clustered tables.
-            clustering_field=meta.get("clustering_field", "__source_ts_ms"),
-            partition_type=meta.get("partition_type", "MONTH"),
-            partition_field=meta.get("partition_field", "__ts_ms"),
-            allow_field_addition=meta.get("allow_field_addition", True),
-            create_if_needed=meta.get("create_if_needed", True),
-            zorder_cols=tuple(meta.get("zorder", ())),
-        )
+        """Reconstruct a table handle from the layout its log records —
+        what an out-of-band maintenance command (CLI ``optimize``) uses to
+        operate on a table the pipeline created.  The layout stores
+        ``clustering_field`` itself: the derived clustering list also
+        embeds PK columns, so it could not recover the field, and an
+        ``optimize`` would re-sort custom-clustered tables by default."""
+        probe = cls(spark, path)
+        if not probe.exists():
+            raise FileNotFoundError(f"no table log under {path}")
+        return cls(spark, path, **probe._layout)
 
-    # -- metadata ----------------------------------------------------------
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.path, "_engine_meta.json")
+    # -- commit log --------------------------------------------------------
+    def _layout_now(self) -> dict:
+        return {
+            "key_cols": self.key_cols,
+            "mode": self.mode,
+            "n_buckets": self.n_buckets,
+            "clustering_field": self.clustering_field,
+            "partition_type": self.partition_type,
+            "partition_field": self.partition_field,
+            "allow_field_addition": self.allow_field_addition,
+            "create_if_needed": self.create_if_needed,
+            "zorder_cols": self.zorder_cols,
+        }
+
+    def _entry_path(self, version: int) -> str:
+        return os.path.join(self.path, LOG_DIR, f"{version}.json")
+
+    def _refresh(self) -> None:
+        """Apply the log entries newer than the cached snapshot.  Entries
+        are published whole (link of a finished temp file), so any entry
+        that exists is complete."""
+        with self._lock:
+            while True:
+                try:
+                    with open(self._entry_path(self._version + 1), encoding="utf-8") as fh:
+                        entry = json.load(fh)
+                except FileNotFoundError:
+                    return
+                self._apply(entry)
+
+    def _apply(self, entry: dict) -> None:
+        add, remove = entry.get("add", []), entry.get("remove", [])
+        for rel, *_ in remove:
+            self._files.pop(rel, None)
+        for rel, *meta in add:
+            self._files[rel] = meta
+        if "epoch" in entry:
+            self._epochs[entry["epoch"]] = {
+                "rows": entry["rows"],
+                "files_added": len(add),
+                "bytes_added": sum(a[2] for a in add),
+                "files_removed": len(remove),
+                "bytes_removed": sum(r[2] for r in remove),
+            }
+        if "schema" in entry:
+            self._schema = T.StructType.fromJson(entry["schema"])
+        if "layout" in entry:
+            self._layout = entry["layout"]
+        self._version += 1
+
+    def _commit(
+        self,
+        add: list[list] = (),
+        remove: Iterable[str] = (),
+        epoch_id: int | str | None = None,
+        rows: int = 0,
+        schema: T.StructType | None = None,
+    ) -> None:
+        """Publish the next version by one atomic no-clobber create, then
+        delete the files it removes.  A retried publish that finds its own
+        entry already in place (the link landed, the call still failed)
+        counts as done; a different entry there is a concurrent writer."""
+        entry: dict = {}
+        if epoch_id is not None:
+            entry.update(epoch=str(epoch_id), rows=rows)
+        if add:
+            entry["add"] = add
+        remove = [[rel, *self._files[rel]] for rel in remove]
+        if remove:
+            entry["remove"] = remove
+        if schema is not None and schema != self._schema:
+            entry["schema"] = schema.jsonValue()
+        if self._layout_now() != self._layout:
+            entry["layout"] = self._layout_now()
+        payload = json.dumps(entry, separators=(",", ":")).encode()
+        final = self._entry_path(self._version + 1)
+        tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        with open(tmp, "wb") as fh:
+            fh.write(payload)
+
+        def publish() -> None:
+            try:
+                os.link(tmp, final)
+            except FileExistsError:
+                with open(final, "rb") as fh:
+                    if fh.read() != payload:
+                        raise RuntimeError(
+                            f"concurrent commit to {self.path} at {final}"
+                        ) from None
+
+        try:
+            with_retry(publish, policy=self.retry_policy, describe=f"commit {self.path}")
+        finally:
+            with suppress(OSError):
+                os.remove(tmp)
+        self._refresh()
+        # The new version no longer references these: delete them (and any
+        # partition directory left empty).  A failure here loses nothing —
+        # an unreferenced file is invisible to readers.
+        for rel, *_ in remove:
+            with suppress(OSError):
+                os.remove(os.path.join(self.path, rel))
+        for d in {rel.split("/", 1)[0] for rel, *_ in remove}:
+            with suppress(OSError):
+                os.rmdir(os.path.join(self.path, d))
 
     def exists(self) -> bool:
-        return os.path.exists(self.meta_path)
+        self._refresh()
+        return self._version >= 0
 
-    def _write_meta(self, schema_json: str) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self.meta_path, "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "key_cols": self.key_cols,
-                    "mode": self.mode,
-                    "n_buckets": self.n_buckets,
-                    "partition_type": self.partition_type,
-                    "partition_field": self.partition_field,
-                    "clustering": self.clustering_cols(),
-                    "clustering_field": self.clustering_field,
-                    "allow_field_addition": self.allow_field_addition,
-                    "create_if_needed": self.create_if_needed,
-                    "zorder": self.zorder_cols,
-                    "schema": json.loads(schema_json),
-                },
-                fh,
-            )
+    def version(self) -> int:
+        """Latest published log version (-1 when the table does not exist)."""
+        self._refresh()
+        return self._version
+
+    def epoch_committed(self, epoch_id: int | str | None) -> bool:
+        if epoch_id is None:
+            return False
+        self._refresh()
+        return str(epoch_id) in self._epochs
+
+    def epoch_metrics(self) -> list[dict]:
+        """Committed epochs in commit order, as records ``{"epoch": str,
+        "rows": int, "files_added", "bytes_added", "files_removed",
+        "bytes_removed"}`` — the engine's consumer-metrics surface.  The
+        reference polls Debezium MBeans for processed-row counts
+        (MaxBatchSizeWait reads them, docs list the JMX names); here every
+        commit persisted the row count its write job observed, so the
+        metrics are exact, free, and survive restarts.  A MERGE-type
+        commit counts every row it wrote, carried-over rows of the
+        rewritten partitions included."""
+        self._refresh()
+        return [{"epoch": e, **m} for e, m in self._epochs.items()]
 
     def persist_layout(self) -> None:
-        """Rewrite stored metadata from this handle's CURRENT settings
-        without touching data files — how an optimize-time z-order
-        override becomes durable for future ``open()`` calls.  No-op on a
-        table that has not been created yet (first write stores it)."""
-        if not self.exists():
-            return
-        with open(self.meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
-        self._write_meta(json.dumps(meta["schema"]))
+        """Commit this handle's CURRENT layout without touching data files
+        — how an optimize-time z-order override becomes durable for future
+        ``open()`` calls.  No-op on a table that has not been created yet
+        (its first write records the layout) or whose layout is unchanged."""
+        if self.exists() and self._layout_now() != self._layout:
+            self._commit()
 
     def clustering_cols(self) -> list[str]:
         """<=3 PK columns + clustering field — BigQuery's 4-field limit,
@@ -220,8 +347,6 @@ class ParquetTable:
         if self.partition_field not in df.columns:
             return df.withColumn(part_col, F.lit("unknown"))
         ts = F.col(self.partition_field)
-        from pyspark.sql import types as T
-
         if isinstance(
             df.schema[self.partition_field].dataType, (T.LongType, T.IntegerType)
         ):
@@ -233,80 +358,33 @@ class ParquetTable:
 
     # -- io ----------------------------------------------------------------
     def read(self) -> DataFrame:
-        try:
-            df = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        except Exception:
-            # Table exists but holds zero data files (e.g. a MERGE deleted
-            # every row): serve an empty frame with the last-known schema.
-            if not self.exists():
-                raise
-            from pyspark.sql import types as T
-
-            with open(self.meta_path, "r", encoding="utf-8") as fh:
-                meta = json.load(fh)
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(meta["schema"])
-            )
-        return df.drop(self.partition_col())
+        raw = self.read_raw()
+        if raw is not None:
+            return raw.drop(self.partition_col())
+        if self._schema is None:
+            raise FileNotFoundError(f"no table log under {self.path}")
+        # Table exists but holds zero data files (e.g. a MERGE deleted
+        # every row): serve an empty frame with the last-known schema.
+        return self.spark.createDataFrame([], self._schema)
 
     def read_raw(self) -> DataFrame | None:
         """Live rows including the partition column, or None if the table
-        holds no data files yet."""
-        try:
-            return self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        except Exception:
+        holds no data files.  Exactly the live files of the latest version
+        are scanned under the logged schema, so no footer-inference job
+        runs and no directory is listed; the partition column comes from
+        the file paths (``basePath``), typed exactly as a directory read
+        would infer it.  Lists longer than
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` make
+        Spark stat the files in a job of their own; session.py raises
+        that threshold so the scan is the only job."""
+        self._refresh()
+        if not self._files:
             return None
-
-    def _epoch_marker(self, epoch_id: int | str | None) -> str | None:
-        if epoch_id is None:
-            return None
-        return os.path.join(self.path, "_epochs", f"{epoch_id}.json")
-
-    def epoch_committed(self, epoch_id: int | str | None) -> bool:
-        marker = self._epoch_marker(epoch_id)
-        return marker is not None and os.path.exists(marker)
-
-    def _commit_epoch(self, epoch_id: int | str | None, rows: int) -> None:
-        marker = self._epoch_marker(epoch_id)
-        if marker is None:
-            return
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        # Atomic publish (tmp + rename): epoch_committed checks existence,
-        # so a crash mid-write must never leave a truncated marker that
-        # reads as committed; metrics() readers also json.load these.
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"epoch": epoch_id, "rows": rows}, fh)
-        os.replace(tmp, marker)
-
-    def epoch_metrics(self) -> list[dict]:
-        """Committed epoch markers as records ``{"epoch": str, "rows": int}``
-        — the engine's consumer-metrics surface.  The reference polls
-        Debezium MBeans for processed-row counts (MaxBatchSizeWait reads
-        them, docs list the JMX names); here every committed epoch already
-        persisted the row count it observed DURING the write job, so the
-        metrics are exact, free, and survive restarts.  Driver-side
-        listing of O(#epochs) small files — metadata, not data.
-        MERGE epochs record rows = -1 (the post-merge bucket state is not
-        a per-epoch row count; operators/merge.py commits the marker for
-        idempotency only)."""
-        d = os.path.join(self.path, "_epochs")
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(d, name), "r", encoding="utf-8") as fh:
-                    rec = json.load(fh)
-            except (OSError, ValueError):
-                # pre-atomic-write legacy truncation, or a marker deleted
-                # between listdir and open: a broken metrics row must not
-                # take down the whole surface.
-                continue
-            out.append({"epoch": str(rec.get("epoch")), "rows": int(rec.get("rows", 0))})
-        return out
+        return (
+            self.spark.read.schema(self._schema)
+            .option("basePath", self.path)
+            .parquet(*[os.path.join(self.path, rel) for rel in self._files])
+        )
 
     def _cluster_sort(self, df: DataFrame) -> DataFrame:
         zcols = [c for c in self.zorder_cols if c in df.columns]
@@ -352,107 +430,101 @@ class ParquetTable:
             finally:
                 self._zcache = None
 
-    def _write_append(self, out: DataFrame) -> None:
-        """The raw append write action (separable for fault injection)."""
-        out.write.mode("append").partitionBy(self.partition_col()).parquet(self.path)
+    def write_files(self, out: DataFrame, dest: str) -> None:
+        """The raw Spark write action (separable for fault injection)."""
+        out.write.mode("overwrite").partitionBy(self.partition_col()).parquet(dest)
 
-    def guard_create(self, live_exists: bool) -> None:
-        """create-if-needed parity (StreamBigqueryChangeConsumer.java:291).
+    def _write(
+        self,
+        out: DataFrame,
+        epoch_id: int | str | None,
+        replace: Iterable[object] | None = None,
+    ) -> None:
+        """Land ``out`` as new files and publish them in one commit.
 
-        A table whose every row was deleted still EXISTS (its meta file
-        survives an all-bucket delete — ``read()`` serves it as an empty
-        frame), so existence is ``self.exists() or live data present``.
+        ``replace=None`` appends; otherwise the commit also removes every
+        live file of the partitions ``out`` writes and of ``replace`` (a
+        partition listed there that came back empty is replaced with
+        nothing).  The write job runs under the T7 retry budget and counts
+        its rows with ``DataFrame.observe`` — no extra pass over the data.
+        Its files are then moved from a private directory to fresh names in
+        their partition directories and only then published, so a failure
+        at any step leaves the previous version whole.
         """
-        if not (live_exists or self.exists()) and not self.create_if_needed:
+        if not self.exists() and not self.create_if_needed:
+            # create-if-needed parity (StreamBigqueryChangeConsumer.java:291)
             raise ValueError(
                 f"table {self.path} does not exist and create-if-needed is false"
             )
+        import pyarrow.parquet as pq
 
-    def known_columns(self, live: DataFrame | None) -> list[str] | None:
-        """Column names the table currently knows: live data if present,
-        else the meta-recorded schema (an emptied table keeps its schema);
-        None when the table has never been created."""
-        if live is not None:
-            return list(live.columns)
-        if self.exists():
-            with open(self.meta_path, "r", encoding="utf-8") as fh:
-                meta = json.load(fh)
-            return [f["name"] for f in meta["schema"]["fields"]]
-        return None
+        part_col = self.partition_col()
+        token = uuid.uuid4().hex[:12]
+        tmp = os.path.join(self.path, f"_tmp_{token}")
 
-    def restrict_to_live(self, df: DataFrame, live: DataFrame | None) -> DataFrame:
+        def attempt() -> Observation:
+            # fresh Observation per attempt: one Observation serves exactly
+            # one action, and a failed job must not leave a stale metric;
+            # nor may a failed attempt's files join the next one's.
+            shutil.rmtree(tmp, ignore_errors=True)
+            o = Observation()
+            self.write_files(out.observe(o, F.count(F.lit(1)).alias("rows")), tmp)
+            return o
+
+        add: list[list] = []
+        try:
+            obs = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}")
+            for d in sorted(os.listdir(tmp)):
+                if not d.startswith(f"{part_col}="):
+                    continue
+                os.makedirs(os.path.join(self.path, d), exist_ok=True)
+                for name in sorted(os.listdir(os.path.join(tmp, d))):
+                    if name.endswith(".parquet"):
+                        src = os.path.join(tmp, d, name)
+                        rel = f"{d}/{token}-{len(add)}.parquet"
+                        meta = [d.split("=", 1)[1], os.path.getsize(src)]
+                        meta.append(pq.read_metadata(src).num_rows)
+                        os.rename(src, os.path.join(self.path, rel))
+                        add.append([rel, *meta])
+        finally:
+            self._release_zcache()
+            shutil.rmtree(tmp, ignore_errors=True)
+        remove = []
+        if replace is not None:
+            parts = {a[1] for a in add} | {str(v) for v in replace}
+            remove = [rel for rel, meta in self._files.items() if meta[0] in parts]
+        known = self._schema.fields if self._schema is not None else []
+        names = {f.name for f in known} | {part_col}
+        schema = T.StructType(
+            known + [f for f in out.schema.fields if f.name not in names]
+        )
+        self._commit(add, remove, epoch_id, int(obs.get["rows"]), schema)
+
+    def restrict_to_live(self, df: DataFrame) -> DataFrame:
         """Drop columns the table does not know when field addition is
         disabled (BatchBigqueryChangeConsumer.java:72,
         StreamBigqueryChangeConsumer.java:300 gate the schema update)."""
-        if self.allow_field_addition:
+        if self.allow_field_addition or not self.exists():
             return df
-        cols = self.known_columns(live)
-        if cols is None:
-            return df
-        known = set(cols) | {self.partition_col()}
+        known = set(self._schema.fieldNames()) | {self.partition_col()}
         extra = [c for c in df.columns if c not in known]
         return df.drop(*extra) if extra else df
 
     def append(self, df: DataFrame, epoch_id: int | str | None = None) -> None:
-        """S3 analog — append a uniform-schema batch, evolving the table
-        schema if the batch adds columns.
-
-        The write runs under the T7 bounded-retry budget.  A retried append
-        is safe: Spark's output committer only publishes files at job
-        commit, so a failed attempt leaves nothing visible, and a replay of
-        an already-committed epoch is skipped by the marker check.
-
-        The epoch marker records the exact row count written, measured by
-        ``DataFrame.observe`` DURING the write job — the consumer-metrics
-        analog (the reference polls Debezium MBeans for processed counts)
-        with zero extra pass over the data.
-        """
+        """S3 analog — append a batch, evolving the table schema if the
+        batch adds columns.  One commit carries the files, the epoch and
+        the exact row count written; a replay of a committed epoch is
+        skipped.  Columns the batch lacks read back as NULL."""
         if self.epoch_committed(epoch_id):
             return
-        from pyspark.sql import Observation
-
-        out = self.with_partition_col(df)
-        live = self.read_raw() if self.exists() else None
-        self.guard_create(live is not None)
-        out = self.restrict_to_live(out, live)
-        if live is not None:
-            missing = [f for f in live.schema.fields if f.name not in out.columns]
-            for f in missing:
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        out = self._cluster_sort(out)
-
-        def attempt() -> Observation:
-            # fresh Observation per attempt: one Observation serves exactly
-            # one action, and a failed job must not leave a stale metric.
-            o = Observation()
-            self._write_append(out.observe(o, F.count(F.lit(1)).alias("rows")))
-            return o
-
-        try:
-            obs = with_retry(
-                attempt, policy=self.retry_policy, describe=f"append {self.path}"
-            )
-        finally:
-            self._release_zcache()
-        # Record what was actually written (restriction may have dropped
-        # batch columns; evolution may have added live ones).
-        self._write_meta(out.drop(self.partition_col()).schema.json())
-        self._commit_epoch(epoch_id, int(obs.get["rows"]))
+        out = self.restrict_to_live(self.with_partition_col(df))
+        self._write(self._cluster_sort(out), epoch_id)
 
     def partition_file_counts(self) -> dict[str, int]:
-        """Data-file count per partition directory (driver-side listing —
-        the metastore-catalog analog; partition count, not row count)."""
-        out: dict[str, int] = {}
-        prefix = f"{self.partition_col()}="
-        if not os.path.isdir(self.path):
-            return out
-        for d in os.listdir(self.path):
-            full = os.path.join(self.path, d)
-            if d.startswith(prefix) and os.path.isdir(full):
-                out[d] = sum(
-                    1 for f in os.listdir(full) if f.endswith(".parquet")
-                )
-        return out
+        """Live data-file count per partition directory, from the log —
+        partition count, not row count."""
+        self._refresh()
+        return Counter(rel.split("/", 1)[0] for rel in self._files)
 
     def compact(
         self, max_files_per_partition: int = 8, files_per_partition: int = 1
@@ -466,10 +538,9 @@ class ParquetTable:
         scale.  One pass: select partitions holding more than
         ``max_files_per_partition`` data files, shuffle them once on the
         partition column (plus a bounded salt when one file per partition
-        would be too big), and swap the rewritten directories in via the
-        same staged-overwrite path MERGE uses — readers never observe a
-        half-compacted partition.  Returns the number of partitions
-        compacted.
+        would be too big), and replace them in one commit like a MERGE —
+        readers never observe a half-compacted partition.  Returns the
+        number of partitions compacted.
         """
         fragged = [
             d
@@ -480,10 +551,7 @@ class ParquetTable:
             return 0
         part_col = self.partition_col()
         values = [d.split("=", 1)[1] for d in fragged]
-        raw = self.read_raw()
-        if raw is None:
-            return 0
-        subset = raw.filter(F.col(part_col).cast("string").isin(values))
+        subset = self.read_raw().filter(F.col(part_col).cast("string").isin(values))
         if files_per_partition > 1:
             salt = F.pmod(
                 F.xxhash64(*[F.col(c) for c in (self.key_cols or subset.columns[:1])]),
@@ -501,21 +569,26 @@ class ParquetTable:
         tables.  ``keep_from`` is a partition value in this table's
         granularity format (e.g. ``'2024-01'`` for MONTH): lexicographic
         comparison is chronological for every PART_FORMATS pattern.  A
-        metadata-only operation (directory drops — at cluster scale, the
-        metastore partition-drop); returns the expired partition values.
-        Upsert (key-bucketed) tables refuse: their partitions are not time.
+        metadata-only operation (one commit removing their files);
+        returns the expired partition values.  Upsert (key-bucketed)
+        tables refuse: their partitions are not time.
         """
         if self.mode == "upsert":
             raise ValueError("expire_partitions applies to time-partitioned tables")
-        import shutil
-
-        expired = []
-        for d in sorted(self.partition_file_counts()):
-            value = d.split("=", 1)[1]
-            if value != "unknown" and value < keep_from:
-                shutil.rmtree(os.path.join(self.path, d))
-                expired.append(value)
+        self._refresh()
+        expired = sorted(
+            {m[0] for m in self._files.values() if m[0] != "unknown" and m[0] < keep_from}
+        )
+        if expired:
+            self._commit(remove=[r for r, m in self._files.items() if m[0] in expired])
         return expired
+
+    def truncate(self) -> None:
+        """Remove every live file in one commit; schema, layout and
+        committed epochs remain."""
+        self._refresh()
+        if self._files:
+            self._commit(remove=list(self._files))
 
     def backfill_time_partitions(
         self, df: DataFrame, partitions: Sequence[str]
@@ -539,65 +612,19 @@ class ParquetTable:
         self.overwrite_partitions(out, expected_partitions=partitions)
 
     def overwrite_partitions(
-        self, df: DataFrame, expected_partitions: Sequence[object] = ()
+        self,
+        df: DataFrame,
+        expected_partitions: Sequence[object] = (),
+        epoch_id: int | str | None = None,
     ) -> None:
         """Replace whole partitions with the content of ``df`` — parquet-
-        native copy-on-write, Hive ``INSERT OVERWRITE ... PARTITION`` style.
+        native copy-on-write, Hive ``INSERT OVERWRITE ... PARTITION`` style,
+        in one log commit that also records ``epoch_id``.
 
-        ``df`` may (and in a MERGE, does) read from this very table, so a
-        direct in-place dynamic overwrite would delete input files mid-scan.
-        Instead the result is fully materialized into a staging directory
-        first, then partition directories are swapped in — at cluster scale
-        the swap is the metastore's partition-location update, here a local
-        rename.  A partition the caller intended to rewrite that came back
-        empty (``expected_partitions``) is dropped — "replace with nothing"
-        (the MERGE deleted every key in that bucket).
+        ``df`` may (and in a MERGE, does) read from this very table: the
+        replaced files are deleted only after the new version is published.
+        A partition the caller intended to rewrite that came back empty
+        (``expected_partitions``) is dropped — "replace with nothing" (the
+        MERGE deleted every key in that bucket).
         """
-        import shutil
-        import uuid
-
-        part_col = self.partition_col()
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex[:8]}")
-        out = self._cluster_sort(df)
-        # mode("overwrite") makes a retried staging write idempotent.
-        try:
-            with_retry(
-                lambda: out.write.mode("overwrite").partitionBy(part_col).parquet(staging),
-                policy=self.retry_policy,
-                describe=f"stage-overwrite {self.path}",
-            )
-        finally:
-            self._release_zcache()
-        try:
-            staged = {
-                d
-                for d in os.listdir(staging)
-                if d.startswith(f"{part_col}=") and os.path.isdir(os.path.join(staging, d))
-            }
-
-            def swap() -> None:
-                # Idempotent per directory: a partition already moved by a
-                # previous attempt (source gone) is skipped, so the T7 retry
-                # wrapper can safely replay a partially-completed swap —
-                # the FS-hiccup window between overwrite and marker commit.
-                for d in staged:
-                    src = os.path.join(staging, d)
-                    target = os.path.join(self.path, d)
-                    if not os.path.exists(src):
-                        continue
-                    if os.path.exists(target):
-                        shutil.rmtree(target)
-                    os.replace(src, target)
-                for value in expected_partitions:
-                    d = f"{part_col}={value}"
-                    if d not in staged:
-                        stale = os.path.join(self.path, d)
-                        if os.path.exists(stale):
-                            shutil.rmtree(stale)
-
-            with_retry(
-                swap, policy=self.retry_policy, describe=f"swap {self.path}"
-            )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        self._write_meta(df.drop(part_col).schema.json())
+        self._write(self._cluster_sort(df), epoch_id, replace=expected_partitions)

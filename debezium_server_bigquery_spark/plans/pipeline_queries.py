@@ -6,7 +6,7 @@ declarative plans), these entries run the actual engine — CdcPipeline ->
 routing -> dedup -> ParquetTable append / merge_upsert -> parquet on disk —
 then read the materialized destination tables back.  The DuckDB oracle
 recomputes the expected final state from raw events, so a hash match proves
-the physical write path (bucketing, partition swap, delete application,
+the physical write path (bucketing, partition rewrite, delete application,
 meta coercion) end-to-end, the way the reference's @QuarkusTest integration
 tests assert on live BigQuery tables (SURVEY §5).
 """
@@ -512,7 +512,7 @@ def pipeline_lazy_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_metrics_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consumer-metrics surface through the gate: two append epochs
     (events split by id parity), then ``CdcPipeline.metrics()`` — every
-    committed (table, epoch) marker must report the exact row count the
+    (table, epoch) commit must report the exact row count the
     write observed (the Debezium MBean processed-counts analog)."""
     p = CdcPipeline(
         spark, scratch_dir("dsbq_metrics_"), mode="append"
@@ -536,10 +536,11 @@ def pipeline_replay_idempotent_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     """S7 offset-store semantics under the gate: the stream splits into
     two micro-batches and the SECOND is applied TWICE with the same epoch
     id — a foreachBatch replay after a checkpoint rollback.  The epoch
-    marker (``operators/table.py`` ``epoch_committed``, the
-    BigqueryOffsetBackingStore.java resume-point analog) must make the
-    re-delivery a no-op.  Append mode makes the guard observable in the
-    output: without the marker the replay would double epoch 1's row
+    recorded in the table's commit log (``operators/table.py``
+    ``epoch_committed``, the BigqueryOffsetBackingStore.java resume-point
+    analog) must make the re-delivery a no-op.  Append mode makes the
+    guard observable in the output: without it the replay would double
+    epoch 1's row
     counts and event-id sums; the oracle applies every event exactly
     once."""
     p = CdcPipeline(spark, scratch_dir("dsbq_replay_"), mode="append")
@@ -547,7 +548,7 @@ def pipeline_replay_idempotent_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     e1 = cdc.filter(F.col("event_id") % 2 == 1)
     p.process_batch(cdc.filter(F.col("event_id") % 2 == 0), epoch_id=0)
     p.process_batch(e1, epoch_id=1)
-    p.process_batch(e1, epoch_id=1)  # replayed epoch — marker must skip it
+    p.process_batch(e1, epoch_id=1)  # replayed epoch — the log must skip it
     df = _union_tables(p, ["user_id", "event_id", "__op"])
     return (
         df.groupBy("table_name", "__op")
@@ -1008,11 +1009,12 @@ def pipeline_retry_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     500 ms x1.1 for 5 retries, StreamDataWriter.java:73-79) must converge
     to the EXACT no-fault final state.
 
-    The injection point is ``ParquetTable._write_append`` — the separable
+    The injection point is ``ParquetTable.write_files`` — the separable
     raw write action with_retry wraps.  Retrying it is semantics-preserving
-    because Spark's output committer publishes files only at job commit: a
-    failed attempt leaves nothing visible, so the retried job lands
-    exactly-once and the oracle is the plain append oracle, unchanged.
+    because a table publishes files only in its log commit, after the
+    write: a failed attempt leaves nothing visible, so the retried job
+    lands exactly-once and the oracle is the plain append oracle,
+    unchanged.
     The fault counter is in-process closure state (no filesystem markers,
     no wall clock), so the query is deterministic under any number of gate
     re-runs; if injection never fires the query raises instead of passing
@@ -1029,19 +1031,19 @@ def pipeline_retry_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             t = super().table_for(destination)
             if fresh:
                 t.retry_policy = NO_WAIT_POLICY  # keep the gate fast
-                orig = t._write_append
+                orig = t.write_files
                 state = {"tripped": False}
 
-                def flaky_write(out, _orig=orig, _state=state, _dest=destination):
+                def flaky_write(out, dest, _orig=orig, _state=state, _dest=destination):
                     if not _state["tripped"]:
                         _state["tripped"] = True
                         injected.append(_dest)
                         raise RuntimeError(
                             f"injected transient write failure for {_dest}"
                         )
-                    _orig(out)
+                    _orig(out, dest)
 
-                t._write_append = flaky_write
+                t.write_files = flaky_write
             return t
 
     target = scratch_dir("dsbq_e2e_")
@@ -1079,7 +1081,7 @@ def pipeline_backfill_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     replication, a correction feed doubles the value of every
     ``event_id % 13 == 0`` row; each destination rewrites ONLY the time
     partitions containing corrected rows via
-    ``ParquetTable.backfill_time_partitions`` (staged copy-on-write swap,
+    ``ParquetTable.backfill_time_partitions`` (copy-on-write, one commit,
     untouched months never move) — the reprocess-one-partition operation
     every warehouse runs when an upstream bug is fixed.
 
@@ -1088,7 +1090,7 @@ def pipeline_backfill_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     though partition VALUES themselves render in session time; the
     touched-partition list is an O(months) driver collect (the same
     metadata class as MERGE's bucket list).  sum_event_id pins row
-    identity (no loss, no duplication across the swap)."""
+    identity (no loss, no duplication across the rewrite)."""
     p = _run_pipeline(spark, sf_dir, mode="append")
     for dest in sorted(p.tables):
         t = p.tables[dest]

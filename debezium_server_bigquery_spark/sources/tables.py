@@ -7,6 +7,7 @@ and column pruning; never ``collect`` here.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +40,21 @@ def scratch_dir(prefix: str) -> str:
 # cost ~135 ms of driver time PER CALL on the r13 host — the k-core chain
 # makes 14 checkpoint calls per build, so warm plan construction paid
 # ~2 s of footer reads alone (OPTIMIZATION_r13.md §graph_kcore_supply).
-_CHECKPOINT_MEMO: dict[tuple[str, int], tuple[str, object]] = {}
+# The semantic hash covers the scanned PATHS, not what is under them, so
+# the key also carries every input file's size and mtime: a path rewritten
+# in the same process misses instead of serving the old contents, while
+# the immutable testdata keeps hitting.
+_CHECKPOINT_MEMO: dict[tuple[str, int, tuple], tuple[str, object]] = {}
+
+
+def _input_stamp(df: DataFrame) -> tuple:
+    """(path, size, mtime_ns) of every file ``df`` scans."""
+    stamp = []
+    for uri in sorted(df.inputFiles()):
+        path = unquote(urlparse(uri).path)
+        st = os.stat(path)
+        stamp.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
 
 
 def _as_nullable(dt):
@@ -83,13 +98,18 @@ def checkpoint_parquet(df: DataFrame, prefix: str) -> DataFrame:
     checkpoint table" pattern, where a memory-only persist could not hold
     the substrate anyway.
 
-    Memoized per logical plan (see ``_CHECKPOINT_MEMO``): the write job runs
-    once per distinct (prefix, plan) in the interpreter's lifetime; later
-    invocations return a scan of the existing copy."""
-    key: tuple[str, int] | None
+    Memoized per logical plan and input files (see ``_CHECKPOINT_MEMO``):
+    the write job runs once per distinct (prefix, plan, inputs) in the
+    interpreter's lifetime; later invocations return a scan of the
+    existing copy."""
+    key: tuple[str, int, tuple] | None
     try:
-        key = (prefix, df._jdf.queryExecution().analyzed().semanticHash())
-    except Exception:  # pragma: no cover - py4j surface drift
+        key = (
+            prefix,
+            df._jdf.queryExecution().analyzed().semanticHash(),
+            _input_stamp(df),
+        )
+    except Exception:  # py4j surface drift, or an input file vanished
         key = None
     if key is not None:
         memo = _CHECKPOINT_MEMO.get(key)

@@ -21,8 +21,8 @@ column-pruned to one slim column).  A crash between the two appends
 replays cleanly: the batch matches its own orphaned signatures, but those
 corpus_docs are absent from the table, so the rows are still admitted
 (duplicate signatures in the index are harmless — matching counts
-DISTINCT bands).  Epoch markers on the corpus table make full replays
-no-ops.
+DISTINCT bands).  The epoch each corpus commit carries makes full
+replays no-ops.
 """
 
 from __future__ import annotations
@@ -142,8 +142,9 @@ class DedupIngestPipeline:
         novel.persist()
         try:
             if novel.limit(1).count() == 0:
-                # still commit the epoch: an all-duplicate batch is done.
-                self.table._commit_epoch(epoch_id, 0)
+                # still commit the epoch (zero rows): an all-duplicate
+                # batch is done.
+                self.table.append(novel, epoch_id=epoch_id)
                 return
             # signatures BEFORE rows (see module docstring's crash/replay
             # contract): orphaned signatures are filtered by the corpus

@@ -20,7 +20,7 @@ micro-batch (small); the recompute scan prunes to the touched groups
 (predicate pushdown; partition pruning when the base is laid out by a
 group-functional column); the state table is key-bucketed exactly like
 the upsert MERGE target, so the swap rewrites only the buckets holding
-touched groups via the same staged-overwrite path — maintenance cost
+touched groups in one table commit, like the MERGE — maintenance cost
 tracks batch size, never table size.
 """
 

@@ -13,7 +13,8 @@ One Structured Streaming query replaces the reference's consumer hierarchy:
 Checkpointing subsumes the reference's BigQuery offset store (S7):
 source offsets + sink commit log live in the checkpoint dir
 (BigqueryOffsetBackingStore.java is replaced wholesale, SURVEY §1.5).
-Epoch markers on each table give idempotent re-delivery on restart.
+The epoch each table commit carries gives idempotent re-delivery on
+restart.
 
 Per-table writes run in a thread pool (T6 parity — the reference bounds
 parallel uploads with a semaphore over virtual threads,
@@ -93,7 +94,7 @@ class CdcPipeline:
     # debezium.sink.batch.concurrent-uploads.timeout-minutes
     # (CommonConfig.java:32-34): bound on the whole parallel upload batch;
     # expiry cancels pending tasks and fails the micro-batch (the epoch
-    # replays, markers make completed tables no-ops).
+    # replays, committed epochs make completed tables no-ops).
     concurrent_uploads_timeout_minutes: float = 60.0
     dedup_order_col: str = "__source_ts_ns"  # ...upsert-dedup-column
     dedup_tiebreak: tuple[str, ...] = ()  # extra deterministic ordering cols
@@ -349,7 +350,7 @@ class CdcPipeline:
                         raise UploadCancelled(
                             f"upload {dest} aborted before schema group {gi}"
                         )
-                    # Composite marker id: "epoch.group" can never collide
+                    # Composite epoch id: "epoch.group" can never collide
                     # across epochs (an int-arithmetic scheme like e*16+g
                     # would alias epoch e+1 group 0 once a batch carries >16
                     # schema groups, silently skipping real data on replay).
@@ -516,10 +517,14 @@ class CdcPipeline:
         return writer.start()
 
     def metrics(self) -> DataFrame:
-        """Per-(table, epoch) processed-row counts as a DataFrame — the
+        """Per-(table, epoch) row counts as a DataFrame — the
         consumer-metrics analog (the reference exposes processed counts
-        via Debezium MBeans; here they come from the epoch markers each
-        committed write persisted, exact and restart-surviving)."""
+        via Debezium MBeans; here they come from the table commits, exact
+        and restart-surviving).  ``rows`` is what the epoch's commit wrote:
+        the appended rows, or every row of the partitions a MERGE
+        rewrote.  In lazy mode a destination also lists its staged epochs
+        (rows staged after dedup) beside its ``__compact_<v>`` MERGEs.
+        Covers the destinations this pipeline has opened."""
         from pyspark.sql import types as T
 
         schema = T.StructType(
@@ -529,10 +534,16 @@ class CdcPipeline:
                 T.StructField("rows", T.LongType()),
             ]
         )
+        lazy = self.mode == "upsert_lazy" and self.key_cols
         recs = [
-            {"table_name": dest, **m}
+            {"table_name": dest, "epoch": m["epoch"], "rows": m["rows"]}
             for dest, table in sorted(self.tables.items())
-            for m in table.epoch_metrics()
+            for t in (
+                [table, self.lazy_for(dest).staging]
+                if lazy and table.mode == "upsert"
+                else [table]
+            )
+            for m in t.epoch_metrics()
         ]
         return self.spark.createDataFrame(recs, schema)
 

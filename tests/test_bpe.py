@@ -16,7 +16,8 @@ from debezium_server_bigquery_spark.functions.bpe import (
 
 
 def _py_bpe(word_freq: dict[str, int], k: int):
-    syms = {w: list(w) for w in word_freq}
+    # chr(31) is the merge separator: the symbol table drops it
+    syms = {w: [c for c in w if c != "\x1f"] for w in word_freq}
     merges = []
     for rank in range(1, k + 1):
         counts: dict[tuple[str, str], int] = {}
@@ -90,8 +91,9 @@ def test_bpe_property_matches_python(spark, wf):
 
 
 def test_bpe_symbols_with_quotes_and_backslashes(spark):
-    # symbols are spliced into SQL expressions — escaping must hold
-    wf = {"a'b": 3, "a\\b": 2, "ab": 5}
+    # symbols are spliced into SQL expressions — escaping must hold; a
+    # chr(31) (the merge separator) inside a word is dropped, not merged
+    wf = {"a'b": 3, "a\\b": 2, "ab": 5, "b\x1fa\x1f\x1fb": 4}
     assert _spark_bpe(spark, wf, 3) == _py_bpe(wf, 3)
 
 

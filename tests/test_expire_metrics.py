@@ -1,4 +1,4 @@
-"""Partition expiration + observed row counts in epoch markers."""
+"""Partition expiration + observed row counts in the commit log."""
 
 from __future__ import annotations
 
@@ -53,27 +53,54 @@ def test_expire_refuses_upsert_tables(spark, tmp_path):
 def test_epoch_marker_records_observed_row_count(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"), mode="append")
     t.append(_rows(spark, range(17), "2024-01"), epoch_id=7)
-    marker = os.path.join(str(tmp_path / "t"), "_epochs", "7.json")
-    with open(marker, encoding="utf-8") as fh:
+    entry = os.path.join(str(tmp_path / "t"), "_log", "0.json")
+    with open(entry, encoding="utf-8") as fh:
         meta = json.load(fh)
-    assert meta == {"epoch": 7, "rows": 17}
+    assert (meta["epoch"], meta["rows"]) == ("7", 17)
+    assert sum(a[3] for a in meta["add"]) == 17  # per-file rows agree
+    [m] = ParquetTable(spark, t.path).epoch_metrics()  # a fresh handle
+    assert (m["epoch"], m["rows"], m["files_removed"]) == ("7", 17, 0)
+    assert m["files_added"] == len(meta["add"]) and m["bytes_added"] > 0
 
 
 def test_pipeline_metrics_surface(spark, tmp_path):
-    """CdcPipeline.metrics(): per-(table, epoch) processed-row counts read
-    off the epoch markers — exact for appends, -1 sentinel for MERGEs."""
+    """CdcPipeline.metrics(): per-(table, epoch) row counts read off the
+    table commits — exact in append, upsert and lazy-upsert mode, and
+    again from a new pipeline on the same root."""
     from pyspark.sql import functions as F
 
     from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline
 
-    def batch(ids, dest="t1"):
-        return _rows(spark, ids, "2024-01").withColumn(
-            "destination", F.lit(dest)
+    def batch(ids, ts):
+        return (
+            _rows(spark, ids, "2024-01")
+            .withColumn("destination", F.lit("t1"))
+            .withColumn("__op", F.lit("u"))
+            .withColumn("__source_ts_ns", F.lit(ts).cast("long"))
         )
 
-    pipe = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append")
-    pipe.process_batch(batch([1, 2, 3]), epoch_id=0)
-    pipe.process_batch(batch([4, 5]), epoch_id=1)
-    rows = {r["epoch"]: r["rows"] for r in pipe.metrics().collect()}
-    assert rows == {"0.0": 3, "1.0": 2}  # epoch.group markers, exact counts
-    assert sum(rows.values()) == pipe.read_table("t1").count()
+    def metrics(pipe):
+        return {r["epoch"]: r["rows"] for r in pipe.metrics().collect()}
+
+    # one bucket: a MERGE rewrites, and so counts, the whole table
+    kw = {"key_cols": ("id",), "n_buckets": 1, "max_staleness_batches": 2}
+    want = {
+        # appends count the batch
+        "append": {"0.0": 3, "1.0": 2},
+        # a MERGE counts every row it wrote: 3, then 3 + 1 new key
+        "upsert": {"0.0": 3, "1.0": 4},
+        # staged rows per batch, then the compaction's MERGE
+        "upsert_lazy": {"0.0": 3, "1.0": 2, "__compact_2": 4},
+    }
+    for mode, expect in want.items():
+        root = str(tmp_path / mode)
+        pipe = CdcPipeline(spark, root, mode=mode, **kw)
+        pipe.process_batch(batch([1, 2, 3], 1), epoch_id=0)
+        pipe.process_batch(batch([3, 4], 2), epoch_id=1)
+        assert metrics(pipe) == expect, mode
+        if mode == "append":
+            assert sum(expect.values()) == pipe.read_table("t1").count()
+        # restart: a new pipeline reads the same counts back from the log
+        again = CdcPipeline(spark, root, mode=mode, **kw)
+        again.read_table("t1")
+        assert metrics(again) == expect, mode

@@ -121,20 +121,25 @@ def test_epoch_idempotency(spark, tmp_path):
 
 
 def test_leftover_staging_dir_is_invisible(spark, tmp_path):
-    """Crash recovery: a staged-overwrite directory abandoned by a killed
-    process (underscore-prefixed) must be invisible to readers and must
-    not corrupt the next MERGE."""
+    """Crash recovery: what a process killed mid-commit leaves behind — a
+    private write directory and a data file moved into a bucket but never
+    published — must be invisible to readers and must not corrupt the
+    next MERGE."""
     import os
+    import shutil
 
     t = _table(spark, tmp_path, "t8")
     merge_upsert(t, _batch(spark, [(1, 1, "a", "c", 1), (2, 2, "b", "c", 2)]))
     before = {(r.c_id, r.c_data) for r in t.read().collect()}
 
-    # simulate a crash mid-overwrite: staging dir with parquet inside
-    stale = os.path.join(t.path, "_staging_deadbeef")
-    _batch(spark, [(9, 9, "ghost", "c", 9)]).write.mode("overwrite").parquet(
-        os.path.join(stale, "__key_bucket=0")
-    )
+    # simulate a crash mid-commit: parquet in a private write dir, and an
+    # unreferenced file inside a live bucket directory
+    stale = os.path.join(t.path, "_tmp_deadbeef")
+    ghost = _batch(spark, [(9, 9, "ghost", "c", 9)])
+    ghost.write.mode("overwrite").parquet(os.path.join(stale, "__kb=0"))
+    bucket = sorted(d for d in os.listdir(t.path) if d.startswith("__kb="))[0]
+    name = next(f for f in os.listdir(os.path.join(stale, "__kb=0")) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(stale, "__kb=0", name), os.path.join(t.path, bucket, "ghost.parquet"))
     assert {(r.c_id, r.c_data) for r in t.read().collect()} == before
 
     # the next merge still applies cleanly and clears nothing it shouldn't

@@ -319,3 +319,30 @@ def test_stream_checkpoint_resume_no_dupes_no_loss(spark, tmp_path):
     assert out["en"].n_docs == 20 and out["fr"].n_docs == 20
     assert out["en"].n_chars == sum(10 + i for i in range(40) if i % 2)
     assert out["fr"].n_chars == sum(10 + i for i in range(40) if not i % 2)
+
+
+def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
+    """Every sink mode keeps a table's state in data files plus its one
+    commit log: no epoch-marker dir, meta file, staging swap dir or
+    side metadata, and each table reopens from its log alone."""
+    from debezium_server_bigquery_spark.operators.table import ParquetTable
+
+    cdc = _cdc_df(spark, sf_dir).filter(F.col("event_id") % 4 == 0)
+    for mode in ("append", "upsert", "upsert_lazy", "scd2"):
+        root = tmp_path / mode
+        p = CdcPipeline(
+            spark, str(root), mode=mode, key_cols=("user_id",), n_buckets=4,
+            max_staleness_batches=2,
+        )
+        p.process_batch(cdc.filter(F.col("event_id") % 8 == 0), epoch_id=0)
+        p.process_batch(cdc.filter(F.col("event_id") % 8 == 4), epoch_id=1)
+        for d in sorted(os.listdir(root)):
+            names = set(os.listdir(root / d))
+            assert "_log" in names, (mode, d)
+            assert all(n == "_log" or "=" in n for n in names), (mode, d, names)
+            reopened = ParquetTable.open(spark, str(root / d))
+            assert reopened.mode == ("append" if mode == "append" else "upsert")
+        # only the lazy mode's staging tables sit beside the destinations
+        staging = [d for d in os.listdir(root) if d.startswith("_")]
+        assert bool(staging) == (mode == "upsert_lazy"), mode
+        assert all(d.startswith("_staging_") for d in staging)

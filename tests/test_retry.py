@@ -3,10 +3,14 @@
 Budgets mirror the reference: 5 attempts (ConsumerUtil.java:134-147),
 500 ms x1.1 backoff (StreamDataWriter.java:73-79), 5-minute elapsed cap.
 Injected transient failures must be absorbed with unchanged replay
-semantics (epoch markers written exactly once, no duplicate rows).
+semantics (each epoch committed exactly once, no duplicate rows), and a
+failure that outlasts the budget, at any step of a table commit, must
+leave the previous version readable and replay to the fault-free state.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,20 +96,20 @@ def test_append_retries_transient_write_failure(spark, tmp_path, monkeypatch):
     t = ParquetTable(
         spark, str(tmp_path / "t"), mode="append", retry_policy=NO_WAIT_POLICY
     )
-    original = ParquetTable._write_append
+    original = ParquetTable.write_files
     state = {"fails": 2, "calls": 0}
 
-    def flaky_write(self, out):
+    def flaky_write(self, out, dest):
         state["calls"] += 1
         if state["calls"] <= state["fails"]:
             raise OSError("transient fs hiccup")
-        return original(self, out)
+        return original(self, out, dest)
 
-    monkeypatch.setattr(ParquetTable, "_write_append", flaky_write)
+    monkeypatch.setattr(ParquetTable, "write_files", flaky_write)
     t.append(_rows(spark, range(10)), epoch_id=0)
     assert state["calls"] == 3
     assert t.read().count() == 10
-    # replay of the committed epoch is a no-op (marker, not retry, decides)
+    # replay of the committed epoch is a no-op (the log, not retry, decides)
     t.append(_rows(spark, range(10)), epoch_id=0)
     assert state["calls"] == 3
     assert t.read().count() == 10
@@ -116,10 +120,10 @@ def test_append_fails_loud_after_budget(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "t"), mode="append", retry_policy=NO_WAIT_POLICY
     )
 
-    def always_fail(self, out):
+    def always_fail(self, out, dest):
         raise OSError("permanent outage")
 
-    monkeypatch.setattr(ParquetTable, "_write_append", always_fail)
+    monkeypatch.setattr(ParquetTable, "write_files", always_fail)
     with pytest.raises(OSError, match="permanent"):
         t.append(_rows(spark, range(10)), epoch_id=0)
     # the epoch never committed -> a later (healed) replay writes the rows
@@ -129,10 +133,9 @@ def test_append_fails_loud_after_budget(spark, tmp_path, monkeypatch):
 
 
 def test_merge_swap_retry_is_idempotent(spark, tmp_path, monkeypatch):
-    """A transient failure mid-swap (the overwrite->marker window the
-    verdict flagged) replays without duplicating or losing partitions."""
-    import os
-
+    """A transient failure of the publish step of a compaction (the
+    overwrite->commit window) retries without duplicating or losing
+    partitions."""
     t = ParquetTable(
         spark,
         str(tmp_path / "t"),
@@ -144,27 +147,239 @@ def test_merge_swap_retry_is_idempotent(spark, tmp_path, monkeypatch):
     t.append(_rows(spark, range(20)), epoch_id=0)
     before = sorted(tuple(r) for r in t.read().collect())
 
-    # Fail the first SWAP os.replace of the compaction, then heal.  Scope
-    # the injection to partition-directory renames: epoch-marker commits
-    # also publish via os.replace now, and failing one of those would test
-    # the wrong code path.
-    real_replace = os.replace
+    # Fail the first publish of the compaction, then heal.
+    real_link = os.link
     state = {"calls": 0}
 
-    def flaky_replace(src, dst):
-        if "_epochs" in str(dst):
-            return real_replace(src, dst)
+    def flaky_link(src, dst):
         state["calls"] += 1
-        if state["calls"] == 1:
-            raise OSError("transient rename failure")
-        return real_replace(src, dst)
+        if state["calls"] == 2:  # call 1 publishes the fragmenting append
+            raise OSError("transient link failure")
+        return real_link(src, dst)
 
-    monkeypatch.setattr(os, "replace", flaky_replace)
+    monkeypatch.setattr(os, "link", flaky_link)
     t.append(_rows(spark, range(20)), epoch_id=1)  # fragment the buckets
     assert t.compact(max_files_per_partition=1) > 0
     rows = sorted(set(tuple(r) for r in t.read().collect()))
     assert rows == before
-    assert state["calls"] >= 2  # the swap actually retried
+    assert state["calls"] >= 3  # the publish actually retried
+    assert t.version() == 2  # one version per write, none lost or doubled
+
+
+def _upsert_rows(spark, ids, val, ts):
+    return _rows(spark, ids).select(
+        "id",
+        F.lit(val).alias("val"),
+        "__ts_ms",
+        "__source_ts_ms",
+        F.lit("u").alias("__op"),
+        F.lit(ts).cast("long").alias("__source_ts_ns"),
+    )
+
+
+def test_merge_publish_failure_keeps_every_bucket(spark, tmp_path, monkeypatch):
+    """A 20-key, 4-bucket upsert table whose publish step fails past the
+    retry budget during a MERGE: readers keep seeing all 20 rows, and a
+    healed replay of the epoch applies the MERGE to all 20."""
+    from debezium_server_bigquery_spark.operators.merge import merge_upsert
+
+    t = ParquetTable(
+        spark,
+        str(tmp_path / "t"),
+        key_cols=["id"],
+        mode="upsert",
+        n_buckets=4,
+        retry_policy=NO_WAIT_POLICY,
+    )
+    merge_upsert(t, _upsert_rows(spark, range(20), "a", 1), epoch_id=0)
+
+    def broken_link(src, dst):
+        raise OSError("publish keeps failing")
+
+    monkeypatch.setattr(os, "link", broken_link)
+    with pytest.raises(OSError, match="publish keeps failing"):
+        merge_upsert(t, _upsert_rows(spark, range(20), "b", 2), epoch_id=1)
+    during = t.read()
+    assert during.count() == 20
+    assert {r.val for r in during.collect()} == {"a"}
+    monkeypatch.undo()
+    merge_upsert(t, _upsert_rows(spark, range(20), "b", 2), epoch_id=1)
+    after = ParquetTable.open(spark, t.path).read().collect()  # fresh handle too
+    assert sorted(r.id for r in after) == list(range(20))
+    assert {r.val for r in after} == {"b"}
+
+
+class _Fault(Exception):
+    """Injected; not an OSError, so no cleanup path swallows it."""
+
+
+STEPS = ("write", "move", "pre_publish", "post_publish", "remove")
+
+
+def _inject(monkeypatch, root: str, step: str, k: int) -> None:
+    """Raise _Fault at the k-th occurrence of ``step`` under ``root``:
+    after the data write, after a file move into place, before or after
+    the log publish, or before deleting a replaced file."""
+    seen = {"n": 0}
+
+    def hit(path) -> None:
+        if str(path).startswith(root):
+            seen["n"] += 1
+            if seen["n"] == k:
+                raise _Fault(f"{step} #{k}")
+
+    if step == "write":
+        orig = ParquetTable.write_files
+
+        def write_files(self, out, dest):
+            orig(self, out, dest)
+            hit(dest)
+
+        monkeypatch.setattr(ParquetTable, "write_files", write_files)
+    elif step == "move":
+        real_rename = os.rename
+
+        def rename(src, dst):
+            real_rename(src, dst)
+            hit(dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+    elif step in ("pre_publish", "post_publish"):
+        real_link = os.link
+
+        def link(src, dst):
+            if step == "pre_publish":
+                hit(dst)
+            real_link(src, dst)
+            if step == "post_publish":
+                hit(dst)
+
+        monkeypatch.setattr(os, "link", link)
+    else:
+        real_remove = os.remove
+
+        def remove(path):
+            if str(path).endswith(".parquet"):
+                hit(path)
+            real_remove(path)
+
+        monkeypatch.setattr(os, "remove", remove)
+
+
+def _every_fault(monkeypatch, root, op, check) -> dict[str, int]:
+    """Run ``op(round)`` once per (step, occurrence) with that fault
+    injected, then heal and run it again — the replay of the same epoch —
+    and ``check`` the table against the fault-free state.  A round whose
+    fault never fires ran fault-free and ends that step.  Returns how
+    many faults fired per step."""
+    fired: dict[str, int] = {}
+    rounds = 0
+    for step in STEPS:
+        k = 1
+        while True:
+            _inject(monkeypatch, root, step, k)
+            try:
+                op(rounds)
+                hit = False
+            except _Fault:
+                hit = True
+            monkeypatch.undo()
+            if hit:
+                op(rounds)
+            check(rounds)
+            rounds += 1
+            if not hit:
+                break
+            fired[step] = k
+            k += 1
+    return fired
+
+
+_ONE_SHOT = RetryPolicy(attempts=1, initial_backoff_ms=0.0)
+
+
+def _ids(df):
+    return sorted((r.id, r.val) for r in df.collect())
+
+
+def test_append_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    t = ParquetTable(spark, str(tmp_path / "t"), mode="append", retry_policy=_ONE_SHOT)
+    t.append(_rows(spark, range(4)), epoch_id="seed")
+    want = [(i, f"v{i}") for i in range(4)]
+
+    def op(r):
+        t.append(_rows(spark, range(100 * (r + 1), 100 * (r + 1) + 4)), epoch_id=r)
+
+    def check(r):
+        want.extend((i, f"v{i}") for i in range(100 * (r + 1), 100 * (r + 1) + 4))
+        assert _ids(t.read()) == sorted(want)
+        assert _ids(ParquetTable(spark, t.path).read()) == sorted(want)
+
+    fired = _every_fault(monkeypatch, t.path, op, check)
+    # appends remove nothing: no remove-step fault can fire
+    assert set(fired) == set(STEPS) - {"remove"}
+
+
+def test_overwrite_partitions_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    t = ParquetTable(spark, str(tmp_path / "t"), mode="append", retry_policy=_ONE_SHOT)
+    t.append(_rows(spark, range(6)), epoch_id="seed")
+    feb = _rows(spark, range(50, 53)).withColumn(
+        "__ts_ms", F.to_timestamp(F.lit("2024-02-15T00:00:00"))
+    )
+    t.append(feb, epoch_id="feb")
+
+    def jan(r):
+        return _rows(spark, range(6)).withColumn("val", F.lit(f"r{r}"))
+
+    def op(r):
+        # rewrite January, empty February
+        out = t.with_partition_col(jan(r))
+        t.overwrite_partitions(out, expected_partitions=["2024-01", "2024-02"], epoch_id=r)
+
+    def check(r):
+        assert _ids(t.read()) == [(i, f"r{r}") for i in range(6)]
+        assert _ids(ParquetTable(spark, t.path).read()) == [(i, f"r{r}") for i in range(6)]
+
+    assert set(_every_fault(monkeypatch, t.path, op, check)) == set(STEPS)
+
+
+@pytest.mark.heavy
+def test_lazy_compaction_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    """Both commits of a lazy-upsert compaction (the base MERGE, then the
+    staging truncation) under a fault at every step; calling compact()
+    again finishes the interrupted one."""
+    from debezium_server_bigquery_spark.operators.staged_upsert import (
+        StagedUpsertTable,
+    )
+
+    base = ParquetTable(
+        spark,
+        str(tmp_path / "t"),
+        key_cols=["id"],
+        mode="upsert",
+        n_buckets=2,
+        retry_policy=_ONE_SHOT,
+    )
+    lazy = StagedUpsertTable(base, staleness_batches=1000)
+    lazy.staging.retry_policy = _ONE_SHOT
+    want: dict[int, str] = {}
+
+    def op(r):
+        # stage a batch overlapping the previous round's keys, then compact
+        ids = range(3 * r, 3 * r + 6)
+        want.update({i: f"r{r}" for i in ids})
+        lazy.apply(_upsert_rows(spark, ids, f"r{r}", r + 1), epoch_id=r)
+        lazy.compact()
+
+    def check(r):
+        assert lazy.staging.read_raw() is None
+        assert _ids(lazy.read_stale()) == sorted(want.items())
+
+    fired = _every_fault(monkeypatch, str(tmp_path), op, check)
+    assert set(fired) == set(STEPS)
+    assert fired["pre_publish"] >= 3  # staging append, base MERGE, truncation
 
 
 def test_pipeline_retry_e2e_converges_to_no_fault_state(spark):

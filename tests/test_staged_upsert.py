@@ -106,8 +106,12 @@ def test_lazy_stage_counter_recovers_after_restart(spark, tmp_path):
     lazy.apply(batches[0], epoch_id=0)
     lazy.apply(batches[1], epoch_id=1)
     # "restart": a fresh wrapper over the same paths continues the sequence
-    lazy2 = StagedUpsertTable(base, staleness_batches=10)
-    assert lazy2._staged == 2
+    # (the staging log holds it)
+    lazy2 = StagedUpsertTable(
+        ParquetTable(spark, base.path, key_cols=["user_id"], mode="upsert", n_buckets=4),
+        staleness_batches=10,
+    )
+    assert lazy2._pending_batches() == 2
     lazy2.apply(batches[2], epoch_id=2)
     assert _snap(lazy2.read_current()) == _snap(
         _eager(spark, tmp_path, batches, 3)
@@ -198,8 +202,8 @@ def test_streaming_lazy_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
 
 def test_epoch_replay_protection_survives_compaction(spark, tmp_path):
     """A streaming retry of an already-staged epoch arriving AFTER an
-    auto-compaction must be skipped: markers live outside the staging data
-    dir, so truncating staging does not forget which epochs committed."""
+    auto-compaction must be skipped: the staged epochs live in the staging
+    log, and truncating staging is one more commit that forgets none."""
     batches = _batches(spark)
     base = ParquetTable(
         spark, str(tmp_path / "lazyx"), key_cols=["user_id"], mode="upsert", n_buckets=4
@@ -215,10 +219,10 @@ def test_epoch_replay_protection_survives_compaction(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_compaction_merge_is_epoch_marked(spark, tmp_path):
+def test_compaction_merge_is_epoch_marked(spark, tmp_path, monkeypatch):
     """A crash between the compaction MERGE and the staging truncation
-    replays as a no-op: the MERGE carries a deterministic epoch id derived
-    from the monotone stage-seq high-water mark."""
+    replays as a no-op: the MERGE carries a deterministic epoch id, the
+    staging version its truncation takes."""
     batches = _batches(spark)
     base = ParquetTable(
         spark, str(tmp_path / "lazym"), key_cols=["user_id"], mode="upsert", n_buckets=4
@@ -226,15 +230,24 @@ def test_compaction_merge_is_epoch_marked(spark, tmp_path):
     lazy = StagedUpsertTable(base, staleness_batches=10)
     lazy.apply(batches[0], epoch_id=0)
     lazy.apply(batches[1], epoch_id=1)
-    lazy.compact()
+
+    def crash():
+        raise RuntimeError("killed before truncating staging")
+
+    monkeypatch.setattr(lazy.staging, "truncate", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        lazy.compact()
+    monkeypatch.undo()
     assert base.epoch_committed("__compact_2")
     state = _snap(lazy.read_current())
-    # simulate the crash replay: same staged rows, same high-water mark
-    lazy._staged = 2
-    lazy.compact()  # staging is empty -> early return; marker still guards
+    merged = base.version()
+    # the replay: the MERGE is skipped, only the truncation lands
+    lazy.compact()
+    assert base.version() == merged
+    assert lazy.staging.read_raw() is None
     assert _snap(lazy.read_current()) == state
     # a LATER generation gets a different id, so future compactions run
     lazy.apply(batches[2], epoch_id=2)
     lazy.compact()
-    assert base.epoch_committed("__compact_3")
+    assert base.epoch_committed("__compact_4")
     assert _snap(lazy.read_stale()) == _snap(_eager(spark, tmp_path, batches, 3))

@@ -152,3 +152,18 @@ def test_checkpoint_parquet_memoized(spark, sf_dir):
     c = checkpoint_parquet(df.filter(F.col("n_nationkey") < 5), "memo-test-")
     assert c.inputFiles() != a.inputFiles()
     assert c.count() == 5
+
+
+def test_checkpoint_memo_sees_rewritten_input(spark, tmp_path):
+    """A plan over a path that was rewritten in the same process must not
+    hit the memo of the old contents: the plan's semantic hash covers the
+    path, not the files under it."""
+    from debezium_server_bigquery_spark.sources.tables import checkpoint_parquet
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.mode("overwrite").parquet(src)
+    first = checkpoint_parquet(spark.read.parquet(src).groupBy().count(), "memo-stale-")
+    assert first.collect()[0][0] == 10
+    spark.range(25).write.mode("overwrite").parquet(src)
+    again = checkpoint_parquet(spark.read.parquet(src).groupBy().count(), "memo-stale-")
+    assert again.collect()[0][0] == 25

@@ -245,8 +245,5 @@ def test_parquet_table_zorder_write(spark, tmp_path):
     back = t.read()
     assert back.count() == 5000
     assert back.agg(F.sum("a")).collect()[0][0] == df.agg(F.sum("a")).collect()[0][0]
-    # meta records the layout choice
-    import json
-
-    with open(t.meta_path) as fh:
-        assert json.load(fh)["zorder"] == ["a", "b"]
+    # the log records the layout choice
+    assert ParquetTable.open(spark, t.path).zorder_cols == ["a", "b"]

@@ -1,14 +1,15 @@
-"""Dump explain('formatted') for every bench query into plans/r14/.
+"""Dump explain('formatted') for every bench query into plans/r<N>/.
 
-Usage: python tools/r14_plans.py <suffix> [sf_dir] [query ...]
+Usage: python tools/round_plans.py --round N <suffix> [sf_dir] [query ...]
 
-Writes plans/r14/<query>_<suffix>.txt for each bench headline/iterative
+Writes plans/r<N>/<query>_<suffix>.txt for each bench headline/iterative
 query (default: all of them).  <suffix> is typically "before" or "after".
-The judge checks plan claims in OPTIMIZATION_r14.md against these files.
+Plan claims in OPTIMIZATION_r<N>.md cite these files.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -58,20 +59,26 @@ def bench_queries():
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    only = set(sys.argv[3:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--round", type=int, required=True, help="writes plans/r<N>/")
+    ap.add_argument("suffix", nargs="?", default="before")
+    ap.add_argument("sf_dir", nargs="?", help="default: $SPARK_GRAFT_SF_DIR or sf0.1")
+    ap.add_argument("queries", nargs="*", help="default: every bench query")
+    args = ap.parse_args()
 
     from debezium_server_bigquery_spark import get_spark
+    from debezium_server_bigquery_spark.sources.tables import DEFAULT_SF_DIR
+
+    suffix, sf_dir, only = args.suffix, args.sf_dir or DEFAULT_SF_DIR, set(args.queries)
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r14",
+        f"r{args.round}",
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("r14-plans")
+    spark = get_spark(f"r{args.round}-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name, fn in bench_queries():
