@@ -38,10 +38,14 @@ Recognized keys (reference key -> pipeline field):
 Engine namespace:
 
 - ``engine.target-root``       destination directory (required)
-- ``engine.max-staleness-batches``  >0 + upsert -> lazy upsert (staged
-                               appends, compaction MERGE every N batches;
-                               the BigQuery table ``max_staleness`` analog,
-                               operators/staged_upsert.py)
+- ``engine.max-staleness-batches``  >0 + upsert -> lazy upsert: every
+                               batch is a merge-on-read MERGE (one delta
+                               file + deletion sets); the table's
+                               maintenance (rewrite half-deleted files,
+                               bin-pack deltas) runs every N table
+                               versions instead of after every batch —
+                               the BigQuery table ``max_staleness``
+                               analog, operators/staged_upsert.py
 - ``engine.key-columns``       comma-separated PK for upsert tables
 - ``engine.scd2``              true -> history-preserving SCD Type 2 sink
                                instead of destructive upsert (requires
@@ -294,7 +298,7 @@ def run(conf_path: str, spark=None) -> dict:
     else:
         pipeline.run_batch(source)
     # Lazy upsert: a drained run finalizes like an expired max_staleness
-    # interval — fold any remaining staged rows into the base tables.
+    # interval — run the tables' maintenance now.
     if pipeline.mode == "upsert_lazy":
         pipeline.compact_all()
     tables = sorted(pipeline.tables)

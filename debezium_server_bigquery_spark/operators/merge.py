@@ -3,31 +3,30 @@
 The reference tags rows ``_CHANGE_TYPE`` UPSERT/DELETE and lets BigQuery's
 CDC engine apply them by primary key in the background
 (StreamRecordConverter.java:79-93; StreamBigqueryChangeConsumer.java:163-197).
-Spark-native equivalent: an eager MERGE per micro-batch against a
-key-bucketed parquet table — strictly stronger convergence than the
-reference's ``max_staleness`` lazy apply (SURVEY §2.7 note).
-
-Plan shape (all declarative, Catalyst picks physical ops):
+Spark-native equivalent: merge-on-read into a key-bucketed parquet table
+(operators/table.py) — no stored row is rewritten to apply a change.  One
+Spark write action, and no action before it:
 
 1. dedup the batch per PK (operators/dedup.py) — required, like Delta MERGE.
-2. bucket the batch by the same ``pmod(xxhash64(pk), n)`` as the table, and
-   prune the target scan to **only the buckets present in the batch**
-   (partition pruning on the parquet scan; at 100 TB a small batch touches
-   a handful of buckets, not the table).
-3. union target + batch with a source-rank column (target=0, batch=1) and
-   re-run last-writer-wins — one hash aggregation, map-side combined.
-   Batch rows beat target rows on exact ``(__source_ts_ns, op_priority)``
-   ties, matching the reference comparator's "existing wins only if
-   strictly newer... else replace" merge (ConcurrentHashMap.merge :212-218
-   keeps the max, new value on tie).
-4. delete semantics: winner rows with ``__op = 'd'`` are dropped unless
-   ``keep_deletes`` (upsert-keep-deletes, StreamConsumerConfig.java:71-73),
-   in which case they persist with ``__deleted = true``.
-5. rewrite the affected buckets only, in one table commit that also
-   records the epoch and the rows written (operators/table.py).
+2. left-join it with a key-only probe of the live rows (key, order column,
+   ``__op``, file name, row index): a batch row wins unless its key's
+   stored row is strictly newer on ``(order_col, op priority)`` — the
+   reference's "existing wins only if strictly newer... else replace"
+   (ConcurrentHashMap.merge :212-218 keeps the new value on tie).
+3. write the winners as ONE delta file; the positions of the stored rows
+   they supersede, observed by the same job, are logged as deletion sets
+   in the commit that adds the file and the epoch.
+4. winning ``__op = 'd'`` rows are stored as tombstones either way, so an
+   OLDER update arriving later loses to them; with ``keep_deletes``
+   (upsert-keep-deletes, StreamConsumerConfig.java:71-73) readers see them
+   flagged ``__deleted = true``, without it the table layout records that
+   reads hide them.  Tombstones are never garbage-collected.
 
-PK-less tables fall back to append — ``doUpsert``/``doTableHasPrimaryKey``
-parity (StreamBigqueryChangeConsumer.java:163-174).
+A MERGE into a table with no live files writes the bucketed layout.  The
+table's ``maintain()`` bounds deltas and deletion sets; ``compact()`` folds
+them back into buckets.  PK-less tables fall back to append —
+``doUpsert``/``doTableHasPrimaryKey`` parity
+(StreamBigqueryChangeConsumer.java:163-174).
 """
 
 from __future__ import annotations
@@ -35,10 +34,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from debezium_server_bigquery_spark.coerce import OP_PRIORITY_SQL
 from debezium_server_bigquery_spark.operators.dedup import dedup_last_writer
-from debezium_server_bigquery_spark.operators.table import KEY_BUCKET, ParquetTable
-
-_SRC_RANK = "__src_rank"
+from debezium_server_bigquery_spark.operators.table import (
+    KEY_BUCKET,
+    POS_FILE,
+    POS_ROW,
+    ParquetTable,
+)
 
 
 def merge_upsert(
@@ -50,7 +53,7 @@ def merge_upsert(
     tiebreak: tuple[str, ...] = (),
     epoch_id: int | str | None = None,
 ) -> None:
-    """Apply one deduplicated CDC micro-batch to ``table`` by primary key."""
+    """Apply one CDC micro-batch to ``table`` by primary key."""
     if not table.key_cols:
         # A4 — append fallback for PK-less destinations.
         table.append(batch, epoch_id=epoch_id)
@@ -61,32 +64,23 @@ def merge_upsert(
     deduped = dedup_last_writer(
         batch, table.key_cols, order_col=order_col, tiebreak=tiebreak
     )
-    src = table.with_partition_col(deduped)
-
-    # Affected buckets: tiny driver-side list (<= n_buckets) that prunes the
-    # target scan and bounds the partition rewrite.
-    # bounded-collect: O(buckets) affected-bucket list; see comment above
-    buckets = [r[0] for r in src.select(KEY_BUCKET).distinct().collect()]
-    live = table.read_raw()
     # allow-field-addition gate: new batch columns are dropped instead of
     # evolving the target (StreamBigqueryChangeConsumer.java:300).
-    src = table.restrict_to_live(src).withColumn(_SRC_RANK, F.lit(1))
-    if live is not None:
-        live = live.filter(F.col(KEY_BUCKET).isin(buckets)).withColumn(
-            _SRC_RANK, F.lit(0)
-        )
-        merged = live.unionByName(src, allowMissingColumns=True)
-    else:
-        merged = src
-
-    winner = dedup_last_writer(
-        merged, table.key_cols + [KEY_BUCKET], order_col=order_col, tiebreak=(_SRC_RANK,)
+    src = table.restrict_to_live(table.with_partition_col(deduped))
+    table.keep_deletes = keep_deletes
+    live = table.read_raw(positions=True)
+    if live is None:
+        # one file per bucket
+        table.append(src.repartition(KEY_BUCKET), epoch_id=epoch_id)
+        return
+    probe = live.selectExpr(
+        *[f"`{k}` AS `__p_{k}`" for k in table.key_cols],
+        f"struct(`{order_col}`, {OP_PRIORITY_SQL}) AS __p_order",
+        POS_FILE, POS_ROW,
     )
-    if keep_deletes:
-        # A3 keep-deletes: deleted rows stay, flagged __deleted=true.
-        result = winner
-    else:
-        result = winner.filter(F.col("__op") != "d")
-    table.overwrite_partitions(
-        result.drop(_SRC_RANK), expected_partitions=buckets, epoch_id=epoch_id
+    same_key = " AND ".join(f"`{k}` <=> `__p_{k}`" for k in table.key_cols)
+    newer = f"{POS_FILE} IS NULL OR struct(`{order_col}`, {OP_PRIORITY_SQL}) >= __p_order"
+    winners = src.join(probe, F.expr(same_key), "left").filter(newer)
+    table.write_delta(
+        winners.drop(*[f"__p_{k}" for k in table.key_cols], "__p_order"), epoch_id
     )

@@ -152,8 +152,8 @@ def scd2_merge_batch(
     history-preserving sibling of ``merge_upsert``.
 
     Affected-key copy-on-write: the batch's key set prunes the target scan
-    to the touched buckets (the same O(n_buckets) driver list as
-    merge_upsert); rows of untouched keys in those buckets are carried
+    to the touched buckets (an O(n_buckets) driver list); rows of
+    untouched keys in those buckets are carried
     over verbatim, while the FULL change history of touched keys is
     re-windowed together with the batch.  Re-windowing whole keys (not
     just open versions) makes the merge correct under ANY arrival order —

@@ -10,11 +10,14 @@ Spark-native equivalent: a directory-backed parquet table.
   'yyyy-MM')`` -> readers get partition pruning on time predicates, the
   analog of BigQuery time partitioning.
 - **Upsert tables** partition by a stable key-hash bucket ``__kb =
-  pmod(xxhash64(pk...), n_buckets)``.  A primary key always lands in the
-  same partition, so a MERGE rewrites only the buckets present in the batch
-  and never has to chase a key across time partitions.  (Month partitioning
-  is wrong for upsert targets: an update that moves a key's ``__ts_ms`` to a
-  new month would strand the old version in the old partition.)
+  pmod(xxhash64(pk...), n_buckets)`` when first written or compacted.
+  Later MERGEs are merge-on-read: each adds ONE unpartitioned *delta* file
+  (``delta/<token>-0.parquet``, ``__kb`` a data column) of the batch rows
+  that won, and its commit logs the positions (file, row index) of the
+  rows they supersede as per-file *deletion sets*, which reads drop with
+  one literal filter.  ``maintain()`` replaces files once ``REWRITE_SHARE``
+  of their rows are deleted, and all deltas past ``MAX_DELTAS``, by one
+  delta of their live rows; ``compact()`` folds all back into buckets.
 - **Clustering** -> ``sortWithinPartitions(pk..., __source_ts_ms)`` before
   write, so parquet row-group min/max stats give data skipping on PK
   lookups — the BigQuery clustering analog.
@@ -25,8 +28,9 @@ Spark-native equivalent: a directory-backed parquet table.
 
 Commit log.  Each table keeps one append-only log, ``_log/<version>.json``.
 An entry lists the data files it adds and removes (relative path,
-partition value, bytes, rows), the epoch it commits with the row count the
-write job observed, and — only where they change — the schema and layout.
+partition value — null for a delta — bytes, rows), the row positions it
+deletes per live file, the epoch it commits with the row count the write
+job observed, and — only where they change — the schema and layout.
 The table is the replay of its log: a handle caches that snapshot and reads
 only newer entries, readers scan exactly the live files with the logged
 schema (no directory listing, no footer inference), and an epoch some
@@ -72,6 +76,15 @@ log = logging.getLogger(__name__)
 PART_MONTH = "__part_month"
 KEY_BUCKET = "__kb"
 LOG_DIR = "_log"
+DELTA_DIR = "delta"
+# The live row a scanned (or superseding) row stands for: file name and
+# row index in that file (``_metadata.file_name``/``row_index``).
+POS_FILE = "__pos_file"
+POS_ROW = "__pos_row"
+# Merge-on-read maintenance: rewrite a file once this share of its rows is
+# deleted; bin-pack the deltas once there are more than MAX_DELTAS.
+REWRITE_SHARE = 0.5
+MAX_DELTAS = 16
 
 # Time-partition granularities, parity with the reference's partition-type
 # HOUR/DAY/MONTH/YEAR (BatchConsumerConfig.java:39-49,
@@ -152,15 +165,21 @@ class ParquetTable:
             # fail at construction, not on the first write
             validate_zorder(self.zorder_cols)
         self._zcache: DataFrame | None = None
+        # upsert-keep-deletes of this table's MERGEs, kept in the layout (None:
+        # as logged); when false, read() hides the tombstones it stores.
+        self.keep_deletes: bool | None = None
         # Log snapshot as of ``_version`` (-1: no table yet), advanced only
         # by _refresh, under _lock: an upload thread that outlived its
         # batch timeout may still use this handle while the replay does.
         # _files maps each live file's relative path to [partition value,
-        # bytes, rows]; _epochs maps each committed epoch to what its
-        # commit wrote.
+        # bytes, rows] (partition value None: a delta), _dels each file's
+        # deleted row positions; _epochs maps each committed epoch to what
+        # its commit wrote.
         self._lock = threading.Lock()
         self._version = -1
         self._files: dict[str, list] = {}
+        self._dels: dict[str, set[int]] = {}
+        self._frames: dict[bool, tuple] = {}  # see _scan
         self._epochs: dict[str, dict] = {}
         self._schema: T.StructType | None = None
         self._layout: dict | None = None
@@ -176,11 +195,12 @@ class ParquetTable:
         probe = cls(spark, path)
         if not probe.exists():
             raise FileNotFoundError(f"no table log under {path}")
-        return cls(spark, path, **probe._layout)
+        layout = {k: v for k, v in probe._layout.items() if k != "keep_deletes"}
+        return cls(spark, path, **layout)
 
     # -- commit log --------------------------------------------------------
     def _layout_now(self) -> dict:
-        return {
+        layout = {
             "key_cols": self.key_cols,
             "mode": self.mode,
             "n_buckets": self.n_buckets,
@@ -191,6 +211,9 @@ class ParquetTable:
             "create_if_needed": self.create_if_needed,
             "zorder_cols": self.zorder_cols,
         }
+        keep = self.keep_deletes
+        keep = (self._layout or {}).get("keep_deletes") if keep is None else keep
+        return layout if keep is None else {**layout, "keep_deletes": keep}
 
     def _entry_path(self, version: int) -> str:
         return os.path.join(self.path, LOG_DIR, f"{version}.json")
@@ -210,13 +233,18 @@ class ParquetTable:
 
     def _apply(self, entry: dict) -> None:
         add, remove = entry.get("add", []), entry.get("remove", [])
+        dels = entry.get("del", {})
         for rel, *_ in remove:
             self._files.pop(rel, None)
+            self._dels.pop(rel, None)
         for rel, *meta in add:
             self._files[rel] = meta
+        for rel, rows in dels.items():
+            self._dels.setdefault(rel, set()).update(rows)
         if "epoch" in entry:
             self._epochs[entry["epoch"]] = {
                 "rows": entry["rows"],
+                "rows_deleted": sum(len(rows) for rows in dels.values()),
                 "files_added": len(add),
                 "bytes_added": sum(a[2] for a in add),
                 "files_removed": len(remove),
@@ -235,11 +263,14 @@ class ParquetTable:
         epoch_id: int | str | None = None,
         rows: int = 0,
         schema: T.StructType | None = None,
+        dels: dict[str, list[int]] | None = None,
     ) -> None:
         """Publish the next version by one atomic no-clobber create, then
-        delete the files it removes.  A retried publish that finds its own
-        entry already in place (the link landed, the call still failed)
-        counts as done; a different entry there is a concurrent writer."""
+        delete the files it removes.  ``dels`` maps live files to the row
+        positions this version deletes from them.  A retried publish that
+        finds its own entry already in place (the link landed, the call
+        still failed) counts as done; a different entry there is a
+        concurrent writer."""
         entry: dict = {}
         if epoch_id is not None:
             entry.update(epoch=str(epoch_id), rows=rows)
@@ -248,6 +279,8 @@ class ParquetTable:
         remove = [[rel, *self._files[rel]] for rel in remove]
         if remove:
             entry["remove"] = remove
+        if dels:
+            entry["del"] = {rel: sorted(rows) for rel, rows in sorted(dels.items())}
         if schema is not None and schema != self._schema:
             entry["schema"] = schema.jsonValue()
         if self._layout_now() != self._layout:
@@ -302,14 +335,16 @@ class ParquetTable:
 
     def epoch_metrics(self) -> list[dict]:
         """Committed epochs in commit order, as records ``{"epoch": str,
-        "rows": int, "files_added", "bytes_added", "files_removed",
-        "bytes_removed"}`` — the engine's consumer-metrics surface.  The
-        reference polls Debezium MBeans for processed-row counts
-        (MaxBatchSizeWait reads them, docs list the JMX names); here every
-        commit persisted the row count its write job observed, so the
-        metrics are exact, free, and survive restarts.  A MERGE-type
-        commit counts every row it wrote, carried-over rows of the
-        rewritten partitions included."""
+        "rows": int, "rows_deleted", "files_added", "bytes_added",
+        "files_removed", "bytes_removed"}`` — the engine's consumer-metrics
+        surface.  The reference polls Debezium MBeans for processed-row
+        counts (MaxBatchSizeWait reads them, docs list the JMX names); here
+        every commit persisted the row count its write job observed, so
+        the metrics are exact, free, and survive restarts.  A MERGE counts
+        the rows its delta holds (the batch rows that won, tombstones
+        included) and, in ``rows_deleted``, the stored rows they
+        superseded; SCD2 and compaction commits count every row of the
+        partitions they rewrote."""
         self._refresh()
         return [{"epoch": e, **m} for e, m in self._epochs.items()]
 
@@ -358,33 +393,67 @@ class ParquetTable:
 
     # -- io ----------------------------------------------------------------
     def read(self) -> DataFrame:
+        """Live rows without the partition column, and without the hidden
+        tombstones of a table whose layout says ``keep_deletes`` false."""
         raw = self.read_raw()
-        if raw is not None:
-            return raw.drop(self.partition_col())
-        if self._schema is None:
-            raise FileNotFoundError(f"no table log under {self.path}")
-        # Table exists but holds zero data files (e.g. a MERGE deleted
-        # every row): serve an empty frame with the last-known schema.
-        return self.spark.createDataFrame([], self._schema)
+        if raw is None:
+            if self._schema is None:
+                raise FileNotFoundError(f"no table log under {self.path}")
+            # Table exists but holds zero data files (e.g. a MERGE deleted
+            # every row): serve an empty frame with the last-known schema.
+            return self.spark.createDataFrame([], self._schema)
+        out = raw.drop(self.partition_col())
+        if not self._layout.get("keep_deletes", True):
+            out = out.filter(F.col("__op") != "d")
+        return out
 
-    def read_raw(self) -> DataFrame | None:
-        """Live rows including the partition column, or None if the table
-        holds no data files.  Exactly the live files of the latest version
-        are scanned under the logged schema, so no footer-inference job
-        runs and no directory is listed; the partition column comes from
-        the file paths (``basePath``), typed exactly as a directory read
-        would infer it.  Lists longer than
-        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` make
-        Spark stat the files in a job of their own; session.py raises
-        that threshold so the scan is the only job."""
+    def read_raw(self, positions: bool = False) -> DataFrame | None:
+        """Live rows including the partition column and any hidden
+        tombstones (with ``positions``, also each row's ``POS_FILE`` and
+        ``POS_ROW``), or None if the table holds no data files."""
+        return self._scan(positions=positions)
+
+    def _scan(self, rels: Iterable[str] | None = None, positions: bool = False):
+        """Live rows of ``rels`` (default: every live file).  Exactly those
+        files are scanned under the logged schema, so no footer-inference
+        job runs and no directory is listed (session.py raises
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` so no
+        listing job stats them either).  Bucket files take ``__kb`` from
+        their paths (``basePath``, typed as a directory read infers it),
+        deltas from their data.  Deleted positions are dropped by one
+        filter on a literal map folded at plan time: no join, no extra job,
+        and a table without deletions plans the bare scan.  The last bare
+        scan of each kind is reused: bucket files change only at
+        maintenance, so most reads build no new file index."""
         self._refresh()
-        if not self._files:
-            return None
-        return (
-            self.spark.read.schema(self._schema)
-            .option("basePath", self.path)
-            .parquet(*[os.path.join(self.path, rel) for rel in self._files])
-        )
+        rels = list(self._files) if rels is None else list(rels)
+        gone = {os.path.basename(r): sorted(self._dels[r]) for r in rels if self._dels.get(r)}
+        undeleted = ("NOT coalesce(array_contains(element_at(from_json("
+                     f"'{json.dumps(gone)}', 'map<string,array<bigint>>'), "
+                     "_metadata.file_name), _metadata.row_index), false)")
+        out = None
+        for delta in (False, True):
+            group = tuple(r for r in rels if (self._files[r][0] is None) == delta)
+            if not group:
+                continue
+            hit = self._frames.get(delta)
+            if hit is None or hit[0] != (group, self._schema):
+                paths = [os.path.join(self.path, r) for r in group]
+                if delta:
+                    kb = T.StructField(KEY_BUCKET, T.IntegerType())
+                    df = self.spark.read.schema(T.StructType(self._schema.fields + [kb]))
+                else:
+                    df = self.spark.read.schema(self._schema).option("basePath", self.path)
+                hit = self._frames[delta] = ((group, self._schema), df.parquet(*paths))
+            df = hit[1]
+            if gone:
+                df = df.filter(undeleted)
+            if positions:
+                df = df.selectExpr(
+                    "*", f"_metadata.file_name AS {POS_FILE}", f"_metadata.row_index AS {POS_ROW}"
+                )
+            out = df if out is None else out.unionByName(df)
+        return out
 
     def _cluster_sort(self, df: DataFrame) -> DataFrame:
         zcols = [c for c in self.zorder_cols if c in df.columns]
@@ -430,27 +499,22 @@ class ParquetTable:
             finally:
                 self._zcache = None
 
-    def write_files(self, out: DataFrame, dest: str) -> None:
+    def write_files(self, out: DataFrame, dest: str, partitioned: bool = True) -> None:
         """The raw Spark write action (separable for fault injection)."""
-        out.write.mode("overwrite").partitionBy(self.partition_col()).parquet(dest)
+        cols = [self.partition_col()] if partitioned else []
+        out.write.mode("overwrite").partitionBy(*cols).parquet(dest)
 
-    def _write(
-        self,
-        out: DataFrame,
-        epoch_id: int | str | None,
-        replace: Iterable[object] | None = None,
-    ) -> None:
-        """Land ``out`` as new files and publish them in one commit.
+    def _land(self, out: DataFrame, partitioned: bool = True) -> tuple[list[list], dict]:
+        """Run the write action and move its non-empty files to fresh
+        names; returns their log rows and what the job observed.
 
-        ``replace=None`` appends; otherwise the commit also removes every
-        live file of the partitions ``out`` writes and of ``replace`` (a
-        partition listed there that came back empty is replaced with
-        nothing).  The write job runs under the T7 retry budget and counts
-        its rows with ``DataFrame.observe`` — no extra pass over the data.
-        Its files are then moved from a private directory to fresh names in
-        their partition directories and only then published, so a failure
-        at any step leaves the previous version whole.
-        """
+        The job runs under the T7 retry budget and counts its rows with
+        ``DataFrame.observe`` — no extra pass over the data; when ``out``
+        carries ``POS_FILE``/``POS_ROW``, the same observation collects the
+        non-null positions, and those columns are not written.  Files land
+        in a private directory, then move to ``<partition>/<token>-<n>``
+        (``delta/...`` when unpartitioned): a failure at any step leaves
+        the previous version whole."""
         if not self.exists() and not self.create_if_needed:
             # create-if-needed parity (StreamBigqueryChangeConsumer.java:291)
             raise ValueError(
@@ -461,6 +525,10 @@ class ParquetTable:
         part_col = self.partition_col()
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_tmp_{token}")
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if POS_FILE in out.columns:
+            pos = F.when(F.col(POS_FILE).isNotNull(), F.struct(POS_FILE, POS_ROW))
+            metrics.append(F.collect_list(pos).alias("deleted"))
 
         def attempt() -> Observation:
             # fresh Observation per attempt: one Observation serves exactly
@@ -468,37 +536,67 @@ class ParquetTable:
             # nor may a failed attempt's files join the next one's.
             shutil.rmtree(tmp, ignore_errors=True)
             o = Observation()
-            self.write_files(out.observe(o, F.count(F.lit(1)).alias("rows")), tmp)
+            self.write_files(out.observe(o, *metrics).drop(POS_FILE, POS_ROW), tmp, partitioned)
             return o
 
         add: list[list] = []
         try:
-            obs = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}")
-            for d in sorted(os.listdir(tmp)):
-                if not d.startswith(f"{part_col}="):
-                    continue
-                os.makedirs(os.path.join(self.path, d), exist_ok=True)
+            seen = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}").get
+            dirs = [d for d in sorted(os.listdir(tmp)) if d.startswith(f"{part_col}=")]
+            for d in dirs if partitioned else [""]:
                 for name in sorted(os.listdir(os.path.join(tmp, d))):
-                    if name.endswith(".parquet"):
-                        src = os.path.join(tmp, d, name)
-                        rel = f"{d}/{token}-{len(add)}.parquet"
-                        meta = [d.split("=", 1)[1], os.path.getsize(src)]
-                        meta.append(pq.read_metadata(src).num_rows)
-                        os.rename(src, os.path.join(self.path, rel))
-                        add.append([rel, *meta])
+                    src = os.path.join(tmp, d, name)
+                    rows = name.endswith(".parquet") and pq.read_metadata(src).num_rows
+                    if not rows:
+                        continue
+                    rel = f"{d or DELTA_DIR}/{token}-{len(add)}.parquet"
+                    meta = [d.split("=", 1)[1] if d else None, os.path.getsize(src), rows]
+                    os.makedirs(os.path.dirname(os.path.join(self.path, rel)), exist_ok=True)
+                    os.rename(src, os.path.join(self.path, rel))
+                    add.append([rel, *meta])
         finally:
             self._release_zcache()
             shutil.rmtree(tmp, ignore_errors=True)
-        remove = []
+        return add, seen
+
+    def _schema_for(self, out: DataFrame) -> T.StructType:
+        """The logged schema evolved by ``out``'s new columns."""
+        known = self._schema.fields if self._schema is not None else []
+        names = {f.name for f in known} | {self.partition_col(), POS_FILE, POS_ROW}
+        return T.StructType(known + [f for f in out.schema.fields if f.name not in names])
+
+    def _write(
+        self,
+        out: DataFrame,
+        epoch_id: int | str | None,
+        replace: Iterable[object] | None = None,
+        remove: Iterable[str] = (),
+    ) -> list[list]:
+        """Land ``out`` partitioned and publish it in one commit, which
+        also removes the files in ``remove`` and, unless ``replace`` is
+        None, every live file of the partitions ``out`` writes and of
+        ``replace`` (one listed there that came back empty is replaced with
+        nothing).  Returns the log rows of the files it added."""
+        add, seen = self._land(out)
+        remove = list(remove)
         if replace is not None:
             parts = {a[1] for a in add} | {str(v) for v in replace}
-            remove = [rel for rel, meta in self._files.items() if meta[0] in parts]
-        known = self._schema.fields if self._schema is not None else []
-        names = {f.name for f in known} | {part_col}
-        schema = T.StructType(
-            known + [f for f in out.schema.fields if f.name not in names]
-        )
-        self._commit(add, remove, epoch_id, int(obs.get["rows"]), schema)
+            remove += [rel for rel, meta in self._files.items() if meta[0] in parts]
+        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out))
+        return add
+
+    def write_delta(self, out: DataFrame, epoch_id=None, remove: Iterable[str] = ()) -> None:
+        """Land ``out`` (``__kb`` a data column) as ONE delta file in one
+        commit, which also logs the positions in ``out``'s non-null
+        ``POS_FILE``/``POS_ROW`` as deleted and removes ``remove``."""
+        cols = [c for c in self.clustering_cols() if c in out.columns]
+        one = out.coalesce(1)
+        add, seen = self._land(one.sortWithinPartitions(*cols) if cols else one, False)
+        by_name = {os.path.basename(rel): rel for rel in self._files}
+        dels: dict[str, list[int]] = {}
+        for name, row in seen.get("deleted", []):
+            dels.setdefault(by_name[name], []).append(row)
+        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out), dels)
 
     def restrict_to_live(self, df: DataFrame) -> DataFrame:
         """Drop columns the table does not know when field addition is
@@ -522,9 +620,28 @@ class ParquetTable:
 
     def partition_file_counts(self) -> dict[str, int]:
         """Live data-file count per partition directory, from the log —
-        partition count, not row count."""
+        partition count, not row count.  Deltas belong to no partition."""
         self._refresh()
-        return Counter(rel.split("/", 1)[0] for rel in self._files)
+        return Counter(rel.split("/", 1)[0] for rel, m in self._files.items() if m[0] is not None)
+
+    def maintain(self) -> int:
+        """Merge-on-read upkeep, no Spark job unless a threshold is crossed:
+        files with at least ``REWRITE_SHARE`` of their rows deleted, and
+        every delta once there are more than ``MAX_DELTAS``, are replaced
+        in one commit by ONE delta of their live rows.  Returns the number
+        of files replaced."""
+        self._refresh()
+        worn = {rel for rel, m in self._files.items()
+                if len(self._dels.get(rel, ())) >= REWRITE_SHARE * m[2]}
+        deltas = [rel for rel, m in self._files.items() if m[0] is None]
+        if len(deltas) > MAX_DELTAS:
+            worn.update(deltas)
+        live = [rel for rel in sorted(worn) if len(self._dels.get(rel, ())) < self._files[rel][2]]
+        if live:
+            self.write_delta(self._scan(live), remove=sorted(worn))
+        elif worn:
+            self._commit(remove=sorted(worn))
+        return len(worn)
 
     def compact(
         self, max_files_per_partition: int = 8, files_per_partition: int = 1
@@ -539,19 +656,21 @@ class ParquetTable:
         ``max_files_per_partition`` data files, shuffle them once on the
         partition column (plus a bounded salt when one file per partition
         would be too big), and replace them in one commit like a MERGE —
-        readers never observe a half-compacted partition.  Returns the
-        number of partitions compacted.
+        readers never observe a half-compacted partition.  A table with
+        deltas or deletion sets is folded back whole into its buckets.
+        Returns the number of partitions compacted.
         """
-        fragged = [
-            d
-            for d, n in self.partition_file_counts().items()
-            if n > max_files_per_partition
-        ]
-        if not fragged:
+        counts = self.partition_file_counts()
+        deltas = [rel for rel, m in self._files.items() if m[0] is None]
+        folding = bool(deltas or self._dels)
+        values = [d.split("=", 1)[1] for d, n in counts.items()
+                  if folding or n > max_files_per_partition]
+        if not values and not folding:
             return 0
         part_col = self.partition_col()
-        values = [d.split("=", 1)[1] for d in fragged]
-        subset = self.read_raw().filter(F.col(part_col).cast("string").isin(values))
+        subset = self.read_raw()
+        if not folding:
+            subset = subset.filter(F.col(part_col).cast("string").isin(values))
         if files_per_partition > 1:
             salt = F.pmod(
                 F.xxhash64(*[F.col(c) for c in (self.key_cols or subset.columns[:1])]),
@@ -560,8 +679,8 @@ class ParquetTable:
             subset = subset.repartition(F.col(part_col), salt)
         else:
             subset = subset.repartition(F.col(part_col))
-        self.overwrite_partitions(subset, expected_partitions=values)
-        return len(values)
+        add = self._write(self._cluster_sort(subset), None, replace=values, remove=deltas)
+        return len(set(values) | {a[1] for a in add})
 
     def expire_partitions(self, keep_from: str) -> list[str]:
         """Drop time partitions strictly older than ``keep_from`` — the
@@ -582,13 +701,6 @@ class ParquetTable:
         if expired:
             self._commit(remove=[r for r, m in self._files.items() if m[0] in expired])
         return expired
-
-    def truncate(self) -> None:
-        """Remove every live file in one commit; schema, layout and
-        committed epochs remain."""
-        self._refresh()
-        if self._files:
-            self._commit(remove=list(self._files))
 
     def backfill_time_partitions(
         self, df: DataFrame, partitions: Sequence[str]

@@ -21,7 +21,7 @@ Scale design:
   same mechanism any sort uses at scale) then ``sortWithinPartitions``, so
   every output file covers a compact z-range.  Cost is the one shuffle any
   re-layout must pay; it is a maintenance operation, amortized exactly like
-  the staged-upsert compaction.
+  the upsert tables' maintenance.
 - **Per-batch clustering** (``ParquetTable(zorder_cols=...)``) sorts each
   micro-batch within its existing partitions — no extra shuffle on the
   write path; ranges come from the batch itself.  Row-group skipping only

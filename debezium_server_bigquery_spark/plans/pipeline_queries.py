@@ -42,9 +42,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, **kw) -> CdcPipeline:
 
 
 def _union_tables(p: CdcPipeline, cols: list[str]) -> DataFrame:
-    # Enumerate from the pipeline's registry, not the filesystem: a lazy
-    # destination that has not compacted yet exists only as an
-    # underscore-prefixed staging dir that a directory listing skips.
+    # Enumerate from the pipeline's registry, not the filesystem.
     dests = sorted(p.tables)
     if not dests:
         raise ValueError("pipeline produced no destination tables")
@@ -475,11 +473,11 @@ GROUP BY __op ORDER BY __op
 
 def pipeline_lazy_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_staleness-parity replication (operators/staged_upsert.py): three
-    event-id-ordered micro-batches flow through staged appends with one
-    auto-compaction MERGE (staleness=2) and a staged overlay left at read
-    time; read_current must equal the eager path's final state.  Batches
-    are event-id-ordered so the stage-sequence tie break agrees with the
-    oracle's global event_id DESC ordering on exact (ts, op) ties."""
+    event-id-ordered micro-batches flow through merge-on-read MERGEs with
+    table maintenance every 2 versions; read_current must equal the eager
+    path's final state.  Batches are event-id-ordered so "a later batch
+    wins an exact (ts, op) tie" agrees with the oracle's global event_id
+    DESC ordering."""
 
     target = scratch_dir("dsbq_e2e_")
     p = CdcPipeline(
@@ -503,9 +501,15 @@ def pipeline_lazy_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             cdc.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi)),
             epoch_id=i,
         )
-    return _union_tables(
-        p, ["user_id", "event_id", "event_type", "value", "__op"]
-    ).orderBy("table_name", "user_id")
+    from debezium_server_bigquery_spark.operators.rank import ordered_output
+
+    # the tables are read straight off their files: materialize the rows
+    # before the sort instead of letting its range sampler rescan them
+    return ordered_output(
+        _union_tables(p, ["user_id", "event_id", "event_type", "value", "__op"]),
+        "table_name",
+        "user_id",
+    )
 
 
 
@@ -520,7 +524,8 @@ def pipeline_metrics_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc = synthesize_cdc_events(load_table(spark, sf_dir, "events"))
     for epoch, parity in ((0, 0), (1, 1)):
         p.process_batch(cdc.filter(F.col("event_id") % 2 == parity), epoch_id=epoch)
-    return p.metrics().orderBy("table_name", "epoch")
+    # appends delete nothing: the gate pins the row counts, not rows_deleted
+    return p.metrics().select("table_name", "epoch", "rows").orderBy("table_name", "epoch")
 
 
 PIPELINE_METRICS_SQL = f"""{_CDC_CTE}
@@ -1034,14 +1039,14 @@ def pipeline_retry_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 orig = t.write_files
                 state = {"tripped": False}
 
-                def flaky_write(out, dest, _orig=orig, _state=state, _dest=destination):
+                def flaky_write(out, dest, *args, _orig=orig, _state=state, _dest=destination):
                     if not _state["tripped"]:
                         _state["tripped"] = True
                         injected.append(_dest)
                         raise RuntimeError(
                             f"injected transient write failure for {_dest}"
                         )
-                    _orig(out, dest)
+                    _orig(out, dest, *args)
 
                 t.write_files = flaky_write
             return t

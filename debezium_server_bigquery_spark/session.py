@@ -26,6 +26,25 @@ def _host_mem_gb() -> float:
     return 0.0
 
 
+def executor_java_options(pin_heap: bool, env=os.environ) -> str:
+    """``spark.executor.extraJavaOptions``: the heap pin on the EXECUTOR
+    side (round 14, VERDICT r13 ask #6).  In local mode executors live
+    inside the driver JVM so the value is inert there, but in cluster mode
+    the allocation-heavy stages (the interpreted-HOF hot loops that exposed
+    the commit-churn pathology) run in executor JVMs — they need the same
+    steady heap.  AlwaysPreTouch pre-faults the INITIAL heap, so the full
+    pin needs -Xms = spark.executor.memory; that value is
+    deployment-specific, so it rides the optional SPARK_GRAFT_EXECUTOR_MEM
+    env var (set it to the same value as spark.executor.memory in cluster
+    mode)."""
+    exec_mem = env.get("SPARK_GRAFT_EXECUTOR_MEM", "")
+    return (
+        (f"-Xms{exec_mem} " if exec_mem else "")
+        + ("-XX:+AlwaysPreTouch " if pin_heap else "")
+        + "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
+    )
+
+
 def get_spark(
     app_name: str = "debezium-server-bigquery-spark",
     master: str | None = None,
@@ -53,7 +72,6 @@ def get_spark(
     # the operator's statement that the RAM exists; for the default we
     # require MemTotal comfortably above the heap.
     pin_heap = "SPARK_GRAFT_DRIVER_MEM" in os.environ or _host_mem_gb() >= 24
-    exec_mem = os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "")
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
@@ -117,23 +135,12 @@ def get_spark(
             (f"-Xms{driver_mem} -XX:+AlwaysPreTouch " if pin_heap else "")
             + "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing -XX:CICompilerCount=16",
         )
-        # Same pin on the EXECUTOR side (round 14, VERDICT r13 ask #6): in
-        # local mode executors live inside the driver JVM so this line is
-        # inert here, but in cluster mode the allocation-heavy stages (the
-        # interpreted-HOF hot loops that exposed the commit-churn pathology)
-        # run in executor JVMs — they need the same steady heap.
-        # AlwaysPreTouch pre-faults the INITIAL heap, so the full pin needs
-        # -Xms = spark.executor.memory; that value is deployment-specific,
-        # so it rides the optional SPARK_GRAFT_EXECUTOR_MEM env var (set it
-        # to the same value as spark.executor.memory in cluster mode).
-        .config(
-            "spark.executor.extraJavaOptions",
-            (
-                (f"-Xms{exec_mem} " if exec_mem else "")
-                + ("-XX:+AlwaysPreTouch " if pin_heap else "")
-                + "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
-            ),
-        )
+        .config("spark.executor.extraJavaOptions", executor_java_options(pin_heap))
+        # Every pyspark.sql function call otherwise records its Python call
+        # site in the JVM for error messages: about five py4j round trips
+        # per call, which made plan building, not execution, the larger
+        # part of a merge-on-read MERGE (operators/merge.py) here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -55,13 +55,14 @@ class CdcPipeline:
 
     spark: SparkSession
     target_root: str
-    # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert, eager
-    # MERGE per batch) | "upsert_lazy" (max_staleness parity: staged
-    # appends + amortized MERGE, operators/staged_upsert.py)
+    # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert:
+    # merge-on-read MERGE per batch, table maintenance after each) |
+    # "upsert_lazy" (max_staleness parity: the same MERGE, maintenance
+    # every max_staleness_batches, operators/staged_upsert.py)
     mode: str = "append"
     key_cols: tuple[str, ...] = ()
     keep_deletes: bool = False  # debezium.sink.bigquerystream.upsert-keep-deletes
-    # upsert_lazy only: batches staged between compaction MERGEs — the
+    # upsert_lazy only: table versions between maintenance passes — the
     # analog of BigQuery's table max_staleness interval
     max_staleness_batches: int = 4
     destination_regexp: str = ""  # debezium.sink.batch.destination-regexp
@@ -111,9 +112,9 @@ class CdcPipeline:
     # BigQuery compacts its write-optimized storage in the background
     # (the reference never sees the cost); a parquet table must do it
     # explicitly or 2048-event micro-batch appends drown scans in
-    # file-open overhead at scale.  Runs through the same staged-swap
-    # path MERGE uses, so readers never observe a half-compacted
-    # partition, and a replayed epoch just re-packs the same bytes.
+    # file-open overhead at scale.  Each compaction is one table commit,
+    # so readers never observe a half-compacted partition, and a replayed
+    # epoch just re-packs the same bytes.
     auto_compact_every: int = 0
     auto_compact_max_files: int = 8
     partition_type: str = "MONTH"  # debezium.sink.*.partition-type
@@ -182,7 +183,7 @@ class CdcPipeline:
         return self._lazy[destination]
 
     def compact_all(self) -> None:
-        """upsert_lazy: fold every destination's staged rows now."""
+        """upsert_lazy: run every destination's maintenance now."""
         for wrapper in self._lazy.values():
             wrapper.compact()
 
@@ -372,6 +373,7 @@ class CdcPipeline:
                             tiebreak=self.dedup_tiebreak,
                             epoch_id=sub_epoch,
                         )
+                        table.maintain()
                     elif self.mode == "upsert_lazy" and self.key_cols:
                         self.lazy_for(dest).apply(group, epoch_id=sub_epoch)
                     elif self.mode == "scd2" and self.key_cols:
@@ -521,10 +523,9 @@ class CdcPipeline:
         consumer-metrics analog (the reference exposes processed counts
         via Debezium MBeans; here they come from the table commits, exact
         and restart-surviving).  ``rows`` is what the epoch's commit wrote:
-        the appended rows, or every row of the partitions a MERGE
-        rewrote.  In lazy mode a destination also lists its staged epochs
-        (rows staged after dedup) beside its ``__compact_<v>`` MERGEs.
-        Covers the destinations this pipeline has opened."""
+        the appended rows, or the rows of a MERGE's delta (the batch rows
+        that won); ``rows_deleted`` is how many stored rows the commit
+        superseded.  Covers the destinations this pipeline has opened."""
         from pyspark.sql import types as T
 
         schema = T.StructType(
@@ -532,18 +533,14 @@ class CdcPipeline:
                 T.StructField("table_name", T.StringType()),
                 T.StructField("epoch", T.StringType()),
                 T.StructField("rows", T.LongType()),
+                T.StructField("rows_deleted", T.LongType()),
             ]
         )
-        lazy = self.mode == "upsert_lazy" and self.key_cols
         recs = [
-            {"table_name": dest, "epoch": m["epoch"], "rows": m["rows"]}
+            {"table_name": dest, "epoch": m["epoch"], "rows": m["rows"],
+             "rows_deleted": m["rows_deleted"]}
             for dest, table in sorted(self.tables.items())
-            for t in (
-                [table, self.lazy_for(dest).staging]
-                if lazy and table.mode == "upsert"
-                else [table]
-            )
-            for m in t.epoch_metrics()
+            for m in table.epoch_metrics()
         ]
         return self.spark.createDataFrame(recs, schema)
 

@@ -130,7 +130,7 @@ def test_run_lazy_upsert_from_properties(spark, sf_dir, tmp_path):
     summary = run(str(conf), spark=spark)
     assert summary["mode"] == "upsert_lazy"
     assert summary["tables"]
-    # run() compacted: base tables alone hold the final state, staging gone
+    # run() ran the tables' maintenance; each table holds the final state
     for t in summary["tables"]:
         assert summary["rows"][t] > 0
 

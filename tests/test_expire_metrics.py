@@ -80,26 +80,35 @@ def test_pipeline_metrics_surface(spark, tmp_path):
         )
 
     def metrics(pipe):
-        return {r["epoch"]: r["rows"] for r in pipe.metrics().collect()}
+        return {r["epoch"]: (r["rows"], r["rows_deleted"]) for r in pipe.metrics().collect()}
 
-    # one bucket: a MERGE rewrites, and so counts, the whole table
     kw = {"key_cols": ("id",), "n_buckets": 1, "max_staleness_batches": 2}
+    # (rows written, stored rows deleted) per epoch
+    merges = {
+        # the first MERGE writes the bucketed table
+        "0.0": (3, 0),
+        # a delta of the 2 winning rows; key 3's stored row is superseded
+        "1.0": (2, 1),
+        # key 4's older update loses, key 5 is new: a delta of 1 row
+        "2.0": (1, 0),
+    }
     want = {
-        # appends count the batch
-        "append": {"0.0": 3, "1.0": 2},
-        # a MERGE counts every row it wrote: 3, then 3 + 1 new key
-        "upsert": {"0.0": 3, "1.0": 4},
-        # staged rows per batch, then the compaction's MERGE
-        "upsert_lazy": {"0.0": 3, "1.0": 2, "__compact_2": 4},
+        # appends count the batch and delete nothing
+        "append": {"0.0": (3, 0), "1.0": (2, 0), "2.0": (2, 0)},
+        "upsert": merges,
+        "upsert_lazy": merges,
     }
     for mode, expect in want.items():
         root = str(tmp_path / mode)
         pipe = CdcPipeline(spark, root, mode=mode, **kw)
         pipe.process_batch(batch([1, 2, 3], 1), epoch_id=0)
         pipe.process_batch(batch([3, 4], 2), epoch_id=1)
+        pipe.process_batch(batch([4, 5], 0), epoch_id=2)
         assert metrics(pipe) == expect, mode
         if mode == "append":
-            assert sum(expect.values()) == pipe.read_table("t1").count()
+            assert sum(r for r, _ in expect.values()) == pipe.read_table("t1").count()
+        else:
+            assert pipe.read_table("t1").count() == 5
         # restart: a new pipeline reads the same counts back from the log
         again = CdcPipeline(spark, root, mode=mode, **kw)
         again.read_table("t1")

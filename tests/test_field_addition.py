@@ -91,8 +91,13 @@ def test_emptied_table_still_exists_for_create_and_restriction(spark, tmp_path):
     deletes = _rows(spark, range(4)).withColumn("__op", F.lit("d"))
     merge_upsert(seed, deletes, epoch_id=1)
     assert seed.read().count() == 0 and t.exists()
-    # strict table accepts new writes (it exists) and sheds unknown columns
-    merge_upsert(t, _rows(spark, range(2), extra=True), epoch_id=2)
+    # strict table accepts new writes (it exists) and sheds unknown columns;
+    # the re-insert is newer than the tombstones the table keeps (at an
+    # equal timestamp a delete outranks an update and the key stays deleted)
+    reinsert = _rows(spark, range(2), extra=True).withColumn(
+        "__source_ts_ns", F.lit(1).cast("long")
+    )
+    merge_upsert(t, reinsert, epoch_id=2)
     got = t.read()
     assert got.count() == 2
     assert "new_col" not in got.columns

@@ -180,3 +180,47 @@ def test_snapshot_chunk_cannot_resurrect_deleted_key(spark, tmp_path):
         .collect()
     }
     assert alive == {8}  # 7 stays dead; 8's snapshot row lands
+
+
+def test_destructive_delete_is_not_resurrected_by_older_update(spark, tmp_path):
+    """keep_deletes=False: a delete (ts 10) followed by a later batch that
+    carries an OLDER update (ts 5) of the same key must leave the key
+    absent.  The winning tombstone stays as a hidden row, so the older
+    update loses to it on the A2 comparator."""
+    t = _table(spark, tmp_path, "t9")
+    merge_upsert(t, _batch(spark, [(1, 1, "a", "c", 1), (2, 2, "b", "c", 1)]), epoch_id=0)
+    merge_upsert(t, _batch(spark, [(1, 1, "a", "d", 10)]), epoch_id=1)
+    assert sorted(r.c_id for r in t.read().collect()) == [2]
+    merge_upsert(t, _batch(spark, [(1, 1, "stale", "u", 5)]), epoch_id=2)
+    assert sorted(r.c_id for r in t.read().collect()) == [2]
+    # a fresh handle hides the tombstone too: the flag is in the logged layout
+    assert ParquetTable.open(spark, t.path).read().count() == 1
+
+
+def test_merge_is_one_write_of_one_delta(spark, tmp_path, monkeypatch):
+    """Merge-on-read shape: a MERGE into a non-empty table starts no
+    action before its write (no probe collect, no bucket list) and commits
+    exactly one new data file plus the deletion set of the row it
+    supersedes."""
+    import json
+    import os
+
+    t = _table(spark, tmp_path, "t10")
+    merge_upsert(t, _batch(spark, [(i, i, f"v{i}", "c", 1) for i in range(8)]), epoch_id=0)
+    batch = _batch(spark, [(1, 1, "new", "u", 2), (9, 9, "w", "c", 2)])
+
+    def no_action(*args, **kwargs):
+        raise AssertionError("a Spark action ran before the MERGE's write")
+
+    for name in ("collect", "count", "first", "take", "head", "isEmpty", "toPandas"):
+        monkeypatch.setattr(type(batch), name, no_action)
+    merge_upsert(t, batch, epoch_id=1)
+    monkeypatch.undo()
+    with open(os.path.join(t.path, "_log", f"{t.version()}.json"), encoding="utf-8") as fh:
+        entry = json.load(fh)
+    assert [a[1] for a in entry["add"]] == [None]  # one unpartitioned delta
+    assert sum(len(rows) for rows in entry["del"].values()) == 1  # key 1's old row
+    assert (entry["rows"], "remove" in entry) == (2, False)
+    assert sorted((r.c_id, r.c_data) for r in t.read().collect()) == sorted(
+        [(i, f"v{i}") for i in range(8) if i != 1] + [(1, "new"), (9, "w")]
+    )

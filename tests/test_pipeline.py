@@ -323,9 +323,9 @@ def test_stream_checkpoint_resume_no_dupes_no_loss(spark, tmp_path):
 
 def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
     """Every sink mode keeps a table's state in data files plus its one
-    commit log: no epoch-marker dir, meta file, staging swap dir or
-    side metadata, and each table reopens from its log alone."""
-    from debezium_server_bigquery_spark.operators.table import ParquetTable
+    commit log: no epoch-marker dir, meta file, staging swap dir, staging
+    table or side metadata, and each table reopens from its log alone."""
+    from debezium_server_bigquery_spark.operators.table import DELTA_DIR, ParquetTable
 
     cdc = _cdc_df(spark, sf_dir).filter(F.col("event_id") % 4 == 0)
     for mode in ("append", "upsert", "upsert_lazy", "scd2"):
@@ -339,10 +339,10 @@ def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
         for d in sorted(os.listdir(root)):
             names = set(os.listdir(root / d))
             assert "_log" in names, (mode, d)
-            assert all(n == "_log" or "=" in n for n in names), (mode, d, names)
+            # data files sit in partition dirs, a MERGE's deltas in delta/
+            deltas = {DELTA_DIR} if mode in ("upsert", "upsert_lazy") else set()
+            assert {n for n in names if "=" not in n} == {"_log"} | deltas, (mode, d, names)
             reopened = ParquetTable.open(spark, str(root / d))
             assert reopened.mode == ("append" if mode == "append" else "upsert")
-        # only the lazy mode's staging tables sit beside the destinations
-        staging = [d for d in os.listdir(root) if d.startswith("_")]
-        assert bool(staging) == (mode == "upsert_lazy"), mode
-        assert all(d.startswith("_staging_") for d in staging)
+        # nothing sits beside the destinations: no staging tables
+        assert not [d for d in os.listdir(root) if d.startswith("_")], mode

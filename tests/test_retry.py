@@ -99,11 +99,11 @@ def test_append_retries_transient_write_failure(spark, tmp_path, monkeypatch):
     original = ParquetTable.write_files
     state = {"fails": 2, "calls": 0}
 
-    def flaky_write(self, out, dest):
+    def flaky_write(self, out, dest, *args):
         state["calls"] += 1
         if state["calls"] <= state["fails"]:
             raise OSError("transient fs hiccup")
-        return original(self, out, dest)
+        return original(self, out, dest, *args)
 
     monkeypatch.setattr(ParquetTable, "write_files", flaky_write)
     t.append(_rows(spark, range(10)), epoch_id=0)
@@ -120,7 +120,7 @@ def test_append_fails_loud_after_budget(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "t"), mode="append", retry_policy=NO_WAIT_POLICY
     )
 
-    def always_fail(self, out, dest):
+    def always_fail(self, out, dest, *args):
         raise OSError("permanent outage")
 
     monkeypatch.setattr(ParquetTable, "write_files", always_fail)
@@ -231,8 +231,8 @@ def _inject(monkeypatch, root: str, step: str, k: int) -> None:
     if step == "write":
         orig = ParquetTable.write_files
 
-        def write_files(self, out, dest):
-            orig(self, out, dest)
+        def write_files(self, out, dest, *args):
+            orig(self, out, dest, *args)
             hit(dest)
 
         monkeypatch.setattr(ParquetTable, "write_files", write_files)
@@ -345,16 +345,53 @@ def test_overwrite_partitions_survives_a_fault_at_every_step(
     assert set(_every_fault(monkeypatch, t.path, op, check)) == set(STEPS)
 
 
-@pytest.mark.heavy
-def test_lazy_compaction_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
-    """Both commits of a lazy-upsert compaction (the base MERGE, then the
-    staging truncation) under a fault at every step; calling compact()
-    again finishes the interrupted one."""
-    from debezium_server_bigquery_spark.operators.staged_upsert import (
-        StagedUpsertTable,
-    )
+def test_merge_with_deletion_sets_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """A merge-on-read MERGE — one delta file plus deletion sets in one
+    commit — under a fault at every step.  The table path holds a space,
+    so the logged deletion-set keys must still match the scan's
+    ``_metadata.file_name``."""
+    from debezium_server_bigquery_spark.operators.merge import merge_upsert
 
-    base = ParquetTable(
+    t = ParquetTable(
+        spark,
+        str(tmp_path / "with space" / "t"),
+        key_cols=["id"],
+        mode="upsert",
+        n_buckets=2,
+        retry_policy=_ONE_SHOT,
+    )
+    merge_upsert(t, _upsert_rows(spark, range(6), "seed", 0), epoch_id="seed")
+    want = {i: "seed" for i in range(6)}
+
+    def op(r):
+        # overlaps the previous round's keys: supersedes stored rows
+        merge_upsert(t, _upsert_rows(spark, range(2 * r, 2 * r + 4), f"r{r}", r + 1), epoch_id=r)
+
+    def check(r):
+        want.update({i: f"r{r}" for i in range(2 * r, 2 * r + 4)})
+        assert _ids(t.read()) == sorted(want.items())
+        assert _ids(ParquetTable(spark, t.path).read()) == sorted(want.items())
+
+    fired = _every_fault(monkeypatch, t.path, op, check)
+    # a MERGE removes no file: no remove-step fault can fire
+    assert set(fired) == set(STEPS) - {"remove"}
+    merges = t.epoch_metrics()[1:]
+    assert merges and all(m["rows_deleted"] > 0 and m["files_added"] == 1 for m in merges)
+
+
+@pytest.mark.heavy
+def test_maintenance_rewrite_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    """A MERGE followed by a maintenance pass that bin-packs every delta
+    (its threshold lowered to 0 here) under a fault at every step of both
+    commits; running the round again finishes the interrupted one."""
+    from unittest import mock
+
+    from debezium_server_bigquery_spark.operators import table as table_mod
+    from debezium_server_bigquery_spark.operators.merge import merge_upsert
+
+    t = ParquetTable(
         spark,
         str(tmp_path / "t"),
         key_cols=["id"],
@@ -362,24 +399,24 @@ def test_lazy_compaction_survives_a_fault_at_every_step(spark, tmp_path, monkeyp
         n_buckets=2,
         retry_policy=_ONE_SHOT,
     )
-    lazy = StagedUpsertTable(base, staleness_batches=1000)
-    lazy.staging.retry_policy = _ONE_SHOT
-    want: dict[int, str] = {}
+    merge_upsert(t, _upsert_rows(spark, range(6), "seed", 0), epoch_id="seed")
+    want = {i: "seed" for i in range(6)}
 
     def op(r):
-        # stage a batch overlapping the previous round's keys, then compact
-        ids = range(3 * r, 3 * r + 6)
-        want.update({i: f"r{r}" for i in ids})
-        lazy.apply(_upsert_rows(spark, ids, f"r{r}", r + 1), epoch_id=r)
-        lazy.compact()
+        ids = range(r % 5, r % 5 + 2)
+        merge_upsert(t, _upsert_rows(spark, ids, f"r{r}", r + 1), epoch_id=r)
+        assert t.maintain() > 0
 
     def check(r):
-        assert lazy.staging.read_raw() is None
-        assert _ids(lazy.read_stale()) == sorted(want.items())
+        want.update({i: f"r{r}" for i in range(r % 5, r % 5 + 2)})
+        assert _ids(t.read()) == sorted(want.items())
+        assert _ids(ParquetTable(spark, t.path).read()) == sorted(want.items())
+        assert len([m for m in t._files.values() if m[0] is None]) == 1
 
-    fired = _every_fault(monkeypatch, str(tmp_path), op, check)
+    with mock.patch.object(table_mod, "MAX_DELTAS", 0):
+        fired = _every_fault(monkeypatch, t.path, op, check)
     assert set(fired) == set(STEPS)
-    assert fired["pre_publish"] >= 3  # staging append, base MERGE, truncation
+    assert fired["pre_publish"] >= 2  # the MERGE, then the maintenance
 
 
 def test_pipeline_retry_e2e_converges_to_no_fault_state(spark):

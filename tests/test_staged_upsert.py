@@ -1,9 +1,10 @@
-"""Lazy upsert (max_staleness parity) — staged appends + amortized MERGE.
+"""Lazy upsert (max_staleness parity) — merge-on-read MERGE per batch,
+table maintenance every N versions.
 
 The contract under test: at every point in time, ``read_current()`` of
 the lazy table equals what the eager per-batch MERGE path would have
-produced, regardless of where the compaction boundary falls; after
-``compact()`` the base table alone holds that state.
+produced, regardless of where the maintenance boundary falls, and a
+replayed epoch changes nothing.
 """
 
 from __future__ import annotations
@@ -64,9 +65,9 @@ def test_lazy_matches_eager_at_every_point(spark, tmp_path):
         assert _snap(lazy.read_current()) == _snap(
             _eager(spark, tmp_path, batches, i + 1)
         ), f"divergence after batch {i}"
-    # batch 3 (index 2) triggered auto-compaction at staleness 3; finish it
+    # maintenance ran after version 3; running it again changes nothing
     lazy.compact()
-    assert _snap(lazy.read_stale()) == _snap(_eager(spark, tmp_path, batches, 4))
+    assert _snap(lazy.read_current()) == _snap(_eager(spark, tmp_path, batches, 4))
 
 
 @pytest.mark.heavy
@@ -97,7 +98,7 @@ def test_lazy_epoch_replay_is_idempotent(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_lazy_stage_counter_recovers_after_restart(spark, tmp_path):
+def test_lazy_state_recovers_after_restart(spark, tmp_path):
     batches = _batches(spark)
     base = ParquetTable(
         spark, str(tmp_path / "lazyc"), key_cols=["user_id"], mode="upsert", n_buckets=4
@@ -105,13 +106,15 @@ def test_lazy_stage_counter_recovers_after_restart(spark, tmp_path):
     lazy = StagedUpsertTable(base, staleness_batches=10)
     lazy.apply(batches[0], epoch_id=0)
     lazy.apply(batches[1], epoch_id=1)
-    # "restart": a fresh wrapper over the same paths continues the sequence
-    # (the staging log holds it)
+    # "restart": a fresh wrapper over the same path continues from the log
+    # (files, deletion sets, committed epochs, maintenance cadence)
     lazy2 = StagedUpsertTable(
         ParquetTable(spark, base.path, key_cols=["user_id"], mode="upsert", n_buckets=4),
         staleness_batches=10,
     )
-    assert lazy2._pending_batches() == 2
+    assert lazy2.table.version() == 1
+    lazy2.apply(batches[1], epoch_id=1)  # replay: skipped
+    assert lazy2.table.version() == 1
     lazy2.apply(batches[2], epoch_id=2)
     assert _snap(lazy2.read_current()) == _snap(
         _eager(spark, tmp_path, batches, 3)
@@ -141,23 +144,20 @@ def test_pipeline_upsert_lazy_mode(spark, sf_dir, tmp_path):
         e = _snap(eager.read_table(dest).select("user_id", F.col("event_type").alias("v"), "__op"))
         l = _snap(lazy.read_table(dest).select("user_id", F.col("event_type").alias("v"), "__op"))
         assert e == l, dest
-    # after compaction the stale read path converges to the same state
+    # maintenance (and a full fold back into buckets) changes no state
     lazy.compact_all()
     for dest in sorted(eager.tables):
+        lazy.table_for(dest).compact()
         e = _snap(eager.read_table(dest).select("user_id", F.col("event_type").alias("v"), "__op"))
-        s = _snap(
-            lazy.lazy_for(dest).read_stale().select(
-                "user_id", F.col("event_type").alias("v"), "__op"
-            )
-        )
+        s = _snap(lazy.read_table(dest).select("user_id", F.col("event_type").alias("v"), "__op"))
         assert e == s, dest
 
 
 @pytest.mark.heavy
 def test_streaming_lazy_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
-    """Lazy mode under Structured Streaming: staged appends are
-    epoch-guarded, so a checkpoint restart that replays nothing leaves the
-    exact same state; the final compacted table equals the eager path."""
+    """Lazy mode under Structured Streaming: MERGEs are epoch-guarded, so
+    a checkpoint restart that replays nothing leaves the exact same state;
+    the final maintained table equals the eager path."""
     import os
 
     from debezium_server_bigquery_spark.sources.cdc import synthesize_cdc_events
@@ -179,17 +179,16 @@ def test_streaming_lazy_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
         return p
 
     p = run_once()
-    # pre-compaction, only underscore-prefixed staging dirs exist on disk —
-    # destinations live in the pipeline's table registry
-    assert not [d for d in os.listdir(tgt) if not d.startswith((".", "_"))]
+    # every destination is a table on disk, and nothing else is
     dests = sorted(p.tables)
     assert dests
+    assert sorted(d for d in os.listdir(tgt) if not d.startswith((".", "_"))) == dests
     state1 = {d: _snap(p.read_table(d).select("user_id", F.col("event_type").alias("v"), "__op")) for d in dests}
-    # restart on the same checkpoint: no new data, no duplicate staging
+    # restart on the same checkpoint: no new data, no MERGE runs twice
     p2 = run_once()
     state2 = {d: _snap(p2.read_table(d).select("user_id", F.col("event_type").alias("v"), "__op")) for d in dests}
     assert state1 == state2
-    # compaction converges to the eager result
+    # maintenance keeps the eager result
     p2.compact_all()
     eager = CdcPipeline(
         spark, str(tmp_path / "eager"), mode="upsert", key_cols=("user_id",), n_buckets=8
@@ -197,57 +196,54 @@ def test_streaming_lazy_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
     eager.run_batch(cdc)
     for d in dests:
         assert _snap(
-            p2.lazy_for(d).read_stale().select("user_id", F.col("event_type").alias("v"), "__op")
+            p2.read_table(d).select("user_id", F.col("event_type").alias("v"), "__op")
         ) == _snap(eager.read_table(d).select("user_id", F.col("event_type").alias("v"), "__op"))
 
+
 def test_epoch_replay_protection_survives_compaction(spark, tmp_path):
-    """A streaming retry of an already-staged epoch arriving AFTER an
-    auto-compaction must be skipped: the staged epochs live in the staging
-    log, and truncating staging is one more commit that forgets none."""
+    """A streaming retry of an already-merged epoch arriving AFTER a
+    maintenance pass must be skipped: the epoch lives in the table log,
+    and maintenance is one more commit that forgets none."""
     batches = _batches(spark)
     base = ParquetTable(
         spark, str(tmp_path / "lazyx"), key_cols=["user_id"], mode="upsert", n_buckets=4
     )
     lazy = StagedUpsertTable(base, staleness_batches=2)
     lazy.apply(batches[0], epoch_id=0)
-    lazy.apply(batches[1], epoch_id=1)  # hits staleness -> auto-compacts
+    lazy.apply(batches[1], epoch_id=1)
+    lazy.compact()
     after_compact = _snap(lazy.read_current())
+    version = base.version()
     lazy.apply(batches[1], epoch_id=1)  # late retry straddling the boundary
     assert _snap(lazy.read_current()) == after_compact
-    # nothing was re-staged: the staging overlay holds no data files
-    assert lazy.staging.read_raw() is None
+    assert base.version() == version  # nothing was written again
 
 
 @pytest.mark.heavy
-def test_compaction_merge_is_epoch_marked(spark, tmp_path, monkeypatch):
-    """A crash between the compaction MERGE and the staging truncation
-    replays as a no-op: the MERGE carries a deterministic epoch id, the
-    staging version its truncation takes."""
+def test_maintenance_crash_after_merge_replays_as_noop(spark, tmp_path, monkeypatch):
+    """A crash between a MERGE's commit and the maintenance that follows
+    it loses nothing: the replayed epoch is skipped, and the next
+    maintenance pass does the work."""
     batches = _batches(spark)
     base = ParquetTable(
         spark, str(tmp_path / "lazym"), key_cols=["user_id"], mode="upsert", n_buckets=4
     )
-    lazy = StagedUpsertTable(base, staleness_batches=10)
+    lazy = StagedUpsertTable(base, staleness_batches=1)
     lazy.apply(batches[0], epoch_id=0)
-    lazy.apply(batches[1], epoch_id=1)
 
     def crash():
-        raise RuntimeError("killed before truncating staging")
+        raise RuntimeError("killed before maintenance")
 
-    monkeypatch.setattr(lazy.staging, "truncate", crash)
+    monkeypatch.setattr(base, "maintain", crash)
     with pytest.raises(RuntimeError, match="killed"):
-        lazy.compact()
+        lazy.apply(batches[1], epoch_id=1)
     monkeypatch.undo()
-    assert base.epoch_committed("__compact_2")
-    state = _snap(lazy.read_current())
-    merged = base.version()
-    # the replay: the MERGE is skipped, only the truncation lands
-    lazy.compact()
+    assert base.epoch_committed(1)
+    state, merged = _snap(lazy.read_current()), base.version()
+    lazy.apply(batches[1], epoch_id=1)  # the replay: skipped
     assert base.version() == merged
-    assert lazy.staging.read_raw() is None
-    assert _snap(lazy.read_current()) == state
-    # a LATER generation gets a different id, so future compactions run
-    lazy.apply(batches[2], epoch_id=2)
+    assert _snap(lazy.read_current()) == state == _snap(_eager(spark, tmp_path, batches, 2))
+    for i in (2, 3):
+        lazy.apply(batches[i], epoch_id=i)
     lazy.compact()
-    assert base.epoch_committed("__compact_4")
-    assert _snap(lazy.read_stale()) == _snap(_eager(spark, tmp_path, batches, 3))
+    assert _snap(lazy.read_current()) == _snap(_eager(spark, tmp_path, batches, 4))
