@@ -15,8 +15,7 @@ one corpus scan builds (word, freq), after which every round touches only
 reliable scratch-parquet checkpoint (O(1) plan depth at any merge count;
 the table is vocabulary-sized, so the materialization must survive
 executor loss — sources/tables.py) and collects exactly ONE row — the
-argmax pair — O(1) driver data per round, same class as the k-means
-convergence scalar.
+argmax pair — O(1) driver data per round.
 
 Correctness: merge selection is iterative and data-dependent (each
 round's counts depend on the previous round's chosen pair), so no SINGLE
@@ -190,36 +189,6 @@ def bpe_encode_words(words: DataFrame, merges: list[tuple]) -> DataFrame:
     for _rank, a, b, *_rest in merges:
         out = out.withColumn("tokens", F.expr(_merge_expr(a, b, col="tokens")))
     return out
-
-
-def bpe_token_stats(docs: DataFrame, merges: list[tuple], text_col: str = "text") -> DataFrame:
-    """Per-document token counts under a trained BPE tokenizer.
-
-    Scale design: the corpus is reduced to its per-doc word occurrences
-    and the tokenizer runs ONCE PER DISTINCT WORD (the vocabulary table,
-    orders of magnitude smaller than the corpus); occurrences then join
-    the encoded vocabulary on the word hash key and aggregate back to
-    documents — encode-the-vocabulary-not-the-corpus, the same economy as
-    training on word frequencies."""
-    occ = docs.select(
-        "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-            )
-        ).alias("word"),
-    )
-    encoded = bpe_encode_words(occ.select("word").distinct(), merges).select(
-        "word", F.size("tokens").alias("n_word_tokens")
-    )
-    return (
-        occ.join(encoded, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_word_tokens").alias("n_tokens"),
-        )
-    )
 
 
 def bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,31 +5,19 @@ A production training-data pipeline rarely re-deduplicates the world: it
 admits a NEW batch (today's crawl) against an EXISTING corpus, so the
 operator it needs is "which new documents near-duplicate something we
 already have" — candidate generation must stay banded (never new x corpus
-all-pairs) and the corpus side must be a stored index the batch probes,
-not a table re-signatured per batch.
+all-pairs).
 
-Two shapes, mirroring the IVF pattern (inline graded query + stored
-deployment index):
-
-- :func:`dedup_incremental_minhash` — inline, oracle-checked: one band
-  self-join (signatures computed ONCE via ReusedExchange, parity
-  predicates inside the join condition split corpus from new), then an
-  exact shingle-Jaccard verification on the candidate pairs only.
-  Candidate + verify is the full near-dup pipeline: LSH recall, exact
-  precision, and the expensive comparison never touches a non-candidate.
-- :class:`MinHashBandIndex` — the corpus signatures persisted
-  ``partitionBy(band, sig_pre)`` (sig md5-prefix sub-partitions).  A new
-  batch computes its own bands, collects its distinct ``(band, prefix)``
-  keys (<= bands x 256 — metadata, not data), prunes the index scan to
-  those partitions, and broadcast-joins the batch's bands: per-batch cost
-  is proportional to the batch and the touched index slice, not the
-  corpus.  ``append`` admits the deduplicated batch's signatures so the
-  index stays current without rebuilds.
+- :func:`dedup_incremental_minhash` — near-dup: one band self-join
+  (signatures computed ONCE via ReusedExchange, parity predicates inside
+  the join condition split corpus from new), then an exact
+  shingle-Jaccard verification on the candidate pairs only.  Candidate +
+  verify is the full near-dup pipeline: LSH recall, exact precision, and
+  the expensive comparison never touches a non-candidate.
+- :func:`dedup_cross_run_fingerprint_store` — exact: the batch probes a
+  persisted fingerprint store with one equi-join.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,138 +103,6 @@ ORDER BY new_doc, corpus_doc
 """
 
 
-# Synthetic band id carrying the full-content hash: exact copies collide
-# here even when the text is too short to produce any shingle (< n-gram
-# tokens), so cross-batch exact dedup rides the same pruned index probe.
-EXACT_BAND = -1
-
-
-class MinHashBandIndex:
-    """Persisted corpus band signatures for incremental dedup.
-
-    Layout: ``partitionBy(band, sig_pre)`` where ``sig_pre`` is the first
-    ``PREFIX_LEN`` hex chars of the band signature — (bands+1) x 256
-    directories whose statistics let a batch probe read only the slice it
-    can possibly collide with.  Besides the LSH bands every document
-    stores one ``EXACT_BAND`` row keyed by ``md5(text)``.
-    """
-
-    PREFIX_LEN = 2
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def signatures(self, docs: DataFrame) -> DataFrame:
-        """(doc_id, band, sig, sig_pre) rows: LSH bands + the exact-hash
-        band.  Compute ONCE per batch and share between in-batch self-joins
-        and :meth:`match_bands` (persist it — three derivations of the
-        shingle/minhash pipeline per batch is the expensive mistake)."""
-        lsh = minhash_band_table(docs)
-        exact = docs.select(
-            "doc_id",
-            F.lit(EXACT_BAND).cast("long").alias("band"),
-            # coalesce: NULL text hashes as the empty document (the package
-            # convention, see chunking/recipe) — a NULL sig would never
-            # equi-join (NULL != NULL), silently exempting empty docs from
-            # cross-batch exact dedup, and its NULL sig_pre key crashes the
-            # driver-side sorted() in match_bands.
-            F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("sig"),
-        )
-        return lsh.unionByName(exact).withColumn(
-            "sig_pre", F.substring("sig", 1, self.PREFIX_LEN)
-        )
-
-    def build(self, docs: DataFrame) -> None:
-        self.signatures(docs).write.mode("overwrite").partitionBy(
-            "band", "sig_pre"
-        ).parquet(self.path)
-
-    def append(self, docs: DataFrame) -> None:
-        """Admit a (deduplicated) batch's signatures into the index."""
-        self.append_bands(self.signatures(docs))
-
-    def append_bands(self, sig_rows: DataFrame) -> None:
-        """Admit precomputed :meth:`signatures` rows (reuse, don't re-derive)."""
-        sig_rows.write.mode("append").partitionBy("band", "sig_pre").parquet(
-            self.path
-        )
-
-    def _empty_result(self) -> DataFrame:
-        from pyspark.sql import types as T
-
-        return self.spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("new_doc", T.LongType()),
-                    T.StructField("corpus_doc", T.LongType()),
-                    T.StructField("n_shared_bands", T.LongType()),
-                    T.StructField("exact_match", T.BooleanType()),
-                ]
-            ),
-        )
-
-    def match_bands(
-        self, probe: DataFrame, *, broadcast_batch: bool = True
-    ) -> DataFrame:
-        """Candidate pairs for precomputed probe ``signatures`` rows:
-        (new_doc, corpus_doc, n_shared_bands, exact_match) where
-        ``n_shared_bands`` counts DISTINCT LSH bands (immune to duplicate
-        index rows left by crash replays — the ingest contract) and
-        ``exact_match`` marks a full-content hash collision.
-
-        The probe's distinct ``(band, sig_pre)`` keys are collected
-        driver-side (<= (bands+1) x 16^PREFIX_LEN rows — metadata, the
-        same O(metadata) contract as MERGE's bucket list) and pushed as
-        partition filters, so the index scan touches only colliding
-        partitions.  ``broadcast_batch=False`` switches to a shuffle join
-        for batches too large to broadcast.
-        """
-        # bounded-collect: O(batch bands) probe keys, batch-sized not corpus-sized
-        keys = probe.select("band", "sig_pre").distinct().collect()
-        if not keys:  # empty batch / all docs shorter than one shingle
-            return self._empty_result()
-        by_band: dict[int, set[str]] = {}
-        for r in keys:
-            by_band.setdefault(r["band"], set()).add(r["sig_pre"])
-        idx = self.spark.read.parquet(self.path)
-        cond = reduce(
-            lambda x, y: x | y,
-            [
-                (F.col("band") == b)
-                & F.col("sig_pre").isin(sorted(p for p in pres if p is not None))
-                for b, pres in sorted(by_band.items())
-            ],
-        )
-        idx = idx.filter(cond)
-        side = F.broadcast(probe) if broadcast_batch else probe
-        return (
-            idx.alias("c")
-            .join(
-                side.alias("n"),
-                (F.col("c.band") == F.col("n.band"))
-                & (F.col("c.sig") == F.col("n.sig")),
-            )
-            .groupBy(
-                F.col("n.doc_id").alias("new_doc"),
-                F.col("c.doc_id").alias("corpus_doc"),
-            )
-            .agg(
-                F.count_distinct(
-                    F.when(F.col("c.band") != EXACT_BAND, F.col("c.band"))
-                ).alias("n_shared_bands"),
-                F.max(F.col("c.band") == EXACT_BAND).alias("exact_match"),
-            )
-        )
-
-    def match(self, new_docs: DataFrame, *, broadcast_batch: bool = True) -> DataFrame:
-        """Convenience wrapper: compute the batch signatures and probe."""
-        return self.match_bands(
-            self.signatures(new_docs), broadcast_batch=broadcast_batch
-        )
-
-
 def dedup_cross_run_fingerprint_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-run EXACT dedup against a persisted fingerprint store — the
     incremental-corpus-refresh admission gate (VERDICT r11 ask #4): a new
@@ -266,12 +122,12 @@ def dedup_cross_run_fingerprint_store(spark: SparkSession, sf_dir: str) -> DataF
     first-occurrence pass is a map-side-combinable ``min(doc_id)`` per
     fingerprint joined back on the same key (same exchange, AQE reuses
     it).  Per-source counts are an O(sources) aggregate.  Companion to
-    :class:`MinHashBandIndex` (the NEAR-dup store): real refreshes run
-    the exact gate first because it is one hash cheaper per doc.
+    :func:`dedup_incremental_minhash` (the NEAR-dup probe): real refreshes
+    run the exact gate first because it is one hash cheaper per doc.
     """
     docs = load_table(spark, sf_dir, "documents")
     # NULL text fingerprints as the empty document (package convention —
-    # see MinHashBandIndex.signatures).
+    # see chunking/recipe): a NULL fingerprint would never equi-join.
     fp = F.md5(F.coalesce(F.col("text"), F.lit("")))
     store = checkpoint_parquet(
         docs.filter(F.col("doc_id") % 2 == 0).select(fp.alias("fp")).distinct(),

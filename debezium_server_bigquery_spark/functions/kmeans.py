@@ -9,10 +9,9 @@ semantic dedup (cluster-confined near-duplicate removal).
   (``min(struct(dist, cluster))`` — map-side combinable, no window
   shuffle), and the update is one posexplode + decimal-sum aggregation
   (map-side combines to k x dim rows per partition).  At 100 TB each
-  iteration is one scan + one tiny agg shuffle; between iterations a
-  production loop would checkpoint the assignment to cut plan depth —
-  at the fixed ITERS used here the composed plan is shallow enough to
-  run as-is.
+  iteration is one scan + one tiny agg shuffle; at the fixed ITERS used
+  here the composed plan is shallow enough to run as-is (an open-ended
+  iteration count would need a per-round checkpoint to bound plan depth).
 - **semantic_dedup_pairs** — SemDeDup (Abbas et al., 2023,
   arXiv:2303.09540): near-duplicate pairs are only searched WITHIN a
   k-means cluster, so the quadratic pair scan is confined to cells of
@@ -44,7 +43,6 @@ from debezium_server_bigquery_spark.functions.similarity import (
     _sq_dist,
     _SQDIST_SQL,
     cosine,
-    dot,
     with_norm,
 )
 from debezium_server_bigquery_spark.sources.tables import load_table
@@ -128,56 +126,6 @@ def _seed(vecs: DataFrame, k: int) -> DataFrame:
         .limit(k)
         .select(F.col("vec_id").alias("cluster_id"), F.col("v").alias("centroid"))
     )
-
-
-def lloyd_kmeans_checkpointed(
-    emb: DataFrame,
-    k: int = K,
-    max_iters: int = ITERS,
-    tol: float = 0.0,
-) -> DataFrame:
-    """Production-loop form of :func:`lloyd_kmeans`: identical math, but
-    each round's centroid table (k rows) is ``localCheckpoint``-ed so the
-    logical plan stays O(1)-deep regardless of iteration count, and the
-    loop stops early once the max squared centroid shift is <= ``tol``.
-
-    With ``tol=0.0`` early stop happens only at an exact fixed point, where
-    further iterations are no-ops — so for any ``max_iters == iters`` the
-    result is bit-for-bit the composed form's (pinned by
-    tests/test_kmeans.py).  The O(k x dim) centroid collect per round is
-    metadata-scale; the vector table itself is never collected and is
-    re-scanned once per iteration (persist it upstream for many rounds).
-    """
-    vecs = _vecs(emb)
-    # bounded-local-checkpoint: the seed table is exactly k rows (limit k),
-    # O(k x dim) — losing its executor blocks costs a cheap query retry,
-    # never a data-sized recompute, so the non-reliable store is acceptable
-    # here (tests/test_plan_audit.py::test_local_checkpoint_sites_bounded).
-    cents = _seed(vecs, k).localCheckpoint()
-    assigned = _assign(vecs, cents)
-    for _ in range(max_iters):
-        # bounded-local-checkpoint: each round's centroid table is <= k rows
-        # (groupBy over at most k cluster ids) — same O(k x dim) bound.
-        new_cents = _update(assigned).localCheckpoint()
-        assigned = _assign(vecs, new_cents)
-        # max squared shift over clusters; a cluster appearing/vanishing
-        # (seed id not a mean, or an emptied cell) counts as infinite shift.
-        joined = cents.alias("o").join(
-            new_cents.alias("n"), "cluster_id", "full_outer"
-        )
-        shift = joined.select(
-            F.max(
-                F.when(
-                    F.col("o.centroid").isNull() | F.col("n.centroid").isNull(),
-                    F.lit(float("inf")),
-                ).otherwise(_sq_dist(F.col("o.centroid"), F.col("n.centroid")))
-            ).alias("s")
-        # bounded-collect: one-row shift aggregate (O(1) scalar)
-        ).collect()[0]["s"]
-        cents = new_cents
-        if shift is not None and shift <= tol:
-            break
-    return assigned
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``.
 
-The real decoders (PIL/ffmpeg/torchaudio) are not in this container, so the
-decode step is stubbed (``decode_image_stub`` raises NotImplementedError;
-``_fake_features`` is the deterministic stand-in) — but everything
+The real decoders (PIL/ffmpeg/torchaudio) are not dependencies of this
+package, so nothing decodes: ``_extract_features`` and ``_sample_frames``
+are deterministic stand-ins over the raw bytes — but everything
 Spark-side is real and tested: the schema contract (binary payload +
 metadata struct), the Arrow batch path, partition-size-aware batch
 iteration, and the downstream join/aggregate behavior of the extracted
@@ -48,18 +48,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 FRAME_SIZE = 64  # bytes per synthetic "frame"
-
-
-def decode_image_stub(payload: bytes) -> object:
-    """Placeholder for a real image decode (PIL.Image.open on the payload).
-
-    Raises until an imaging library is available; callers route around it
-    via the deterministic fake-feature path so the pipeline stays testable.
-    """
-    raise NotImplementedError(
-        "image decoding requires an imaging library not present in this "
-        "environment; use the *_stub feature path"
-    )
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -176,10 +164,11 @@ FROM frames ORDER BY doc_id, frame_idx
 # --------------------------------------------------------------------------
 # REAL byte-level media decode: PNG and WAV headers are plain struct
 # layouts, so probing width/height/sample-rate needs no imaging library —
-# this is the first rung of the decode ladder that decode_image_stub marks
-# for full decoders.  Payload synthesis is a deterministic function of
-# doc_id, so the DuckDB twin recomputes the expected metadata from the
-# same arithmetic while the Spark side genuinely round-trips the bytes.
+# this is the first rung of a decode ladder whose full decoders (PIL,
+# ffmpeg) are not dependencies of this package.  Payload synthesis is a
+# deterministic function of doc_id, so the DuckDB twin recomputes the
+# expected metadata from the same arithmetic while the Spark side
+# genuinely round-trips the bytes.
 # --------------------------------------------------------------------------
 MEDIA_SCHEMA = T.StructType(
     [

@@ -308,114 +308,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class IvfIndex:
-    """The IVF inverted file as a *stored* data layout (the 100 TB path).
-
-    ``build`` assigns every vector to its nearest coarse cell and writes the
-    corpus ``partitionBy(cell_id)`` with the centroid table beside it;
-    ``search`` resolves each query's nprobe nearest cells against the tiny
-    centroid table driver-side, then scans **only those cell partitions**
-    (literal ``cell_id IN (...)`` predicate -> partition pruning on the
-    parquet scan, visible as PartitionFilters in the physical plan) and
-    exact-cosine re-ranks inside them.  At 1000 executors a query touches
-    nprobe/k of the corpus files; the build is one shuffle-free write after
-    a broadcast-join assignment.
-
-    ``ann_ivf`` above runs the identical dataflow inline so the DuckDB
-    oracle can replay it; this class is the deployment shape.
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
-        import os
-
-        self.spark = spark
-        self.path = path
-        self.data_path = os.path.join(path, "cells")
-        self.centroid_path = os.path.join(path, "centroids")
-
-    @classmethod
-    def build(cls, spark: SparkSession, emb: DataFrame, path: str) -> "IvfIndex":
-        """Assign-once + partitioned write.  ``emb``: (vec_id, embedding, ...)."""
-        idx = cls(spark, path)
-        emb = with_norm(emb)
-        cents = ivf_centroids(emb)
-        scored = emb.crossJoin(broadcast(cents)).withColumn(
-            "dist", _sq_dist(F.col("embedding"), F.col("centroid"))
-        )
-        w = Window.partitionBy("vec_id").orderBy("dist", "cell_id")
-        assigned = (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") == 1)
-            .select("vec_id", "embedding", "norm", "cell_id")
-        )
-        assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-            idx.data_path
-        )
-        cents.write.mode("overwrite").parquet(idx.centroid_path)
-        return idx
-
-    def search(
-        self,
-        queries: DataFrame,
-        nprobe: int = NPROBE,
-        topk: int = IVF_TOPK,
-        broadcast_queries: bool = True,
-    ) -> DataFrame:
-        """Top-k cosine neighbors for (query_id, embedding) rows.
-
-        Fully distributed, DataFrame -> DataFrame: probe-cell assignment is
-        a broadcast nested-loop against the k-row centroid table plus a
-        per-query window rank — no driver-side collect at ANY query-side
-        cardinality (a 10^9-query batch join is the same plan).  With
-        ``broadcast_queries=True`` (interactive/top-k shape) the probe set
-        is broadcast into the cell join, and Spark's dynamic partition
-        pruning restricts the cell scan to the probed partitions
-        (``PartitionFilters: ... dynamicpruning...`` in the physical plan
-        — the runtime analog of the literal IN-list).  For a query batch
-        too large to broadcast, pass ``False``: the join shuffles both
-        sides on ``cell_id`` instead, which is the right plan when nearly
-        every cell is probed anyway.
-        """
-        cents = broadcast(self.spark.read.parquet(self.centroid_path))
-        q = queries.select(
-            "query_id", F.col("embedding").cast("array<double>").alias("q_emb")
-        ).withColumn("q_norm", F.sqrt(dot(F.col("q_emb"), F.col("q_emb"))))
-        scored = q.crossJoin(cents).withColumn(
-            "dist", _sq_dist(F.col("q_emb"), F.col("centroid"))
-        )
-        w_cell = Window.partitionBy("query_id").orderBy("dist", "cell_id")
-        probes = (
-            scored.withColumn("crank", F.row_number().over(w_cell))
-            .filter(F.col("crank") <= nprobe)
-            .select("query_id", "q_emb", "q_norm", F.col("cell_id").alias("probe_cell"))
-        )
-        if broadcast_queries:
-            probes = broadcast(probes)
-        data = self.spark.read.parquet(self.data_path)
-        cands = probes.join(
-            data,
-            (F.col("probe_cell") == F.col("cell_id"))
-            & (F.col("query_id") != F.col("vec_id")),
-        )
-        sim = cosine(
-            F.col("q_emb"), F.col("embedding"), F.col("q_norm"), F.col("norm")
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-        return (
-            cands.withColumn("sim", sim)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= topk)
-            .select(
-                "query_id",
-                "rank",
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("cell_id").alias("cell"),
-                F.round("sim", 6).alias("cosine_sim"),
-            )
-            .orderBy("query_id", "rank")
-        )
-
-
 _SQDIST_SQL = (
     "list_reduce(list_prepend(0.0::DOUBLE, "
     "list_transform(range(1, len({a}) + 1), "

@@ -51,12 +51,6 @@ def word_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(F.lower(col))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return n_stop / F.greatest(F.size(toks), F.lit(1))
-
-
 def punct_ratio(col: Column) -> Column:
     n_punct = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
     return n_punct / F.greatest(F.length(col), F.lit(1))
@@ -83,15 +77,6 @@ def rolling_hash(col: Column, mod: int = 1_000_000_007, base: int = 31) -> Colum
         F.lit(0).cast("long"),
         lambda h, ch: F.pmod(h * base + F.ascii(ch), F.lit(mod)),
     )
-
-
-def lang_scores(col: Column) -> list[tuple[str, Column]]:
-    toks = tokens(F.lower(col))
-    out = []
-    for lang, markers in LANG_MARKERS.items():
-        score = F.size(F.filter(toks, lambda t: t.isin(*markers)))
-        out.append((lang, score))
-    return out
 
 
 # --------------------------------------------------------------------------

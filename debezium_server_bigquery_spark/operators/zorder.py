@@ -16,10 +16,13 @@ Scale design:
 - **Bucket ranges are O(metadata)**: one tiny min/max aggregate per layout
   call (or caller-provided ranges).  Nothing is collected but 2 scalars
   per column.
-- **`zorder_layout` is the OPTIMIZE-style path**: global
-  ``repartitionByRange`` on the z-value (sampled range boundaries — the
-  same mechanism any sort uses at scale) then ``sortWithinPartitions``, so
-  every output file covers a compact z-range.  Cost is the one shuffle any
+- **`zorder_layout` is the OPTIMIZE-style path**: rows go to contiguous
+  z-ranges of near-equal size, cut from exact row counts per z-prefix (at
+  most ``2**CUT_BITS`` counts reach the driver), then
+  ``sortWithinPartitions``, so every output file covers a compact z-range.
+  Exact counts make the layout the same in every run; a sampled range
+  partitioner (``repartitionByRange``) seeds its sample with the RDD id,
+  so its file boundaries and row-group stats change from job to job.  Cost is the one shuffle any
   re-layout must pay; it is a maintenance operation, amortized exactly like
   the upsert tables' maintenance.
 - **Per-batch clustering** (``ParquetTable(zorder_cols=...)``) sorts each
@@ -41,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ZORDER_BITS = 12
+# zorder_layout cuts its partitions on the top CUT_BITS bits of the z-value.
+CUT_BITS = 12
 
 
 def validate_zorder(cols: Sequence[str], bits: int = ZORDER_BITS) -> None:
@@ -160,17 +165,30 @@ def zorder_layout(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """OPTIMIZE ZORDER BY analog: return ``df`` globally laid out in
-    z-order (range-partitioned + sorted on the z-value), ready to write.
-    One shuffle — the price of any re-layout."""
+    z-order (range-partitioned + sorted on the z-value, ties by ``cols``),
+    ready to write.  One shuffle — the price of any re-layout — after one
+    aggregate that counts rows per z-prefix to place the partition cuts.
+    ``num_partitions`` defaults to ``spark.sql.shuffle.partitions``."""
     ranges = dict(ranges) if ranges is not None else column_ranges(df, cols)
-    z = zvalue(df, cols, ranges, bits).alias("__zv")
-    with_z = df.select("*", z)
-    parted = (
-        with_z.repartitionByRange(num_partitions, "__zv")
-        if num_partitions
-        else with_z.repartitionByRange("__zv")
+    n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    with_z = df.select("*", zvalue(df, cols, ranges, bits).alias("__zv"))
+    prefix = F.shiftright("__zv", max(len(cols) * bits - CUT_BITS, 0))
+    # bounded-collect: one count per z-prefix, at most 2**CUT_BITS rows
+    counts = sorted(tuple(r) for r in with_z.groupBy(prefix).count().collect())
+    total = sum(c for _, c in counts)
+    # cuts[i]: the first prefix of partition i+1; a prefix holding more
+    # than a partition's share repeats its cut and leaves a partition empty
+    cuts: list[int] = []
+    seen = 0
+    for p, c in counts:
+        cuts += [p] * (min(seen * n // total, n - 1) - len(cuts))
+        seen += c
+    pid = sum(((prefix >= cut).cast("int") for cut in cuts), F.lit(0))
+    return (
+        with_z.repartitionById(n, pid)
+        .sortWithinPartitions("__zv", *cols)
+        .drop("__zv")
     )
-    return parted.sortWithinPartitions("__zv").drop("__zv")
 
 
 # --------------------------------------------------------------------------

@@ -101,28 +101,3 @@ def debezium_schema_to_struct(
         dtype = _wire_type(f, nested_as_json=nested_as_json)
         fields.append(T.StructField(name, dtype, nullable=bool(f.get("optional", True))))
     return T.StructType(fields)
-
-
-def key_fields(key_schema_node: dict[str, Any] | None) -> list[str]:
-    """Primary-key column names from the event key schema.
-
-    Mirror of ``BaseRecordConverter.keyFields`` (:143-153); feeds the MERGE
-    key and clustering metadata instead of a BigQuery table constraint.
-    """
-    if not key_schema_node:
-        return []
-    return [f["field"] for f in key_schema_node.get("fields", [])]
-
-
-def clustering_columns(
-    key_schema_node: dict[str, Any] | None, clustering_field: str = "__source_ts_ms"
-) -> list[str]:
-    """Up to 3 PK columns + the clustering field (BigQuery max 4) —
-    mirror of ``BaseRecordConverter.tableClustering`` (:198-223).
-
-    In Spark these drive ``sortWithinPartitions`` on write so parquet
-    row-group min/max stats give data skipping on PK point lookups.
-    """
-    cols = key_fields(key_schema_node)[:3]
-    cols.append(clustering_field)
-    return cols

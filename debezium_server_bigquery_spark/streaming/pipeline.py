@@ -341,8 +341,9 @@ class CdcPipeline:
                 ):
                     part = fn(part)
                 table = self.table_for(dest)
-                # R4: uniform-schema sub-batches in event order (one group in
-                # the common case; >1 only when DDL landed mid-batch).
+                # R4: uniform-schema sub-batches in event order (one group
+                # unless the batch carries a __schema_fp column, which no
+                # shipped source attaches).
                 for gi, (_fp, group) in enumerate(schema_groups(part)):
                     # Between-jobs cancellation point: cancelJobGroup only
                     # kills a RUNNING job, so a timed-out thread sitting

@@ -11,10 +11,12 @@ R4 parity — within one destination's batch the reference groups events by
 their embedded value schema so each upload carries a uniform schema
 (``Collectors.groupingBy(RecordConverter::valueSchema)``,
 BaseChangeConsumer.java:189-205).  In Spark a micro-batch DataFrame has a
-single union schema; the per-event schema identity must ride along as a
-fingerprint column, and grouping is a cheap distinct over that column
-(micro-batch-bounded, a few values at most — a schema change mid-batch is
-the rare case it exists for).
+single union schema; the per-event schema identity would have to ride
+along as a ``__schema_fp`` fingerprint column, and grouping is a cheap
+distinct over that column.  No source or pipeline step attaches that
+column, so ``CdcPipeline`` gets one schema group per destination for
+every batch its sources produce; only a caller that attaches
+``__schema_fp`` itself gets the split.
 """
 
 from __future__ import annotations
@@ -112,15 +114,6 @@ class SchemaHistory:
         if not self.exists():
             return False
         return len(self.spark.read.parquet(self.path).limit(5).take(5)) > 0
-
-
-def with_schema_fingerprint(df: DataFrame, raw_col: str = "value") -> DataFrame:
-    """Attach the per-event schema fingerprint (md5 of the embedded schema
-    node) to raw Debezium JSON lines — the grouping key for R4."""
-    return df.withColumn(
-        SCHEMA_FP_COL,
-        F.md5(F.coalesce(F.get_json_object(F.col(raw_col), "$.schema"), F.lit(""))),
-    )
 
 
 def schema_groups(df: DataFrame, fp_col: str = SCHEMA_FP_COL) -> list[tuple[str, DataFrame]]:

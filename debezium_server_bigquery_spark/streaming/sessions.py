@@ -359,8 +359,7 @@ def sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hour windows sliding every hour: each event lands in exactly two
     overlapping windows.  Spark's ``window(ts, size, slide)`` expands rows
     by size/slide copies BEFORE the aggregate — a narrow explode, then the
-    same map-side-combinable shape as the tumbling form; state in the
-    streaming twin is bounded by watermark exactly like tumbling."""
+    same map-side-combinable shape as the tumbling form."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -396,33 +395,6 @@ SELECT CAST(window_start AS TIMESTAMP) AS window_start, event_type,
 FROM expanded
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-def sliding_event_counts_stream(
-    events: DataFrame, watermark: str = "3 hours"
-) -> DataFrame:
-    """Streaming twin of :func:`sliding_event_counts`: identical
-    size/slide; the watermark must cover the window SIZE (2h) plus the
-    lateness bound so a window only finalizes after every slide member
-    that can still contain data has passed."""
-    ts_type = events.schema["ts"].dataType
-    events = events.withColumn("ts", as_instant(F.col("ts"), ts_type))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-            ).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def session_stats_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

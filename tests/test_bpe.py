@@ -177,40 +177,3 @@ def test_bpe_encode_matches_python(spark):
     vocab = {m[3] for m in merges}
     for toks in got.values():
         assert all(len(t) == 1 or t in vocab for t in toks)
-
-
-def test_bpe_token_stats_on_documents(spark, sf_dir):
-    from debezium_server_bigquery_spark.functions.bpe import (
-        bpe_token_stats,
-        bpe_train_merges,
-        word_frequencies,
-    )
-    from debezium_server_bigquery_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    merges = [
-        (r.rank, r.left, r.right, r.merged, r.support)
-        for r in bpe_train_merges(spark, sf_dir).collect()
-    ]
-    out = {r.doc_id: r for r in bpe_token_stats(docs, merges).collect()}
-    assert len(out) == 50
-    # merges only ever shrink a word's token count; chars are the ceiling
-    wf = word_frequencies(docs)
-    n_chars = {
-        r.doc_id: r.n
-        for r in docs.select(
-            "doc_id",
-            F.aggregate(
-                F.transform(
-                    F.filter(
-                        F.split(F.lower("text"), r"\s+"), lambda t: t != ""
-                    ),
-                    lambda w: F.length(w),
-                ),
-                F.lit(0),
-                lambda a, x: a + x,
-            ).alias("n"),
-        ).collect()
-    }
-    for doc_id, r in out.items():
-        assert r.n_words <= r.n_tokens <= n_chars[doc_id]

@@ -3,11 +3,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from debezium_server_bigquery_spark.functions.graph import (
-    ITERS,
     pagerank,
-    pagerank_loop,
     pagerank_trade_graph,
-    trade_edges,
 )
 
 
@@ -43,18 +40,6 @@ def test_pagerank_star_closed_form(spark):
         c, leaf = (1 - d) / N + d * n * leaf, (1 - d) / N + d * c / n
     r = {row.node: row.rank for row in pagerank(_star_edges(spark), iters=3).collect()}
     assert abs(r[0] - c) < 1e-12 and abs(r[1] - leaf) < 1e-12
-
-
-def test_pagerank_loop_agrees_with_composed(spark, sf_dir):
-    edges = trade_edges(spark, sf_dir)
-    composed = {r.node: r.rank for r in pagerank(edges, iters=ITERS).collect()}
-    # tol=0.0 can never trigger early stop (delta >= 0), so the loop runs
-    # exactly ITERS checkpointed rounds of the same math
-    looped = {
-        r.node: r.rank
-        for r in pagerank_loop(edges, max_iters=ITERS, tol=0.0).collect()
-    }
-    assert looped == composed  # bit-for-bit: decimal sums are exact
 
 
 def test_pagerank_trade_graph_shape(spark, sf_dir):

@@ -1,80 +1,6 @@
-"""IvfIndex — the stored cell-partitioned ANN layout (similarity.py).
-
-The inline ``ann_ivf`` query is the oracle-replayable dataflow; the index
-must produce the identical top-k for the same probe queries, while its scan
-reads only the probed cell partitions (partition pruning)."""
+"""embedding_norm_stats (similarity.py): per-label norm bounds."""
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import functions as F
-
-from debezium_server_bigquery_spark.functions.similarity import (
-    IVF_TOPK,
-    NPROBE,
-    IvfIndex,
-    ann_ivf,
-)
-from debezium_server_bigquery_spark.sources.tables import load_table
-
-
-def _build(spark, sf_dir, tmp_path) -> IvfIndex:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return IvfIndex.build(spark, emb, str(tmp_path / "ivf"))
-
-
-def test_build_materializes_cell_partitions(spark, sf_dir, tmp_path):
-    idx = _build(spark, sf_dir, tmp_path)
-    cells = [d for d in os.listdir(idx.data_path) if d.startswith("cell_id=")]
-    assert len(cells) > 1  # one directory per coarse cell
-    n = spark.read.parquet(idx.data_path).count()
-    assert n == load_table(spark, sf_dir, "embeddings").count()
-
-
-def test_search_matches_inline_ann_ivf(spark, sf_dir, tmp_path):
-    idx = _build(spark, sf_dir, tmp_path)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = idx.search(queries, nprobe=NPROBE, topk=IVF_TOPK).collect()
-    expected = ann_ivf(spark, sf_dir).collect()
-    as_tuples = lambda rows: [
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine_sim"]) for r in rows
-    ]
-    assert as_tuples(got) == as_tuples(expected)
-
-
-def test_search_scan_is_partition_pruned(spark, sf_dir, tmp_path):
-    idx = _build(spark, sf_dir, tmp_path)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    plan = idx.search(queries)._jdf.queryExecution().executedPlan().toString()
-    # the cell scan must carry a runtime partition filter on cell_id
-    # (dynamic partition pruning fed by the broadcast probe side), not a
-    # post-scan filter over the full corpus; and nothing may collect the
-    # query side to the driver to get there (search is pure DataFrame ops).
-    assert "PartitionFilters: [isnotnull(cell_id" in plan
-    assert "dynamicpruning" in plan
-
-
-def test_search_batch_mode_matches_broadcast_mode(spark, sf_dir, tmp_path):
-    """broadcast_queries=False (the 10^9-query batch shape: shuffle join on
-    cell_id, no broadcast of the probe side) returns identical results."""
-    idx = _build(spark, sf_dir, tmp_path)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = idx.search(queries, broadcast_queries=True).collect()
-    b = idx.search(queries, broadcast_queries=False).collect()
-    as_tuples = lambda rows: [
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cosine_sim"]) for r in rows
-    ]
-    assert as_tuples(a) == as_tuples(b)
 
 
 def test_embedding_norm_stats_bounds(spark, sf_dir):

@@ -15,7 +15,6 @@ from debezium_server_bigquery_spark.functions.kmeans import (
     SEMDEDUP_COSINE,
     kmeans_clusters,
     lloyd_kmeans,
-    lloyd_kmeans_checkpointed,
     semantic_dedup_pairs,
 )
 from debezium_server_bigquery_spark.sources.tables import load_table
@@ -48,28 +47,6 @@ def _sorted_rows(df):
     return sorted(
         (r["vec_id"], r["cluster_id"], r["dist"]) for r in df.collect()
     )
-
-
-def test_checkpointed_matches_composed_bit_for_bit(spark, sf_dir):
-    """The production (localCheckpoint + convergence-stop) loop must agree
-    exactly with the composed fixed-ITERS plan at the same iteration count
-    — tol=0.0 can only stop early at a fixed point, where further rounds
-    are no-ops."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    composed = _sorted_rows(lloyd_kmeans(emb, iters=2))
-    checkpointed = _sorted_rows(
-        lloyd_kmeans_checkpointed(emb, max_iters=2, tol=0.0)
-    )
-    assert composed == checkpointed
-
-
-def test_checkpointed_converges_and_stops(spark, sf_dir):
-    """With a generous tolerance the loop stops before max_iters and still
-    returns a full valid assignment."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = lloyd_kmeans_checkpointed(emb, max_iters=50, tol=1e9)
-    assert out.count() == emb.count()
-    assert out.select("cluster_id").distinct().count() <= K
 
 
 def test_seeding_handles_sparse_nonzero_ids(spark, sf_dir):

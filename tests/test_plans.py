@@ -159,8 +159,8 @@ def test_ngram_jaccard_single_shingle_pass(spark, sf_dir):
 
     # hermetic plan shape: another test may have persist()-marked a shared
     # substrate (registered queries no longer do — round 8 moved them all
-    # to scratch-parquet checkpoints — but streaming ingest still persists
-    # per batch), in which case this plan would read InMemoryTableScan
+    # to scratch-parquet checkpoints — but a test's own persist() may
+    # linger), in which case this plan would read InMemoryTableScan
     # instead of showing the exchange-reuse nodes asserted below
     spark.catalog.clearCache()
     df = dedup_ngram_jaccard(spark, sf_dir)

@@ -5,11 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from debezium_server_bigquery_spark.schema import (
-    clustering_columns,
-    debezium_schema_to_struct,
-    key_fields,
-)
+from debezium_server_bigquery_spark.operators.table import ParquetTable
+from debezium_server_bigquery_spark.schema import debezium_schema_to_struct
 
 # B1 — unwrap-with-schema.json shape: flat payload with semantic Date.
 B1_SCHEMA = {
@@ -138,8 +135,9 @@ KEY_SCHEMA = {
 
 
 def test_key_fields_and_clustering_cap():
-    assert key_fields(KEY_SCHEMA) == ["c_id", "c_id2", "c_id3", "c_id4"]
+    keys = [f["field"] for f in KEY_SCHEMA["fields"]]
     # <= 3 PK cols + clustering field == BigQuery's 4-field cap
-    # (BaseRecordConverter.java:218-221).
-    assert clustering_columns(KEY_SCHEMA) == ["c_id", "c_id2", "c_id3", "__source_ts_ms"]
-    assert key_fields(None) == []
+    # (BaseRecordConverter.java:218-221); the handle needs no session.
+    t = ParquetTable(None, "unused", key_cols=keys)
+    assert t.clustering_cols() == ["c_id", "c_id2", "c_id3", "__source_ts_ms"]
+    assert ParquetTable(None, "unused").clustering_cols() == ["__source_ts_ms"]

@@ -15,7 +15,6 @@ from debezium_server_bigquery_spark.streaming.schema_history import (
     SCHEMA_FP_COL,
     SchemaHistory,
     schema_groups,
-    with_schema_fingerprint,
 )
 
 
@@ -45,7 +44,11 @@ def test_schema_fingerprint_and_groups(spark):
         json.dumps({"schema": {"fields": ["id", "name"]}, "payload": {"id": 3}}),
     ]
     raw = spark.createDataFrame([(l,) for l in lines], "value string")
-    fp = with_schema_fingerprint(raw)
+    # the per-event fingerprint a caller attaches: md5 of the embedded schema
+    fp = raw.withColumn(
+        SCHEMA_FP_COL,
+        F.md5(F.coalesce(F.get_json_object("value", "$.schema"), F.lit(""))),
+    )
     assert SCHEMA_FP_COL in fp.columns
     n_groups = fp.select(SCHEMA_FP_COL).distinct().count()
     assert n_groups == 2

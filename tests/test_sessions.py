@@ -119,39 +119,6 @@ def test_sessionize_single_exchange(spark, sf_dir):
     assert n_exchanges <= 2  # one for windows, one (reused/AQE) for agg at most
 
 
-def test_sliding_counts_stream_matches_batch(spark, sf_dir, tmp_path):
-    from debezium_server_bigquery_spark.streaming.sessions import (
-        sliding_event_counts,
-        sliding_event_counts_stream,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "src")
-    ev.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    out = sliding_event_counts_stream(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("slide_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not finish in 180s"
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM slide_out").collect()
-    }
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in sliding_event_counts(spark, sf_dir).collect()
-    }
-    assert len(got) > 0
-    for k, v in got.items():
-        assert expected.get(k) == v
-
-
 class _FakeState:
     def __init__(self):
         self._v = None

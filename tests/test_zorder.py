@@ -176,13 +176,12 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     zorder_layout(li, ["l_orderkey", "l_partkey"], num_partitions=nparts).write.options(
         **opts
     ).mode("overwrite").parquet(zdir)
-    (
-        li.repartitionByRange(nparts, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.options(**opts)
-        .mode("overwrite")
-        .parquet(ldir)
-    )
+    # the linear layout is a one-column z-order: range cuts + sort on
+    # l_orderkey from exact counts, like the z layout (a sampled
+    # repartitionByRange would move its file boundaries between runs)
+    zorder_layout(li, ["l_orderkey"], num_partitions=nparts).write.options(
+        **opts
+    ).mode("overwrite").parquet(ldir)
 
     # middle-10% window in each dimension, queried SEPARATELY
     rng = li.agg(
