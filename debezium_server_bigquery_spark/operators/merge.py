@@ -22,8 +22,9 @@ Spark write action, and no action before it:
    flagged ``__deleted = true``, without it the table layout records that
    reads hide them.  Tombstones are never garbage-collected.
 
-A MERGE into a table with no live files writes the bucketed layout.  The
-table's ``maintain()`` bounds deltas and deletion sets; ``compact()`` folds
+A MERGE into a table with no live files lands bucketed instead (the
+table's one layout rule, ``ParquetTable.write_delta``).  The table's
+``maintain()`` bounds deltas and deletion sets; ``compact()`` folds
 them back into buckets.  PK-less tables fall back to append —
 ``doUpsert``/``doTableHasPrimaryKey`` parity
 (StreamBigqueryChangeConsumer.java:163-174).
@@ -36,12 +37,7 @@ from pyspark.sql import functions as F
 
 from debezium_server_bigquery_spark.coerce import OP_PRIORITY_SQL
 from debezium_server_bigquery_spark.operators.dedup import dedup_last_writer
-from debezium_server_bigquery_spark.operators.table import (
-    KEY_BUCKET,
-    POS_FILE,
-    POS_ROW,
-    ParquetTable,
-)
+from debezium_server_bigquery_spark.operators.table import POS_FILE, POS_ROW, ParquetTable
 
 
 def merge_upsert(
@@ -69,18 +65,14 @@ def merge_upsert(
     src = table.restrict_to_live(table.with_partition_col(deduped))
     table.keep_deletes = keep_deletes
     live = table.read_raw(positions=True)
-    if live is None:
-        # one file per bucket
-        table.append(src.repartition(KEY_BUCKET), epoch_id=epoch_id)
-        return
-    probe = live.selectExpr(
-        *[f"`{k}` AS `__p_{k}`" for k in table.key_cols],
-        f"struct(`{order_col}`, {OP_PRIORITY_SQL}) AS __p_order",
-        POS_FILE, POS_ROW,
-    )
-    same_key = " AND ".join(f"`{k}` <=> `__p_{k}`" for k in table.key_cols)
-    newer = f"{POS_FILE} IS NULL OR struct(`{order_col}`, {OP_PRIORITY_SQL}) >= __p_order"
-    winners = src.join(probe, F.expr(same_key), "left").filter(newer)
-    table.write_delta(
-        winners.drop(*[f"__p_{k}" for k in table.key_cols], "__p_order"), epoch_id
-    )
+    if live is not None:
+        probe = live.selectExpr(
+            *[f"`{k}` AS `__p_{k}`" for k in table.key_cols],
+            f"struct(`{order_col}`, {OP_PRIORITY_SQL}) AS __p_order",
+            POS_FILE, POS_ROW,
+        )
+        same_key = " AND ".join(f"`{k}` <=> `__p_{k}`" for k in table.key_cols)
+        newer = f"{POS_FILE} IS NULL OR struct(`{order_col}`, {OP_PRIORITY_SQL}) >= __p_order"
+        src = src.join(probe, F.expr(same_key), "left").filter(newer)
+        src = src.drop(*[f"__p_{k}" for k in table.key_cols], "__p_order")
+    table.write_delta(src, epoch_id)

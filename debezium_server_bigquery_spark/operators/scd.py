@@ -15,6 +15,11 @@ OR delete), then delete rows are dropped.  One shuffle on the key, O(1)
 state per key in the window, no join, no self-join — the standard
 distributed SCD2 shape that holds at 100 TB because cost is a single
 key-partitioned sort, the same cost class as the MERGE dedup it parallels.
+
+The incremental sink (``scd2_merge_batch``) writes like the upsert MERGE:
+merge-on-read, one delta file per micro-batch holding the re-windowed
+history of the keys it touched, with the stored rows it replaces logged as
+deletion sets in the same table commit.
 """
 
 from __future__ import annotations
@@ -25,6 +30,12 @@ from pyspark.sql.window import Window
 
 from debezium_server_bigquery_spark.coerce import OP_PRIORITY_SQL, op_priority
 from debezium_server_bigquery_spark.operators.routing import filter_heartbeats
+from debezium_server_bigquery_spark.operators.table import (
+    KEY_BUCKET,
+    POS_FILE,
+    POS_ROW,
+    ParquetTable,
+)
 from debezium_server_bigquery_spark.sources.cdc import (
     cdc_synth_oracle_sql,
     synthesize_cdc_events,
@@ -138,7 +149,7 @@ ORDER BY user_id, version_num
 
 
 def scd2_merge_batch(
-    table,
+    table: ParquetTable,
     batch: DataFrame,
     order_col: str = "__source_ts_ns",
     op_col: str = "__op",
@@ -151,16 +162,18 @@ def scd2_merge_batch(
     history — the streaming form of :func:`scd2_from_changes` and the
     history-preserving sibling of ``merge_upsert``.
 
-    Affected-key copy-on-write: the batch's key set prunes the target scan
-    to the touched buckets (an O(n_buckets) driver list); rows of
-    untouched keys in those buckets are carried
-    over verbatim, while the FULL change history of touched keys is
-    re-windowed together with the batch.  Re-windowing whole keys (not
-    just open versions) makes the merge correct under ANY arrival order —
-    a late event splices into its key's history and downstream versions
-    renumber; streams with strict per-key ordering could carry only the
-    open version per key through the window as a further optimization.
-    Cost is bounded by churn × history depth per batch, never table size.
+    Merge-on-read, like ``merge_upsert``: the stored rows of the batch's
+    keys are read with their positions, and the FULL change history of
+    those keys is re-windowed together with the batch.  One write job adds
+    the recomputed history as one delta file and logs the positions of the
+    stored rows it replaces as deletion sets in the same commit; rows of
+    other keys are neither rewritten nor moved.  Re-windowing whole keys
+    (not just open versions) makes the merge correct under ANY arrival
+    order — a late event splices into its key's history and downstream
+    versions renumber; streams with strict per-key ordering could carry
+    only the open version per key through the window as a further
+    optimization.  Cost is bounded by churn × history depth per batch,
+    never table size.
 
     Idempotency: the epoch rides in the table commit, as in merge_upsert,
     so a replayed micro-batch is skipped; exact re-deliveries inside the
@@ -170,58 +183,39 @@ def scd2_merge_batch(
     configured tiebreak does not uniquify the stream).
 
     Schema evolution: a later batch may add columns the stored history
-    lacks — the redo source selects the intersection of stored/batch
-    change columns and every union uses ``allowMissingColumns=True``
-    (NULL-filling the other side), mirroring operators/merge.py.
+    lacks — the redo source replays every stored change column and the
+    union uses ``allowMissingColumns=True`` (NULL-filling the other side),
+    mirroring operators/merge.py.
     """
-    from debezium_server_bigquery_spark.operators.table import KEY_BUCKET
-
     if table.epoch_committed(epoch_id):
         return
     keys = list(table.key_cols)
     if not keys:
         raise ValueError("scd2_merge_batch requires key columns")
-    live = table.read_raw()
     # allow-field-addition gate: like merge_upsert, a disabled gate drops
     # batch columns the stored table does not know instead of evolving it.
     batch = table.restrict_to_live(batch)
-    buckets: list = []
-    if live is None:
-        result = scd2_from_changes(
-            batch.dropDuplicates(),
-            keys,
-            order_col,
-            op_col,
-            delete_op,
-            tiebreak,
-            keep_tombstones=True,
-        )
-    else:
-        src = table.with_partition_col(batch)
-        # bounded-collect: O(buckets) affected-bucket list (fixed bucket count)
-        buckets = [r[0] for r in src.select(KEY_BUCKET).distinct().collect()]
-        live = live.filter(F.col(KEY_BUCKET).isin(buckets))
-        bkeys = batch.select(*keys).distinct()
-        touched = live.join(bkeys, keys, "left_semi")
-        untouched = live.join(bkeys, keys, "left_anti").drop(KEY_BUCKET)
+    redo_src = batch
+    live = table.read_raw(positions=True)
+    if live is not None:
+        touched = live.join(batch.select(*keys).distinct(), keys, "left_semi")
         # Replay ALL stored change columns (everything except the derived
-        # SCD2/bucket columns) — intersecting with batch.columns would NULL
-        # out stored-only columns for every touched key when a later batch
-        # stops carrying one.  unionByName fills each side's missing columns.
-        derived = {"valid_from", "valid_to", "is_current", "version_num", KEY_BUCKET}
-        stored_change_cols = [c for c in touched.columns if c not in derived]
-        redo_src = (
-            touched.select(*stored_change_cols)  # original change rows
-            .unionByName(batch, allowMissingColumns=True)
-            .dropDuplicates()  # full row: collapse only exact re-deliveries
-        )
-        recomputed = scd2_from_changes(
-            redo_src, keys, order_col, op_col, delete_op, tiebreak, keep_tombstones=True
-        )
-        result = untouched.unionByName(recomputed, allowMissingColumns=True)
-    table.overwrite_partitions(
-        table.with_partition_col(result), expected_partitions=buckets, epoch_id=epoch_id
+        # SCD2/bucket/position columns) — intersecting with batch.columns
+        # would NULL out stored-only columns for every touched key when a
+        # later batch stops carrying one.
+        derived = {"valid_from", "valid_to", "is_current", "version_num",
+                   KEY_BUCKET, POS_FILE, POS_ROW}
+        stored = touched.select(*[c for c in touched.columns if c not in derived])
+        redo_src = stored.unionByName(batch, allowMissingColumns=True)
+    history = scd2_from_changes(
+        redo_src.dropDuplicates(),  # full row: collapse only exact re-deliveries
+        keys, order_col, op_col, delete_op, tiebreak, keep_tombstones=True,
     )
+    out = table.with_partition_col(history)
+    if live is not None:
+        # the replaced stored rows, as deletion-only rows (null __kb)
+        out = out.unionByName(touched.select(POS_FILE, POS_ROW), allowMissingColumns=True)
+    table.write_delta(out, epoch_id)
 
 
 def state_as_of(
@@ -369,9 +363,7 @@ def scd2_sink_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     three time-tercile micro-batches, each merged by scd2_merge_batch into
     a key-bucketed dimension table on disk; the read-back history must be
     row-identical to the one-shot batch SCD2 (same oracle as
-    scd2_user_history), proving the copy-on-write merge end-to-end."""
-
-    from debezium_server_bigquery_spark.operators.table import ParquetTable
+    scd2_user_history), proving the merge-on-read sink end-to-end."""
 
     cdc = _cdc_with_probes(spark, sf_dir)
     table = ParquetTable(

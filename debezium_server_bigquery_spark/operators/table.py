@@ -9,15 +9,17 @@ Spark-native equivalent: a directory-backed parquet table.
 - **Append tables** partition by ``__part_month = date_format(__ts_ms,
   'yyyy-MM')`` -> readers get partition pruning on time predicates, the
   analog of BigQuery time partitioning.
-- **Upsert tables** partition by a stable key-hash bucket ``__kb =
-  pmod(xxhash64(pk...), n_buckets)`` when first written or compacted.
-  Later MERGEs are merge-on-read: each adds ONE unpartitioned *delta* file
-  (``delta/<token>-0.parquet``, ``__kb`` a data column) of the batch rows
-  that won, and its commit logs the positions (file, row index) of the
-  rows they supersede as per-file *deletion sets*, which reads drop with
-  one literal filter.  ``maintain()`` replaces files once ``REWRITE_SHARE``
-  of their rows are deleted, and all deltas past ``MAX_DELTAS``, by one
-  delta of their live rows; ``compact()`` folds all back into buckets.
+- **Keyed tables** (upsert MERGE, SCD2 history, IVM state) partition by a
+  stable key-hash bucket ``__kb = pmod(xxhash64(pk...), n_buckets)`` when
+  a write leaves no earlier file live, or at compaction.  Every other
+  keyed write is merge-on-read (``write_delta``): it adds ONE
+  unpartitioned *delta* file (``delta/<token>-0.parquet``, ``__kb`` a data
+  column) of its new rows, and its commit logs the positions (file, row
+  index) of the stored rows they supersede as per-file *deletion sets*,
+  which reads drop with one literal filter.  ``maintain()`` replaces files
+  once ``REWRITE_SHARE`` of their rows are deleted, and all deltas past
+  ``MAX_DELTAS``, by one delta of their live rows; ``compact()`` folds all
+  back into buckets.
 - **Clustering** -> ``sortWithinPartitions(pk..., __source_ts_ms)`` before
   write, so parquet row-group min/max stats give data skipping on PK
   lookups — the BigQuery clustering analog.
@@ -267,10 +269,11 @@ class ParquetTable:
     ) -> None:
         """Publish the next version by one atomic no-clobber create, then
         delete the files it removes.  ``dels`` maps live files to the row
-        positions this version deletes from them.  A retried publish that
-        finds its own entry already in place (the link landed, the call
-        still failed) counts as done; a different entry there is a
-        concurrent writer."""
+        positions this version deletes from them.  A version that would
+        change nothing (no file, deletion, epoch, schema or layout) is not
+        published.  A retried publish that finds its own entry already in
+        place (the link landed, the call still failed) counts as done; a
+        different entry there is a concurrent writer."""
         entry: dict = {}
         if epoch_id is not None:
             entry.update(epoch=str(epoch_id), rows=rows)
@@ -285,6 +288,8 @@ class ParquetTable:
             entry["schema"] = schema.jsonValue()
         if self._layout_now() != self._layout:
             entry["layout"] = self._layout_now()
+        if not entry:
+            return
         payload = json.dumps(entry, separators=(",", ":")).encode()
         final = self._entry_path(self._version + 1)
         tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
@@ -340,11 +345,12 @@ class ParquetTable:
         surface.  The reference polls Debezium MBeans for processed-row
         counts (MaxBatchSizeWait reads them, docs list the JMX names); here
         every commit persisted the row count its write job observed, so
-        the metrics are exact, free, and survive restarts.  A MERGE counts
-        the rows its delta holds (the batch rows that won, tombstones
-        included) and, in ``rows_deleted``, the stored rows they
-        superseded; SCD2 and compaction commits count every row of the
-        partitions they rewrote."""
+        the metrics are exact, free, and survive restarts.  A keyed write
+        counts the rows it wrote — a MERGE the batch rows that won,
+        tombstones included; an SCD2 batch the recomputed history of the
+        keys it touched — and, in ``rows_deleted``, the stored rows they
+        superseded; a compaction counts every row of the partitions it
+        rewrote."""
         self._refresh()
         return [{"epoch": e, **m} for e, m in self._epochs.items()]
 
@@ -508,10 +514,12 @@ class ParquetTable:
         """Run the write action and move its non-empty files to fresh
         names; returns their log rows and what the job observed.
 
-        The job runs under the T7 retry budget and counts its rows with
-        ``DataFrame.observe`` — no extra pass over the data; when ``out``
-        carries ``POS_FILE``/``POS_ROW``, the same observation collects the
-        non-null positions, and those columns are not written.  Files land
+        The job runs under the T7 retry budget and counts the rows it
+        writes with ``DataFrame.observe`` — no extra pass over the data;
+        when ``out`` carries ``POS_FILE``/``POS_ROW``, the same observation
+        collects the non-null positions, those columns are not written, and
+        neither is a row with a null partition value (a deletion only: the
+        filter that drops it sits above the observation).  Files land
         in a private directory, then move to ``<partition>/<token>-<n>``
         (``delta/...`` when unpartitioned): a failure at any step leaves
         the previous version whole."""
@@ -525,7 +533,7 @@ class ParquetTable:
         part_col = self.partition_col()
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_tmp_{token}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
+        metrics = [F.count(part_col).alias("rows")]
         if POS_FILE in out.columns:
             pos = F.when(F.col(POS_FILE).isNotNull(), F.struct(POS_FILE, POS_ROW))
             metrics.append(F.collect_list(pos).alias("deleted"))
@@ -536,7 +544,10 @@ class ParquetTable:
             # nor may a failed attempt's files join the next one's.
             shutil.rmtree(tmp, ignore_errors=True)
             o = Observation()
-            self.write_files(out.observe(o, *metrics).drop(POS_FILE, POS_ROW), tmp, partitioned)
+            rows = out.observe(o, *metrics)
+            if POS_FILE in out.columns:
+                rows = rows.filter(F.col(part_col).isNotNull()).drop(POS_FILE, POS_ROW)
+            self.write_files(rows, tmp, partitioned)
             return o
 
         add: list[list] = []
@@ -571,32 +582,45 @@ class ParquetTable:
         epoch_id: int | str | None,
         replace: Iterable[object] | None = None,
         remove: Iterable[str] = (),
+        partitioned: bool = True,
     ) -> list[list]:
-        """Land ``out`` partitioned and publish it in one commit, which
-        also removes the files in ``remove`` and, unless ``replace`` is
-        None, every live file of the partitions ``out`` writes and of
-        ``replace`` (one listed there that came back empty is replaced with
-        nothing).  Returns the log rows of the files it added."""
-        add, seen = self._land(out)
+        """Land ``out`` (partitioned, or as deltas) and publish it in one
+        commit, which also logs the positions in ``out``'s non-null
+        ``POS_FILE``/``POS_ROW`` as deleted, removes the files in
+        ``remove`` and, unless ``replace`` is None, every live file of the
+        partitions ``out`` writes and of ``replace`` (one listed there that
+        came back empty is replaced with nothing).  Returns the log rows of
+        the files it added."""
+        add, seen = self._land(out, partitioned)
         remove = list(remove)
         if replace is not None:
             parts = {a[1] for a in add} | {str(v) for v in replace}
             remove += [rel for rel, meta in self._files.items() if meta[0] in parts]
-        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out))
-        return add
-
-    def write_delta(self, out: DataFrame, epoch_id=None, remove: Iterable[str] = ()) -> None:
-        """Land ``out`` (``__kb`` a data column) as ONE delta file in one
-        commit, which also logs the positions in ``out``'s non-null
-        ``POS_FILE``/``POS_ROW`` as deleted and removes ``remove``."""
-        cols = [c for c in self.clustering_cols() if c in out.columns]
-        one = out.coalesce(1)
-        add, seen = self._land(one.sortWithinPartitions(*cols) if cols else one, False)
         by_name = {os.path.basename(rel): rel for rel in self._files}
         dels: dict[str, list[int]] = {}
         for name, row in seen.get("deleted", []):
             dels.setdefault(by_name[name], []).append(row)
         self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out), dels)
+        return add
+
+    def _one_delta(self, df: DataFrame) -> DataFrame:
+        cols = [c for c in self.clustering_cols() if c in df.columns]
+        one = df.coalesce(1)
+        return one.sortWithinPartitions(*cols) if cols else one
+
+    def write_delta(self, out: DataFrame, epoch_id=None, remove: Iterable[str] = ()) -> None:
+        """A keyed write (``out`` carries ``__kb``) in one commit, which
+        also logs the positions in ``out``'s non-null ``POS_FILE``/
+        ``POS_ROW`` as deleted and removes ``remove``.  A row whose
+        ``__kb`` is null is a deletion only and is not written.  One layout
+        rule: when no live file survives the commit (the first write, a
+        full replace) the rows land bucketed, one file per bucket;
+        otherwise as ONE delta file."""
+        remove = list(remove)
+        if set(self.live_files()) - set(remove):
+            self._write(self._one_delta(out), epoch_id, remove=remove, partitioned=False)
+        else:
+            self._write(self._cluster_sort(out.repartition(KEY_BUCKET)), epoch_id, remove=remove)
 
     def restrict_to_live(self, df: DataFrame) -> DataFrame:
         """Drop columns the table does not know when field addition is
@@ -618,6 +642,11 @@ class ParquetTable:
         out = self.restrict_to_live(self.with_partition_col(df))
         self._write(self._cluster_sort(out), epoch_id)
 
+    def live_files(self) -> list[str]:
+        """Relative paths of the live data files, deltas included."""
+        self._refresh()
+        return list(self._files)
+
     def partition_file_counts(self) -> dict[str, int]:
         """Live data-file count per partition directory, from the log —
         partition count, not row count.  Deltas belong to no partition."""
@@ -628,8 +657,9 @@ class ParquetTable:
         """Merge-on-read upkeep, no Spark job unless a threshold is crossed:
         files with at least ``REWRITE_SHARE`` of their rows deleted, and
         every delta once there are more than ``MAX_DELTAS``, are replaced
-        in one commit by ONE delta of their live rows.  Returns the number
-        of files replaced."""
+        in one commit by ONE delta of their live rows (even when that
+        replaces every file: folding back into buckets is ``compact``'s).
+        Returns the number of files replaced."""
         self._refresh()
         worn = {rel for rel, m in self._files.items()
                 if len(self._dels.get(rel, ())) >= REWRITE_SHARE * m[2]}
@@ -638,7 +668,8 @@ class ParquetTable:
             worn.update(deltas)
         live = [rel for rel in sorted(worn) if len(self._dels.get(rel, ())) < self._files[rel][2]]
         if live:
-            self.write_delta(self._scan(live), remove=sorted(worn))
+            self._write(self._one_delta(self._scan(live)), None, remove=sorted(worn),
+                        partitioned=False)
         elif worn:
             self._commit(remove=sorted(worn))
         return len(worn)
@@ -731,12 +762,13 @@ class ParquetTable:
     ) -> None:
         """Replace whole partitions with the content of ``df`` — parquet-
         native copy-on-write, Hive ``INSERT OVERWRITE ... PARTITION`` style,
-        in one log commit that also records ``epoch_id``.
+        in one log commit that also records ``epoch_id``; the backfill of
+        time partitions.  Keyed tables change through ``write_delta``.
 
-        ``df`` may (and in a MERGE, does) read from this very table: the
-        replaced files are deleted only after the new version is published.
-        A partition the caller intended to rewrite that came back empty
+        ``df`` may read from this very table: the replaced files are
+        deleted only after the new version is published.  A partition the
+        caller intended to rewrite that came back empty
         (``expected_partitions``) is dropped — "replace with nothing" (the
-        MERGE deleted every key in that bucket).
+        correction feed holds no row for it).
         """
         self._write(self._cluster_sort(df), epoch_id, replace=expected_partitions)

@@ -5,8 +5,8 @@ The reference replicates tables and leaves aggregation to BigQuery; a
 warehouse user then pays a full scan per dashboard refresh.  This
 operator maintains the aggregate AS the replication runs: each micro-
 batch names the group keys it touched, the aggregate rows for exactly
-those groups are recomputed from the base table and swapped in, and
-untouched groups are never read or written.
+those groups are recomputed from the base table and replace the stored
+ones, and untouched groups are never read or written.
 
 Why partial recompute instead of algebraic deltas: the CDC feed carries
 only after-images by default (no ``before`` block), so an update's
@@ -19,9 +19,10 @@ Scale shape per refresh: touched keys are a distinct-select over the
 micro-batch (small); the recompute scan prunes to the touched groups
 (predicate pushdown; partition pruning when the base is laid out by a
 group-functional column); the state table is key-bucketed exactly like
-the upsert MERGE target, so the swap rewrites only the buckets holding
-touched groups in one table commit, like the MERGE — maintenance cost
-tracks batch size, never table size.
+the upsert MERGE target and written the same way — merge-on-read, one
+delta file of the recomputed rows plus the positions of the stored rows
+they replace, in one table commit — so maintenance cost tracks batch
+size, never table size.
 """
 
 from __future__ import annotations
@@ -31,17 +32,33 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debezium_server_bigquery_spark.operators.table import KEY_BUCKET, ParquetTable
+from debezium_server_bigquery_spark.operators.table import POS_FILE, POS_ROW, ParquetTable
 
 
-def _stored_buckets(table: ParquetTable) -> list[int]:
-    """Bucket values currently present on disk — so a repair
-    re-initialize can clear buckets whose keys all vanished."""
-    out: list[int] = []
-    for d in table.partition_file_counts():
-        v = d.split("=", 1)[1]
-        out.append(int(v))
-    return out
+def _state_table(spark: SparkSession, path: str, keys: list[str], n_buckets: int):
+    return ParquetTable(
+        spark, path, key_cols=keys, mode="upsert", n_buckets=n_buckets, clustering_field=""
+    )
+
+
+def _replace_all(state: ParquetTable, rows: DataFrame) -> None:
+    """Full recompute — the bootstrap and the repair path: one commit
+    lands ``rows`` bucketed and removes every live file, deltas included,
+    so stale keys vanish."""
+    state.write_delta(state.with_partition_col(rows), remove=state.live_files())
+
+
+def _replace_keys(state: ParquetTable, rows: DataFrame, keys: DataFrame) -> None:
+    """Write ``rows`` in place of the stored rows of ``keys``: one delta of
+    ``rows`` plus the stored rows' positions as deletion-only rows, then
+    the table's merge-on-read upkeep.  No touched key writes nothing."""
+    out = state.with_partition_col(rows)
+    live = state.read_raw(positions=True)
+    if live is not None:
+        stale = live.join(F.broadcast(keys), keys.columns, "left_semi")
+        out = out.unionByName(stale.select(POS_FILE, POS_ROW), allowMissingColumns=True)
+    state.write_delta(out)
+    state.maintain()
 
 
 class MaterializedAggregate:
@@ -62,26 +79,11 @@ class MaterializedAggregate:
     ):
         self.group_cols = list(group_cols)
         self.agg_fn = agg_fn
-        self.state = ParquetTable(
-            spark,
-            path,
-            key_cols=self.group_cols,
-            mode="upsert",
-            n_buckets=n_buckets,
-            clustering_field="",
-        )
+        self.state = _state_table(spark, path, self.group_cols, n_buckets)
 
     def initialize(self, base: DataFrame) -> None:
-        """Full recompute — the bootstrap (and the repair path).  On a
-        repair over existing state, buckets absent from the new output
-        are still overwritten (to nothing) so stale groups vanish."""
-        out = self.state.with_partition_col(self.agg_fn(base))
-        buckets = sorted(
-            # bounded-collect: O(buckets) distinct bucket ids (fixed bucket count)
-            {r[0] for r in out.select(KEY_BUCKET).distinct().collect()}
-            | set(_stored_buckets(self.state))
-        )
-        self.state.overwrite_partitions(out, expected_partitions=buckets)
+        """Full recompute (see ``_replace_all``)."""
+        _replace_all(self.state, self.agg_fn(base))
 
     def refresh(self, base: DataFrame, touched: DataFrame) -> None:
         """Re-aggregate exactly the groups in ``touched`` (any DataFrame
@@ -91,24 +93,8 @@ class MaterializedAggregate:
         is dropped from the state — "recompute to nothing".
         """
         keys = touched.select(*self.group_cols).distinct()
-        keyed = self.state.with_partition_col(keys)
-        # bounded-collect: O(buckets) distinct bucket ids (fixed bucket count)
-        buckets = [r[0] for r in keyed.select(KEY_BUCKET).distinct().collect()]
-        if not buckets:
-            return
-        recomputed = self.state.with_partition_col(
-            self.agg_fn(base.join(F.broadcast(keys), self.group_cols))
-        )
-        live = self.state.read_raw()
-        if live is None:
-            self.state.overwrite_partitions(recomputed, expected_partitions=buckets)
-            return
-        untouched = live.filter(F.col(KEY_BUCKET).isin(buckets)).join(
-            F.broadcast(keys), self.group_cols, "left_anti"
-        )
-        self.state.overwrite_partitions(
-            untouched.unionByName(recomputed), expected_partitions=buckets
-        )
+        recomputed = self.agg_fn(base.join(F.broadcast(keys), self.group_cols))
+        _replace_keys(self.state, recomputed, keys)
 
     def read(self) -> DataFrame:
         return self.state.read()
@@ -121,9 +107,9 @@ class MaterializedJoin:
 
     On refresh the caller names the join keys a micro-batch touched (on
     EITHER side); both base sides are semi-join-pruned to those keys, the
-    join is recomputed for exactly those keys, and the state table swaps
-    the buckets holding them (untouched keys in those buckets are carried
-    over, other buckets never read or written).  Recomputing the touched
+    join is recomputed for exactly those keys, and the state table
+    replaces the stored rows of those keys merge-on-read (other keys are
+    never rewritten).  Recomputing the touched
     key's whole join group — instead of algebraic ΔA⋈B ∪ A⋈ΔB deltas —
     stays correct under upsert + delete with after-image-only CDC, the
     same argument as the aggregate's docstring; cost is churn × per-key
@@ -141,32 +127,14 @@ class MaterializedJoin:
         n_buckets: int = 16,
     ):
         self.join_cols = list(join_cols)
-        self.state = ParquetTable(
-            spark,
-            path,
-            key_cols=self.join_cols,
-            mode="upsert",
-            n_buckets=n_buckets,
-            clustering_field="",
-        )
+        self.state = _state_table(spark, path, self.join_cols, n_buckets)
 
     def _compute(self, left: DataFrame, right: DataFrame) -> DataFrame:
         return left.join(right, self.join_cols)
 
-    def _swap(self, rows: DataFrame, buckets: list) -> None:
-        self.state.overwrite_partitions(rows, expected_partitions=buckets)
-
     def initialize(self, left: DataFrame, right: DataFrame) -> None:
-        """Full recompute — the bootstrap (and the repair path).  On a
-        repair over existing state, buckets absent from the new output
-        are still overwritten (to nothing) so stale keys vanish."""
-        out = self.state.with_partition_col(self._compute(left, right))
-        buckets = sorted(
-            # bounded-collect: O(buckets) distinct bucket ids (fixed bucket count)
-            {r[0] for r in out.select(KEY_BUCKET).distinct().collect()}
-            | set(_stored_buckets(self.state))
-        )
-        self._swap(out, buckets)
+        """Full recompute (see ``_replace_all``)."""
+        _replace_all(self.state, self._compute(left, right))
 
     def refresh(self, left: DataFrame, right: DataFrame, touched: DataFrame) -> None:
         """Recompute the join for exactly the keys in ``touched`` (any
@@ -174,25 +142,11 @@ class MaterializedJoin:
         whose rows vanished from either side drops out of the view —
         recompute-to-nothing, like the aggregate."""
         keys = touched.select(*self.join_cols).distinct()
-        keyed = self.state.with_partition_col(keys)
-        # bounded-collect: O(buckets) distinct bucket ids (fixed bucket count)
-        buckets = [r[0] for r in keyed.select(KEY_BUCKET).distinct().collect()]
-        if not buckets:
-            return
-        recomputed = self.state.with_partition_col(
-            self._compute(
-                left.join(F.broadcast(keys), self.join_cols, "left_semi"),
-                right.join(F.broadcast(keys), self.join_cols, "left_semi"),
-            )
+        recomputed = self._compute(
+            left.join(F.broadcast(keys), self.join_cols, "left_semi"),
+            right.join(F.broadcast(keys), self.join_cols, "left_semi"),
         )
-        live = self.state.read_raw()
-        if live is None:
-            self._swap(recomputed, buckets)
-            return
-        untouched = live.filter(F.col(KEY_BUCKET).isin(buckets)).join(
-            F.broadcast(keys), self.join_cols, "left_anti"
-        )
-        self._swap(untouched.unionByName(recomputed), buckets)
+        _replace_keys(self.state, recomputed, keys)
 
     def read(self) -> DataFrame:
         return self.state.read()

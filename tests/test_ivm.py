@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from debezium_server_bigquery_spark.operators.table import DELTA_DIR
+
 
 def _base(spark, rows):
     return spark.createDataFrame(rows, "k string, user_id long, value double")
@@ -195,22 +197,58 @@ def test_join_refresh_multi_row_per_key(spark, tmp_path):
     ]
 
 
+def _holds_delta_and_deletions(table):
+    assert any(rel.startswith(DELTA_DIR + "/") for rel in table.live_files())
+    assert table._dels
+
+
 def test_reinitialize_clears_vanished_groups(spark, tmp_path):
-    """Repair path: a full re-initialize over existing state must clear
-    buckets whose groups all vanished from the base."""
-    mv = _state(spark, tmp_path)
+    """Repair path: a full re-initialize over existing state — here one
+    that a refresh left holding a delta and deletion sets — must clear
+    every group that vanished from the base, the delta's too."""
+    from debezium_server_bigquery_spark.streaming.ivm import MaterializedAggregate
+
+    mv = MaterializedAggregate(spark, str(tmp_path / "mv"), ["k"], _agg, n_buckets=2)
     mv.initialize(_base(spark, [(f"g{i}", i, 1.0) for i in range(20)]))
     assert len(_snap(mv)) == 20
+    base2 = _base(spark, [(f"g{i}", i, 1.0) for i in range(20)] + [("g1", 99, 2.0)])
+    mv.refresh(base2, spark.createDataFrame([("g1",)], "k string"))
+    assert _snap(mv)["g1"] == (2, 3.0)
+    _holds_delta_and_deletions(mv.state)
     mv.initialize(_base(spark, [("g0", 0, 5.0)]))  # 19 groups vanished
     assert _snap(mv) == {"g0": (1, 5.0)}
 
 
 def test_join_reinitialize_clears_vanished_keys(spark, tmp_path):
-    mj = _mj(spark, tmp_path)
-    mj.initialize(
-        _left(spark, [(i, 1.0) for i in range(20)]),
-        _right(spark, [(i, 2.0) for i in range(20)]),
-    )
+    from debezium_server_bigquery_spark.streaming.ivm import MaterializedJoin
+
+    mj = MaterializedJoin(spark, str(tmp_path / "jv"), ["user_id"], n_buckets=2)
+    left = _left(spark, [(i, 1.0) for i in range(20)])
+    mj.initialize(left, _right(spark, [(i, 2.0) for i in range(20)]))
     assert len(_jsnap(mj)) == 20
+    right2 = _right(spark, [(i, 2.0) for i in range(20) if i != 5] + [(5, 7.0)])
+    mj.refresh(left, right2, spark.createDataFrame([(5,)], "user_id long"))
+    assert _jsnap(mj)[5] == (1.0, 7.0)
+    _holds_delta_and_deletions(mj.state)
     mj.initialize(_left(spark, [(3, 9.0)]), _right(spark, [(3, 8.0)]))
     assert _jsnap(mj) == {3: (9.0, 8.0)}
+
+
+def test_refresh_of_one_group_adds_one_file(spark, tmp_path):
+    """A refresh is merge-on-read: refreshing one group of a multi-bucket
+    state adds exactly one file and removes no bucket file."""
+    from debezium_server_bigquery_spark.streaming.ivm import MaterializedAggregate
+
+    mv = MaterializedAggregate(spark, str(tmp_path / "mv"), ["k"], _agg, n_buckets=4)
+    rows = [(f"g{i}", i, 1.0) for i in range(40)]
+    mv.initialize(_base(spark, rows))
+    before = set(mv.state.live_files())
+    assert len(mv.state.partition_file_counts()) == 4
+    mv.refresh(_base(spark, rows + [("g7", 99, 1.0)]), spark.createDataFrame([("g7",)], "k string"))
+    after = set(mv.state.live_files())
+    assert before < after and len(after - before) == 1
+    assert _snap(mv)["g7"] == (2, 2.0) and len(_snap(mv)) == 40
+    # no touched group: nothing written, no version published
+    version = mv.state.version()
+    mv.refresh(_base(spark, rows), spark.createDataFrame([], "k string"))
+    assert mv.state.version() == version

@@ -339,8 +339,8 @@ def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
         for d in sorted(os.listdir(root)):
             names = set(os.listdir(root / d))
             assert "_log" in names, (mode, d)
-            # data files sit in partition dirs, a MERGE's deltas in delta/
-            deltas = {DELTA_DIR} if mode in ("upsert", "upsert_lazy") else set()
+            # data files sit in partition dirs, a keyed write's deltas in delta/
+            deltas = {DELTA_DIR} if mode in ("upsert", "upsert_lazy", "scd2") else set()
             assert {n for n in names if "=" not in n} == {"_log"} | deltas, (mode, d, names)
             reopened = ParquetTable.open(spark, str(root / d))
             assert reopened.mode == ("append" if mode == "append" else "upsert")

@@ -381,6 +381,67 @@ def test_merge_with_deletion_sets_survives_a_fault_at_every_step(
     assert merges and all(m["rows_deleted"] > 0 and m["files_added"] == 1 for m in merges)
 
 
+def test_scd2_rewindow_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    """An SCD2 batch that re-windows a stored key — one delta file plus
+    the replaced rows' positions as deletion-only rows, in one commit —
+    under a fault at every step.  After each fault and replay the history
+    equals the one-shot build of every change so far, and the epoch is
+    logged once."""
+    import glob
+    import json
+
+    from debezium_server_bigquery_spark.operators.scd import (
+        scd2_from_changes,
+        scd2_merge_batch,
+    )
+
+    schema = "user_id long, ts long, __op string, value double, event_id long"
+    t = ParquetTable(
+        spark,
+        str(tmp_path / "dim"),
+        key_cols=["user_id"],
+        mode="upsert",
+        n_buckets=2,
+        retry_policy=_ONE_SHOT,
+    )
+    changes = [(k, 100 * j + 10, "u" if j else "c", float(j), 10 * k + j)
+               for k in range(4) for j in range(3)]
+    scd2_merge_batch(t, spark.createDataFrame(changes, schema), order_col="ts", epoch_id="seed")
+
+    def late(r):
+        # older than the key's second stored version: splices into its history
+        return [(r % 4, 20 + r, "u", 100.0 + r, 1000 + r)]
+
+    def hist(df):
+        return sorted(
+            (r.user_id, r.version_num, r.valid_from, r.valid_to, r.value)
+            for r in df.filter(F.col("__op") != "d").collect()
+        )
+
+    def op(r):
+        scd2_merge_batch(t, spark.createDataFrame(late(r), schema), order_col="ts", epoch_id=r)
+
+    def check(r):
+        changes.extend(late(r))
+        want = hist(scd2_from_changes(spark.createDataFrame(changes, schema), ["user_id"], "ts"))
+        assert hist(t.read()) == want
+        assert hist(ParquetTable(spark, t.path).read()) == want
+        epochs = []
+        for p in glob.glob(os.path.join(t.path, "_log", "*.json")):
+            with open(p, encoding="utf-8") as fh:
+                epochs.append(json.load(fh).get("epoch"))
+        assert epochs.count(str(r)) == 1
+
+    fired = _every_fault(monkeypatch, t.path, op, check)
+    # an SCD2 batch removes no file: no remove-step fault can fire
+    assert set(fired) == set(STEPS) - {"remove"}
+    batches = t.epoch_metrics()[1:]
+    assert batches and all(
+        m["files_added"] == 1 and m["files_removed"] == 0 and m["rows_deleted"] > 0
+        for m in batches
+    )
+
+
 @pytest.mark.heavy
 def test_maintenance_rewrite_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
     """A MERGE followed by a maintenance pass that bin-packs every delta

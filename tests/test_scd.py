@@ -212,6 +212,22 @@ def test_scd2_sink_untouched_keys_survive_bucket_rewrite(spark, tmp_path):
         assert v[(k, 1)] == (100, None, float(k))
 
 
+def test_scd2_sink_batch_touching_one_key_adds_one_file(spark, tmp_path):
+    """Merge-on-read: a batch touching one key of a multi-bucket table adds
+    exactly one file, removes no bucket file, and logs the key's stored
+    rows as deleted."""
+    t = _sink_table(spark, tmp_path)
+    _apply(spark, t, [(k, 100, "c", float(k), k) for k in range(1, 41)], 0)
+    before = set(t.live_files())
+    assert len(t.partition_file_counts()) == 4
+    _apply(spark, t, [(1, 200, "u", 10.0, 100)], 1)
+    after = set(t.live_files())
+    assert before < after and len(after - before) == 1
+    m = t.epoch_metrics()[-1]
+    assert (m["files_added"], m["files_removed"], m["rows_deleted"], m["rows"]) == (1, 0, 1, 2)
+    assert _versions(t)[(1, 2)] == (200, None, 10.0)
+
+
 def test_scd2_sink_distinct_events_same_ts_both_survive(spark, tmp_path):
     """Two DIFFERENT events sharing (key, ts, op) must BOTH survive the
     in-window dedup — only exact full-row re-deliveries collapse.  The

@@ -153,6 +153,9 @@ def main():
 
     import __spark_entry__ as E
 
+    # No console progress bar: it shares stdout lines with the results, so
+    # a line-anchored grep for OK/FAIL would miss some.
+    quiet = {"spark.ui.showConsoleProgress": "false"}
     if plain:
         # Replicate the driver: a bare session with none of session.py's
         # defaults.  Correctness must not depend on session construction.
@@ -162,12 +165,13 @@ def main():
             SparkSession.builder.master("local[8]")
             .appName("oracle-check-plain")
             .config("spark.sql.shuffle.partitions", "8")
+            .config(map=quiet)
             .getOrCreate()
         )
     else:
         from debezium_server_bigquery_spark import get_spark
 
-        spark = get_spark("oracle-check")
+        spark = get_spark("oracle-check", extra_conf=quiet)
     if tz:
         spark.conf.set("spark.sql.session.timeZone", tz)
     con = duckdb.connect()
