@@ -24,7 +24,10 @@ Spark write action, and no action before it:
 
 A MERGE into a table with no live files lands bucketed instead (the
 table's one layout rule, ``ParquetTable.write_delta``).  The table's
-``maintain()`` bounds deltas and deletion sets; ``compact()`` folds
+``maintain()`` bounds deltas and deletion sets; the MERGE leaves it to
+its caller, which picks the cadence (the pipeline runs it after every
+MERGE, the staged sink at its staleness bound), while SCD2 and IVM
+writes run it inside ``ParquetTable.replace_rows``.  ``compact()`` folds
 them back into buckets.  PK-less tables fall back to append —
 ``doUpsert``/``doTableHasPrimaryKey`` parity
 (StreamBigqueryChangeConsumer.java:163-174).

@@ -19,7 +19,8 @@ key-partitioned sort, the same cost class as the MERGE dedup it parallels.
 The incremental sink (``scd2_merge_batch``) writes like the upsert MERGE:
 merge-on-read, one delta file per micro-batch holding the re-windowed
 history of the keys it touched, with the stored rows it replaces logged as
-deletion sets in the same table commit.
+deletion sets in the same table commit.  It reads only the buckets its
+keys hash to, plus the live deltas.
 """
 
 from __future__ import annotations
@@ -163,17 +164,20 @@ def scd2_merge_batch(
     history-preserving sibling of ``merge_upsert``.
 
     Merge-on-read, like ``merge_upsert``: the stored rows of the batch's
-    keys are read with their positions, and the FULL change history of
-    those keys is re-windowed together with the batch.  One write job adds
-    the recomputed history as one delta file and logs the positions of the
-    stored rows it replaces as deletion sets in the same commit; rows of
-    other keys are neither rewritten nor moved.  Re-windowing whole keys
-    (not just open versions) makes the merge correct under ANY arrival
-    order — a late event splices into its key's history and downstream
-    versions renumber; streams with strict per-key ordering could carry
-    only the open version per key through the window as a further
-    optimization.  Cost is bounded by churn × history depth per batch,
-    never table size.
+    keys are read with their positions (``ParquetTable.rows_of``), and the
+    FULL change history of those keys is re-windowed together with the
+    batch.  One write job adds the recomputed history as one delta file
+    and logs the positions of the stored rows it replaces as deletion sets
+    in the same commit (``ParquetTable.replace_rows``, which then runs the
+    table's ``maintain``); rows of other keys are neither rewritten nor
+    moved.  Re-windowing whole keys (not just open versions) makes the
+    merge correct under ANY arrival order — a late event splices into its
+    key's history and downstream versions renumber; streams with strict
+    per-key ordering could carry only the open version per key through
+    the window as a further optimization.  The write is churn × history
+    depth; the read scans the buckets the batch's keys hash to (dynamic
+    partition pruning) plus the live deltas, so a batch whose keys span
+    every bucket reads the whole table.
 
     Idempotency: the epoch rides in the table commit, as in merge_upsert,
     so a replayed micro-batch is skipped; exact re-deliveries inside the
@@ -196,9 +200,8 @@ def scd2_merge_batch(
     # batch columns the stored table does not know instead of evolving it.
     batch = table.restrict_to_live(batch)
     redo_src = batch
-    live = table.read_raw(positions=True)
-    if live is not None:
-        touched = live.join(batch.select(*keys).distinct(), keys, "left_semi")
+    touched = table.rows_of(batch.select(*keys).distinct())
+    if touched is not None:
         # Replay ALL stored change columns (everything except the derived
         # SCD2/bucket/position columns) — intersecting with batch.columns
         # would NULL out stored-only columns for every touched key when a
@@ -211,11 +214,7 @@ def scd2_merge_batch(
         redo_src.dropDuplicates(),  # full row: collapse only exact re-deliveries
         keys, order_col, op_col, delete_op, tiebreak, keep_tombstones=True,
     )
-    out = table.with_partition_col(history)
-    if live is not None:
-        # the replaced stored rows, as deletion-only rows (null __kb)
-        out = out.unionByName(touched.select(POS_FILE, POS_ROW), allowMissingColumns=True)
-    table.write_delta(out, epoch_id)
+    table.replace_rows(history, touched, epoch_id)
 
 
 def state_as_of(

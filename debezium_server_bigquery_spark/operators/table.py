@@ -622,6 +622,33 @@ class ParquetTable:
         else:
             self._write(self._cluster_sort(out.repartition(KEY_BUCKET)), epoch_id, remove=remove)
 
+    def rows_of(self, keys: DataFrame) -> DataFrame | None:
+        """Live rows, with positions, of the keys in ``keys`` (a small
+        distinct frame of the key columns), or None if the table holds no
+        data files.  The broadcast semi-join also matches each key's
+        bucket, so dynamic partition pruning scans only the touched
+        buckets' files (deltas are always read).  Spark plans that pruning
+        only when the broadcast side carries a selective-looking
+        predicate, hence the always-true bucket range filter."""
+        live = self.read_raw(positions=True)
+        if live is None:
+            return None
+        keys = self.with_partition_col(keys).filter(F.col(KEY_BUCKET) < self.n_buckets)
+        return live.join(F.broadcast(keys), [*self.key_cols, KEY_BUCKET], "left_semi")
+
+    def replace_rows(self, rows: DataFrame, stored: DataFrame | None, epoch_id=None) -> None:
+        """Write ``rows`` in place of ``stored`` (from ``rows_of``) in one
+        commit: one delta of ``rows``, with ``stored``'s positions riding
+        as deletion-only rows, then ``maintain``.  The delta is shuffled
+        to one partition, not coalesced, so the scans, joins and windows
+        that feed it keep their parallelism."""
+        out = self.with_partition_col(rows)
+        if stored is not None:
+            out = out.unionByName(stored.select(POS_FILE, POS_ROW), allowMissingColumns=True)
+            out = out.repartition(1)
+        self.write_delta(out, epoch_id)
+        self.maintain()
+
     def restrict_to_live(self, df: DataFrame) -> DataFrame:
         """Drop columns the table does not know when field addition is
         disabled (BatchBigqueryChangeConsumer.java:72,

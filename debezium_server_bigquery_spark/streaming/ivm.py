@@ -21,8 +21,10 @@ micro-batch (small); the recompute scan prunes to the touched groups
 group-functional column); the state table is key-bucketed exactly like
 the upsert MERGE target and written the same way — merge-on-read, one
 delta file of the recomputed rows plus the positions of the stored rows
-they replace, in one table commit — so maintenance cost tracks batch
-size, never table size.
+they replace, in one table commit (``ParquetTable.replace_rows``).  The
+write tracks batch size; finding the stored rows reads the state buckets
+the touched keys hash to (dynamic partition pruning) plus the live
+deltas, so a refresh touching every bucket reads the whole state.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debezium_server_bigquery_spark.operators.table import POS_FILE, POS_ROW, ParquetTable
+from debezium_server_bigquery_spark.operators.table import ParquetTable
 
 
 def _state_table(spark: SparkSession, path: str, keys: list[str], n_buckets: int):
@@ -46,19 +48,6 @@ def _replace_all(state: ParquetTable, rows: DataFrame) -> None:
     lands ``rows`` bucketed and removes every live file, deltas included,
     so stale keys vanish."""
     state.write_delta(state.with_partition_col(rows), remove=state.live_files())
-
-
-def _replace_keys(state: ParquetTable, rows: DataFrame, keys: DataFrame) -> None:
-    """Write ``rows`` in place of the stored rows of ``keys``: one delta of
-    ``rows`` plus the stored rows' positions as deletion-only rows, then
-    the table's merge-on-read upkeep.  No touched key writes nothing."""
-    out = state.with_partition_col(rows)
-    live = state.read_raw(positions=True)
-    if live is not None:
-        stale = live.join(F.broadcast(keys), keys.columns, "left_semi")
-        out = out.unionByName(stale.select(POS_FILE, POS_ROW), allowMissingColumns=True)
-    state.write_delta(out)
-    state.maintain()
 
 
 class MaterializedAggregate:
@@ -94,7 +83,7 @@ class MaterializedAggregate:
         """
         keys = touched.select(*self.group_cols).distinct()
         recomputed = self.agg_fn(base.join(F.broadcast(keys), self.group_cols))
-        _replace_keys(self.state, recomputed, keys)
+        self.state.replace_rows(recomputed, self.state.rows_of(keys))
 
     def read(self) -> DataFrame:
         return self.state.read()
@@ -112,8 +101,8 @@ class MaterializedJoin:
     never rewritten).  Recomputing the touched
     key's whole join group — instead of algebraic ΔA⋈B ∪ A⋈ΔB deltas —
     stays correct under upsert + delete with after-image-only CDC, the
-    same argument as the aggregate's docstring; cost is churn × per-key
-    join width, never view size.
+    same argument as the aggregate's docstring; the write is churn ×
+    per-key join width, and the state read is the touched keys' buckets.
 
     The two inputs must already have disjoint non-key column names (the
     view schema is their concatenation).
@@ -146,7 +135,7 @@ class MaterializedJoin:
             left.join(F.broadcast(keys), self.join_cols, "left_semi"),
             right.join(F.broadcast(keys), self.join_cols, "left_semi"),
         )
-        _replace_keys(self.state, recomputed, keys)
+        self.state.replace_rows(recomputed, self.state.rows_of(keys))
 
     def read(self) -> DataFrame:
         return self.state.read()

@@ -391,7 +391,6 @@ class CdcPipeline:
                             tiebreak=self.dedup_tiebreak,
                             epoch_id=sub_epoch,
                         )
-                        table.maintain()
                     else:
                         table.append(group, epoch_id=sub_epoch)
 

@@ -226,6 +226,27 @@ def test_scd2_sink_batch_touching_one_key_adds_one_file(spark, tmp_path):
     m = t.epoch_metrics()[-1]
     assert (m["files_added"], m["files_removed"], m["rows_deleted"], m["rows"]) == (1, 0, 1, 2)
     assert _versions(t)[(1, 2)] == (200, None, 10.0)
+    # the stored-row read prunes bucket files to the batch keys' buckets
+    keys = spark.createDataFrame([(1,)], "user_id long")
+    plan = t.rows_of(keys)._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruningexpression(__kb" in plan
+
+
+def test_scd2_sink_bounds_its_deltas_without_the_pipeline(spark, tmp_path):
+    """Each SCD2 batch runs the table's maintenance itself, so a caller
+    that only calls ``scd2_merge_batch`` never holds more than
+    ``MAX_DELTAS`` deltas."""
+    from unittest import mock
+
+    from debezium_server_bigquery_spark.operators import table as table_mod
+
+    t = _sink_table(spark, tmp_path)
+    _apply(spark, t, [(k, 100, "c", float(k), k) for k in range(1, 41)], 0)
+    with mock.patch.object(table_mod, "MAX_DELTAS", 1):
+        for e in range(1, 4):
+            _apply(spark, t, [(e, 100 + e, "u", float(e), 100 + e)], e)
+            assert len([m for m in t._files.values() if m[0] is None]) <= 1
+    assert _versions(t)[(3, 2)] == (103, None, 3.0)
 
 
 def test_scd2_sink_distinct_events_same_ts_both_survive(spark, tmp_path):
