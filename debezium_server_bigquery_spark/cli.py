@@ -12,7 +12,10 @@ Recognized keys (reference key -> pipeline field):
 
 - ``debezium.sink.type``                      bigquerybatch -> append mode,
                                               bigquerystream -> stream mode
-- ``debezium.sink.bigquerystream.upsert``     true -> upsert MERGE mode
+- ``debezium.sink.bigquerystream.upsert``     true -> upsert MERGE mode;
+                                              every MERGE maintains its
+                                              own table (the BigQuery
+                                              ``max_staleness`` analog)
 - ``debezium.sink.bigquerystream.upsert-keep-deletes``  keep_deletes
 - ``debezium.sink.bigquerystream.upsert-dedup-column``  dedup_order_col
 - ``debezium.sink.batch.destination-regexp``            destination_regexp
@@ -38,14 +41,6 @@ Recognized keys (reference key -> pipeline field):
 Engine namespace:
 
 - ``engine.target-root``       destination directory (required)
-- ``engine.max-staleness-batches``  >0 + upsert -> lazy upsert: every
-                               batch is a merge-on-read MERGE (one delta
-                               file + deletion sets); the table's
-                               maintenance (rewrite half-deleted files,
-                               bin-pack deltas) runs every N table
-                               versions instead of after every batch —
-                               the BigQuery table ``max_staleness``
-                               analog, operators/staged_upsert.py
 - ``engine.key-columns``       comma-separated PK for upsert tables
 - ``engine.scd2``              true -> history-preserving SCD Type 2 sink
                                instead of destructive upsert (requires
@@ -135,38 +130,17 @@ def build_pipeline(spark, props: dict[str, str]):
         c.strip() for c in props.get("engine.key-columns", "").split(",") if c.strip()
     )
     sink = f"debezium.sink.{sink_type}"
-    raw_staleness = props.get("engine.max-staleness-batches", "0")
-    try:
-        staleness = int(raw_staleness)
-    except ValueError:
-        raise ValueError(
-            "engine.max-staleness-batches must be an integer "
-            f"(got {raw_staleness!r})"
-        ) from None
-    if staleness < 0:
-        raise ValueError(
-            "engine.max-staleness-batches must be >= 0 "
-            f"(0 = eager upsert; got {staleness})"
-        )
-    mode = "append"
-    if upsert:
-        mode = "upsert_lazy" if staleness > 0 else "upsert"
+    mode = "upsert" if upsert else "append"
     # engine.scd2 (beyond-reference): keep every version with validity
     # intervals instead of destructive upsert (operators/scd.py).
     if _bool(props.get("engine.scd2")):
         if not key_cols:
             raise ValueError("engine.scd2=true requires engine.key-columns")
-        if staleness > 0:
-            raise ValueError(
-                "engine.scd2 is incompatible with engine.max-staleness-batches"
-                " (history is applied eagerly per micro-batch)"
-            )
         mode = "scd2"
     return CdcPipeline(
         spark,
         target_root,
         mode=mode,
-        max_staleness_batches=max(staleness, 1),
         key_cols=key_cols,
         keep_deletes=_bool(
             props.get("debezium.sink.bigquerystream.upsert-keep-deletes"), True
@@ -175,7 +149,6 @@ def build_pipeline(spark, props: dict[str, str]):
         destination_regexp_replace=props.get(
             "debezium.sink.batch.destination-regexp-replace", ""
         ),
-        nested_as_json=_bool(props.get("debezium.sink.batch.nested-as-json")),
         heartbeat_prefix=props.get(
             "debezium.source.topic.heartbeat.prefix", "__debezium-heartbeat"
         ),
@@ -297,10 +270,6 @@ def run(conf_path: str, spark=None) -> dict:
         q.awaitTermination()
     else:
         pipeline.run_batch(source)
-    # Lazy upsert: a drained run finalizes like an expired max_staleness
-    # interval — run the tables' maintenance now.
-    if pipeline.mode == "upsert_lazy":
-        pipeline.compact_all()
     tables = sorted(pipeline.tables)
     return {
         "mode": pipeline.mode,

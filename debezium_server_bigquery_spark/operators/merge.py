@@ -23,12 +23,12 @@ Spark write action, and no action before it:
    reads hide them.  Tombstones are never garbage-collected.
 
 A MERGE into a table with no live files lands bucketed instead (the
-table's one layout rule, ``ParquetTable.write_delta``).  The table's
-``maintain()`` bounds deltas and deletion sets; the MERGE leaves it to
-its caller, which picks the cadence (the pipeline runs it after every
-MERGE, the staged sink at its staleness bound), while SCD2 and IVM
-writes run it inside ``ParquetTable.replace_rows``.  ``compact()`` folds
-them back into buckets.  PK-less tables fall back to append —
+table's one layout rule, ``ParquetTable.write_delta``).  That write ends
+with the table's ``maintain()``, which bounds deltas and deletion sets,
+so every MERGE keeps its own table in bounds, as SCD2 and IVM writes do
+(the counterpart of BigQuery's ``max_staleness`` background work); a
+replayed epoch is skipped whole.  ``compact()`` folds them back into
+buckets.  PK-less tables fall back to append —
 ``doUpsert``/``doTableHasPrimaryKey`` parity
 (StreamBigqueryChangeConsumer.java:163-174).
 """

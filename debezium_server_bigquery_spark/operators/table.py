@@ -16,10 +16,10 @@ Spark-native equivalent: a directory-backed parquet table.
   unpartitioned *delta* file (``delta/<token>-0.parquet``, ``__kb`` a data
   column) of its new rows, and its commit logs the positions (file, row
   index) of the stored rows they supersede as per-file *deletion sets*,
-  which reads drop with one literal filter.  ``maintain()`` replaces files
-  once ``REWRITE_SHARE`` of their rows are deleted, and all deltas past
-  ``MAX_DELTAS``, by one delta of their live rows; ``compact()`` folds all
-  back into buckets.
+  which reads drop with one literal filter.  Every such write ends with
+  ``maintain()``, which replaces bucket files once ``REWRITE_SHARE`` of
+  their rows are deleted, and all deltas past ``MAX_DELTAS``, by one delta
+  of their live rows; ``compact()`` folds all back into buckets.
 - **Clustering** -> ``sortWithinPartitions(pk..., __source_ts_ms)`` before
   write, so parquet row-group min/max stats give data skipping on PK
   lookups — the BigQuery clustering analog.
@@ -83,8 +83,8 @@ DELTA_DIR = "delta"
 # row index in that file (``_metadata.file_name``/``row_index``).
 POS_FILE = "__pos_file"
 POS_ROW = "__pos_row"
-# Merge-on-read maintenance: rewrite a file once this share of its rows is
-# deleted; bin-pack the deltas once there are more than MAX_DELTAS.
+# Merge-on-read maintenance: rewrite a bucket file once this share of its
+# rows is deleted; bin-pack the deltas once there are more than MAX_DELTAS.
 REWRITE_SHARE = 0.5
 MAX_DELTAS = 16
 
@@ -615,12 +615,14 @@ class ParquetTable:
         ``__kb`` is null is a deletion only and is not written.  One layout
         rule: when no live file survives the commit (the first write, a
         full replace) the rows land bucketed, one file per bucket;
-        otherwise as ONE delta file."""
+        otherwise as ONE delta file.  Then ``maintain``: every keyed write
+        keeps its own table in bounds, so no caller schedules upkeep."""
         remove = list(remove)
         if set(self.live_files()) - set(remove):
             self._write(self._one_delta(out), epoch_id, remove=remove, partitioned=False)
         else:
             self._write(self._cluster_sort(out.repartition(KEY_BUCKET)), epoch_id, remove=remove)
+        self.maintain()
 
     def rows_of(self, keys: DataFrame) -> DataFrame | None:
         """Live rows, with positions, of the keys in ``keys`` (a small
@@ -638,16 +640,15 @@ class ParquetTable:
 
     def replace_rows(self, rows: DataFrame, stored: DataFrame | None, epoch_id=None) -> None:
         """Write ``rows`` in place of ``stored`` (from ``rows_of``) in one
-        commit: one delta of ``rows``, with ``stored``'s positions riding
-        as deletion-only rows, then ``maintain``.  The delta is shuffled
-        to one partition, not coalesced, so the scans, joins and windows
-        that feed it keep their parallelism."""
+        ``write_delta`` commit: one delta of ``rows``, with ``stored``'s
+        positions riding as deletion-only rows.  The delta is shuffled to
+        one partition, not coalesced, so the scans, joins and windows that
+        feed it keep their parallelism."""
         out = self.with_partition_col(rows)
         if stored is not None:
             out = out.unionByName(stored.select(POS_FILE, POS_ROW), allowMissingColumns=True)
             out = out.repartition(1)
         self.write_delta(out, epoch_id)
-        self.maintain()
 
     def restrict_to_live(self, df: DataFrame) -> DataFrame:
         """Drop columns the table does not know when field addition is
@@ -681,19 +682,25 @@ class ParquetTable:
         return Counter(rel.split("/", 1)[0] for rel, m in self._files.items() if m[0] is not None)
 
     def maintain(self) -> int:
-        """Merge-on-read upkeep, no Spark job unless a threshold is crossed:
-        files with at least ``REWRITE_SHARE`` of their rows deleted, and
-        every delta once there are more than ``MAX_DELTAS``, are replaced
-        in one commit by ONE delta of their live rows (even when that
-        replaces every file: folding back into buckets is ``compact``'s).
-        Returns the number of files replaced."""
+        """Merge-on-read upkeep, run by ``write_delta`` after each keyed
+        write; no Spark job unless a threshold is crossed.  Bucket files
+        with at least ``REWRITE_SHARE`` of their rows deleted, and every
+        delta once there are more than ``MAX_DELTAS``, are replaced in one
+        commit by ONE delta of their live rows (even when that replaces
+        every file: folding back into buckets is ``compact``'s).  A delta
+        is not rewritten for wear: maintained after every write, the same
+        half-deleted deltas would be rewritten again and again, and the
+        bin-pack bounds them anyway.  A file whose rows are all deleted
+        leaves by a commit that adds nothing.  Returns the number of files
+        replaced."""
         self._refresh()
+        gone = {rel: len(self._dels.get(rel, ())) for rel in self._files}
         worn = {rel for rel, m in self._files.items()
-                if len(self._dels.get(rel, ())) >= REWRITE_SHARE * m[2]}
+                if gone[rel] >= (m[2] if m[0] is None else REWRITE_SHARE * m[2])}
         deltas = [rel for rel, m in self._files.items() if m[0] is None]
         if len(deltas) > MAX_DELTAS:
             worn.update(deltas)
-        live = [rel for rel in sorted(worn) if len(self._dels.get(rel, ())) < self._files[rel][2]]
+        live = [rel for rel in sorted(worn) if gone[rel] < self._files[rel][2]]
         if live:
             self._write(self._one_delta(self._scan(live)), None, remove=sorted(worn),
                         partitioned=False)

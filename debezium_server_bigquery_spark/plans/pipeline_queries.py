@@ -472,22 +472,21 @@ GROUP BY __op ORDER BY __op
 
 
 def pipeline_lazy_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_staleness-parity replication (operators/staged_upsert.py): three
-    event-id-ordered micro-batches flow through merge-on-read MERGEs with
-    table maintenance every 2 versions; read_current must equal the eager
-    path's final state.  Batches are event-id-ordered so "a later batch
-    wins an exact (ts, op) tie" agrees with the oracle's global event_id
-    DESC ordering."""
+    """max_staleness-parity replication: three event-id-ordered
+    micro-batches flow through merge-on-read MERGEs, each of which runs
+    its table's maintenance (``ParquetTable.write_delta``); the tables
+    must hold the final state.  Batches are event-id-ordered so "a later
+    batch wins an exact (ts, op) tie" agrees with the oracle's global
+    event_id DESC ordering."""
 
     target = scratch_dir("dsbq_e2e_")
     p = CdcPipeline(
         spark,
         target,
-        mode="upsert_lazy",
+        mode="upsert",
         key_cols=("user_id",),
         n_buckets=8,
         dedup_tiebreak=("event_id",),
-        max_staleness_batches=2,
     )
     cdc = synthesize_cdc_events(load_table(spark, sf_dir, "events"))
     # Event-id thirds relative to the actual id range (a one-row aggregate

@@ -8,7 +8,11 @@ One Structured Streaming query replaces the reference's consumer hierarchy:
            -> destination rewrite (R3)
            -> per destination (R1):
                 coerce to target schema
-                -> append (S3)  |  dedup (A1/A2) + MERGE (S5)
+                -> append (S3)  |  dedup (A1/A2) + MERGE (S5)  |  SCD2
+
+A keyed table maintains itself: each MERGE or SCD2 write ends with the
+table's upkeep (``ParquetTable.write_delta``), the counterpart of
+BigQuery's ``max_staleness`` background work, so the sink schedules none.
 
 Checkpointing subsumes the reference's BigQuery offset store (S7):
 source offsets + sink commit log live in the checkpoint dir
@@ -43,6 +47,12 @@ from debezium_server_bigquery_spark.operators.routing import (
 from debezium_server_bigquery_spark.operators.table import ParquetTable
 
 
+# "append" (bigquerybatch) | "upsert" (bigquerystream+upsert: merge-on-read
+# MERGE per batch, operators/merge.py) | "scd2" (history-preserving sink,
+# operators/scd.py)
+MODES = ("append", "upsert", "scd2")
+
+
 class UploadCancelled(RuntimeError):
     """An upload thread observed the batch-timeout cancel flag and stopped
     at a safe point (between schema-group writes, or before starting)."""
@@ -55,16 +65,9 @@ class CdcPipeline:
 
     spark: SparkSession
     target_root: str
-    # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert:
-    # merge-on-read MERGE per batch, table maintenance after each) |
-    # "upsert_lazy" (max_staleness parity: the same MERGE, maintenance
-    # every max_staleness_batches, operators/staged_upsert.py)
-    mode: str = "append"
+    mode: str = "append"  # one of MODES
     key_cols: tuple[str, ...] = ()
     keep_deletes: bool = False  # debezium.sink.bigquerystream.upsert-keep-deletes
-    # upsert_lazy only: table versions between maintenance passes — the
-    # analog of BigQuery's table max_staleness interval
-    max_staleness_batches: int = 4
     destination_regexp: str = ""  # debezium.sink.batch.destination-regexp
     destination_regexp_replace: str = ""
     # debezium.source.topic.heartbeat.prefix / .skip-consuming
@@ -72,12 +75,6 @@ class CdcPipeline:
     # skip=False lets them replicate like any destination.
     heartbeat_prefix: str = "__debezium-heartbeat"
     heartbeat_skip: bool = True
-    # debezium.sink.batch.nested-as-json (CommonConfig.java:24-26): when the
-    # source runs without ExtractNewRecordState, sub-structs of the envelope
-    # (before/after/source/transaction) land as JSON text columns.  Consumed
-    # by the source parse (read_cdc_ndjson/read_cdc_kafka nested_as_json=) —
-    # carried here so the CLI/table metadata reflect the configured mode.
-    nested_as_json: bool = False
     # debezium.sink.<type>.cast-deleted-field (BatchConsumerConfig.java:69-71,
     # default true): when False the F8 "__deleted" string->BOOL cast is
     # skipped and the column lands as its wire STRING — parity for users
@@ -140,18 +137,19 @@ class CdcPipeline:
     # None = history off, matching the reference's optional history store.
     schema_history_path: str | None = None
     tables: dict[str, ParquetTable] = field(default_factory=dict)
-    _lazy: dict = field(default_factory=dict)
     _schema_seen: dict = field(default_factory=dict)  # dest -> {col tuples}
     _schema_lock: threading.Lock = field(default_factory=threading.Lock)
+
+    def __post_init__(self) -> None:
+        if self.mode not in MODES:
+            raise ValueError(f"mode must be one of {', '.join(MODES)}; got {self.mode!r}")
 
     def table_for(self, destination: str) -> ParquetTable:
         # A4 parity: without key columns even an upsert-configured pipeline
         # runs append (doUpsert/doTableHasPrimaryKey,
         # StreamBigqueryChangeConsumer.java:163-174) — the table must then
         # be TIME-partitioned, not key-bucketed, or the append raises.
-        upserting = self.mode in ("upsert", "upsert_lazy", "scd2") and bool(
-            self.key_cols
-        )
+        upserting = self.mode in ("upsert", "scd2") and bool(self.key_cols)
         if destination not in self.tables:
             self.tables[destination] = ParquetTable(
                 self.spark,
@@ -166,26 +164,6 @@ class CdcPipeline:
                 create_if_needed=self.create_if_needed,
             )
         return self.tables[destination]
-
-    def lazy_for(self, destination: str):
-        from debezium_server_bigquery_spark.operators.staged_upsert import (
-            StagedUpsertTable,
-        )
-
-        if destination not in self._lazy:
-            self._lazy[destination] = StagedUpsertTable(
-                self.table_for(destination),
-                staleness_batches=self.max_staleness_batches,
-                keep_deletes=self.keep_deletes,
-                order_col=self.dedup_order_col,
-                tiebreak=self.dedup_tiebreak,
-            )
-        return self._lazy[destination]
-
-    def compact_all(self) -> None:
-        """upsert_lazy: run every destination's maintenance now."""
-        for wrapper in self._lazy.values():
-            wrapper.compact()
 
     def _coerce_meta(self, df: DataFrame) -> DataFrame:
         """Destination-table meta types (reference docs/configuration.md:56-59):
@@ -374,9 +352,6 @@ class CdcPipeline:
                             tiebreak=self.dedup_tiebreak,
                             epoch_id=sub_epoch,
                         )
-                        table.maintain()
-                    elif self.mode == "upsert_lazy" and self.key_cols:
-                        self.lazy_for(dest).apply(group, epoch_id=sub_epoch)
                     elif self.mode == "scd2" and self.key_cols:
                         # history-preserving sink (operators/scd.py): every
                         # version survives with its validity interval
@@ -548,6 +523,4 @@ class CdcPipeline:
     def read_table(self, destination: str) -> DataFrame:
         if destination == self.rejects_destination:
             return self.rejects_table().read()
-        if self.mode == "upsert_lazy" and self.key_cols:
-            return self.lazy_for(destination).read_current()
         return self.table_for(destination).read()

@@ -48,7 +48,6 @@ def test_build_pipeline_maps_reference_keys(spark, tmp_path):
     assert p.partition_type == "DAY"
     assert p.clustering_field == "__ts_ms"
     assert p.destination_regexp == "_p\\d+$"
-    assert p.nested_as_json is True
     assert p.concurrent_uploads == 2
 
 
@@ -97,7 +96,10 @@ def test_build_pipeline_maps_bucket_and_tiebreak_keys(spark, tmp_path):
     assert p.dedup_tiebreak == ("event_id", "ts")
 
 
-def test_build_pipeline_maps_max_staleness(spark, tmp_path):
+def test_build_pipeline_ignores_retired_staleness_key(spark, tmp_path):
+    """Every MERGE maintains its own table, so the old staleness key is
+    one more unknown key: a file that still sets it builds the upsert
+    pipeline (and an scd2 one with engine.scd2)."""
     props = {
         "debezium.sink.type": "bigquerystream",
         "debezium.sink.bigquerystream.upsert": "true",
@@ -105,16 +107,25 @@ def test_build_pipeline_maps_max_staleness(spark, tmp_path):
         "engine.key-columns": "user_id",
         "engine.max-staleness-batches": "3",
     }
-    p = build_pipeline(spark, props)
-    assert p.mode == "upsert_lazy"
-    assert p.max_staleness_batches == 3
-    # without the knob, upsert stays eager
-    del props["engine.max-staleness-batches"]
     assert build_pipeline(spark, props).mode == "upsert"
+    assert build_pipeline(spark, props | {"engine.scd2": "true"}).mode == "scd2"
+
+
+def test_build_source_passes_nested_as_json(spark, tmp_path, monkeypatch):
+    """debezium.sink.batch.nested-as-json reaches the parse."""
+    from debezium_server_bigquery_spark.cli import build_source
+    from debezium_server_bigquery_spark.sources import cdc
+
+    seen = {}
+    monkeypatch.setattr(cdc, "read_cdc_ndjson", lambda spark, path, **kw: seen.update(kw))
+    props = {"engine.source": "ndjson", "engine.source.path": str(tmp_path)}
+    for flag in ("true", "false"):
+        build_source(spark, props | {"debezium.sink.batch.nested-as-json": flag})
+        assert seen["nested_as_json"] is (flag == "true")
 
 
 @pytest.mark.heavy
-def test_run_lazy_upsert_from_properties(spark, sf_dir, tmp_path):
+def test_run_upsert_from_properties(spark, sf_dir, tmp_path):
     conf = tmp_path / "application.properties"
     conf.write_text(
         "debezium.sink.type=bigquerystream\n"
@@ -123,14 +134,13 @@ def test_run_lazy_upsert_from_properties(spark, sf_dir, tmp_path):
         f"engine.target-root={tmp_path / 'tgt'}\n"
         "engine.key-columns=user_id\n"
         "engine.n-buckets=8\n"
-        "engine.max-staleness-batches=4\n"
+        "engine.max-staleness-batches=4\n"  # retired: ignored like any unknown key
         "engine.source=synthetic\n"
         f"engine.source.sf-dir={sf_dir}\n"
     )
     summary = run(str(conf), spark=spark)
-    assert summary["mode"] == "upsert_lazy"
+    assert summary["mode"] == "upsert"
     assert summary["tables"]
-    # run() ran the tables' maintenance; each table holds the final state
     for t in summary["tables"]:
         assert summary["rows"][t] > 0
 
@@ -197,10 +207,6 @@ def test_build_pipeline_maps_scd2_mode(spark, tmp_path):
     del props2["engine.key-columns"]
     with pytest.raises(ValueError, match="key-columns"):
         build_pipeline(spark, props2)
-    # incompatible with lazy staging
-    props3 = dict(props, **{"engine.max-staleness-batches": "2"})
-    with pytest.raises(ValueError, match="max-staleness"):
-        build_pipeline(spark, props3)
 
 
 @pytest.mark.heavy

@@ -82,21 +82,19 @@ def test_pipeline_metrics_surface(spark, tmp_path):
     def metrics(pipe):
         return {r["epoch"]: (r["rows"], r["rows_deleted"]) for r in pipe.metrics().collect()}
 
-    kw = {"key_cols": ("id",), "n_buckets": 1, "max_staleness_batches": 2}
+    kw = {"key_cols": ("id",), "n_buckets": 1}
     # (rows written, stored rows deleted) per epoch
-    merges = {
-        # the first MERGE writes the bucketed table
-        "0.0": (3, 0),
-        # a delta of the 2 winning rows; key 3's stored row is superseded
-        "1.0": (2, 1),
-        # key 4's older update loses, key 5 is new: a delta of 1 row
-        "2.0": (1, 0),
-    }
     want = {
         # appends count the batch and delete nothing
         "append": {"0.0": (3, 0), "1.0": (2, 0), "2.0": (2, 0)},
-        "upsert": merges,
-        "upsert_lazy": merges,
+        "upsert": {
+            # the first MERGE writes the bucketed table
+            "0.0": (3, 0),
+            # a delta of the 2 winning rows; key 3's stored row is superseded
+            "1.0": (2, 1),
+            # key 4's older update loses, key 5 is new: a delta of 1 row
+            "2.0": (1, 0),
+        },
     }
     for mode, expect in want.items():
         root = str(tmp_path / mode)

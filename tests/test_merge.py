@@ -224,3 +224,170 @@ def test_merge_is_one_write_of_one_delta(spark, tmp_path, monkeypatch):
     assert sorted((r.c_id, r.c_data) for r in t.read().collect()) == sorted(
         [(i, f"v{i}") for i in range(8) if i != 1] + [(1, "new"), (9, "w")]
     )
+
+
+# -- the upsert sink's lifecycle: replay, restart, crash, maintenance --------
+_UCOLS = "user_id long, v string, __op string, __source_ts_ns long, __deleted boolean"
+
+
+def _user_batches(spark):
+    return [
+        spark.createDataFrame([(1, "a", "c", 100, False), (2, "b", "c", 110, False)], _UCOLS),
+        spark.createDataFrame([(1, "a2", "u", 200, False), (3, "c", "c", 210, False)], _UCOLS),
+        spark.createDataFrame([(2, None, "d", 300, True), (3, "c2", "u", 310, False)], _UCOLS),
+        spark.createDataFrame([(2, "b2", "c", 400, False), (4, "d", "c", 410, False)], _UCOLS),
+    ]
+
+
+def _users(spark, path):
+    return ParquetTable(spark, str(path), key_cols=["user_id"], mode="upsert", n_buckets=4)
+
+
+def _snap(df):
+    return sorted((r["user_id"], r["v"], r["__op"]) for r in df.collect())
+
+
+def _entry(t, version):
+    import json
+    import os
+
+    with open(os.path.join(t.path, "_log", f"{version}.json"), encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+# what the first n batches of _user_batches leave, deletes hidden
+_USER_STATE = {
+    2: [(1, "a2", "u"), (2, "b", "c"), (3, "c", "c")],
+    4: [(1, "a2", "u"), (2, "b2", "c"), (3, "c2", "u"), (4, "d", "c")],
+}
+
+
+def test_merge_epoch_replay_is_a_noop(spark, tmp_path):
+    batches = _user_batches(spark)
+    t = _users(spark, tmp_path / "replay")
+    merge_upsert(t, batches[0], epoch_id=0)
+    before, version = _snap(t.read()), t.version()
+    merge_upsert(t, batches[0], epoch_id=0)  # replayed micro-batch
+    assert (_snap(t.read()), t.version()) == (before, version)
+
+
+def test_epoch_replay_protection_survives_maintenance(spark, tmp_path):
+    """A retry of an already-merged epoch arriving AFTER the maintenance
+    its MERGE ran is skipped: the epoch lives in the table log, and
+    maintenance is one more commit that forgets none."""
+    batches = _user_batches(spark)
+    t = _users(spark, tmp_path / "late")
+    merge_upsert(t, batches[0], epoch_id=0)
+    merge_upsert(t, batches[1], epoch_id=1)
+    # key 1's stored row is superseded: its bucket file left by a commit
+    # of its own, which carries no epoch
+    assert "epoch" not in _entry(t, t.version())
+    state, version = _snap(t.read()), t.version()
+    merge_upsert(t, batches[1], epoch_id=1)  # the late retry
+    assert (_snap(t.read()), t.version()) == (state, version)
+    assert state == _USER_STATE[2]
+
+
+@pytest.mark.heavy
+def test_keep_deletes_tombstone_survives_maintenance(spark, tmp_path):
+    batches = _user_batches(spark)
+    t = _users(spark, tmp_path / "kd")
+    for i, b in enumerate(batches[:3]):
+        merge_upsert(t, b, keep_deletes=True, epoch_id=i)
+    # user 2's delete is retained, flagged
+    row = t.read().filter("user_id = 2").collect()
+    assert len(row) == 1 and row[0]["__op"] == "d" and row[0]["__deleted"]
+
+
+@pytest.mark.heavy
+def test_restart_continues_from_the_log(spark, tmp_path):
+    """A fresh handle over the same path continues from the log: files,
+    deletion sets and committed epochs."""
+    batches = _user_batches(spark)
+    t = _users(spark, tmp_path / "restart")
+    merge_upsert(t, batches[0], epoch_id=0)
+    merge_upsert(t, batches[1], epoch_id=1)
+    again = _users(spark, t.path)
+    # two MERGEs, and the commit that drops key 1's superseded bucket file
+    assert again.version() == 2
+    merge_upsert(again, batches[1], epoch_id=1)  # replay: skipped
+    assert again.version() == 2
+    merge_upsert(again, batches[2], epoch_id=2)
+    merge_upsert(again, batches[3], epoch_id=3)
+    assert _snap(again.read()) == _USER_STATE[4]
+
+
+@pytest.mark.heavy
+def test_crash_between_merge_commit_and_its_maintenance_loses_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a MERGE's commit, inside the maintenance that follows
+    it, loses nothing: the replayed epoch is skipped, and the next MERGE's
+    maintenance does the work."""
+    batches = _user_batches(spark)
+    t = _users(spark, tmp_path / "crash")
+    merge_upsert(t, batches[0], epoch_id=0)
+
+    def crash():
+        raise RuntimeError("killed before maintenance")
+
+    monkeypatch.setattr(t, "maintain", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        merge_upsert(t, batches[1], epoch_id=1)
+    monkeypatch.undo()
+    assert t.epoch_committed(1)
+    state, merged = _snap(t.read()), t.version()
+    merge_upsert(t, batches[1], epoch_id=1)  # the replay: skipped
+    assert (_snap(t.read()), t.version()) == (state, merged)
+    assert state == _USER_STATE[2]
+    for i in (2, 3):
+        merge_upsert(t, batches[i], epoch_id=i)
+    assert _snap(t.read()) == _USER_STATE[4]
+    # the skipped maintenance ran with the next MERGE: key 1's bucket
+    # file, all of it deleted, is gone
+    assert not [rel for rel, m in t._files.items() if len(t._dels.get(rel, ())) == m[2]]
+
+
+def test_maintenance_wear_rule(spark, tmp_path):
+    """The upkeep every MERGE runs: a half-deleted delta stays, a fully
+    deleted one leaves by a commit that adds nothing, a bucket file at
+    ``REWRITE_SHARE`` is rewritten as a delta of its live rows, and more
+    than ``MAX_DELTAS`` deltas bin-pack into one."""
+    from unittest import mock
+
+    from debezium_server_bigquery_spark.operators import table as table_mod
+
+    def upsert(keys, ts):
+        rows = [(k, f"v{k}@{ts}", "u", ts, False) for k in keys]
+        merge_upsert(t, spark.createDataFrame(rows, _UCOLS), epoch_id=f"{ts}:{keys[0]}")
+        return [rel for rel in t.live_files() if t._files[rel][0] is None]
+
+    t = ParquetTable(spark, str(tmp_path / "wear"), key_cols=["user_id"], mode="upsert",
+                     n_buckets=1)
+    upsert(range(10), 1)
+    [bucket] = t.live_files()  # the first MERGE lands bucketed: one file
+    [d1] = upsert(range(10, 14), 1)
+    # half of d1 deleted: it stays, and no maintenance commit follows
+    assert d1 in upsert([10, 11], 2)
+    assert len(t._dels[d1]) == 2 and "epoch" in _entry(t, t.version())
+    # all of d1 deleted: a commit with no add removes it
+    deltas = upsert([12, 13], 2)
+    entry = _entry(t, t.version())
+    assert d1 not in deltas and "add" not in entry and "epoch" not in entry
+    assert [r[0] for r in entry["remove"]] == [d1]
+    # half of the 10-row bucket file deleted: rewritten as one delta of
+    # its 5 live rows
+    upsert(range(5), 3)
+    entry = _entry(t, t.version())
+    assert [r[0] for r in entry["remove"]] == [bucket] and "epoch" not in entry
+    assert [(a[1], a[3]) for a in entry["add"]] == [(None, 5)]
+    assert bucket not in t.live_files()
+    # more than MAX_DELTAS deltas: bin-packed into one
+    with mock.patch.object(table_mod, "MAX_DELTAS", 4):
+        assert len(upsert([20], 4)) == 1
+    assert len(t.live_files()) == 1
+    want = {k: f"v{k}@1" for k in range(14)}
+    want.update({k: f"v{k}@2" for k in range(10, 14)})
+    want.update({k: f"v{k}@3" for k in range(5)})
+    want[20] = "v20@4"
+    assert sorted((r.user_id, r.v) for r in t.read().collect()) == sorted(want.items())

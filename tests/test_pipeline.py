@@ -164,13 +164,13 @@ def test_snapshot_backfill_then_stream(spark, tmp_path):
 
 
 def test_pkless_upsert_modes_fall_back_to_append(spark, sf_dir, tmp_path):
-    """A4 parity at the PIPELINE level: upsert/upsert_lazy with no key
-    columns must run append (time-partitioned tables), not raise.
+    """A4 parity at the PIPELINE level: upsert/scd2 with no key columns
+    must run append (time-partitioned tables), not raise.
     Regression: table_for built a key-bucketed table for these modes even
     without keys, and the append branch then failed in with_partition_col."""
     cdc = _cdc_df(spark, sf_dir)
     expected = cdc.filter(~F.col("destination").startswith("__debezium")).count()
-    for i, mode in enumerate(("upsert", "upsert_lazy")):
+    for i, mode in enumerate(("upsert", "scd2")):
         p = CdcPipeline(spark, str(tmp_path / f"t{i}"), mode=mode, key_cols=())
         p.run_batch(cdc)
         total = sum(p.read_table(d).count() for d in p.tables)
@@ -328,21 +328,69 @@ def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
     from debezium_server_bigquery_spark.operators.table import DELTA_DIR, ParquetTable
 
     cdc = _cdc_df(spark, sf_dir).filter(F.col("event_id") % 4 == 0)
-    for mode in ("append", "upsert", "upsert_lazy", "scd2"):
+    for mode in ("append", "upsert", "scd2"):
         root = tmp_path / mode
-        p = CdcPipeline(
-            spark, str(root), mode=mode, key_cols=("user_id",), n_buckets=4,
-            max_staleness_batches=2,
-        )
+        p = CdcPipeline(spark, str(root), mode=mode, key_cols=("user_id",), n_buckets=4)
         p.process_batch(cdc.filter(F.col("event_id") % 8 == 0), epoch_id=0)
         p.process_batch(cdc.filter(F.col("event_id") % 8 == 4), epoch_id=1)
         for d in sorted(os.listdir(root)):
             names = set(os.listdir(root / d))
             assert "_log" in names, (mode, d)
             # data files sit in partition dirs, a keyed write's deltas in delta/
-            deltas = {DELTA_DIR} if mode in ("upsert", "upsert_lazy", "scd2") else set()
+            deltas = {DELTA_DIR} if mode in ("upsert", "scd2") else set()
             assert {n for n in names if "=" not in n} == {"_log"} | deltas, (mode, d, names)
             reopened = ParquetTable.open(spark, str(root / d))
             assert reopened.mode == ("append" if mode == "append" else "upsert")
         # nothing sits beside the destinations: no staging tables
         assert not [d for d in os.listdir(root) if d.startswith("_")], mode
+
+
+def test_unknown_mode_is_rejected(tmp_path):
+    """A typo, or the retired lazy mode, must fail at construction instead
+    of landing a keyed feed as an append table."""
+    for mode in ("upsert_lazy", "upsrt", "APPEND"):
+        with pytest.raises(ValueError, match="append, upsert, scd2"):
+            CdcPipeline(None, str(tmp_path), mode=mode, key_cols=("user_id",))
+
+
+@pytest.mark.heavy
+def test_streaming_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
+    """Upsert under Structured Streaming: MERGEs are epoch-guarded, so a
+    checkpoint restart that replays nothing leaves the exact same state,
+    which equals the batch run's; folding the tables back into buckets
+    changes no state."""
+    cdc = _cdc_df(spark, sf_dir)
+    src_dir = str(tmp_path / "src")
+    cdc.coalesce(1).write.parquet(src_dir)
+    ckpt, tgt = str(tmp_path / "ckpt"), str(tmp_path / "tgt")
+
+    def run_once():
+        p = CdcPipeline(spark, tgt, mode="upsert", key_cols=("user_id",), n_buckets=8)
+        stream = spark.readStream.schema(cdc.schema).parquet(src_dir)
+        p.run_stream(stream, ckpt, available_now=True).awaitTermination(120)
+        return p
+
+    def state(p):
+        return {
+            d: sorted(tuple(r) for r in p.read_table(d).select("user_id", "event_type", "__op")
+                      .collect())
+            for d in dests
+        }
+
+    p = run_once()
+    dests = sorted(p.tables)
+    assert dests
+    # every destination is a table on disk, and nothing else is
+    assert sorted(d for d in os.listdir(tgt) if not d.startswith((".", "_"))) == dests
+    first = state(p)
+    # restart on the same checkpoint: no new data, no MERGE runs twice
+    p2 = run_once()
+    assert state(p2) == first
+    batch = CdcPipeline(
+        spark, str(tmp_path / "batch"), mode="upsert", key_cols=("user_id",), n_buckets=8
+    )
+    batch.run_batch(cdc)
+    assert state(batch) == first
+    for d in dests:
+        p2.table_for(d).compact()
+    assert state(p2) == first
