@@ -10,6 +10,10 @@ that a filesystem/Spark deployment must name explicitly.
 
 Recognized keys (reference key -> pipeline field):
 
+- ``debezium.format.value`` / ``debezium.format.key``  json only (the
+                                              default); any other serde
+                                              is refused, as the reference
+                                              does
 - ``debezium.sink.type``                      bigquerybatch -> append mode,
                                               bigquerystream -> stream mode
 - ``debezium.sink.bigquerystream.upsert``     true -> upsert MERGE mode;
@@ -31,8 +35,19 @@ Recognized keys (reference key -> pipeline field):
                                               true, stream default false)
 - ``debezium.sink.bigquerystream.create-if-needed``  default true; false
                                               fails writes to missing tables
+- ``debezium.source.topic.heartbeat.prefix``  heartbeat_prefix
+- ``debezium.source.topic.heartbeat.skip-consuming``  heartbeat_skip
+                                              (default true)
+- ``debezium.sink.<type>.cast-deleted-field``  cast_deleted_field
+                                              (default true)
 - ``debezium.sink.batch.concurrent-uploads``            concurrent_uploads
+- ``debezium.sink.batch.concurrent-uploads.timeout-minutes``
+                                              concurrent_uploads_timeout_minutes
+                                              (default 60)
 - ``debezium.sink.batch.batch-size-wait``     No|Max|DynamicBatchSizeWait
+- ``debezium.sink.batch.batch-size-wait.wait-interval-ms``  trigger interval
+                                              of a continuous run (default
+                                              1000)
 - ``debezium.sink.<type>.partition-type``     YEAR|MONTH|DAY|HOUR
 - ``debezium.sink.<type>.partition-field``    partition_field
 - ``debezium.sink.<type>.clustering-field``   clustering_field
@@ -55,6 +70,8 @@ Engine namespace:
 - ``engine.source.sf-dir``     synthetic: testdata dir holding events.parquet
 - ``engine.source.path``       ndjson: file or directory of event lines
 - ``engine.source.kafka.bootstrap-servers`` / ``engine.source.kafka.topics``
+- ``engine.source.kafka.schema-json``  kafka: the Debezium ``schema`` node
+                               of the topic's events, as JSON (required)
 - ``engine.streaming``         true -> run_stream (availableNow), else run_batch
 - ``engine.on-error``          fail (default; reference DebeziumException
   parity on malformed/unknown-field events) | route (flag rows instead)

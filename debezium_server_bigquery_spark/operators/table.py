@@ -101,6 +101,17 @@ PART_FORMATS = {
 }
 
 
+def table_names(root: str) -> list[str]:
+    """The tables directly under ``root`` (directories whose log has a
+    first version), sorted by name."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        name for name in os.listdir(root)
+        if os.path.isfile(os.path.join(root, name, LOG_DIR, "0.json"))
+    )
+
+
 class ParquetTable:
     """A destination table: parquet data files + their commit log.
 
@@ -176,7 +187,7 @@ class ParquetTable:
         # _files maps each live file's relative path to [partition value,
         # bytes, rows] (partition value None: a delta), _dels each file's
         # deleted row positions; _epochs maps each committed epoch to what
-        # its commit wrote.
+        # its commit wrote, _schemas every logged schema in version order.
         self._lock = threading.Lock()
         self._version = -1
         self._files: dict[str, list] = {}
@@ -184,6 +195,7 @@ class ParquetTable:
         self._frames: dict[bool, tuple] = {}  # see _scan
         self._epochs: dict[str, dict] = {}
         self._schema: T.StructType | None = None
+        self._schemas: list[T.StructType] = []
         self._layout: dict | None = None
 
     @classmethod
@@ -254,6 +266,7 @@ class ParquetTable:
             }
         if "schema" in entry:
             self._schema = T.StructType.fromJson(entry["schema"])
+            self._schemas.append(self._schema)
         if "layout" in entry:
             self._layout = entry["layout"]
         self._version += 1
@@ -353,6 +366,13 @@ class ParquetTable:
         rewrote."""
         self._refresh()
         return [{"epoch": e, **m} for e, m in self._epochs.items()]
+
+    def schema_history(self) -> list[T.StructType]:
+        """Every schema the log records, in version order: the first
+        write's, then one per write that added columns (a column set that
+        never landed is never logged)."""
+        self._refresh()
+        return list(self._schemas)
 
     def persist_layout(self) -> None:
         """Commit this handle's CURRENT layout without touching data files

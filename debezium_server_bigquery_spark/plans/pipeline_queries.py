@@ -906,12 +906,12 @@ ORDER BY table_name, user_id
 
 def pipeline_schema_history_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 under the gate: two schema versions flow through the REAL
-    pipeline with a SchemaHistory store attached (schema_history_path),
-    then the history is recovered via the same replay path the reference
-    uses on startup (recoverRecords, BigquerySchemaHistory.java:150-169).
+    pipeline, then the history is recovered from the destination logs
+    under the target root — the startup replay the reference runs over its
+    history table (recoverRecords, BigquerySchemaHistory.java:150-169).
     Batch 1 lands the original column set; batch 2 (event-id-parity split)
     arrives with an added ``value_eur`` column, so every destination must
-    record exactly two schema versions — the original and the evolved one.
+    log exactly two schema versions — the original and the evolved one.
     The output is the recovered history itself (destination, column count,
     canonical name:type list), sorted deterministically; the oracle derives
     the destinations from the raw events and pins the two expected landed
@@ -929,12 +929,11 @@ def pipeline_schema_history_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_eur", F.round(F.col("value") * 0.9, 4)
     )
     target = scratch_dir("dsbq_hist_")
-    hist_path = os.path.join(target, "_schema_history")
-    p = CdcPipeline(spark, target, mode="append", schema_history_path=hist_path)
+    p = CdcPipeline(spark, target, mode="append")
     p.run_batch(b1)
     p.run_batch(b2)
     rows = []
-    for dest, data in SchemaHistory(spark, hist_path).recover_records():
+    for dest, data in SchemaHistory(spark, target).recover_records():
         cols = json.loads(data)["columns"]
         rows.append(
             (dest, len(cols), ",".join(f"{c['name']}:{c['type']}" for c in cols))

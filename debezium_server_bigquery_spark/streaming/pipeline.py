@@ -44,7 +44,7 @@ from debezium_server_bigquery_spark.operators.routing import (
     filter_heartbeats,
     rewrite_destination,
 )
-from debezium_server_bigquery_spark.operators.table import ParquetTable
+from debezium_server_bigquery_spark.operators.table import ParquetTable, table_names
 
 
 # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert: merge-on-read
@@ -129,16 +129,7 @@ class CdcPipeline:
     transforms: dict[str, list[Callable[[DataFrame], DataFrame]]] = field(
         default_factory=dict
     )
-    # S8: when set, every destination's schema versions are recorded to an
-    # append-only SchemaHistory table at this path as they are first seen
-    # (the reference stores DDL events to its history table as the engine
-    # applies them, BigquerySchemaHistory.java:116-141; here the recorded
-    # unit is the landed column set — the parquet-native schema identity).
-    # None = history off, matching the reference's optional history store.
-    schema_history_path: str | None = None
     tables: dict[str, ParquetTable] = field(default_factory=dict)
-    _schema_seen: dict = field(default_factory=dict)  # dest -> {col tuples}
-    _schema_lock: threading.Lock = field(default_factory=threading.Lock)
 
     def __post_init__(self) -> None:
         if self.mode not in MODES:
@@ -185,41 +176,6 @@ class CdcPipeline:
         ):
             df = df.withColumn("__deleted", F.col("__deleted").cast("boolean"))
         return df
-
-    def _record_schema(self, destination: str, df: DataFrame) -> None:
-        """S8: append this destination's schema to the history table the
-        first time the column set is seen (DDL-rate, not row-rate: one
-        tiny write per schema VERSION per destination, ever).  Upload
-        threads share the seen-set, hence the lock; the store write itself
-        is a one-row parquet append, safe from any thread."""
-        import json
-
-        from debezium_server_bigquery_spark.streaming.schema_history import (
-            SchemaHistory,
-        )
-
-        cols = tuple(sorted(df.columns))
-        with self._schema_lock:
-            # the write stays inside the lock: concurrent appends to ONE
-            # parquet path share a _temporary staging dir and corrupt each
-            # other's commit — and history writes are DDL-rate, so
-            # serializing them costs nothing
-            seen = self._schema_seen.setdefault(destination, set())
-            if cols in seen:
-                return
-            seen.add(cols)
-            SchemaHistory(self.spark, self.schema_history_path).store_record(
-                destination,
-                json.dumps(
-                    {
-                        "columns": [
-                            {"name": f.name, "type": f.dataType.simpleString()}
-                            for f in sorted(df.schema.fields, key=lambda f: f.name)
-                        ]
-                    },
-                    sort_keys=True,
-                ),
-            )
 
     def rejects_table(self) -> ParquetTable:
         """The dead-letter table (append-only, ingest-time partitioned)."""
@@ -337,12 +293,6 @@ class CdcPipeline:
                     sub_epoch = (
                         None if epoch_id is None else f"{epoch_id}.{gi}"
                     )
-                    # S8: record the group's schema before it lands, the
-                    # way the reference stores a DDL event before applying
-                    # it (first-seen per destination, so steady state pays
-                    # one set lookup and zero writes)
-                    if self.schema_history_path is not None:
-                        self._record_schema(dest, group)
                     if self.mode == "upsert" and self.key_cols:
                         merge_upsert(
                             table,
@@ -501,7 +451,8 @@ class CdcPipeline:
         and restart-surviving).  ``rows`` is what the epoch's commit wrote:
         the appended rows, or the rows of a MERGE's delta (the batch rows
         that won); ``rows_deleted`` is how many stored rows the commit
-        superseded.  Covers the destinations this pipeline has opened."""
+        superseded.  Covers every table with a log under ``target_root``,
+        whether or not this process has opened it."""
         from pyspark.sql import types as T
 
         schema = T.StructType(
@@ -515,8 +466,11 @@ class CdcPipeline:
         recs = [
             {"table_name": dest, "epoch": m["epoch"], "rows": m["rows"],
              "rows_deleted": m["rows_deleted"]}
-            for dest, table in sorted(self.tables.items())
-            for m in table.epoch_metrics()
+            for dest in table_names(self.target_root)
+            for m in (
+                self.tables.get(dest)
+                or ParquetTable(self.spark, os.path.join(self.target_root, dest))
+            ).epoch_metrics()
         ]
         return self.spark.createDataFrame(recs, schema)
 

@@ -1,11 +1,14 @@
-"""Schema-history store and in-batch schema grouping.
+"""Schema history and in-batch schema grouping.
 
 S8 parity — the reference keeps an append-only BigQuery table
 ``(id STRING, history_data STRING, record_insert_ts TIMESTAMP)`` of DDL
 events, replayed ordered on startup (BigquerySchemaHistory.java:58-62,
-116-141, 150-169).  Here it is an append-only parquet table: the target
-tables' own schema versions are covered by parquet ``mergeSchema``, so the
-history table is the *audit/replay* surface, exactly like the reference's.
+116-141, 150-169).  Here every schema change a destination lands is
+already part of its table commit (the ``schema`` of a ``_log/<v>.json``
+entry, published atomically with the data), so the history is read off
+the destination logs: no second store, nothing to write, and no record of
+a column set that never landed.  Only ``operators/table.py`` knows the
+log format.
 
 R4 parity — within one destination's batch the reference groups events by
 their embedded value schema so each upload carries a uniform schema
@@ -21,99 +24,42 @@ every batch its sources produce; only a caller that attaches
 
 from __future__ import annotations
 
+import json
 import os
-import threading
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_server_bigquery_spark.operators.table import ParquetTable, table_names
+
 SCHEMA_FP_COL = "__schema_fp"
-
-_TS_LOCK = threading.Lock()
-_LAST_TS_US = 0
-
-
-def _next_ts_us() -> int:
-    """Strictly monotonic microsecond wall-clock: recovery orders by
-    ``record_insert_ts`` (the reference's contract), and two direct file
-    writes can land in the same clock tick — the bump keeps replay order
-    equal to insert order within this process."""
-    global _LAST_TS_US
-    with _TS_LOCK:
-        now = time.time_ns() // 1000
-        if now <= _LAST_TS_US:
-            now = _LAST_TS_US + 1
-        _LAST_TS_US = now
-        return now
 
 
 class SchemaHistory:
-    """Append-only schema-history table (S8).
+    """The schema history of the destinations under one target root (S8),
+    recovered from their commit logs (recoverRecords parity,
+    BigquerySchemaHistory.java:150-169)."""
 
-    Reference DDL: BigquerySchemaHistory.java:58-62; store:116-141;
-    ordered recovery :150-169; ``LIMIT 5`` existence probe :185.
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession, target_root: str):
         self.spark = spark
-        self.path = path
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            not n.startswith(("_", ".")) for n in os.listdir(self.path)
-        )
-
-    def store_record(self, destination: str, schema_json: str) -> None:
-        """Append one DDL/schema-change record (storeRecord parity).
-
-        One tiny file per DDL event — DDL is rare, so the small-file count
-        is bounded by schema-change frequency, not data volume.  Written
-        driver-side with pyarrow, not a Spark job: a one-row append is
-        driver-rate work, and Spark's FileOutputCommitter shares one
-        ``_temporary`` staging dir per target path, so two concurrent
-        appends to the history table can corrupt each other's commit —
-        a uniquely-named direct file write cannot.
-        """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rec_id = str(uuid.uuid4())
-        table = pa.table(
-            {
-                "id": pa.array([rec_id], pa.string()),
-                "destination": pa.array([destination], pa.string()),
-                "history_data": pa.array([schema_json], pa.string()),
-                "record_insert_ts": pa.array([_next_ts_us()], pa.timestamp("us")),
-            }
-        )
-        os.makedirs(self.path, exist_ok=True)
-        pq.write_table(table, os.path.join(self.path, f"part-{rec_id}.parquet"))
+        self.target_root = target_root
 
     def recover_records(self) -> list[tuple[str, str]]:
-        """Replay history ordered by insert ts (recoverRecords parity).
-
-        Driver-side list is correct here: schema history is DDL-rate data
-        (thousands of rows at most), the same single-node replay the
-        reference does on startup.
-        """
-        if not self.exists():
-            return []
-        rows = (
-            self.spark.read.parquet(self.path)
-            .orderBy("record_insert_ts", "id")
-            .select("destination", "history_data")
-            # bounded-collect: schema-history records, O(DDL changes) not data
-            .collect()
-        )
-        return [(r["destination"], r["history_data"]) for r in rows]
-
-    def storage_exists_probe(self) -> bool:
-        """The reference probes with ``SELECT * ... LIMIT 5`` (:185)."""
-        if not self.exists():
-            return False
-        return len(self.spark.read.parquet(self.path).limit(5).take(5)) > 0
+        """``(destination, history_data)`` per logged schema, ordered by
+        destination and then by log version.  ``history_data`` is the JSON
+        ``{"columns": [{"name", "type"}, ...]}`` of the landed column set,
+        sorted by name: the first write's, then one per write that added
+        columns."""
+        records = []
+        for dest in table_names(self.target_root):
+            table = ParquetTable(self.spark, os.path.join(self.target_root, dest))
+            for schema in table.schema_history():
+                cols = [
+                    {"name": f.name, "type": f.dataType.simpleString()}
+                    for f in sorted(schema.fields, key=lambda f: f.name)
+                ]
+                records.append((dest, json.dumps({"columns": cols}, sort_keys=True)))
+        return records
 
 
 def schema_groups(df: DataFrame, fp_col: str = SCHEMA_FP_COL) -> list[tuple[str, DataFrame]]:

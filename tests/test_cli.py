@@ -362,3 +362,50 @@ def test_optimize_expires_old_partitions(spark, sf_dir, tmp_path):
     assert len(summary["expired_partitions"]) == len(months) - 1
     left = sorted(d.split("=", 1)[1] for d in t.partition_file_counts())
     assert left == [keep_from]
+
+
+def test_docstring_lists_every_key_read():
+    """Every property key ``cli.py`` reads is listed in its module
+    docstring; a key built from a variable (``f"{sink}.partition-type"``)
+    matches a listed key whose variable part is any one token."""
+    import ast
+    import re
+
+    from debezium_server_bigquery_spark import cli
+
+    with open(cli.__file__, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    listed = set(re.findall(r"``([^`\s]+)``", ast.get_docstring(tree)))
+
+    def pattern(node):
+        if isinstance(node, ast.Constant):
+            return re.escape(node.value)
+        return "".join(
+            re.escape(v.value) if isinstance(v, ast.Constant) else r"\S+"
+            for v in node.values
+        )
+
+    def is_props(node):
+        return isinstance(node, ast.Name) and node.id == "props"
+
+    keys = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and is_props(node.value)
+        ):
+            keys.append(node.slice)
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "get"
+            and is_props(node.func.value)
+        ):
+            keys.append(node.args[0])
+    assert len(keys) > 30
+    missing = [
+        ast.unparse(k) for k in keys
+        if not any(re.fullmatch(pattern(k), name) for name in listed)
+    ]
+    assert missing == []

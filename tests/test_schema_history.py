@@ -1,4 +1,5 @@
-"""S8 schema-history store + R4 in-batch schema grouping.
+"""S8 schema history (read off the destination logs) + R4 in-batch
+schema grouping.
 
 Mirrors the reference's state-store tests (BigquerySchemaHistoryTest.java:
 103-132 record/recover across restart) and the schema-group behavior
@@ -18,23 +19,72 @@ from debezium_server_bigquery_spark.streaming.schema_history import (
 )
 
 
-def test_schema_history_store_and_ordered_recover(spark, tmp_path):
-    h = SchemaHistory(spark, str(tmp_path / "history"))
-    assert not h.exists()
-    assert h.recover_records() == []
-    assert not h.storage_exists_probe()
+def _batch(spark, dest, ids, ts, extra=False):
+    df = spark.createDataFrame(
+        [(i, f"n{i}") for i in ids], "id long, name string"
+    ).select(
+        F.lit(dest).alias("destination"),
+        "*",
+        F.lit("c").alias("__op"),
+        F.lit(ts).cast("long").alias("__source_ts_ns"),
+    )
+    return df.withColumn("extra", F.lit("x")) if extra else df
 
-    ddl1 = json.dumps({"op": "CREATE", "cols": ["id"]})
-    ddl2 = json.dumps({"op": "ALTER", "cols": ["id", "name"]})
-    h.store_record("testc.inventory.t1", ddl1)
-    h.store_record("testc.inventory.t1", ddl2)
 
-    # a new instance over the same path replays in insert order (restart)
-    h2 = SchemaHistory(spark, str(tmp_path / "history"))
-    recovered = h2.recover_records()
-    assert [d for _, d in recovered] == [ddl1, ddl2]
-    assert all(dest == "testc.inventory.t1" for dest, _ in recovered)
-    assert h2.storage_exists_probe()
+def _recovered(spark, root):
+    return [
+        (dest, [c["name"] for c in json.loads(data)["columns"]])
+        for dest, data in SchemaHistory(spark, root).recover_records()
+    ]
+
+
+def test_schema_history_ordered_recover_from_logs(spark, tmp_path):
+    """Recovery replays every destination's logged schemas, ordered by
+    destination and then by log version, in the record shape the
+    reference's history table holds (BigquerySchemaHistory.java:150-169)."""
+    root = str(tmp_path / "tgt")
+    assert SchemaHistory(spark, root).recover_records() == []
+    p = CdcPipeline(spark, root, mode="append")
+    p.run_batch(_batch(spark, "t2", [1], 1).unionByName(_batch(spark, "t1", [2], 1)))
+    p.run_batch(_batch(spark, "t1", [3], 2, extra=True))
+
+    # a new instance over the same root replays in log order (restart)
+    base = ["__op", "__source_ts_ns", "id", "name"]
+    assert _recovered(spark, root) == [
+        ("t1", base),
+        ("t1", base[:2] + ["extra"] + base[2:]),
+        ("t2", base),
+    ]
+    first = SchemaHistory(spark, root).recover_records()[0][1]
+    assert json.loads(first) == {
+        "columns": [
+            {"name": "__op", "type": "string"},
+            {"name": "__source_ts_ns", "type": "bigint"},
+            {"name": "id", "type": "bigint"},
+            {"name": "name", "type": "string"},
+        ]
+    }
+
+
+def test_restarted_pipeline_adds_no_history_for_a_seen_schema(spark, tmp_path):
+    """A second pipeline on the same root replaying a column set the
+    first one already landed records no new schema version."""
+    root = str(tmp_path / "tgt")
+    CdcPipeline(spark, root, mode="append").run_batch(_batch(spark, "t", [1, 2], 1))
+    CdcPipeline(spark, root, mode="append").run_batch(_batch(spark, "t", [3], 2))
+    assert _recovered(spark, root) == [("t", ["__op", "__source_ts_ns", "id", "name"])]
+
+
+def test_history_records_only_landed_columns(spark, tmp_path):
+    """With field addition off, a batch's new column never lands, so it
+    adds no schema version: the recovered columns are the table's."""
+    root = str(tmp_path / "tgt")
+    p = CdcPipeline(spark, root, mode="append", allow_field_addition=False)
+    p.run_batch(_batch(spark, "t", [1], 1))
+    p.run_batch(_batch(spark, "t", [2], 2, extra=True))
+    landed = sorted(p.read_table("t").columns)
+    assert landed == ["__op", "__source_ts_ns", "id", "name"]
+    assert _recovered(spark, root) == [("t", landed)]
 
 
 def test_schema_fingerprint_and_groups(spark):
@@ -90,8 +140,9 @@ def test_pipeline_splits_mixed_schema_batch(spark, tmp_path):
 
 
 def test_pipeline_records_schema_history(spark, tmp_path, sf_dir):
-    """S8 wired into the pipeline: one record per (destination, column
-    set), in evolution order, recovered by a fresh instance (restart)."""
+    """S8 from the pipeline's own commits: one record per (destination,
+    landed column set), in evolution order, recovered from the target
+    root by a fresh instance (restart)."""
     from debezium_server_bigquery_spark.sources.cdc import synthesize_cdc_events
     from debezium_server_bigquery_spark.sources.tables import load_table
 
@@ -100,16 +151,14 @@ def test_pipeline_records_schema_history(spark, tmp_path, sf_dir):
     b2 = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1).withColumn(
         "value_eur", F.round(F.col("value") * 0.9, 4)
     )
-    hist = str(tmp_path / "hist")
-    p = CdcPipeline(
-        spark, str(tmp_path / "tgt"), mode="append", schema_history_path=hist
-    )
+    root = str(tmp_path / "tgt")
+    p = CdcPipeline(spark, root, mode="append")
     p.run_batch(b1)
     p.run_batch(b2)
     # replaying an already-seen schema records nothing new
     p.run_batch(b1.limit(10))
 
-    recs = SchemaHistory(spark, hist).recover_records()
+    recs = SchemaHistory(spark, root).recover_records()
     assert len(recs) == 6  # 3 destinations x 2 schema versions
     by_dest: dict[str, list[int]] = {}
     for dest, data in recs:

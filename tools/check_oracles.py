@@ -12,8 +12,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, so a copy runs that copy
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def _norm(v):

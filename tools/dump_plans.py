@@ -16,8 +16,11 @@ from __future__ import annotations
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, so a copy runs that copy
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 HEADLINE = [
     ("plans.analytics", "q1_pricing_summary"),
@@ -127,7 +130,7 @@ def main() -> None:
         out.append(plan.rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/docs/PLANS.md", "w") as fh:
+    with open(ROOT / "docs" / "PLANS.md", "w") as fh:
         fh.write("\n".join(out) + "\n")
     print("wrote docs/PLANS.md")
     spark.stop()
