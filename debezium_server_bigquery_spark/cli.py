@@ -40,10 +40,18 @@ Recognized keys (reference key -> pipeline field):
                                               (default true)
 - ``debezium.sink.<type>.cast-deleted-field``  cast_deleted_field
                                               (default true)
-- ``debezium.sink.batch.concurrent-uploads``            concurrent_uploads
+- ``debezium.sink.batch.concurrent-uploads``            concurrent_uploads:
+                                              upload threads of the
+                                              per-destination path (keyed
+                                              MERGE/SCD2, transforms,
+                                              allow-field-addition=false);
+                                              an append batch writes every
+                                              destination in one job
 - ``debezium.sink.batch.concurrent-uploads.timeout-minutes``
                                               concurrent_uploads_timeout_minutes
-                                              (default 60)
+                                              (default 60): bounds that
+                                              one append job, or the
+                                              per-destination uploads
 - ``debezium.sink.batch.batch-size-wait``     No|Max|DynamicBatchSizeWait
 - ``debezium.sink.batch.batch-size-wait.wait-interval-ms``  trigger interval
                                               of a continuous run (default
@@ -287,7 +295,10 @@ def run(conf_path: str, spark=None) -> dict:
         q.awaitTermination()
     else:
         pipeline.run_batch(source)
-    tables = sorted(pipeline.tables)
+    from debezium_server_bigquery_spark.operators.table import table_names
+
+    # every table under the root, including those this run wrote nothing to
+    tables = table_names(pipeline.target_root)
     return {
         "mode": pipeline.mode,
         "tables": tables,

@@ -525,31 +525,32 @@ class ParquetTable:
             finally:
                 self._zcache = None
 
-    def write_files(self, out: DataFrame, dest: str, partitioned: bool = True) -> None:
-        """The raw Spark write action (separable for fault injection)."""
-        cols = [self.partition_col()] if partitioned else []
+    def write_files(self, out: DataFrame, dest: str, cols: Sequence[str]) -> None:
+        """The raw Spark write action, partitioned by ``cols`` (separable
+        for fault injection)."""
         out.write.mode("overwrite").partitionBy(*cols).parquet(dest)
 
+    def _check_creatable(self) -> None:
+        """create-if-needed parity (StreamBigqueryChangeConsumer.java:291):
+        a write against a missing table fails when creation is off."""
+        if not self.exists() and not self.create_if_needed:
+            raise ValueError(
+                f"table {self.path} does not exist and create-if-needed is false"
+            )
+
     def _land(self, out: DataFrame, partitioned: bool = True) -> tuple[list[list], dict]:
-        """Run the write action and move its non-empty files to fresh
-        names; returns their log rows and what the job observed.
+        """Run the write action and ``_adopt`` its files; returns their log
+        rows and what the job observed.
 
         The job runs under the T7 retry budget and counts the rows it
         writes with ``DataFrame.observe`` — no extra pass over the data;
         when ``out`` carries ``POS_FILE``/``POS_ROW``, the same observation
         collects the non-null positions, those columns are not written, and
         neither is a row with a null partition value (a deletion only: the
-        filter that drops it sits above the observation).  Files land
-        in a private directory, then move to ``<partition>/<token>-<n>``
-        (``delta/...`` when unpartitioned): a failure at any step leaves
-        the previous version whole."""
-        if not self.exists() and not self.create_if_needed:
-            # create-if-needed parity (StreamBigqueryChangeConsumer.java:291)
-            raise ValueError(
-                f"table {self.path} does not exist and create-if-needed is false"
-            )
-        import pyarrow.parquet as pq
-
+        filter that drops it sits above the observation).  Files land in a
+        private directory first: a failure at any step leaves the previous
+        version whole."""
+        self._check_creatable()
         part_col = self.partition_col()
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_tmp_{token}")
@@ -567,34 +568,61 @@ class ParquetTable:
             rows = out.observe(o, *metrics)
             if POS_FILE in out.columns:
                 rows = rows.filter(F.col(part_col).isNotNull()).drop(POS_FILE, POS_ROW)
-            self.write_files(rows, tmp, partitioned)
+            self.write_files(rows, tmp, [part_col] if partitioned else [])
             return o
 
-        add: list[list] = []
         try:
             seen = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}").get
-            dirs = [d for d in sorted(os.listdir(tmp)) if d.startswith(f"{part_col}=")]
-            for d in dirs if partitioned else [""]:
-                for name in sorted(os.listdir(os.path.join(tmp, d))):
-                    src = os.path.join(tmp, d, name)
-                    rows = name.endswith(".parquet") and pq.read_metadata(src).num_rows
-                    if not rows:
-                        continue
-                    rel = f"{d or DELTA_DIR}/{token}-{len(add)}.parquet"
-                    meta = [d.split("=", 1)[1] if d else None, os.path.getsize(src), rows]
-                    os.makedirs(os.path.dirname(os.path.join(self.path, rel)), exist_ok=True)
-                    os.rename(src, os.path.join(self.path, rel))
-                    add.append([rel, *meta])
+            add = self._adopt(tmp, token, partitioned)
         finally:
             self._release_zcache()
             shutil.rmtree(tmp, ignore_errors=True)
         return add, seen
 
-    def _schema_for(self, out: DataFrame) -> T.StructType:
-        """The logged schema evolved by ``out``'s new columns."""
+    def _adopt(self, src: str, token: str, partitioned: bool = True) -> list[list]:
+        """Move the non-empty parquet files a write job left under ``src``
+        (in ``<partition column>=<value>`` directories, or directly when
+        unpartitioned) into this table as ``<partition>/<token>-<n>``
+        (``delta/<token>-<n>`` when unpartitioned), each counted from its
+        footer; returns their log rows, for the caller to commit."""
+        import pyarrow.parquet as pq
+
+        part_col = self.partition_col()
+        dirs = sorted(d for d in os.listdir(src) if d.startswith(f"{part_col}="))
+        add: list[list] = []
+        for d in dirs if partitioned else [""]:
+            for name in sorted(os.listdir(os.path.join(src, d))):
+                path = os.path.join(src, d, name)
+                rows = name.endswith(".parquet") and pq.read_metadata(path).num_rows
+                if not rows:
+                    continue
+                rel = f"{d or DELTA_DIR}/{token}-{len(add)}.parquet"
+                meta = [d.split("=", 1)[1] if d else None, os.path.getsize(path), rows]
+                os.makedirs(os.path.dirname(os.path.join(self.path, rel)), exist_ok=True)
+                os.rename(path, os.path.join(self.path, rel))
+                add.append([rel, *meta])
+        return add
+
+    def append_landed(
+        self, src: str, token: str, schema: T.StructType, epoch_id: int | str | None = None
+    ) -> None:
+        """Adopt the partition directories a write job that served several
+        tables at once left under ``src`` (see ``_adopt``) and publish them in
+        one commit with ``epoch_id``, the row count their footers hold and
+        the logged schema evolved by ``schema``.  A replay of a committed
+        epoch adopts nothing: its files stay in ``src`` for the caller to
+        drop."""
+        if self.epoch_committed(epoch_id):
+            return
+        self._check_creatable()
+        add = self._adopt(src, token)
+        self._commit(add, (), epoch_id, sum(a[3] for a in add), self._schema_for(schema))
+
+    def _schema_for(self, schema: T.StructType) -> T.StructType:
+        """The logged schema evolved by the new columns of ``schema``."""
         known = self._schema.fields if self._schema is not None else []
         names = {f.name for f in known} | {self.partition_col(), POS_FILE, POS_ROW}
-        return T.StructType(known + [f for f in out.schema.fields if f.name not in names])
+        return T.StructType(known + [f for f in schema.fields if f.name not in names])
 
     def _write(
         self,
@@ -620,7 +648,7 @@ class ParquetTable:
         dels: dict[str, list[int]] = {}
         for name, row in seen.get("deleted", []):
             dels.setdefault(by_name[name], []).append(row)
-        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out), dels)
+        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out.schema), dels)
         return add
 
     def _one_delta(self, df: DataFrame) -> DataFrame:

@@ -1005,12 +1005,14 @@ GROUP BY 1 ORDER BY table_name
 
 
 def pipeline_retry_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T7 under the gate: every destination's FIRST physical write attempt
-    raises a deterministic transient fault, and the bounded-retry budget
-    (operators/retry.py — the reference retries client writes 5 attempts
-    within 5 minutes, ConsumerUtil.java:134-147, and stream appends
-    500 ms x1.1 for 5 retries, StreamDataWriter.java:73-79) must converge
-    to the EXACT no-fault final state.
+    """T7 under the gate: the FIRST physical write attempt of every table
+    handle the pipeline opens raises a deterministic transient fault, and
+    the bounded-retry budget (operators/retry.py — the reference retries
+    client writes 5 attempts within 5 minutes, ConsumerUtil.java:134-147,
+    and stream appends 500 ms x1.1 for 5 retries, StreamDataWriter.java
+    :73-79) must converge to the EXACT no-fault final state.  An append
+    batch writes every destination in one job, through the landing handle
+    on the target root, so that job's first attempt is the one that fails.
 
     The injection point is ``ParquetTable.write_files`` — the separable
     raw write action with_retry wraps.  Retrying it is semantics-preserving
@@ -1027,26 +1029,23 @@ def pipeline_retry_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     injected: list[str] = []
 
     class _FlakyWritePipeline(CdcPipeline):
-        """Tables whose first physical append attempt fails transiently."""
+        """Table handles whose first physical write attempt fails
+        transiently."""
 
-        def table_for(self, destination: str):
-            fresh = destination not in self.tables
-            t = super().table_for(destination)
-            if fresh:
-                t.retry_policy = NO_WAIT_POLICY  # keep the gate fast
-                orig = t.write_files
-                state = {"tripped": False}
+        def _table(self, path: str, keyed: bool = False):
+            t = super()._table(path, keyed)
+            t.retry_policy = NO_WAIT_POLICY  # keep the gate fast
+            orig = t.write_files
+            state = {"tripped": False}
 
-                def flaky_write(out, dest, *args, _orig=orig, _state=state, _dest=destination):
-                    if not _state["tripped"]:
-                        _state["tripped"] = True
-                        injected.append(_dest)
-                        raise RuntimeError(
-                            f"injected transient write failure for {_dest}"
-                        )
-                    _orig(out, dest, *args)
+            def flaky_write(out, dest, *args, _orig=orig, _state=state, _path=path):
+                if not _state["tripped"]:
+                    _state["tripped"] = True
+                    injected.append(_path)
+                    raise RuntimeError(f"injected transient write failure for {_path}")
+                _orig(out, dest, *args)
 
-                t.write_files = flaky_write
+            t.write_files = flaky_write
             return t
 
     target = scratch_dir("dsbq_e2e_")

@@ -5,10 +5,11 @@ One Structured Streaming query replaces the reference's consumer hierarchy:
     readStream(Debezium JSON / synthesized CDC rows)
       -> foreachBatch(epoch):                      # == handleBatch
            heartbeat filter (R2) -> tombstone drop (R5)
-           -> destination rewrite (R3)
-           -> per destination (R1):
-                coerce to target schema
-                -> append (S3)  |  dedup (A1/A2) + MERGE (S5)  |  SCD2
+           -> meta-column coercion -> destination rewrite (R3)
+           -> append: ONE write job for every destination (partitioned
+                      by destination, R1), one commit per table (S3)
+              | per destination (R1):
+                dedup (A1/A2) + MERGE (S5)  |  SCD2  |  append
 
 A keyed table maintains itself: each MERGE or SCD2 write ends with the
 table's upkeep (``ParquetTable.write_delta``), the counterpart of
@@ -20,19 +21,34 @@ source offsets + sink commit log live in the checkpoint dir
 The epoch each table commit carries gives idempotent re-delivery on
 restart.
 
-Per-table writes run in a thread pool (T6 parity — the reference bounds
-parallel uploads with a semaphore over virtual threads,
-BaseChangeConsumer.java:83-86,209-274); each table's Spark jobs are
-independent, and the local scheduler interleaves their stages.
+T6.  The reference runs one BigQuery Load Job per destination table, in
+parallel (``groupingBy(destination)``, BaseChangeConsumer.java:144-145;
+uploads :209-274), because a load job targets one table.  A Spark job
+can write every table's files: an append batch is written once,
+partitioned by destination and time partition, and each table then
+adopts its own directory in its own log commit.  Per-table atomicity
+comes from that commit, not from the job, and the per-table epoch guard
+keeps a replay exactly-once.  The job runs in a job group that
+``concurrent_uploads_timeout_minutes`` cancels.  Only batches that need
+one destination's slice at a time take the per-destination path: keyed
+MERGE/SCD2, transforms, ``__schema_fp`` schema groups and
+``allow_field_addition=False``.  That path routes with one distinct
+query and writes the tables in a thread pool of ``concurrent_uploads``
+(the reference bounds its uploads with a semaphore over virtual threads,
+BaseChangeConsumer.java:83-86), whose Spark jobs the local scheduler
+interleaves.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import threading
+import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +60,9 @@ from debezium_server_bigquery_spark.operators.routing import (
     filter_heartbeats,
     rewrite_destination,
 )
+from debezium_server_bigquery_spark.operators.retry import with_retry
 from debezium_server_bigquery_spark.operators.table import ParquetTable, table_names
+from debezium_server_bigquery_spark.streaming.schema_history import SCHEMA_FP_COL
 
 
 # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert: merge-on-read
@@ -52,10 +70,16 @@ from debezium_server_bigquery_spark.operators.table import ParquetTable, table_n
 # operators/scd.py)
 MODES = ("append", "upsert", "scd2")
 
+# The local properties a job group sets on the calling thread.
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+# The directory name Spark gives a null or empty partition value.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
 
 class UploadCancelled(RuntimeError):
-    """An upload thread observed the batch-timeout cancel flag and stopped
-    at a safe point (between schema-group writes, or before starting)."""
+    """An upload observed the batch timeout and stopped at a safe point
+    (before a write attempt, between schema-group writes, or before
+    starting)."""
 
 
 @dataclass
@@ -88,11 +112,14 @@ class CdcPipeline:
     # time) and clean rows continue — one poisoned record must not kill a
     # 1000-executor job.  None = rejects columns are an error to ship.
     rejects_destination: str | None = None
-    concurrent_uploads: int = 4  # debezium.sink.batch.concurrent-uploads
+    # debezium.sink.batch.concurrent-uploads: threads of the per-destination
+    # path (the shared append write runs one job for every destination).
+    concurrent_uploads: int = 4
     # debezium.sink.batch.concurrent-uploads.timeout-minutes
-    # (CommonConfig.java:32-34): bound on the whole parallel upload batch;
-    # expiry cancels pending tasks and fails the micro-batch (the epoch
-    # replays, committed epochs make completed tables no-ops).
+    # (CommonConfig.java:32-34): bound on a batch's writes, the shared
+    # append job or the per-destination uploads; expiry cancels their
+    # Spark jobs and fails the micro-batch (the epoch replays, committed
+    # epochs make completed tables no-ops).
     concurrent_uploads_timeout_minutes: float = 60.0
     dedup_order_col: str = "__source_ts_ns"  # ...upsert-dedup-column
     dedup_tiebreak: tuple[str, ...] = ()  # extra deterministic ordering cols
@@ -135,24 +162,32 @@ class CdcPipeline:
         if self.mode not in MODES:
             raise ValueError(f"mode must be one of {', '.join(MODES)}; got {self.mode!r}")
 
-    def table_for(self, destination: str) -> ParquetTable:
+    def _table(self, path: str, keyed: bool = False) -> ParquetTable:
+        """A handle on the table at ``path`` with this pipeline's layout."""
+        return ParquetTable(
+            self.spark,
+            path,
+            key_cols=self.key_cols if keyed else (),
+            mode="upsert" if keyed else "append",
+            n_buckets=self.n_buckets,
+            partition_type=self.partition_type,
+            partition_field=self.partition_field,
+            clustering_field=self.clustering_field,
+            allow_field_addition=self.allow_field_addition,
+            create_if_needed=self.create_if_needed,
+        )
+
+    def _keyed(self) -> bool:
         # A4 parity: without key columns even an upsert-configured pipeline
         # runs append (doUpsert/doTableHasPrimaryKey,
         # StreamBigqueryChangeConsumer.java:163-174) — the table must then
         # be TIME-partitioned, not key-bucketed, or the append raises.
-        upserting = self.mode in ("upsert", "scd2") and bool(self.key_cols)
+        return self.mode in ("upsert", "scd2") and bool(self.key_cols)
+
+    def table_for(self, destination: str) -> ParquetTable:
         if destination not in self.tables:
-            self.tables[destination] = ParquetTable(
-                self.spark,
-                os.path.join(self.target_root, destination),
-                key_cols=self.key_cols if upserting else (),
-                mode="upsert" if upserting else "append",
-                n_buckets=self.n_buckets,
-                partition_type=self.partition_type,
-                partition_field=self.partition_field,
-                clustering_field=self.clustering_field,
-                allow_field_addition=self.allow_field_addition,
-                create_if_needed=self.create_if_needed,
+            self.tables[destination] = self._table(
+                os.path.join(self.target_root, destination), self._keyed()
             )
         return self.tables[destination]
 
@@ -258,9 +293,109 @@ class CdcPipeline:
         batch = rewrite_destination(
             batch, self.destination_regexp, self.destination_regexp_replace
         )
+        # The schema-group and field-addition gates, keyed writes and
+        # transforms all work on one destination's slice; plain appends of
+        # every destination share one write.
+        shared = not (
+            self._keyed()
+            or self.transforms
+            or SCHEMA_FP_COL in batch.columns
+            or not self.allow_field_addition
+        )
+        landed = (self._append_all if shared else self._upload_each)(batch, epoch_id)
+        if landed:
+            self._maybe_compact(epoch_id)
+
+    def _append_all(self, batch: DataFrame, epoch_id: int | None) -> bool:
+        """Land every destination's rows in ONE Spark write job, then give
+        each table its own log commit; returns whether any row landed.
+
+        The job writes ``<target_root>/_tmp_<token>`` partitioned by
+        destination and time partition, sorted within its partitions by
+        both and the clustering columns, so Spark adds no sort of its own.
+        It runs under the T7 retry budget, in a job group cancelled when
+        ``concurrent_uploads_timeout_minutes`` expires.  Each
+        ``destination=<name>`` directory is then adopted by its table in
+        sorted order (``ParquetTable.append_landed``), under the epoch
+        ``"<epoch>.0"``; a table that already committed it adopts nothing.
+        Missing tables under create-if-needed=false are reported together
+        after the others commit, and a row with a null (or empty)
+        destination fails the batch before any commit."""
+        landing = self._table(self.target_root)  # layout only; never committed
+        part_col = landing.partition_col()
+        out = landing.with_partition_col(batch)
+        clustering = [c for c in landing.clustering_cols() if c in out.columns]
+        out = out.sortWithinPartitions("destination", part_col, *clustering)
+        token = uuid.uuid4().hex[:12]
+        tmp = os.path.join(self.target_root, f"_tmp_{token}")
+        sc = self.spark.sparkContext
+        group = f"cdc-upload-{token}"
+        timeout_s = self.concurrent_uploads_timeout_minutes * 60.0
+        expired = threading.Event()
+
+        def expire() -> None:
+            expired.set()
+            sc.cancelJobGroup(group)
+
+        def attempt() -> None:
+            if expired.is_set():
+                raise UploadCancelled("no write attempt starts after the timeout")
+            shutil.rmtree(tmp, ignore_errors=True)
+            landing.write_files(out, tmp, ["destination", part_col])
+
+        # The retries share the timeout: none starts once it has expired.
+        policy = replace(
+            landing.retry_policy,
+            max_elapsed_s=min(landing.retry_policy.max_elapsed_s, timeout_s),
+        )
+        saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+        timer = threading.Timer(timeout_s, expire)
+        try:
+            sc.setJobGroup(group, "upload all destinations", True)
+            timer.start()
+            try:
+                with_retry(attempt, policy=policy, describe=f"write {tmp}")
+            except Exception as exc:
+                if expired.is_set():
+                    raise RuntimeError(
+                        "the write of every destination timed out after "
+                        f"{self.concurrent_uploads_timeout_minutes} min"
+                    ) from exc
+                raise
+            finally:
+                timer.cancel()
+                for k, v in saved.items():
+                    sc.setLocalProperty(k, v)
+            landed = {
+                # Spark escapes ASCII specials as %XX (ExternalCatalogUtils
+                # .escapePathName)
+                unquote(d.split("=", 1)[1]): os.path.join(tmp, d)
+                for d in os.listdir(tmp)
+                if d.startswith("destination=")
+            }
+            if _NULL_PARTITION in landed:
+                raise ValueError("batch rows with a null or empty destination have no table")
+            schema = batch.drop("destination").schema
+            epoch = None if epoch_id is None else f"{epoch_id}.0"
+            failures = []
+            for dest in sorted(landed):
+                try:
+                    self.table_for(dest).append_landed(landed[dest], token, schema, epoch)
+                except ValueError as exc:  # create-if-needed
+                    failures.append(f"{dest}: {exc}")
+            if failures:
+                raise RuntimeError("append failed for " + "; ".join(failures))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return bool(landed)
+
+    def _upload_each(self, batch: DataFrame, epoch_id: int | None) -> bool:
+        """Route the batch with one distinct query and write each
+        destination's slice on its own (in a thread pool when there are
+        several); returns whether the batch had any destination."""
         dests = destinations_in(batch)
         if not dests:
-            return
+            return False
         # Cache the filtered batch once; each destination slice re-reads it.
         batch.persist()
         try:
@@ -333,7 +468,6 @@ class CdcPipeline:
                 # never runs concurrently with a zombie writer on the same
                 # table (the remaining exposure is a thread hung past the
                 # grace period, which is surfaced in the error).
-                import uuid
                 from concurrent.futures import wait
 
                 sc = self.spark.sparkContext
@@ -403,7 +537,7 @@ class CdcPipeline:
                     upload(dest)
         finally:
             batch.unpersist()
-        self._maybe_compact(epoch_id)
+        return True
 
     def _maybe_compact(self, epoch_id) -> None:
         """Periodic small-files compaction for append destinations."""

@@ -180,6 +180,44 @@ def test_run_ndjson_route_rejects_from_properties(spark, tmp_path):
     assert summary["rows"]["_rejects"] == 1
 
 
+def test_streaming_restart_summary_lists_every_table(spark, tmp_path):
+    """A streaming restart whose checkpoint has no new events still lists
+    every destination under the target root, with its row count."""
+    import json
+
+    schema = {
+        "type": "struct",
+        "fields": [
+            {"type": "int64", "field": "id"},
+            {"type": "string", "optional": True, "field": "destination"},
+            {"type": "int64", "optional": True, "field": "__ts_ms"},
+            {"type": "string", "optional": True, "field": "__op"},
+        ],
+    }
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "events.json").write_text("".join(
+        json.dumps({"schema": schema, "payload": {
+            "id": i, "destination": f"t{i % 2}", "__ts_ms": 1700000000000, "__op": "c"}})
+        + "\n"
+        for i in range(5)
+    ))
+    conf = tmp_path / "application.properties"
+    conf.write_text(
+        "debezium.sink.type=bigquerybatch\n"
+        f"engine.target-root={tmp_path / 'tgt'}\n"
+        "engine.source=ndjson\n"
+        f"engine.source.path={src}\n"
+        "engine.streaming=true\n"
+        f"engine.checkpoint-dir={tmp_path / 'ckpt'}\n"
+    )
+    first = run(str(conf), spark=spark)
+    assert first["rows"] == {"t0": 3, "t1": 2}
+    again = run(str(conf), spark=spark)
+    assert again["tables"] == ["t0", "t1"]
+    assert again["rows"] == {"t0": 3, "t1": 2}
+
+
 def test_build_pipeline_rejects_non_json_format(spark, tmp_path):
     """Serde parity: only JSON key/value format is supported
     (BaseChangeConsumer.java:96-102)."""

@@ -394,3 +394,161 @@ def test_streaming_upsert_with_checkpoint_restart(spark, sf_dir, tmp_path):
     for d in dests:
         p2.table_for(d).compact()
     assert state(p2) == first
+
+
+def _routed(spark, ids, dests=("d0", "d1", "d2"), extra=False):
+    """An append batch over ``dests`` and two months, in wire types (epoch
+    ms), optionally with an ``extra`` column."""
+    rows = [
+        (i, f"v{i}", dests[i % len(dests)],
+         1704067200000 + (i % 2) * 2678400000,  # 2024-01-01 / 2024-02-01
+         1000 + i, "c")
+        for i in ids
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, val string, destination string, __ts_ms long, "
+        "__source_ts_ms long, __op string"
+    )
+    return df.withColumn("extra", F.col("id") * 2) if extra else df
+
+
+def _jobs_in_groups(spark, fn) -> tuple[int, int]:
+    """Run ``fn`` under a test job group and count the Spark jobs it runs:
+    (jobs in the groups the pipeline set itself, jobs left in the test's
+    group).  The pipeline must restore the test's group afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    outer = f"test-{uuid.uuid4().hex[:8]}"
+    inner: list[str] = []
+    real = sc.setJobGroup
+
+    def spy(group, description, interruptOnCancel=False):
+        inner.append(group)
+        real(group, description, interruptOnCancel)
+
+    real(outer, "test")
+    sc.setJobGroup = spy
+    try:
+        fn()
+        assert sc.getLocalProperty("spark.jobGroup.id") == outer
+    finally:
+        del sc.setJobGroup
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return (sum(len(tracker.getJobIdsForGroup(g)) for g in set(inner)),
+            len(tracker.getJobIdsForGroup(outer)))
+
+
+def test_append_batch_is_one_write_job_equal_to_per_destination(spark, tmp_path):
+    """An append batch lands every destination in ONE Spark job and one
+    commit per table, and lands what the per-destination path (forced by
+    an identity transform) lands: rows, files per partition, schema
+    history and metrics."""
+    from debezium_server_bigquery_spark.streaming.schema_history import SchemaHistory
+
+    one = CdcPipeline(spark, str(tmp_path / "one"), mode="append")
+    each = CdcPipeline(
+        spark, str(tmp_path / "each"), mode="append", transforms={"*": [lambda df: df]}
+    )
+    b0, b1 = _routed(spark, range(60)), _routed(spark, range(60, 90), extra=True)
+    assert _jobs_in_groups(spark, lambda: one.process_batch(b0, epoch_id=0)) == (1, 0)
+    one.process_batch(b1, epoch_id=1)
+    each.process_batch(b0, epoch_id=0)
+    each.process_batch(b1, epoch_id=1)
+
+    assert sorted(one.tables) == sorted(each.tables) == ["d0", "d1", "d2"]
+    for d in ("d0", "d1", "d2"):
+        got = sorted(tuple(r) for r in one.read_table(d).collect())
+        assert got == sorted(tuple(r) for r in each.read_table(d).collect())
+        assert len(got) == 30
+        assert (one.table_for(d).partition_file_counts()
+                == each.table_for(d).partition_file_counts())
+        assert [e["epoch"] for e in one.table_for(d).epoch_metrics()] == ["0.0", "1.0"]
+    assert (SchemaHistory(spark, one.target_root).recover_records()
+            == SchemaHistory(spark, each.target_root).recover_records())
+    assert len(SchemaHistory(spark, one.target_root).recover_records()) == 6
+    assert sorted(one.metrics().collect()) == sorted(each.metrics().collect())
+    # the shared write's staging directory is gone
+    assert sorted(os.listdir(one.target_root)) == ["d0", "d1", "d2"]
+
+
+def test_append_batch_replay_skips_committed_tables(spark, tmp_path):
+    """Replaying an epoch adds nothing to a table that committed it."""
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append")
+    p.process_batch(_routed(spark, range(30)), epoch_id=7)
+    p.process_batch(_routed(spark, range(30)), epoch_id=7)
+    for d in ("d0", "d1", "d2"):
+        assert p.read_table(d).count() == 10
+        assert [e["epoch"] for e in p.table_for(d).epoch_metrics()] == ["7.0"]
+    assert sorted(os.listdir(p.target_root)) == ["d0", "d1", "d2"]
+
+
+def test_escaped_destination_round_trips_to_its_table(spark, tmp_path):
+    """A destination Spark escapes in partition paths lands in the table
+    named by the destination itself."""
+    from debezium_server_bigquery_spark.operators.table import table_names
+
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append")
+    p.process_batch(_routed(spark, range(12), dests=("a=b%c", "x:y#z")), epoch_id=0)
+    assert table_names(p.target_root) == ["a=b%c", "x:y#z"]
+    assert sorted(r.id for r in p.read_table("a=b%c").collect()) == list(range(0, 12, 2))
+    assert p.read_table("x:y#z").count() == 6
+
+
+def test_null_destination_fails_the_batch(spark, tmp_path):
+    """A row with a null destination fails the batch before any table
+    commits; no table named after Spark's null partition appears."""
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append", heartbeat_skip=False)
+    batch = _routed(spark, range(9)).withColumn(
+        "destination", F.when(F.col("id") == 4, F.lit(None)).otherwise(F.col("destination"))
+    )
+    with pytest.raises(ValueError, match="null"):
+        p.process_batch(batch, epoch_id=0)
+    assert os.listdir(p.target_root) == []
+
+
+def test_append_write_timeout_fails_batch_and_commits_nothing(spark, tmp_path):
+    """concurrent-uploads.timeout-minutes bounds the shared append write:
+    its job group is cancelled on expiry and the batch fails as timed out,
+    with no table committed."""
+    import time
+
+    from debezium_server_bigquery_spark.operators.table import table_names
+
+    @F.udf("long")
+    def slow(v):
+        time.sleep(2)
+        return v
+
+    p = CdcPipeline(
+        spark, str(tmp_path / "tgt"), mode="append",
+        concurrent_uploads_timeout_minutes=0.005,  # 300 ms
+    )
+    batch = _routed(spark, range(6)).withColumn("id", slow("id"))
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="timed out"):
+        p.process_batch(batch, epoch_id=0)
+    assert time.monotonic() - t0 < 30
+    assert table_names(p.target_root) == []
+    assert os.listdir(p.target_root) == []
+
+
+def test_append_batch_reports_every_missing_table(spark, tmp_path):
+    """create-if-needed=false: every destination without a table is
+    reported in one error, and the destinations that have one commit."""
+    root = str(tmp_path / "tgt")
+    CdcPipeline(spark, root, mode="append").process_batch(
+        _routed(spark, range(3), dests=("d1",)), epoch_id=0
+    )
+    p = CdcPipeline(spark, root, mode="append", create_if_needed=False)
+    with pytest.raises(RuntimeError) as ei:
+        p.process_batch(_routed(spark, range(30)), epoch_id=1)
+    msg = str(ei.value)
+    assert "d0: " in msg and "d2: " in msg and "d1: " not in msg
+    assert "create-if-needed" in msg
+    assert p.read_table("d1").count() == 3 + 10
+    assert sorted(os.listdir(root)) == ["d1"]

@@ -491,6 +491,67 @@ def test_maintenance_rewrite_survives_a_fault_at_every_step(spark, tmp_path, mon
     assert deltas() == 1  # the last round ran fault-free
 
 
+def test_shared_append_write_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    """An append batch over two destinations, landed by one write job and
+    one commit per table, under a fault at every step: the job, each file
+    move, and before and after each table's publish (the first
+    post-publish fault falls between the two tables' commits).  After
+    every fault and its replay, both tables hold the fault-free rows and
+    each log records every epoch exactly once."""
+    import json
+
+    from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline
+
+    class OneShot(CdcPipeline):
+        def _table(self, path, keyed=False):
+            t = super()._table(path, keyed)
+            t.retry_policy = _ONE_SHOT
+            return t
+
+    root = str(tmp_path / "tgt")
+    p = OneShot(spark, root, mode="append")
+    want: dict[str, list] = {"a": [], "b": []}
+
+    def batch(r):
+        ids = range(100 * (r + 1), 100 * (r + 1) + 6)
+        return (
+            _rows(spark, ids)
+            .withColumn("destination", F.when(F.col("id") % 2 == 0, "a").otherwise("b"))
+            .withColumn("__ts_ms", F.when(F.col("id") % 3 == 0, F.col("__ts_ms"))
+                        .otherwise(F.to_timestamp(F.lit("2024-02-15T00:00:00"))))
+            .coalesce(1)
+        )
+
+    def epochs(dest):
+        log = os.path.join(root, dest, "_log")
+        entries = sorted((n for n in os.listdir(log) if n.endswith(".json")),
+                         key=lambda n: int(n.split(".")[0]))
+        out = []
+        for n in entries:
+            with open(os.path.join(log, n), encoding="utf-8") as fh:
+                out.append(json.load(fh).get("epoch"))
+        return [e for e in out if e is not None]
+
+    def op(r):
+        p.process_batch(batch(r), epoch_id=r)
+
+    def check(r):
+        for i in range(100 * (r + 1), 100 * (r + 1) + 6):
+            want["a" if i % 2 == 0 else "b"].append((i, f"v{i}"))
+        for dest in ("a", "b"):
+            assert _ids(p.read_table(dest)) == sorted(want[dest]), dest
+            fresh = ParquetTable(spark, os.path.join(root, dest))
+            assert _ids(fresh.read()) == sorted(want[dest]), dest
+            assert epochs(dest) == [f"{e}.0" for e in range(r + 1)], dest
+
+    fired = _every_fault(monkeypatch, root, op, check)
+    # appends remove nothing: no remove-step fault can fire
+    assert set(fired) == set(STEPS) - {"remove"}
+    assert fired["write"] == 1  # one write job per batch
+    assert fired["pre_publish"] == fired["post_publish"] == 2  # one commit per table
+    assert fired["move"] == 4  # 2 destinations x 2 months, one task
+
+
 def test_pipeline_retry_e2e_converges_to_no_fault_state(spark):
     """The gate query itself: every destination's first physical append
     attempt fails, the bounded retry re-runs it, and the final state is
