@@ -49,9 +49,13 @@ Recognized keys (reference key -> pipeline field):
                                               destination in one job
 - ``debezium.sink.batch.concurrent-uploads.timeout-minutes``
                                               concurrent_uploads_timeout_minutes
-                                              (default 60): bounds that
-                                              one append job, or the
-                                              per-destination uploads
+                                              (default 60): bounds every
+                                              batch's writes, the one
+                                              append job or the
+                                              per-destination uploads, at
+                                              any concurrent-uploads; on
+                                              expiry no later write or
+                                              retry of the batch starts
 - ``debezium.sink.batch.batch-size-wait``     No|Max|DynamicBatchSizeWait
 - ``debezium.sink.batch.batch-size-wait.wait-interval-ms``  trigger interval
                                               of a continuous run (default

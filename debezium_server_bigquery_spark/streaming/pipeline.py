@@ -28,15 +28,19 @@ can write every table's files: an append batch is written once,
 partitioned by destination and time partition, and each table then
 adopts its own directory in its own log commit.  Per-table atomicity
 comes from that commit, not from the job, and the per-table epoch guard
-keeps a replay exactly-once.  The job runs in a job group that
-``concurrent_uploads_timeout_minutes`` cancels.  Only batches that need
-one destination's slice at a time take the per-destination path: keyed
-MERGE/SCD2, transforms, ``__schema_fp`` schema groups and
+keeps a replay exactly-once.  Only batches that need one destination's
+slice at a time take the per-destination path: keyed MERGE/SCD2,
+transforms, ``__schema_fp`` schema groups and
 ``allow_field_addition=False``.  That path routes with one distinct
-query and writes the tables in a thread pool of ``concurrent_uploads``
-(the reference bounds its uploads with a semaphore over virtual threads,
-BaseChangeConsumer.java:83-86), whose Spark jobs the local scheduler
-interleaves.
+query and writes the tables in a thread pool of up to
+``concurrent_uploads`` (the reference bounds its uploads with a
+semaphore over virtual threads, BaseChangeConsumer.java:83-86), whose
+Spark jobs the local scheduler interleaves.  Either way the write phase
+runs in one job group per batch, which
+``concurrent_uploads_timeout_minutes`` closes: on expiry the group's
+running jobs are cancelled and every later job in it, a retry included,
+is refused, so once a batch has failed none of its writes can still
+land.  The batch returns only after every thread it started has ended.
 """
 
 from __future__ import annotations
@@ -47,7 +51,8 @@ import threading
 import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field, replace
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,10 +81,17 @@ _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interrupt
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-class UploadCancelled(RuntimeError):
-    """An upload observed the batch timeout and stopped at a safe point
-    (before a write attempt, between schema-group writes, or before
-    starting)."""
+@contextmanager
+def _job_group(sc, group: str | None, description: str):
+    """Run the body in job group ``group`` on the calling thread, then
+    restore the thread's own group and description."""
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+    sc.setJobGroup(group, description, True)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
 
 
 @dataclass
@@ -112,14 +124,16 @@ class CdcPipeline:
     # time) and clean rows continue — one poisoned record must not kill a
     # 1000-executor job.  None = rejects columns are an error to ship.
     rejects_destination: str | None = None
-    # debezium.sink.batch.concurrent-uploads: threads of the per-destination
-    # path (the shared append write runs one job for every destination).
+    # debezium.sink.batch.concurrent-uploads: most threads of the
+    # per-destination path (the shared append write runs one job for
+    # every destination).
     concurrent_uploads: int = 4
     # debezium.sink.batch.concurrent-uploads.timeout-minutes
-    # (CommonConfig.java:32-34): bound on a batch's writes, the shared
-    # append job or the per-destination uploads; expiry cancels their
-    # Spark jobs and fails the micro-batch (the epoch replays, committed
-    # epochs make completed tables no-ops).
+    # (CommonConfig.java:32-34): bound on every batch's writes, the shared
+    # append job or the per-destination uploads, at any concurrent_uploads;
+    # expiry cancels their Spark jobs, refuses any later one and fails the
+    # micro-batch (the epoch replays, committed epochs make completed
+    # tables no-ops).
     concurrent_uploads_timeout_minutes: float = 60.0
     dedup_order_col: str = "__source_ts_ns"  # ...upsert-dedup-column
     dedup_tiebreak: tuple[str, ...] = ()  # extra deterministic ordering cols
@@ -302,9 +316,46 @@ class CdcPipeline:
             or SCHEMA_FP_COL in batch.columns
             or not self.allow_field_addition
         )
-        landed = (self._append_all if shared else self._upload_each)(batch, epoch_id)
+        write = self._append_all if shared else self._upload_each
+        landed = self._bounded(
+            "upload of all destinations" if shared else "upload of each destination",
+            lambda: write(batch, epoch_id),
+        )
         if landed:
             self._maybe_compact(epoch_id)
+
+    def _bounded(self, what: str, write: Callable[[], bool]) -> bool:
+        """Run ``write`` in a fresh job group that
+        ``concurrent_uploads_timeout_minutes`` closes.
+
+        On expiry the group's running jobs are cancelled and every later
+        job submitted in it is refused, so no write and no retry of the
+        batch starts after the bound, on any thread that joined the group.
+        PySpark wraps only ``cancelJobGroup``, which cancels running jobs,
+        so the timer calls the ``SparkContext`` method through the JVM
+        handle.  A failure after expiry is raised as the timeout; the
+        caller's job group and description are restored either way."""
+        sc = self.spark.sparkContext
+        group = f"cdc-upload-{uuid.uuid4().hex[:12]}"
+        minutes = self.concurrent_uploads_timeout_minutes
+        expired = threading.Event()
+
+        def expire() -> None:
+            expired.set()
+            sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
+
+        timer = threading.Timer(minutes * 60.0, expire)
+        with _job_group(sc, group, what):
+            timer.start()
+            try:
+                return write()
+            except Exception as exc:
+                if expired.is_set():
+                    raise RuntimeError(f"{what} timed out after {minutes} min") from exc
+                raise
+            finally:
+                timer.cancel()
+                timer.join()
 
     def _append_all(self, batch: DataFrame, epoch_id: int | None) -> bool:
         """Land every destination's rows in ONE Spark write job, then give
@@ -313,14 +364,13 @@ class CdcPipeline:
         The job writes ``<target_root>/_tmp_<token>`` partitioned by
         destination and time partition, sorted within its partitions by
         both and the clustering columns, so Spark adds no sort of its own.
-        It runs under the T7 retry budget, in a job group cancelled when
-        ``concurrent_uploads_timeout_minutes`` expires.  Each
-        ``destination=<name>`` directory is then adopted by its table in
-        sorted order (``ParquetTable.append_landed``), under the epoch
-        ``"<epoch>.0"``; a table that already committed it adopts nothing.
-        Missing tables under create-if-needed=false are reported together
-        after the others commit, and a row with a null (or empty)
-        destination fails the batch before any commit."""
+        It runs under the T7 retry budget.  Each ``destination=<name>``
+        directory is then adopted by its table in sorted order
+        (``ParquetTable.append_landed``), under the epoch ``"<epoch>.0"``; a
+        table that already committed it adopts nothing.  Missing tables
+        under create-if-needed=false are reported together after the
+        others commit, and a row with a null (or empty) destination fails
+        the batch before any commit."""
         landing = self._table(self.target_root)  # layout only; never committed
         part_col = landing.partition_col()
         out = landing.with_partition_col(batch)
@@ -328,44 +378,13 @@ class CdcPipeline:
         out = out.sortWithinPartitions("destination", part_col, *clustering)
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.target_root, f"_tmp_{token}")
-        sc = self.spark.sparkContext
-        group = f"cdc-upload-{token}"
-        timeout_s = self.concurrent_uploads_timeout_minutes * 60.0
-        expired = threading.Event()
-
-        def expire() -> None:
-            expired.set()
-            sc.cancelJobGroup(group)
 
         def attempt() -> None:
-            if expired.is_set():
-                raise UploadCancelled("no write attempt starts after the timeout")
             shutil.rmtree(tmp, ignore_errors=True)
             landing.write_files(out, tmp, ["destination", part_col])
 
-        # The retries share the timeout: none starts once it has expired.
-        policy = replace(
-            landing.retry_policy,
-            max_elapsed_s=min(landing.retry_policy.max_elapsed_s, timeout_s),
-        )
-        saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
-        timer = threading.Timer(timeout_s, expire)
         try:
-            sc.setJobGroup(group, "upload all destinations", True)
-            timer.start()
-            try:
-                with_retry(attempt, policy=policy, describe=f"write {tmp}")
-            except Exception as exc:
-                if expired.is_set():
-                    raise RuntimeError(
-                        "the write of every destination timed out after "
-                        f"{self.concurrent_uploads_timeout_minutes} min"
-                    ) from exc
-                raise
-            finally:
-                timer.cancel()
-                for k, v in saved.items():
-                    sc.setLocalProperty(k, v)
+            with_retry(attempt, policy=landing.retry_policy, describe=f"write {tmp}")
             landed = {
                 # Spark escapes ASCII specials as %XX (ExternalCatalogUtils
                 # .escapePathName)
@@ -391,15 +410,18 @@ class CdcPipeline:
 
     def _upload_each(self, batch: DataFrame, epoch_id: int | None) -> bool:
         """Route the batch with one distinct query and write each
-        destination's slice on its own (in a thread pool when there are
-        several); returns whether the batch had any destination."""
+        destination's slice on its own, in a pool of up to
+        ``concurrent_uploads`` threads that join the caller's job group;
+        returns whether the batch had any destination."""
         dests = destinations_in(batch)
         if not dests:
             return False
+        sc = self.spark.sparkContext
+        job_group = sc.getLocalProperty("spark.jobGroup.id")
         # Cache the filtered batch once; each destination slice re-reads it.
         batch.persist()
         try:
-            def upload(dest: str, should_abort=None) -> None:
+            def upload(dest: str) -> None:
                 from debezium_server_bigquery_spark.streaming.schema_history import (
                     schema_groups,
                 )
@@ -414,13 +436,6 @@ class CdcPipeline:
                 # unless the batch carries a __schema_fp column, which no
                 # shipped source attaches).
                 for gi, (_fp, group) in enumerate(schema_groups(part)):
-                    # Between-jobs cancellation point: cancelJobGroup only
-                    # kills a RUNNING job, so a timed-out thread sitting
-                    # between two schema-group writes must refuse the next.
-                    if should_abort is not None and should_abort():
-                        raise UploadCancelled(
-                            f"upload {dest} aborted before schema group {gi}"
-                        )
                     # Composite epoch id: "epoch.group" can never collide
                     # across epochs (an int-arithmetic scheme like e*16+g
                     # would alias epoch e+1 group 0 once a batch carries >16
@@ -454,87 +469,22 @@ class CdcPipeline:
                     else:
                         table.append(group, epoch_id=sub_epoch)
 
-            if self.concurrent_uploads > 1 and len(dests) > 1:
-                # invokeAll-with-timeout parity (BaseChangeConsumer.java
-                # :243-270): wait for every per-table task up to the
-                # configured bound, aggregate ALL failures (not just the
-                # first), and surface timeouts as cancellations.  Expiry
-                # cancels the stragglers' SPARK JOBS via a shared job group
-                # AND trips a cancel flag the upload loop checks between
-                # schema groups — a Python thread cannot be killed, but an
-                # in-flight job dies cancelled and a between-jobs thread
-                # refuses its next group, then the grace join below waits
-                # for the stragglers to actually exit, so a replayed epoch
-                # never runs concurrently with a zombie writer on the same
-                # table (the remaining exposure is a thread hung past the
-                # grace period, which is surfaced in the error).
-                from concurrent.futures import wait
-
-                sc = self.spark.sparkContext
-                group = f"cdc-upload-{uuid.uuid4().hex[:8]}"
-                cancelled = threading.Event()
-
-                def grouped_upload(dest: str) -> None:
-                    if cancelled.is_set():
-                        raise UploadCancelled(f"upload {dest} cancelled before start")
-                    sc.setJobGroup(group, f"upload {dest}", True)
-                    try:
-                        upload(dest, should_abort=cancelled.is_set)
-                    finally:
-                        sc.setJobGroup("", "")
-
-                pool = ThreadPoolExecutor(max_workers=self.concurrent_uploads)
-                try:
-                    futures = {
-                        pool.submit(grouped_upload, d): d for d in sorted(dests)
-                    }
-                    done, not_done = wait(
-                        futures,
-                        timeout=self.concurrent_uploads_timeout_minutes * 60.0,
-                    )
-                    failures: list[str] = []
-                    first: BaseException | None = None
-                    if not_done:
-                        cancelled.set()
-                        sc.cancelJobGroup(group)
-                        # Grace join: give cancelled stragglers a bounded
-                        # window to observe the dead job / flag and exit,
-                        # so the epoch replay never overlaps their writes.
-                        done2, still = wait(not_done, timeout=60.0)
-                        done |= done2
-                        not_done = still
-                    for f in not_done:
-                        f.cancel()
-                        failures.append(
-                            f"{futures[f]}: timed out after "
-                            f"{self.concurrent_uploads_timeout_minutes} min "
-                            "(thread still running past the 60 s grace join)"
-                        )
-                    for f in done:
-                        exc = f.exception()
-                        if exc is None:
-                            continue
-                        if isinstance(exc, UploadCancelled):
-                            # Cancelled because the BATCH timed out: report
-                            # it as the timeout it is, not a task failure.
-                            failures.append(
-                                f"{futures[f]}: timed out after "
-                                f"{self.concurrent_uploads_timeout_minutes} "
-                                f"min ({exc})"
-                            )
-                            continue
-                        first = first or exc
-                        failures.append(f"{futures[f]}: {exc}")
-                    if failures:
-                        raise RuntimeError(
-                            "one or more parallel upload tasks failed: "
-                            + "; ".join(sorted(failures))
-                        ) from first
-                finally:
-                    pool.shutdown(wait=False, cancel_futures=True)
-            else:
-                for dest in sorted(dests):
+            def grouped_upload(dest: str) -> None:
+                with _job_group(sc, job_group, f"upload {dest}"):
                     upload(dest)
+
+            # invokeAll parity (BaseChangeConsumer.java:243-270): wait for
+            # every per-table task and aggregate ALL failures, not just the
+            # first.  The batch timeout is the job group's (``_bounded``).
+            workers = max(1, min(self.concurrent_uploads, len(dests)))
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                futures = {pool.submit(grouped_upload, d): d for d in sorted(dests)}
+            errors = {d: e for f, d in futures.items() if (e := f.exception())}
+            if errors:
+                raise RuntimeError(
+                    "one or more parallel upload tasks failed: "
+                    + "; ".join(f"{d}: {e}" for d, e in errors.items())
+                ) from next(iter(errors.values()))
         finally:
             batch.unpersist()
         return True

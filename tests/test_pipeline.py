@@ -181,6 +181,7 @@ def test_parallel_upload_timeout_fails_batch(spark, sf_dir, tmp_path):
     # concurrent-uploads.timeout-minutes parity (CommonConfig.java:32-34,
     # BaseChangeConsumer.java:243-253): a hung per-table task cancels the
     # batch with a timeout error instead of blocking forever.
+    import threading
     import time
 
     import pytest
@@ -197,8 +198,12 @@ def test_parallel_upload_timeout_fails_batch(spark, sf_dir, tmp_path):
         concurrent_uploads_timeout_minutes=0.005,  # 300 ms
         transforms={"*": [slow]},
     )
+    batch = _cdc_df(spark, sf_dir)
+    before = set(threading.enumerate())
     with pytest.raises(RuntimeError, match="timed out"):
-        p.run_batch(_cdc_df(spark, sf_dir))
+        p.run_batch(batch)
+    # the batch returns only once every thread it started has ended
+    assert [t for t in threading.enumerate() if t not in before] == []
 
 
 def test_parallel_upload_aggregates_all_failures(spark, sf_dir, tmp_path):
@@ -476,6 +481,20 @@ def test_append_batch_is_one_write_job_equal_to_per_destination(spark, tmp_path)
     assert sorted(os.listdir(one.target_root)) == ["d0", "d1", "d2"]
 
 
+def test_keyed_batch_runs_every_job_in_its_group(spark, tmp_path):
+    """A keyed 3-destination batch runs all its Spark jobs, the routing
+    query included, in the groups the pipeline sets, and restores the
+    caller's group."""
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="upsert", key_cols=("id",))
+    batch = _routed(spark, range(30)).withColumn(
+        "__source_ts_ns", F.col("__source_ts_ms") * 1_000_000
+    )
+    inner, outer = _jobs_in_groups(spark, lambda: p.process_batch(batch, epoch_id=0))
+    assert (inner >= 1, outer) == (True, 0)
+    assert sorted(p.tables) == ["d0", "d1", "d2"]
+    assert sum(p.read_table(d).count() for d in p.tables) == 30
+
+
 def test_append_batch_replay_skips_committed_tables(spark, tmp_path):
     """Replaying an epoch adds nothing to a table that committed it."""
     p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append")
@@ -511,30 +530,92 @@ def test_null_destination_fails_the_batch(spark, tmp_path):
     assert os.listdir(p.target_root) == []
 
 
-def test_append_write_timeout_fails_batch_and_commits_nothing(spark, tmp_path):
-    """concurrent-uploads.timeout-minutes bounds the shared append write:
-    its job group is cancelled on expiry and the batch fails as timed out,
-    with no table committed."""
+@pytest.mark.parametrize(
+    "mode, dests, uploads",
+    [
+        ("append", ("d0", "d1", "d2"), 4),  # the shared append write
+        ("upsert", ("d0",), 4),
+        ("upsert", ("d0", "d1", "d2"), 1),
+        ("upsert", ("d0", "d1", "d2"), 4),
+        ("scd2", ("d0",), 4),
+    ],
+    ids=["append", "upsert-1", "upsert-3-seq", "upsert-3-par", "scd2-1"],
+)
+def test_append_write_timeout_fails_batch_and_commits_nothing(
+    spark, tmp_path, mode, dests, uploads
+):
+    """concurrent-uploads.timeout-minutes bounds every write of a batch, at
+    any concurrent-uploads and any destination count: on expiry the
+    batch's job group refuses every later job, and the batch fails as
+    timed out with no table committed."""
     import time
 
     from debezium_server_bigquery_spark.operators.table import table_names
 
     @F.udf("long")
     def slow(v):
-        time.sleep(2)
+        time.sleep(1.5)
         return v
 
     p = CdcPipeline(
-        spark, str(tmp_path / "tgt"), mode="append",
+        spark, str(tmp_path / "tgt"), mode=mode,
+        key_cols=() if mode == "append" else ("id",),
+        concurrent_uploads=uploads,
         concurrent_uploads_timeout_minutes=0.005,  # 300 ms
     )
-    batch = _routed(spark, range(6)).withColumn("id", slow("id"))
+    batch = (
+        _routed(spark, range(6), dests=dests)
+        .withColumn("__source_ts_ns", F.col("__source_ts_ms") * 1_000_000)
+        .withColumn("id", slow("id"))
+    )
     t0 = time.monotonic()
     with pytest.raises(RuntimeError, match="timed out"):
         p.process_batch(batch, epoch_id=0)
     assert time.monotonic() - t0 < 30
     assert table_names(p.target_root) == []
-    assert os.listdir(p.target_root) == []
+    # nor is a staging directory left behind
+    assert not os.path.isdir(p.target_root) or os.listdir(p.target_root) == []
+
+
+def test_timed_out_group_refuses_later_jobs(spark, tmp_path):
+    """After the bound, no job of the batch's group starts, on the calling
+    thread or on a thread that joined the group; other groups run."""
+    import threading
+    import time
+
+    from debezium_server_bigquery_spark.streaming.pipeline import _job_group
+
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), concurrent_uploads_timeout_minutes=0.005)
+    sc = spark.sparkContext
+    ran = []
+
+    def late_job():
+        time.sleep(1)  # past the 300 ms bound, with no job running
+        ran.append(spark.range(3).count())
+
+    def late_job_on_a_thread():
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        errors = []
+
+        def work():
+            with _job_group(sc, group, "upload d0"):
+                try:
+                    late_job()
+                except Exception as exc:
+                    errors.append(exc)
+
+        t = threading.Thread(target=work)
+        t.start()
+        t.join()
+        if errors:
+            raise errors[0]
+        return True
+
+    for write in (late_job, late_job_on_a_thread):
+        with pytest.raises(RuntimeError, match="probe timed out"):
+            p._bounded("probe", write)
+    assert ran == []
+    assert spark.range(3).count() == 3
 
 
 def test_append_batch_reports_every_missing_table(spark, tmp_path):
