@@ -323,14 +323,17 @@ def optimize(
     z-order override — and expire old time partitions.  ``max_files=0``
     forces a rewrite of every non-empty partition (the full OPTIMIZE
     ZORDER pass); the default only touches partitions fragmented past the
-    threshold, the incremental maintenance mode."""
+    threshold, the incremental maintenance mode.  The compaction logs a
+    z-order override, and every later compaction of the table keeps it."""
     from debezium_server_bigquery_spark.operators.table import ParquetTable
 
     if spark is None:
         from debezium_server_bigquery_spark.session import get_spark
 
         spark = get_spark("engine-optimize")
-    table = ParquetTable.open(spark, table_path)
+    table = ParquetTable(spark, table_path)
+    if not table.exists():
+        raise FileNotFoundError(f"no table log under {table_path}")
     if zorder is not None:
         cols = [c.strip() for c in zorder.split(",") if c.strip()]
         from debezium_server_bigquery_spark.operators.zorder import validate_zorder
@@ -340,10 +343,8 @@ def optimize(
         # A layout override must actually rewrite: with the default
         # fragmentation threshold a tidy table compacts nothing and the
         # requested z-order would silently never land.  Force the full
-        # OPTIMIZE ZORDER pass and persist the override so subsequent
-        # maintenance (and pipeline writes via open()) keep the layout.
+        # OPTIMIZE ZORDER pass; its commit logs the override.
         max_files = 0
-        table.persist_layout()
     expired = table.expire_partitions(expire_before) if expire_before else []
     compacted = table.compact(
         max_files_per_partition=max_files, files_per_partition=files_per_partition

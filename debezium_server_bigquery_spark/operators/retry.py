@@ -20,6 +20,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
+
 log = logging.getLogger(__name__)
 
 
@@ -43,6 +45,18 @@ DEFAULT_POLICY = RetryPolicy()
 NO_WAIT_POLICY = RetryPolicy(initial_backoff_ms=0.0)
 
 
+def _cancelled(exc: Exception) -> bool:
+    """Whether ``exc`` is a Spark job failure whose error condition is
+    ``SPARK_JOB_CANCELLED`` (PySpark's own exceptions carry the condition;
+    a py4j error carries it on its Java exception)."""
+    source = getattr(exc, "java_exception", exc)
+    try:
+        condition = source.getCondition()
+    except (AttributeError, Py4JError):  # not a Spark error: no condition
+        return False
+    return condition == "SPARK_JOB_CANCELLED"
+
+
 def with_retry(
     action: Callable[[], object],
     *,
@@ -55,10 +69,12 @@ def with_retry(
 
     Retries any exception — the reference treats all append/client errors
     as retryable within budget and surfaces the last error once the budget
-    is spent (ConsumerUtil.java:134-147).  The final failure re-raises the
-    original exception so callers keep their error semantics; ``describe``
-    names the action in the retry WARN logs (the grep handle for "which
-    table write was flapping").
+    is spent (ConsumerUtil.java:134-147) — except a Spark job its job group
+    cancelled (``_cancelled``): a timed-out batch's group refuses every
+    later job, so that failure is re-raised at once.  The final failure
+    re-raises the original exception so callers keep their error
+    semantics; ``describe`` names the action in the retry WARN logs (the
+    grep handle for "which table write was flapping").
     """
     start = clock()
     last: Exception | None = None
@@ -67,7 +83,7 @@ def with_retry(
             return action()
         except Exception as exc:  # KeyboardInterrupt/SystemExit propagate:
             last = exc  # an interactive abort must not re-run a 5-min write
-            if attempt >= policy.attempts:
+            if _cancelled(exc) or attempt >= policy.attempts:
                 break
             if clock() - start >= policy.max_elapsed_s:
                 break

@@ -33,13 +33,16 @@ An entry lists the data files it adds and removes (relative path,
 partition value — null for a delta — bytes, rows), the row positions it
 deletes per live file, the epoch it commits with the row count the write
 job observed, and — only where they change — the schema and layout.
-The table is the replay of its log: a handle caches that snapshot and reads
-only newer entries, readers scan exactly the live files with the logged
-schema (no directory listing, no footer inference), and an epoch some
-entry carries is never applied twice — Delta's ``txnAppId`` guard, the
-idempotent-sink half of Structured Streaming's exactly-once contract.  A
-batch lands whole or not at all, like the reference's one Load Job or one
-Storage Write commit.
+The log fixes the layout (``LAYOUT``): a handle adopts the logged one, so
+its constructor arguments count only when its write creates the table,
+and only an explicit override (``optimize``'s z-order, a MERGE's
+keep-deletes) changes a logged field.  The table is the replay of its
+log: a handle caches that snapshot and reads only newer entries, readers
+scan exactly the live files with the logged schema (no directory
+listing, no footer inference), and an epoch some entry carries is never
+applied twice — Delta's ``txnAppId`` guard, the idempotent-sink half of
+Structured Streaming's exactly-once contract.  A batch lands whole or not
+at all, like the reference's one Load Job or one Storage Write commit.
 
 Crash contract: a write puts its files under fresh names, then publishes
 the next version with one atomic no-clobber create (temp file +
@@ -100,6 +103,12 @@ PART_FORMATS = {
     "HOUR": ("__part_hour", "yyyy-MM-dd-HH"),
 }
 
+# What a table's log fixes: a handle takes these from the logged layout.
+# ``zorder_cols`` lays partitions out at compaction (operators/zorder.py);
+# ``keep_deletes`` false makes reads hide the tombstones MERGEs store.
+LAYOUT = ("key_cols", "mode", "n_buckets", "clustering_field", "partition_type",
+          "partition_field", "zorder_cols", "keep_deletes")
+
 
 def table_names(root: str) -> list[str]:
     """The tables directly under ``root`` (directories whose log has a
@@ -115,10 +124,12 @@ def table_names(root: str) -> list[str]:
 class ParquetTable:
     """A destination table: parquet data files + their commit log.
 
-    The log also records the layout (primary key, partition mode,
-    clustering columns) — Spark does not enforce constraints, but the
-    engine tracks PK like the reference declares BigQuery
-    ``tableConstraints`` (BaseRecordConverter.java:181-196).
+    The log also records the layout (``LAYOUT``: primary key, partition
+    mode, clustering and z-order columns) — Spark does not enforce
+    constraints, but the engine tracks PK like the reference declares
+    BigQuery ``tableConstraints`` (BaseRecordConverter.java:181-196).  The
+    reference likewise fixes a table's layout when ``getTable`` creates it
+    (StreamBigqueryChangeConsumer.java:262-304).
     """
 
     def __init__(
@@ -135,7 +146,6 @@ class ParquetTable:
         retry_policy: RetryPolicy = DEFAULT_POLICY,
         allow_field_addition: bool = True,
         create_if_needed: bool = True,
-        zorder_cols: Sequence[str] = (),
     ):
         if partition_type not in PART_FORMATS:
             raise ValueError(
@@ -150,10 +160,17 @@ class ParquetTable:
         self.clustering_field = clustering_field
         self.partition_type = partition_type
         self.partition_field = partition_field
+        # Compaction lays partitions out by these (see compact); set by
+        # ``optimize --zorder``, whose compaction logs them.
+        self.zorder_cols: list[str] = []
+        # upsert-keep-deletes of this table's MERGEs; when false, read()
+        # hides the tombstones it stores.
+        self.keep_deletes = True
         # T7 — bounded driver-side retry around write actions; Spark task
         # retries cover executor failures, this covers whole-action faults
         # (operators/retry.py budgets mirror ConsumerUtil.java:134-147).
         self.retry_policy = retry_policy
+        # The writer's policy, not the table's layout, so never logged.
         # Schema-evolution gate — allow-field-addition (batch default true,
         # BatchConsumerConfig.java:51-53; stream default false,
         # StreamConsumerConfig.java:52-54).  When off, new batch columns are
@@ -163,31 +180,14 @@ class ParquetTable:
         # create-if-needed (StreamConsumerConfig.java:34-36): when off, a
         # write against a missing table fails instead of creating it.
         self.create_if_needed = create_if_needed
-        # Z-order clustering (operators/zorder.py): when set, batches are
-        # laid out within their partitions by a bit-interleaved z-value
-        # over these columns instead of the lexicographic clustering sort,
-        # so row-group stats prune on every listed column.  Ranges come
-        # from the batch itself — per-file ordering is all row-group
-        # skipping needs.
-        self.zorder_cols = list(zorder_cols)
-        if self.zorder_cols:
-            from debezium_server_bigquery_spark.operators.zorder import (
-                validate_zorder,
-            )
-
-            # fail at construction, not on the first write
-            validate_zorder(self.zorder_cols)
-        self._zcache: DataFrame | None = None
-        # upsert-keep-deletes of this table's MERGEs, kept in the layout (None:
-        # as logged); when false, read() hides the tombstones it stores.
-        self.keep_deletes: bool | None = None
         # Log snapshot as of ``_version`` (-1: no table yet), advanced only
         # by _refresh, under _lock: an upload thread that outlived its
         # batch timeout may still use this handle while the replay does.
         # _files maps each live file's relative path to [partition value,
         # bytes, rows] (partition value None: a delta), _dels each file's
         # deleted row positions; _epochs maps each committed epoch to what
-        # its commit wrote, _schemas every logged schema in version order.
+        # its commit wrote, _schemas every logged schema in version order,
+        # _layout the logged layout.
         self._lock = threading.Lock()
         self._version = -1
         self._files: dict[str, list] = {}
@@ -197,37 +197,11 @@ class ParquetTable:
         self._schema: T.StructType | None = None
         self._schemas: list[T.StructType] = []
         self._layout: dict | None = None
-
-    @classmethod
-    def open(cls, spark: SparkSession, path: str) -> "ParquetTable":
-        """Reconstruct a table handle from the layout its log records —
-        what an out-of-band maintenance command (CLI ``optimize``) uses to
-        operate on a table the pipeline created.  The layout stores
-        ``clustering_field`` itself: the derived clustering list also
-        embeds PK columns, so it could not recover the field, and an
-        ``optimize`` would re-sort custom-clustered tables by default."""
-        probe = cls(spark, path)
-        if not probe.exists():
-            raise FileNotFoundError(f"no table log under {path}")
-        layout = {k: v for k, v in probe._layout.items() if k != "keep_deletes"}
-        return cls(spark, path, **layout)
+        self._refresh()
 
     # -- commit log --------------------------------------------------------
     def _layout_now(self) -> dict:
-        layout = {
-            "key_cols": self.key_cols,
-            "mode": self.mode,
-            "n_buckets": self.n_buckets,
-            "clustering_field": self.clustering_field,
-            "partition_type": self.partition_type,
-            "partition_field": self.partition_field,
-            "allow_field_addition": self.allow_field_addition,
-            "create_if_needed": self.create_if_needed,
-            "zorder_cols": self.zorder_cols,
-        }
-        keep = self.keep_deletes
-        keep = (self._layout or {}).get("keep_deletes") if keep is None else keep
-        return layout if keep is None else {**layout, "keep_deletes": keep}
+        return {k: getattr(self, k) for k in LAYOUT}
 
     def _entry_path(self, version: int) -> str:
         return os.path.join(self.path, LOG_DIR, f"{version}.json")
@@ -268,7 +242,12 @@ class ParquetTable:
             self._schema = T.StructType.fromJson(entry["schema"])
             self._schemas.append(self._schema)
         if "layout" in entry:
-            self._layout = entry["layout"]
+            # keys outside LAYOUT (older logs carried the writer's flags)
+            # are ignored
+            for k, v in entry["layout"].items():
+                if k in LAYOUT:
+                    setattr(self, k, v)
+            self._layout = self._layout_now()
         self._version += 1
 
     def _commit(
@@ -374,14 +353,6 @@ class ParquetTable:
         self._refresh()
         return list(self._schemas)
 
-    def persist_layout(self) -> None:
-        """Commit this handle's CURRENT layout without touching data files
-        — how an optimize-time z-order override becomes durable for future
-        ``open()`` calls.  No-op on a table that has not been created yet
-        (its first write records the layout) or whose layout is unchanged."""
-        if self.exists() and self._layout_now() != self._layout:
-            self._commit()
-
     def clustering_cols(self) -> list[str]:
         """<=3 PK columns + clustering field — BigQuery's 4-field limit,
         BaseRecordConverter.java:218-221."""
@@ -429,7 +400,7 @@ class ParquetTable:
             # every row): serve an empty frame with the last-known schema.
             return self.spark.createDataFrame([], self._schema)
         out = raw.drop(self.partition_col())
-        if not self._layout.get("keep_deletes", True):
+        if not self.keep_deletes:
             out = out.filter(F.col("__op") != "d")
         return out
 
@@ -482,48 +453,37 @@ class ParquetTable:
         return out
 
     def _cluster_sort(self, df: DataFrame) -> DataFrame:
-        zcols = [c for c in self.zorder_cols if c in df.columns]
-        if self.zorder_cols and len(zcols) < len(self.zorder_cols):
-            # layout silently degrading is hard to diagnose — say so
-            missing = sorted(set(self.zorder_cols) - set(zcols))
-            log.warning(
-                "z-order columns %s missing from batch for %s; "
-                "falling back to lexicographic clustering",
-                missing,
-                self.path,
-            )
-        if len(zcols) >= 2:
-            from debezium_server_bigquery_spark.operators.zorder import (
-                column_ranges,
-                zvalue,
-            )
-
-            # The ranges aggregate is an ACTION on the not-yet-written
-            # batch plan; persist so the write that follows reuses the
-            # computed rows instead of re-running the whole upstream plan
-            # (for a MERGE that plan is the full join).  Released by the
-            # caller via _release_zcache after the write action.
-            df = df.persist()
-            self._zcache = df
-            ranges = with_retry(
-                lambda: column_ranges(df, zcols),
-                policy=self.retry_policy,
-                describe=f"zorder-ranges {self.path}",
-            )
-            return (
-                df.withColumn("__zv", zvalue(df, zcols, ranges))
-                .sortWithinPartitions("__zv")
-                .drop("__zv")
-            )
         cols = [c for c in self.clustering_cols() if c in df.columns]
         return df.sortWithinPartitions(*cols) if cols else df
 
-    def _release_zcache(self) -> None:
-        if self._zcache is not None:
-            try:
-                self._zcache.unpersist()
-            finally:
-                self._zcache = None
+    def _zorder(self, rows: DataFrame):
+        """The z-value ``compact`` sorts the partitions it rewrites by: over
+        ``zorder_cols`` (operators/zorder.py), so row-group stats prune on
+        every listed column, with ranges from ``rows``, the rows being
+        rewritten.  None with fewer than two of them present: compaction
+        then keeps the clustering sort."""
+        zcols = [c for c in self.zorder_cols if c in rows.columns]
+        if len(zcols) < len(self.zorder_cols):
+            # layout silently degrading is hard to diagnose — say so
+            log.warning(
+                "z-order columns %s missing from %s; falling back to "
+                "lexicographic clustering",
+                sorted(set(self.zorder_cols) - set(zcols)),
+                self.path,
+            )
+        if len(zcols) < 2:
+            return None
+        from debezium_server_bigquery_spark.operators.zorder import (
+            column_ranges,
+            zvalue,
+        )
+
+        ranges = with_retry(
+            lambda: column_ranges(rows, zcols),
+            policy=self.retry_policy,
+            describe=f"zorder-ranges {self.path}",
+        )
+        return zvalue(rows, zcols, ranges)
 
     def write_files(self, out: DataFrame, dest: str, cols: Sequence[str]) -> None:
         """The raw Spark write action, partitioned by ``cols`` (separable
@@ -575,7 +535,6 @@ class ParquetTable:
             seen = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}").get
             add = self._adopt(tmp, token, partitioned)
         finally:
-            self._release_zcache()
             shutil.rmtree(tmp, ignore_errors=True)
         return add, seen
 
@@ -652,9 +611,7 @@ class ParquetTable:
         return add
 
     def _one_delta(self, df: DataFrame) -> DataFrame:
-        cols = [c for c in self.clustering_cols() if c in df.columns]
-        one = df.coalesce(1)
-        return one.sortWithinPartitions(*cols) if cols else one
+        return self._cluster_sort(df.coalesce(1))
 
     def write_delta(self, out: DataFrame, epoch_id=None, remove: Iterable[str] = ()) -> None:
         """A keyed write (``out`` carries ``__kb``) in one commit, which
@@ -771,7 +728,8 @@ class ParquetTable:
         would be too big), and replace them in one commit like a MERGE —
         readers never observe a half-compacted partition.  A table with
         deltas or deletion sets is folded back whole into its buckets.
-        Returns the number of partitions compacted.
+        A table with z-order columns gets its z-order (``_zorder``) only
+        here, so writes never pay for it.  Returns the number of partitions compacted.
         """
         counts = self.partition_file_counts()
         deltas = [rel for rel, m in self._files.items() if m[0] is None]
@@ -784,6 +742,7 @@ class ParquetTable:
         subset = self.read_raw()
         if not folding:
             subset = subset.filter(F.col(part_col).cast("string").isin(values))
+        z = self._zorder(subset)
         if files_per_partition > 1:
             salt = F.pmod(
                 F.xxhash64(*[F.col(c) for c in (self.key_cols or subset.columns[:1])]),
@@ -792,7 +751,8 @@ class ParquetTable:
             subset = subset.repartition(F.col(part_col), salt)
         else:
             subset = subset.repartition(F.col(part_col))
-        add = self._write(self._cluster_sort(subset), None, replace=values, remove=deltas)
+        out = self._cluster_sort(subset) if z is None else subset.sortWithinPartitions(z)
+        add = self._write(out, None, replace=values, remove=deltas)
         return len(set(values) | {a[1] for a in add})
 
     def expire_partitions(self, keep_from: str) -> list[str]:

@@ -25,11 +25,6 @@ Scale design:
   so its file boundaries and row-group stats change from job to job.  Cost is the one shuffle any
   re-layout must pay; it is a maintenance operation, amortized exactly like
   the upsert tables' maintenance.
-- **Per-batch clustering** (``ParquetTable(zorder_cols=...)``) sorts each
-  micro-batch within its existing partitions — no extra shuffle on the
-  write path; ranges come from the batch itself.  Row-group skipping only
-  needs per-file ordering, so per-batch ranges are sufficient (files from
-  different batches simply carry their own stats).
 
 Bits default to 12 per column: 4096 buckets per dimension is far finer
 than row-group granularity at any realistic file size, and up to 5 columns
@@ -50,8 +45,8 @@ CUT_BITS = 12
 
 def validate_zorder(cols: Sequence[str], bits: int = ZORDER_BITS) -> None:
     """Eager configuration check (shape only — column types are checked
-    against the actual schema at layout time).  Call at table construction
-    so a bad layout fails fast, not on the first write."""
+    against the actual schema at layout time).  ``optimize --zorder``
+    calls it so a bad layout fails before any rewrite."""
     if len(cols) * bits > 62:
         raise ValueError(
             f"{len(cols)} z-order cols x {bits} bits overflows a signed z-value"

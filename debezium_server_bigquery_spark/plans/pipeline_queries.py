@@ -606,7 +606,7 @@ def cli_run_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary = run(conf, spark=spark)
     dfs = []
     for dest in sorted(summary["tables"]):
-        t = ParquetTable.open(spark, os.path.join(tables_root, dest))
+        t = ParquetTable(spark, os.path.join(tables_root, dest))
         dfs.append(
             t.read()
             .withColumn("table_name", F.lit(dest))

@@ -10,9 +10,13 @@ This module produces the **wire** schema — the types as physically encoded
 in the Debezium JSON payload — which is what ``from_json`` needs on the
 executors.  Semantic coercions (epoch-days -> DATE, trailing-Z strip,
 epoch-ms -> TIMESTAMP for ``__ts_ms``/``__source_ts_ms``, geometry wkb ->
-hex, ...) are applied afterwards by :mod:`coerce`, whose output schema is
-the destination-table schema.  Splitting wire/target keeps JSON parsing
-infallible and keeps every coercion a Catalyst expression.
+hex, ...) are built by :mod:`coerce` (``coercion_columns``), whose output
+schema is the reference's destination-table schema.  Splitting wire/target
+keeps JSON parsing infallible and keeps every coercion a Catalyst
+expression.  The pipeline does not apply that layer yet: it lands the
+wire types, except ``__ts_ms``/``__source_ts_ms`` (F7) and ``__deleted``
+(F8), which ``CdcPipeline._coerce_meta`` converts; only the graded
+``cdc_coerce_*`` queries run ``coercion_columns``.
 """
 
 from __future__ import annotations

@@ -247,26 +247,52 @@ def parse_cdc_kafka(
     ``"route"`` emits ``__reject_reason``/``__raw`` columns so the pipeline
     can divert poisoned records to a dead-letter table and keep running.
     """
+    return _parse_wire(
+        raw,
+        F.col("value").cast("string"),
+        schema_hint,
+        nested_as_json=nested_as_json,
+        ignore_unknown_fields=ignore_unknown_fields,
+        on_error=on_error,
+        destination=F.col("topic"),
+    )
+
+
+def _parse_wire(
+    raw: DataFrame,
+    val,
+    schema_hint: dict,
+    *,
+    nested_as_json: bool,
+    ignore_unknown_fields: bool,
+    on_error: str,
+    destination=None,
+) -> DataFrame:
+    """The one parse of both wire sources: each ``val`` (a Debezium JSON
+    envelope, or a bare flattened payload) of ``raw`` -> its payload
+    columns, after ``destination`` when given.  Under ``on_error="fail"``
+    a value ``reject_reason`` flags raises; under ``"route"`` it yields
+    ``__reject_reason``/``__raw`` columns instead.  Tombstones (null
+    payload) are kept as null structs, for the pipeline's R5 stage."""
     if on_error not in ("fail", "route"):
         raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
     struct = debezium_schema_to_struct(schema_hint, nested_as_json=nested_as_json)
-    val = F.col("value").cast("string")
     payload_text = F.coalesce(F.get_json_object(val, "$.payload"), val)
     payload = F.from_json(payload_text, struct)
     reason = reject_reason(val, payload_text, schema_hint, strict=not ignore_unknown_fields)
+    lead = [] if destination is None else [destination.alias("destination")]
+    cols = ["destination"] if lead else []
     if on_error == "route":
         return raw.select(
-            F.col("topic").alias("destination"),
+            *lead,
             payload.alias("payload"),
             reason.alias(REJECT_COL),
             F.when(reason.isNotNull(), val).alias(REJECT_RAW_COL),
-        ).select("destination", "payload.*", REJECT_COL, REJECT_RAW_COL)
+        ).select(*cols, "payload.*", REJECT_COL, REJECT_RAW_COL)
     payload = F.when(
         reason.isNotNull(), F.raise_error(F.concat(F.lit("CDC event rejected: "), reason))
     ).otherwise(payload)
-    return raw.select(
-        F.col("topic").alias("destination"), payload.alias("payload")
-    ).select("destination", "payload.*")
+    return raw.select(*lead, payload.alias("payload")).select(*cols, "payload.*")
 
 
 def read_cdc_kafka(
@@ -373,35 +399,16 @@ def read_cdc_ndjson(
                 "events carry no embedded schema; pass schema_hint= explicitly "
                 "(reference requires schemas.enable=true, DebeziumConfig.java:34-40)"
             )
-    if on_error not in ("fail", "route"):
-        raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
-    struct = debezium_schema_to_struct(schema_hint, nested_as_json=nested_as_json)
     reader = spark.readStream if streaming else spark.read
     if streaming and max_files_per_trigger:
         # bound each micro-batch by source files — the file-source analog
         # of MaxBatchSizeWait's batch-size cap (SURVEY §2.7 T3)
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.text(path)
-    parsed = raw.select(
-        F.from_json(F.col("value"), "struct<payload:string,schema:string>").alias("env"),
+    return _parse_wire(
+        reader.text(path),
         F.col("value"),
+        schema_hint,
+        nested_as_json=nested_as_json,
+        ignore_unknown_fields=ignore_unknown_fields,
+        on_error=on_error,
     )
-    # Tombstones (null payload) are preserved as null structs and filtered by
-    # the pipeline's R5 stage, not here.
-    payload_text = F.coalesce(
-        F.get_json_object(F.col("value"), "$.payload"), F.col("value")
-    )
-    payload = F.from_json(payload_text, struct)
-    reason = reject_reason(
-        F.col("value"), payload_text, schema_hint, strict=not ignore_unknown_fields
-    )
-    if on_error == "route":
-        return parsed.select(
-            payload.alias("payload"),
-            reason.alias(REJECT_COL),
-            F.when(reason.isNotNull(), F.col("value")).alias(REJECT_RAW_COL),
-        ).select("payload.*", REJECT_COL, REJECT_RAW_COL)
-    payload = F.when(
-        reason.isNotNull(), F.raise_error(F.concat(F.lit("CDC event rejected: "), reason))
-    ).otherwise(payload)
-    return parsed.select(payload.alias("payload")).select("payload.*")

@@ -30,9 +30,8 @@ adopts its own directory in its own log commit.  Per-table atomicity
 comes from that commit, not from the job, and the per-table epoch guard
 keeps a replay exactly-once.  Only batches that need one destination's
 slice at a time take the per-destination path: keyed MERGE/SCD2,
-transforms, ``__schema_fp`` schema groups and
-``allow_field_addition=False``.  That path routes with one distinct
-query and writes the tables in a thread pool of up to
+transforms and ``allow_field_addition=False``.  That path routes with
+one distinct query and writes the tables in a thread pool of up to
 ``concurrent_uploads`` (the reference bounds its uploads with a
 semaphore over virtual threads, BaseChangeConsumer.java:83-86), whose
 Spark jobs the local scheduler interleaves.  Either way the write phase
@@ -67,7 +66,6 @@ from debezium_server_bigquery_spark.operators.routing import (
 )
 from debezium_server_bigquery_spark.operators.retry import with_retry
 from debezium_server_bigquery_spark.operators.table import ParquetTable, table_names
-from debezium_server_bigquery_spark.streaming.schema_history import SCHEMA_FP_COL
 
 
 # "append" (bigquerybatch) | "upsert" (bigquerystream+upsert: merge-on-read
@@ -79,6 +77,12 @@ MODES = ("append", "upsert", "scd2")
 _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 # The directory name Spark gives a null or empty partition value.
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# The layout fields that place a table's rows, by table mode: a table whose
+# log disagrees with the pipeline's config on one of them is refused.
+_PLACEMENT = {
+    "upsert": ("mode", "key_cols", "n_buckets"),
+    "append": ("mode", "partition_type", "partition_field"),
+}
 
 
 @contextmanager
@@ -176,17 +180,24 @@ class CdcPipeline:
         if self.mode not in MODES:
             raise ValueError(f"mode must be one of {', '.join(MODES)}; got {self.mode!r}")
 
+    def _layout(self, keyed: bool) -> dict:
+        """The layout this pipeline gives a table it creates."""
+        return {
+            "key_cols": list(self.key_cols) if keyed else [],
+            "mode": "upsert" if keyed else "append",
+            "n_buckets": self.n_buckets,
+            "partition_type": self.partition_type,
+            "partition_field": self.partition_field,
+            "clustering_field": self.clustering_field,
+        }
+
     def _table(self, path: str, keyed: bool = False) -> ParquetTable:
-        """A handle on the table at ``path`` with this pipeline's layout."""
+        """A handle on the table at ``path``, with this pipeline's layout
+        if the write creates it."""
         return ParquetTable(
             self.spark,
             path,
-            key_cols=self.key_cols if keyed else (),
-            mode="upsert" if keyed else "append",
-            n_buckets=self.n_buckets,
-            partition_type=self.partition_type,
-            partition_field=self.partition_field,
-            clustering_field=self.clustering_field,
+            **self._layout(keyed),
             allow_field_addition=self.allow_field_addition,
             create_if_needed=self.create_if_needed,
         )
@@ -199,10 +210,24 @@ class CdcPipeline:
         return self.mode in ("upsert", "scd2") and bool(self.key_cols)
 
     def table_for(self, destination: str) -> ParquetTable:
+        """The handle this pipeline writes ``destination`` through.  A
+        table's log fixes its layout (like the reference's ``getTable``,
+        StreamBigqueryChangeConsumer.java:262-304), so one whose placement
+        (``_PLACEMENT``) differs from this pipeline's config raises
+        ``ValueError``: the shared append write partitions every
+        destination by the pipeline's one partition column, and a keyed
+        write routes its keys by its own key columns and bucket count."""
         if destination not in self.tables:
-            self.tables[destination] = self._table(
-                os.path.join(self.target_root, destination), self._keyed()
-            )
+            keyed = self._keyed()
+            table = self._table(os.path.join(self.target_root, destination), keyed)
+            layout = self._layout(keyed)
+            want = {k: layout[k] for k in _PLACEMENT[layout["mode"]]}
+            have = {k: getattr(table, k) for k in want}
+            if have != want:
+                raise ValueError(
+                    f"table {destination} is laid out as {have}; this pipeline writes {want}"
+                )
+            self.tables[destination] = table
         return self.tables[destination]
 
     def _coerce_meta(self, df: DataFrame) -> DataFrame:
@@ -307,15 +332,10 @@ class CdcPipeline:
         batch = rewrite_destination(
             batch, self.destination_regexp, self.destination_regexp_replace
         )
-        # The schema-group and field-addition gates, keyed writes and
-        # transforms all work on one destination's slice; plain appends of
-        # every destination share one write.
-        shared = not (
-            self._keyed()
-            or self.transforms
-            or SCHEMA_FP_COL in batch.columns
-            or not self.allow_field_addition
-        )
+        # The field-addition gate, keyed writes and transforms all work on
+        # one destination's slice; plain appends of every destination share
+        # one write.
+        shared = not (self._keyed() or self.transforms or not self.allow_field_addition)
         write = self._append_all if shared else self._upload_each
         landed = self._bounded(
             "upload of all destinations" if shared else "upload of each destination",
@@ -367,10 +387,11 @@ class CdcPipeline:
         It runs under the T7 retry budget.  Each ``destination=<name>``
         directory is then adopted by its table in sorted order
         (``ParquetTable.append_landed``), under the epoch ``"<epoch>.0"``; a
-        table that already committed it adopts nothing.  Missing tables
-        under create-if-needed=false are reported together after the
-        others commit, and a row with a null (or empty) destination fails
-        the batch before any commit."""
+        table that already committed it adopts nothing.  Tables that refuse
+        the rows (missing under create-if-needed=false, or laid out
+        otherwise: ``table_for``) are reported together after the others
+        commit, and a row with a null (or empty) destination fails the
+        batch before any commit."""
         landing = self._table(self.target_root)  # layout only; never committed
         part_col = landing.partition_col()
         out = landing.with_partition_col(batch)
@@ -400,7 +421,7 @@ class CdcPipeline:
             for dest in sorted(landed):
                 try:
                     self.table_for(dest).append_landed(landed[dest], token, schema, epoch)
-                except ValueError as exc:  # create-if-needed
+                except ValueError as exc:  # create-if-needed, layout
                     failures.append(f"{dest}: {exc}")
             if failures:
                 raise RuntimeError("append failed for " + "; ".join(failures))
@@ -418,56 +439,44 @@ class CdcPipeline:
             return False
         sc = self.spark.sparkContext
         job_group = sc.getLocalProperty("spark.jobGroup.id")
+        # the shared append write's epoch form: replays of batches
+        # committed by either path, or before this form was shared, match
+        epoch = None if epoch_id is None else f"{epoch_id}.0"
         # Cache the filtered batch once; each destination slice re-reads it.
         batch.persist()
         try:
             def upload(dest: str) -> None:
-                from debezium_server_bigquery_spark.streaming.schema_history import (
-                    schema_groups,
-                )
-
                 part = batch.filter(F.col("destination") == dest).drop("destination")
                 for fn in self.transforms.get("*", []) + self.transforms.get(
                     dest, []
                 ):
                     part = fn(part)
                 table = self.table_for(dest)
-                # R4: uniform-schema sub-batches in event order (one group
-                # unless the batch carries a __schema_fp column, which no
-                # shipped source attaches).
-                for gi, (_fp, group) in enumerate(schema_groups(part)):
-                    # Composite epoch id: "epoch.group" can never collide
-                    # across epochs (an int-arithmetic scheme like e*16+g
-                    # would alias epoch e+1 group 0 once a batch carries >16
-                    # schema groups, silently skipping real data on replay).
-                    sub_epoch = (
-                        None if epoch_id is None else f"{epoch_id}.{gi}"
+                if self.mode == "upsert" and self.key_cols:
+                    merge_upsert(
+                        table,
+                        part,
+                        keep_deletes=self.keep_deletes,
+                        order_col=self.dedup_order_col,
+                        tiebreak=self.dedup_tiebreak,
+                        epoch_id=epoch,
                     )
-                    if self.mode == "upsert" and self.key_cols:
-                        merge_upsert(
-                            table,
-                            group,
-                            keep_deletes=self.keep_deletes,
-                            order_col=self.dedup_order_col,
-                            tiebreak=self.dedup_tiebreak,
-                            epoch_id=sub_epoch,
-                        )
-                    elif self.mode == "scd2" and self.key_cols:
-                        # history-preserving sink (operators/scd.py): every
-                        # version survives with its validity interval
-                        from debezium_server_bigquery_spark.operators.scd import (
-                            scd2_merge_batch,
-                        )
+                elif self.mode == "scd2" and self.key_cols:
+                    # history-preserving sink (operators/scd.py): every
+                    # version survives with its validity interval
+                    from debezium_server_bigquery_spark.operators.scd import (
+                        scd2_merge_batch,
+                    )
 
-                        scd2_merge_batch(
-                            table,
-                            group,
-                            order_col=self.dedup_order_col,
-                            tiebreak=self.dedup_tiebreak,
-                            epoch_id=sub_epoch,
-                        )
-                    else:
-                        table.append(group, epoch_id=sub_epoch)
+                    scd2_merge_batch(
+                        table,
+                        part,
+                        order_col=self.dedup_order_col,
+                        tiebreak=self.dedup_tiebreak,
+                        epoch_id=epoch,
+                    )
+                else:
+                    table.append(part, epoch_id=epoch)
 
             def grouped_upload(dest: str) -> None:
                 with _job_group(sc, job_group, f"upload {dest}"):

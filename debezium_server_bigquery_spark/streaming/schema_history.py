@@ -10,16 +10,12 @@ the destination logs: no second store, nothing to write, and no record of
 a column set that never landed.  Only ``operators/table.py`` knows the
 log format.
 
-R4 parity — within one destination's batch the reference groups events by
+R4 — within one destination's batch the reference groups events by
 their embedded value schema so each upload carries a uniform schema
 (``Collectors.groupingBy(RecordConverter::valueSchema)``,
 BaseChangeConsumer.java:189-205).  In Spark a micro-batch DataFrame has a
-single union schema; the per-event schema identity would have to ride
-along as a ``__schema_fp`` fingerprint column, and grouping is a cheap
-distinct over that column.  No source or pipeline step attaches that
-column, so ``CdcPipeline`` gets one schema group per destination for
-every batch its sources produce; only a caller that attaches
-``__schema_fp`` itself gets the split.
+single union schema, so one write per destination already lands every
+event's columns; ``CdcPipeline`` does not split its batches.
 """
 
 from __future__ import annotations
@@ -64,6 +60,10 @@ class SchemaHistory:
 
 def schema_groups(df: DataFrame, fp_col: str = SCHEMA_FP_COL) -> list[tuple[str, DataFrame]]:
     """Split one destination's batch into uniform-schema sub-batches (R4).
+
+    No engine code calls this, and no source attaches ``fp_col``: it stays
+    only because the benchmark's tracer (``perfbench/tracing.py``) binds it
+    by attribute, and it goes when that tracer next changes.
 
     The distinct is micro-batch-bounded (schema versions per batch is ~1-2);
     each group is a filter over the cached batch, so at scale this adds no

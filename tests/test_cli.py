@@ -272,6 +272,7 @@ def test_run_scd2_from_properties(spark, sf_dir, tmp_path):
             "engine.target-root": str(tmp_path / "tgt"),
             "engine.key-columns": "user_id",
             "engine.scd2": "true",
+            "engine.n-buckets": "8",  # the run's layout: table_for refuses others
         },
     )
     t = p.table_for(summary["tables"][0])
@@ -302,7 +303,7 @@ def test_optimize_compacts_and_zorders(spark, sf_dir, tmp_path):
         path, max_files=0, zorder="user_id,event_id", spark=spark
     )
     assert summary["compacted_partitions"] >= 1
-    t2 = ParquetTable.open(spark, path)
+    t2 = ParquetTable(spark, path)
     assert t2.read().count() == before  # lossless rewrite
     assert max(t2.partition_file_counts().values()) == 1
     assert t2.zorder_cols == ["user_id", "event_id"]  # layout persisted to meta
@@ -341,15 +342,47 @@ def test_optimize_zorder_forces_rewrite_on_tidy_table(spark, sf_dir, tmp_path):
     t.append(cdc.filter(F.col("event_id") < 200), epoch_id=0)  # tidy: 1 file/part
     summary = optimize(path, zorder="user_id,event_id", spark=spark)  # default max_files
     assert summary["compacted_partitions"] >= 1  # rewrote despite no fragmentation
-    t2 = ParquetTable.open(spark, path)
+    t2 = ParquetTable(spark, path)
     assert t2.zorder_cols == ["user_id", "event_id"]  # override persisted
 
 
+def test_optimize_zorder_survives_a_later_pipeline_append(spark, tmp_path):
+    """The z-order override ``optimize`` logs is the table's layout: a
+    pipeline append afterwards keeps it, and the next compaction still
+    lays partitions out by it."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from debezium_server_bigquery_spark.cli import optimize
+    from debezium_server_bigquery_spark.operators.table import ParquetTable
+    from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline
+
+    root = str(tmp_path / "tgt")
+    batch = spark.range(40).select(
+        F.lit("d").alias("destination"),
+        "id",
+        F.lit(1704067200000).alias("__ts_ms"),
+        (F.lit(1000) + F.col("id")).alias("__source_ts_ms"),
+        (F.col("id") * 1000).alias("__source_ts_ns"),
+    )
+    CdcPipeline(spark, root).process_batch(batch.filter("id < 20"), epoch_id=0)
+    path = os.path.join(root, "d")
+    optimize(path, zorder="id,__source_ts_ns", spark=spark)
+    CdcPipeline(spark, root).process_batch(batch.filter("id >= 20"), epoch_id=1)
+    t = ParquetTable(spark, path)
+    assert t.zorder_cols == ["id", "__source_ts_ns"]
+    assert t.read().count() == 40
+    assert optimize(path, max_files=0, spark=spark)["compacted_partitions"] == 1
+    assert ParquetTable(spark, path).zorder_cols == ["id", "__source_ts_ns"]
+
+
 @pytest.mark.heavy
-def test_open_restores_clustering_field_and_flags(spark, tmp_path):
-    """open() must reconstruct clustering_field / allow_field_addition /
-    create_if_needed — pre-fix they reverted to defaults, so optimize
-    re-sorted custom-clustered tables with __source_ts_ms."""
+def test_reopened_handle_keeps_clustering_field(spark, tmp_path):
+    """A handle on an existing table takes the clustering field from the
+    log, so an ``optimize`` does not re-sort a custom-clustered table by
+    the default field.  The field-addition and create-if-needed flags are
+    the writer's policy: each handle keeps its own."""
     from pyspark.sql import functions as F
 
     from debezium_server_bigquery_spark.operators.table import ParquetTable
@@ -372,11 +405,11 @@ def test_open_restores_clustering_field_and_flags(spark, tmp_path):
     merge_upsert(
         t, df.withColumn("__op", F.lit("c")), order_col="__source_ts_ms", epoch_id=0
     )
-    t2 = ParquetTable.open(spark, path)
+    t2 = ParquetTable(spark, path)
     assert t2.clustering_field == "event_type"
-    assert t2.allow_field_addition is False
-    assert t2.create_if_needed is True
     assert t2.clustering_cols() == ["user_id", "event_type"]
+    assert t2.allow_field_addition is True
+    assert ParquetTable(spark, path, create_if_needed=False).create_if_needed is False
 
 
 def test_optimize_expires_old_partitions(spark, sf_dir, tmp_path):

@@ -145,3 +145,29 @@ def test_cli_per_sink_defaults(spark, tmp_path):
     )
     assert overridden.allow_field_addition is True
     assert overridden.create_if_needed is False
+
+
+def test_flags_are_the_writers_not_the_logged_layout(spark, tmp_path):
+    """The flags are each handle's own: a table's log does not carry them,
+    and an older log that does is read with those keys ignored."""
+    import json
+    import os
+
+    path = str(tmp_path / "t")
+    ParquetTable(spark, path, mode="append", allow_field_addition=False).append(
+        _rows(spark, range(3)), epoch_id=0
+    )
+    entry = os.path.join(path, "_log", "0.json")
+    with open(entry, encoding="utf-8") as fh:
+        logged = json.load(fh)
+    assert "allow_field_addition" not in logged["layout"]
+    logged["layout"].update(allow_field_addition=False, create_if_needed=False)
+    with open(entry, "w", encoding="utf-8") as fh:
+        json.dump(logged, fh)
+    t = ParquetTable(spark, path)  # a log as older writers left it
+    assert (t.allow_field_addition, t.create_if_needed) == (True, True)
+    t.append(_rows(spark, range(3, 6), extra=True), epoch_id=1)
+    assert "new_col" in t.read().columns
+    assert t.version() == 1  # the layout itself did not change
+    with open(os.path.join(path, "_log", "1.json"), encoding="utf-8") as fh:
+        assert "layout" not in json.load(fh)

@@ -194,7 +194,7 @@ def test_destructive_delete_is_not_resurrected_by_older_update(spark, tmp_path):
     merge_upsert(t, _batch(spark, [(1, 1, "stale", "u", 5)]), epoch_id=2)
     assert sorted(r.c_id for r in t.read().collect()) == [2]
     # a fresh handle hides the tombstone too: the flag is in the logged layout
-    assert ParquetTable.open(spark, t.path).read().count() == 1
+    assert ParquetTable(spark, t.path).read().count() == 1
 
 
 def test_merge_is_one_write_of_one_delta(spark, tmp_path, monkeypatch):

@@ -69,3 +69,27 @@ def test_custom_partition_field(spark, tmp_path):
     assert any(
         d == "__part_day=2023-11-14" for d in os.listdir(tmp_path / "pf")
     )
+
+
+def test_pipeline_refuses_a_table_laid_out_otherwise(spark, tmp_path):
+    """An append pipeline restarted with partition-type DAY on a MONTH
+    table refuses it: the shared append write partitions every destination
+    by the pipeline's one partition column, and a DAY commit would make
+    every later read fail on two partition columns."""
+    from pyspark.sql import functions as F
+
+    from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline
+
+    root = str(tmp_path / "tgt")
+    batch = spark.range(40).select(
+        F.lit("d").alias("destination"),
+        "id",
+        (F.lit(1_700_000_000_000) + F.col("id") * 86_400_000).alias("__ts_ms"),
+    )
+    CdcPipeline(spark, root).process_batch(batch.filter("id < 20"), epoch_id=0)
+    day = CdcPipeline(spark, root, partition_type="DAY")
+    with pytest.raises(RuntimeError, match="laid out as"):
+        day.process_batch(batch.filter("id >= 20"), epoch_id=1)
+    t = ParquetTable(spark, os.path.join(root, "d"))
+    assert t.partition_type == "MONTH"
+    assert t.read().count() == 20

@@ -344,7 +344,7 @@ def test_tables_hold_only_data_and_their_log(spark, sf_dir, tmp_path):
             # data files sit in partition dirs, a keyed write's deltas in delta/
             deltas = {DELTA_DIR} if mode in ("upsert", "scd2") else set()
             assert {n for n in names if "=" not in n} == {"_log"} | deltas, (mode, d, names)
-            reopened = ParquetTable.open(spark, str(root / d))
+            reopened = ParquetTable(spark, str(root / d))
             assert reopened.mode == ("append" if mode == "append" else "upsert")
         # nothing sits beside the destinations: no staging tables
         assert not [d for d in os.listdir(root) if d.startswith("_")], mode
@@ -575,6 +575,38 @@ def test_append_write_timeout_fails_batch_and_commits_nothing(
     assert table_names(p.target_root) == []
     # nor is a staging directory left behind
     assert not os.path.isdir(p.target_root) or os.listdir(p.target_root) == []
+
+
+def test_refused_upload_is_not_retried(spark, tmp_path, caplog):
+    """A write whose job the timed-out batch's group cancelled or refused
+    fails at once: with sequential uploads, no destination spends the
+    retry budget after the bound.  The slow step is a transform, so it
+    runs inside the uploads rather than in the routing query, which runs
+    once beforehand so that it is quick inside the bound."""
+    import logging
+    import time
+
+    from debezium_server_bigquery_spark.operators.routing import destinations_in
+
+    @F.udf("long")
+    def slow(v):
+        time.sleep(1.5)
+        return v
+
+    p = CdcPipeline(
+        spark, str(tmp_path / "tgt"), mode="upsert", key_cols=("id",),
+        concurrent_uploads=1, concurrent_uploads_timeout_minutes=0.05,  # 3 s
+        transforms={"*": [lambda df: df.withColumn("id", slow("id"))]},
+    )
+    batch = _routed(spark, range(6)).withColumn(
+        "__source_ts_ns", F.col("__source_ts_ms") * 1_000_000
+    )
+    assert len(destinations_in(batch)) == 3
+    with caplog.at_level(logging.WARNING), pytest.raises(RuntimeError, match="timed out"):
+        p.process_batch(batch, epoch_id=0)
+    messages = [r.getMessage() for r in caplog.records]
+    assert any("failed after 1 attempt(s)" in m for m in messages)
+    assert not [m for m in messages if "retrying" in m]
 
 
 def test_timed_out_group_refuses_later_jobs(spark, tmp_path):

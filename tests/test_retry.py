@@ -68,6 +68,26 @@ def test_with_retry_lets_interrupts_propagate():
     assert calls["n"] == 1
 
 
+def test_with_retry_reraises_a_cancelled_job_at_once(spark):
+    """A Spark job its job group cancelled (condition SPARK_JOB_CANCELLED)
+    is not retried: the group refuses every later job too."""
+    from debezium_server_bigquery_spark.streaming.pipeline import _job_group
+
+    sc = spark.sparkContext
+    calls = []
+
+    def count():
+        calls.append(1)
+        return spark.range(3).count()
+
+    with _job_group(sc, "test-cancelled", "refused"):
+        sc._jsc.sc().cancelJobGroupAndFutureJobs("test-cancelled")
+        with pytest.raises(Exception, match="SPARK_JOB_CANCELLED"):
+            with_retry(count, policy=NO_WAIT_POLICY)
+    assert len(calls) == 1
+    assert spark.range(3).count() == 3  # other groups still run
+
+
 def test_with_retry_respects_elapsed_cap():
     flaky = Flaky(fail_times=100)
     t = {"now": 0.0}
@@ -204,7 +224,7 @@ def test_merge_publish_failure_keeps_every_bucket(spark, tmp_path, monkeypatch):
     assert {r.val for r in during.collect()} == {"a"}
     monkeypatch.undo()
     merge_upsert(t, _upsert_rows(spark, range(20), "b", 2), epoch_id=1)
-    after = ParquetTable.open(spark, t.path).read().collect()  # fresh handle too
+    after = ParquetTable(spark, t.path).read().collect()  # fresh handle too
     assert sorted(r.id for r in after) == list(range(20))
     assert {r.val for r in after} == {"b"}
 

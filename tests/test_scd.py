@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_server_bigquery_spark.operators.scd import (
@@ -343,6 +344,40 @@ def test_scd2_sink_field_addition_gate(spark, tmp_path):
     assert "region" not in out.columns  # gate held: schema not evolved
     v = _versions(t)
     assert v[(1, 2)] == (200, None, 2.0)  # the change itself still applied
+
+
+def test_scd2_pipeline_refuses_a_table_with_other_buckets(spark, tmp_path):
+    """An scd2 pipeline restarted with n_buckets=4 on an 8-bucket table
+    refuses it: its stored-row lookup prunes by the bucket hash, so with
+    the wrong count it would miss stored versions and leave keys with two
+    current ones."""
+    import os
+
+    from debezium_server_bigquery_spark.operators.table import ParquetTable
+    from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline
+
+    root = str(tmp_path / "tgt")
+
+    def batch(ts, op):
+        return spark.range(1, 41).select(
+            F.lit("dim").alias("destination"),
+            F.col("id").alias("user_id"),
+            F.lit(op).alias("__op"),
+            F.lit(float(ts)).alias("value"),
+            F.lit(ts).cast("long").alias("__source_ts_ns"),
+        )
+
+    def pipeline(n):
+        return CdcPipeline(spark, root, mode="scd2", key_cols=("user_id",), n_buckets=n)
+
+    pipeline(8).process_batch(batch(100, "c"), epoch_id=0)
+    with pytest.raises(RuntimeError, match="laid out as"):
+        pipeline(4).process_batch(batch(200, "u"), epoch_id=1)
+    t = ParquetTable(spark, os.path.join(root, "dim"))
+    assert t.n_buckets == 8
+    current = t.read().filter("is_current").groupBy("user_id").count()
+    assert current.count() == 40
+    assert current.filter("count != 1").count() == 0
 
 
 def test_streaming_scd2_with_checkpoint_restart(spark, sf_dir, tmp_path):

@@ -122,23 +122,6 @@ def test_schema_groups_passthrough_without_fp(spark):
     assert groups[0][1].count() == 5
 
 
-def test_pipeline_splits_mixed_schema_batch(spark, tmp_path):
-    rows = [
-        ("testc.t", 1, "a", 1000 + i, "fp_v1") for i in range(3)
-    ] + [
-        ("testc.t", 2, "b", 2000, "fp_v2")
-    ]
-    batch = spark.createDataFrame(
-        rows,
-        f"destination string, id long, name string, __source_ts_ns long, {SCHEMA_FP_COL} string",
-    ).withColumn("__op", F.lit("c"))
-    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append")
-    p.run_batch(batch)
-    got = p.read_table("testc_t")
-    assert got.count() == 4
-    assert SCHEMA_FP_COL not in got.columns
-
-
 def test_pipeline_records_schema_history(spark, tmp_path, sf_dir):
     """S8 from the pipeline's own commits: one record per (destination,
     landed column set), in evolution order, recovered from the target

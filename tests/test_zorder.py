@@ -2,8 +2,8 @@
 
 Covers the three claims the module makes: the z-value is a correct bit
 interleave, a z-ordered layout prunes row groups on BOTH clustered
-columns better than a lexicographic sort, and the ParquetTable /
-zorder_layout write paths lose nothing.
+columns better than a lexicographic sort, and the ParquetTable
+compaction / zorder_layout write paths lose nothing.
 """
 
 from __future__ import annotations
@@ -111,13 +111,29 @@ def test_zvalue_string_and_timestamp_proxies(spark):
         column_ranges(arr, ["a"])
 
 
-def test_parquet_table_zorder_validates_at_construction(spark, tmp_path):
+def _append_table(spark, path, n=100, batches=1):
+    """An append table holding ``a`` = 0..n-1 and ``b`` = a*37 mod n in one
+    time partition, landed in ``batches`` appends."""
     from debezium_server_bigquery_spark.operators.table import ParquetTable
 
+    df = spark.range(0, n).select(
+        F.col("id").alias("a"),
+        (F.col("id") * 37 % n).alias("b"),
+        F.lit(1700000000000).alias("__ts_ms"),
+    )
+    t = ParquetTable(spark, path, mode="append")
+    for e in range(batches):
+        t.append(df.filter(F.col("a") % batches == e), epoch_id=e)
+    return t, df
+
+
+def test_optimize_zorder_overflow_fails_before_rewrite(spark, tmp_path):
+    from debezium_server_bigquery_spark.cli import optimize
+
+    t, _ = _append_table(spark, str(tmp_path / "bad"))
     with pytest.raises(ValueError, match="overflows"):
-        ParquetTable(
-            spark, str(tmp_path / "bad"), zorder_cols=list("abcdef")
-        )
+        optimize(t.path, zorder=",".join("abcdef"), spark=spark)
+    assert t.version() == 0  # nothing rewritten, nothing logged
 
 
 def test_parquet_table_zorder_missing_col_warns_and_falls_back(
@@ -125,14 +141,10 @@ def test_parquet_table_zorder_missing_col_warns_and_falls_back(
 ):
     import logging
 
-    from debezium_server_bigquery_spark.operators.table import ParquetTable
-
-    df = spark.range(0, 100).select(
-        F.col("id").alias("a"), F.lit(1700000000000).alias("__ts_ms")
-    )
-    t = ParquetTable(spark, str(tmp_path / "zt2"), mode="append", zorder_cols=["a", "b"])
+    t, _ = _append_table(spark, str(tmp_path / "zt2"))
+    t.zorder_cols = ["a", "missing"]
     with caplog.at_level(logging.WARNING):
-        t.append(df, epoch_id=1)
+        assert t.compact(max_files_per_partition=0) == 1
     assert any("z-order columns" in r.message for r in caplog.records)
     assert t.read().count() == 100
 
@@ -227,22 +239,21 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
 
 
 def test_parquet_table_zorder_write(spark, tmp_path):
+    """Compaction lays a table with z-order columns out by its z-value,
+    loses nothing, and logs the columns with the rewrite."""
     from debezium_server_bigquery_spark.operators.table import ParquetTable
 
-    df = spark.range(0, 5000).select(
-        F.col("id").alias("a"),
-        (F.col("id") * 37 % 5000).alias("b"),
-        F.lit(1700000000000).alias("__ts_ms"),
-    )
-    t = ParquetTable(
-        spark,
-        str(tmp_path / "zt"),
-        mode="append",
-        zorder_cols=["a", "b"],
-    )
-    t.append(df, epoch_id=1)
+    t, df = _append_table(spark, str(tmp_path / "zt"), n=5000, batches=2)
+    t.zorder_cols = ["a", "b"]
+    assert t.compact(max_files_per_partition=0) == 1
     back = t.read()
     assert back.count() == 5000
     assert back.agg(F.sum("a")).collect()[0][0] == df.agg(F.sum("a")).collect()[0][0]
+    # one file, its rows in z-order over the rewritten rows' ranges
+    (rel,) = t.live_files()
+    rows = pq.read_table(os.path.join(t.path, rel), columns=["a", "b"]).to_pylist()
+    ranges = {"a": (0.0, 4999.0), "b": (0.0, 4999.0)}
+    zs = [_py_z(r, ranges, ["a", "b"], ZORDER_BITS) for r in rows]
+    assert zs == sorted(zs) and [r["a"] for r in rows] != sorted(r["a"] for r in rows)
     # the log records the layout choice
-    assert ParquetTable.open(spark, t.path).zorder_cols == ["a", "b"]
+    assert ParquetTable(spark, t.path).zorder_cols == ["a", "b"]
