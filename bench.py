@@ -29,71 +29,12 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from debezium_server_bigquery_spark import get_spark
-    from debezium_server_bigquery_spark.plans import (
-        analytics,
-        analytics_ext,
-        analytics_tpch2,
-        cdc_queries,
-    )
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    headline = [
-        ("q1_pricing_summary", analytics.q1_pricing_summary),
-        ("q3_shipping_priority", analytics.q3_shipping_priority),
-        ("q5_local_supplier_volume", analytics.q5_local_supplier_volume),
-        ("q6_forecast_revenue", analytics.q6_forecast_revenue),
-        ("q_segment_order_stats", analytics.q_segment_order_stats),
-        ("q_top_customers", analytics.q_top_customers),
-        ("q_events_daily", analytics.q_events_daily),
-        ("q4_order_priority", analytics_ext.q4_order_priority),
-        ("q9_product_profit", analytics_ext.q9_product_profit),
-        ("q13_customer_distribution", analytics_ext.q13_customer_distribution),
-        ("q18_large_volume_customers", analytics_ext.q18_large_volume_customers),
-        ("q8_market_share", analytics_tpch2.q8_market_share),
-        ("q21_sole_return_supplier", analytics_tpch2.q21_sole_return_supplier),
-        ("cdc_dedup_last_writer", cdc_queries.cdc_dedup_last_writer),
-        ("cdc_upsert_final_state", cdc_queries.cdc_upsert_final_state),
-        ("cdc_append_stats", cdc_queries.cdc_append_stats),
-    ]
-    try:
-        from debezium_server_bigquery_spark.functions import dedup_fuzzy, similarity, text
-
-        headline += [
-            ("dedup_exact", dedup_fuzzy.QUERIES["dedup_exact"]),
-            ("dedup_minhash_lsh", dedup_fuzzy.QUERIES["dedup_minhash_lsh"]),
-            ("ann_cosine_topk", similarity.QUERIES["ann_cosine_topk"]),
-            ("text_quality_score", text.QUERIES["text_quality_score"]),
-        ]
-    except (ImportError, KeyError):
-        pass
-
-    # ITERATIVE / CHECKPOINT-SUBSTRATE headliners (round-11 verdict ask #5):
-    # the heaviest registered plans all route through
-    # sources/tables.py::checkpoint_parquet, and none of the 20 comparable
-    # headline queries above exercises it — a substrate regression (memo
-    # miss, double materialization, lost pushdown on re-read) was invisible
-    # to the bench.  These three are timed with the same protocol and
-    # recorded in "queries", but EXCLUDED from "value" so the headline
-    # total stays comparable against BASELINE.md's 2x bar and all prior
-    # BENCH_r*.json rounds (value_incl_iterative carries the full sum).
-    # Their cold (first-build) times are recorded separately: the timed
-    # reps hit the memoized substrate, so a per-rep rebuild (memo miss)
-    # shows up as a huge warm number, while a double write at first build
-    # shows up in iterative_cold_sec.
-    iterative: list[tuple] = []
-    try:
-        from debezium_server_bigquery_spark.functions import graph
-
-        iterative += [
-            ("supplier_triangle_census", graph.QUERIES["supplier_triangle_census"]),
-            ("graph_kcore_supply", graph.QUERIES["graph_kcore_supply"]),
-            ("pagerank_trade_graph", graph.QUERIES["pagerank_trade_graph"]),
-        ]
-    except (ImportError, KeyError):
-        pass
-    iterative_names = {name for name, _fn in iterative}
+    queries = bench_queries()
+    iterative_names = set(ITERATIVE)
 
     # Warm-up immediately before each timed run.  Spark's codegen cache
     # keys on generated source, so the identical plan shape at the bench SF
@@ -118,7 +59,7 @@ def main() -> None:
     # that before the adjacent per-query warm-ups, so timings measure plans
     # on both cold and warm hosts.
     iterative_cold: dict[str, float] = {}
-    for _name, fn in headline + iterative:
+    for _name, fn in queries:
         try:
             t0 = time.time()
             fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
@@ -150,7 +91,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    for name, fn in headline + iterative:
+    for name, fn in queries:
         try:
             fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
         except Exception:
@@ -343,6 +284,58 @@ def main() -> None:
 
     print(json.dumps(out))
     spark.stop()
+
+
+# The iterative checkpoint-substrate headliners (round-11 verdict ask #5):
+# the heaviest registered plans all route through
+# sources/tables.py::checkpoint_parquet, and none of the 20 comparable
+# headline queries exercises it, so a substrate regression (memo miss,
+# double materialization, lost pushdown on re-read) was invisible to the
+# bench.  These three are timed with the same protocol and recorded in
+# "queries", but EXCLUDED from "value" so the headline total stays
+# comparable against BASELINE.md's 2x bar and all prior BENCH_r*.json
+# rounds (value_incl_iterative carries the full sum).  Their cold
+# (first-build) times are recorded separately: the timed reps hit the
+# memoized substrate, so a per-rep rebuild (memo miss) shows up as a huge
+# warm number, while a double write at first build shows up in
+# iterative_cold_sec.
+ITERATIVE = ("supplier_triangle_census", "graph_kcore_supply", "pagerank_trade_graph")
+
+
+def bench_queries() -> list[tuple]:
+    """The board in timing order: the 20 comparable headline queries, then
+    ``ITERATIVE``.  ``tools/plans.py round`` dumps the plans of this list."""
+    from debezium_server_bigquery_spark.functions import dedup_fuzzy, graph, similarity, text
+    from debezium_server_bigquery_spark.plans import (
+        analytics,
+        analytics_ext,
+        analytics_tpch2,
+        cdc_queries,
+    )
+
+    return [
+        ("q1_pricing_summary", analytics.q1_pricing_summary),
+        ("q3_shipping_priority", analytics.q3_shipping_priority),
+        ("q5_local_supplier_volume", analytics.q5_local_supplier_volume),
+        ("q6_forecast_revenue", analytics.q6_forecast_revenue),
+        ("q_segment_order_stats", analytics.q_segment_order_stats),
+        ("q_top_customers", analytics.q_top_customers),
+        ("q_events_daily", analytics.q_events_daily),
+        ("q4_order_priority", analytics_ext.q4_order_priority),
+        ("q9_product_profit", analytics_ext.q9_product_profit),
+        ("q13_customer_distribution", analytics_ext.q13_customer_distribution),
+        ("q18_large_volume_customers", analytics_ext.q18_large_volume_customers),
+        ("q8_market_share", analytics_tpch2.q8_market_share),
+        ("q21_sole_return_supplier", analytics_tpch2.q21_sole_return_supplier),
+        ("cdc_dedup_last_writer", cdc_queries.cdc_dedup_last_writer),
+        ("cdc_upsert_final_state", cdc_queries.cdc_upsert_final_state),
+        ("cdc_append_stats", cdc_queries.cdc_append_stats),
+        ("dedup_exact", dedup_fuzzy.QUERIES["dedup_exact"]),
+        ("dedup_minhash_lsh", dedup_fuzzy.QUERIES["dedup_minhash_lsh"]),
+        ("ann_cosine_topk", similarity.QUERIES["ann_cosine_topk"]),
+        ("text_quality_score", text.QUERIES["text_quality_score"]),
+        *((name, graph.QUERIES[name]) for name in ITERATIVE),
+    ]
 
 
 def _mixed_calibration(spark, sf_dir: str, reps: int) -> float:

@@ -661,7 +661,7 @@ def term_ppmi_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOUR derivations (both sym halves, then vecs -> norms and both
     # cosine sides) — without the checkpoint each branch re-runs the
     # corpus explode + the doc-keyed self-join (the derived-aggregate
-    # chain pathology, tools/scan_repeat_scans.py; round 12).
+    # chain pathology, tools/plans.py scan; round 12).
     upper = checkpoint_parquet(
         a.join(
             b,

@@ -236,7 +236,7 @@ def supplier_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds THREE branches (deg_s and both self-join sides) — without
     # the checkpoints each branch re-runs the orders x lineitem join
     # (8 static lineitem scans; the derived-aggregate chain pathology,
-    # tools/scan_repeat_scans.py).  Both tables are the narrow distinct
+    # tools/plans.py scan).  Both tables are the narrow distinct
     # (customer, supplier) edge list — far smaller than lineitem.
     # Measured 3.59 s -> 1.3 s at sf0.1 (round 12).
     pairs = checkpoint_parquet(

@@ -58,7 +58,7 @@ def mix_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin(broadcast(agg)) chain re-executes the corpus scan + the
     # regexp tokenization once per derivation level (AQE's exchange
     # reuse does not cover the broadcast subtrees — measured 1.8x on
-    # this query at sf0.1, round 12; see tools/scan_repeat_scans.py).
+    # this query at sf0.1, round 12; see tools/plans.py scan).
     per_src = checkpoint_parquet(
         docs.groupBy("source").agg(
             F.count("*").alias("n_docs"),

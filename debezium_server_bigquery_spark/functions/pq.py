@@ -123,7 +123,7 @@ def _adc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Substrate checkpoints (round 12, measured): the codebook feeds both
     the encode and the LUT — inline, each broadcast subtree re-ran the
     full-embeddings centroid pass (the derived-aggregate chain
-    pathology, tools/scan_repeat_scans.py); and the ADC table itself is
+    pathology, tools/plans.py scan); and the ADC table itself is
     the shared substrate of ann_pq_adc_topk AND ann_pq_rerank, so the
     expensive encode (n x M x K distance evaluations) runs once per
     session instead of once per query.  cb is O(metadata) (M x K

@@ -801,7 +801,7 @@ def spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final join) and its lineage is the full quality scan — regexp
     # tokenization plus ordered_output's exchange — which would re-run
     # per branch (measured 2.3x on this query at sf0.1, round 12; the
-    # derived-aggregate-chain pathology, tools/scan_repeat_scans.py).
+    # derived-aggregate-chain pathology, tools/plans.py scan).
     # The checkpoint is the narrow 4-scalar doc-level projection: at
     # 100 TB that is a per-doc-row table, the sanctioned data-sized
     # substrate shape (same contract as the graph adjacency lists).

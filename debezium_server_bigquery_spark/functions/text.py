@@ -883,7 +883,7 @@ def tokenizer_fertility_drift_gate(spark: SparkSession, sf_dir: str) -> DataFram
     # checkpoint: the totals branch and the final projection each derive
     # this O(sources) aggregate — without the checkpoint the broadcast
     # subtree re-runs the two tokenizations over the corpus (the
-    # derived-aggregate-chain pathology, tools/scan_repeat_scans.py).
+    # derived-aggregate-chain pathology, tools/plans.py scan).
     per = checkpoint_parquet(
         docs.groupBy("source").agg(
             F.sum(word_count(F.col("text"))).cast("long").alias("w_s"),

@@ -44,7 +44,7 @@ def ordered_output(df: DataFrame, *cols: str) -> DataFrame:
     (usually narrow) result, which holds for every converted call site;
     queries whose sort child already contains a shuffle or aggregate do
     NOT need this (the sampler reads the materialized stage for free).
-    Flagging tool: tools/scan_range_sampling.py.
+    Flagging tool: ``tools/plans.py scan``.
 
     The repartition uses the default shuffle partition count; for tiny
     outputs that is nominally a ~32-task exchange, but AQE coalesces it

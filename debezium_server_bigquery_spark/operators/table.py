@@ -20,8 +20,8 @@ Spark-native equivalent: a directory-backed parquet table.
   ``maintain()``, which replaces bucket files once ``REWRITE_SHARE`` of
   their rows are deleted, and all deltas past ``MAX_DELTAS``, by one delta
   of their live rows; ``compact()`` folds all back into buckets.
-- **Clustering** -> ``sortWithinPartitions(pk..., __source_ts_ms)`` before
-  write, so parquet row-group min/max stats give data skipping on PK
+- **Clustering** -> ``sortWithinPartitions(<partition col>, pk...,
+  __source_ts_ms)`` before write, so parquet row-group min/max stats give data skipping on PK
   lookups — the BigQuery clustering analog.
 - **Schema evolution** -> ``unionByName(allowMissingColumns=True)`` against
   the live schema; the table schema is the union of every batch's columns
@@ -31,8 +31,8 @@ Spark-native equivalent: a directory-backed parquet table.
 Commit log.  Each table keeps one append-only log, ``_log/<version>.json``.
 An entry lists the data files it adds and removes (relative path,
 partition value — null for a delta — bytes, rows), the row positions it
-deletes per live file, the epoch it commits with the row count the write
-job observed, and — only where they change — the schema and layout.
+deletes per live file, the epoch it commits with the row count its files'
+footers hold, and — only where they change — the schema and layout.
 The log fixes the layout (``LAYOUT``): a handle adopts the logged one, so
 its constructor arguments count only when its write creates the table,
 and only an explicit override (``optimize``'s z-order, a MERGE's
@@ -181,8 +181,9 @@ class ParquetTable:
         # write against a missing table fails instead of creating it.
         self.create_if_needed = create_if_needed
         # Log snapshot as of ``_version`` (-1: no table yet), advanced only
-        # by _refresh, under _lock: an upload thread that outlived its
-        # batch timeout may still use this handle while the replay does.
+        # by _refresh, under _lock: readers on other threads (a parallel
+        # read, a read during a streaming commit) may refresh this handle
+        # while a write does.
         # _files maps each live file's relative path to [partition value,
         # bytes, rows] (partition value None: a delta), _dels each file's
         # deleted row positions; _epochs maps each committed epoch to what
@@ -336,7 +337,7 @@ class ParquetTable:
         "files_removed", "bytes_removed"}`` — the engine's consumer-metrics
         surface.  The reference polls Debezium MBeans for processed-row
         counts (MaxBatchSizeWait reads them, docs list the JMX names); here
-        every commit persisted the row count its write job observed, so
+        every commit persisted the row count its files' footers hold, so
         the metrics are exact, free, and survive restarts.  A keyed write
         counts the rows it wrote — a MERGE the batch rows that won,
         tombstones included; an SCD2 batch the recomputed history of the
@@ -452,8 +453,15 @@ class ParquetTable:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def _cluster_sort(self, df: DataFrame) -> DataFrame:
-        cols = [c for c in self.clustering_cols() if c in df.columns]
+    def _cluster_sort(self, df: DataFrame, *cols, partitioned: bool = True) -> DataFrame:
+        """``df`` sorted within its partitions by ``cols`` (default: the
+        clustering columns), led by the partition column when the write is
+        partitioned: Spark's planned write sorts by the partition column
+        an input not already sorted by it, and that sort would replace
+        this one."""
+        cols = list(cols) or [c for c in self.clustering_cols() if c in df.columns]
+        if partitioned:
+            cols = [self.partition_col(), *cols]
         return df.sortWithinPartitions(*cols) if cols else df
 
     def _zorder(self, rows: DataFrame):
@@ -498,45 +506,45 @@ class ParquetTable:
                 f"table {self.path} does not exist and create-if-needed is false"
             )
 
-    def _land(self, out: DataFrame, partitioned: bool = True) -> tuple[list[list], dict]:
+    def _land(self, out: DataFrame, partitioned: bool = True) -> tuple[list[list], list]:
         """Run the write action and ``_adopt`` its files; returns their log
-        rows and what the job observed.
+        rows and the deleted positions the job observed.
 
-        The job runs under the T7 retry budget and counts the rows it
-        writes with ``DataFrame.observe`` — no extra pass over the data;
-        when ``out`` carries ``POS_FILE``/``POS_ROW``, the same observation
-        collects the non-null positions, those columns are not written, and
-        neither is a row with a null partition value (a deletion only: the
-        filter that drops it sits above the observation).  Files land in a
-        private directory first: a failure at any step leaves the previous
-        version whole."""
+        The job runs under the T7 retry budget.  When ``out`` carries
+        ``POS_FILE``/``POS_ROW``, it collects the non-null positions with
+        ``DataFrame.observe`` — no extra pass over the data — and writes
+        neither those columns nor a row with a null partition value (a
+        deletion only: the filter that drops it sits above the
+        observation).  Files land in a private directory first: a failure
+        at any step leaves the previous version whole."""
         self._check_creatable()
         part_col = self.partition_col()
         token = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.path, f"_tmp_{token}")
-        metrics = [F.count(part_col).alias("rows")]
-        if POS_FILE in out.columns:
-            pos = F.when(F.col(POS_FILE).isNotNull(), F.struct(POS_FILE, POS_ROW))
-            metrics.append(F.collect_list(pos).alias("deleted"))
+        cols = [part_col] if partitioned else []
 
-        def attempt() -> Observation:
-            # fresh Observation per attempt: one Observation serves exactly
-            # one action, and a failed job must not leave a stale metric;
-            # nor may a failed attempt's files join the next one's.
+        def attempt() -> Observation | None:
+            # a failed attempt's files must not join the next one's
             shutil.rmtree(tmp, ignore_errors=True)
+            if POS_FILE not in out.columns:
+                self.write_files(out, tmp, cols)
+                return None
+            # fresh Observation per attempt: one Observation serves exactly
+            # one action, and a failed job must not leave a stale metric
             o = Observation()
-            rows = out.observe(o, *metrics)
-            if POS_FILE in out.columns:
-                rows = rows.filter(F.col(part_col).isNotNull()).drop(POS_FILE, POS_ROW)
-            self.write_files(rows, tmp, [part_col] if partitioned else [])
+            pos = F.when(F.col(POS_FILE).isNotNull(), F.struct(POS_FILE, POS_ROW))
+            rows = out.observe(o, F.collect_list(pos).alias("deleted"))
+            rows = rows.filter(F.col(part_col).isNotNull()).drop(POS_FILE, POS_ROW)
+            self.write_files(rows, tmp, cols)
             return o
 
         try:
-            seen = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}").get
+            o = with_retry(attempt, policy=self.retry_policy, describe=f"write {self.path}")
+            deleted = [] if o is None else o.get["deleted"]
             add = self._adopt(tmp, token, partitioned)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        return add, seen
+        return add, deleted
 
     def _adopt(self, src: str, token: str, partitioned: bool = True) -> list[list]:
         """Move the non-empty parquet files a write job left under ``src``
@@ -596,22 +604,24 @@ class ParquetTable:
         ``POS_FILE``/``POS_ROW`` as deleted, removes the files in
         ``remove`` and, unless ``replace`` is None, every live file of the
         partitions ``out`` writes and of ``replace`` (one listed there that
-        came back empty is replaced with nothing).  Returns the log rows of
-        the files it added."""
-        add, seen = self._land(out, partitioned)
+        came back empty is replaced with nothing).  The commit's row count
+        is the sum of the added files' footer counts.  Returns the log rows
+        of the files it added."""
+        add, deleted = self._land(out, partitioned)
         remove = list(remove)
         if replace is not None:
             parts = {a[1] for a in add} | {str(v) for v in replace}
             remove += [rel for rel, meta in self._files.items() if meta[0] in parts]
         by_name = {os.path.basename(rel): rel for rel in self._files}
         dels: dict[str, list[int]] = {}
-        for name, row in seen.get("deleted", []):
+        for name, row in deleted:
             dels.setdefault(by_name[name], []).append(row)
-        self._commit(add, remove, epoch_id, int(seen["rows"]), self._schema_for(out.schema), dels)
+        self._commit(add, remove, epoch_id, sum(a[3] for a in add), self._schema_for(out.schema),
+                     dels)
         return add
 
     def _one_delta(self, df: DataFrame) -> DataFrame:
-        return self._cluster_sort(df.coalesce(1))
+        return self._cluster_sort(df.coalesce(1), partitioned=False)
 
     def write_delta(self, out: DataFrame, epoch_id=None, remove: Iterable[str] = ()) -> None:
         """A keyed write (``out`` carries ``__kb``) in one commit, which
@@ -751,7 +761,7 @@ class ParquetTable:
             subset = subset.repartition(F.col(part_col), salt)
         else:
             subset = subset.repartition(F.col(part_col))
-        out = self._cluster_sort(subset) if z is None else subset.sortWithinPartitions(z)
+        out = self._cluster_sort(subset) if z is None else self._cluster_sort(subset, z)
         add = self._write(out, None, replace=values, remove=deltas)
         return len(set(values) | {a[1] for a in add})
 

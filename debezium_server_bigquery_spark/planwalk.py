@@ -10,9 +10,9 @@ pass is a cheap shuffle read; a MAP-ONLY child (projection straight off
 the scan) is re-executed from parquet, doubling whatever the projection
 costs.  Fix: ``operators/rank.py::ordered_output``.
 
-Previously duplicated verbatim in tests/test_plan_audit.py and
-tools/scan_range_sampling.py (ADVICE r11); both now import from here so
-the interactive scanner and the CI gate cannot drift.
+Previously duplicated verbatim in tests/test_plan_audit.py and the
+interactive scanner (ADVICE r11); both now import from here
+(``tools/plans.py scan`` is the scanner), so they cannot drift.
 """
 
 from __future__ import annotations

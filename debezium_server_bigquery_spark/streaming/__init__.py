@@ -1,6 +1,1 @@
 from debezium_server_bigquery_spark.streaming.pipeline import CdcPipeline  # noqa: F401
-from debezium_server_bigquery_spark.streaming.batch_size_wait import (  # noqa: F401
-    NoBatchSizeWait,
-    MaxBatchSizeWait,
-    DynamicBatchSizeWait,
-)

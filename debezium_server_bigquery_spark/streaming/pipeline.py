@@ -34,8 +34,8 @@ transforms and ``allow_field_addition=False``.  That path routes with
 one distinct query and writes the tables in a thread pool of up to
 ``concurrent_uploads`` (the reference bounds its uploads with a
 semaphore over virtual threads, BaseChangeConsumer.java:83-86), whose
-Spark jobs the local scheduler interleaves.  Either way the write phase
-runs in one job group per batch, which
+Spark jobs the local scheduler interleaves.  Either way the write phase,
+the dead-letter write included, runs in one job group per batch, which
 ``concurrent_uploads_timeout_minutes`` closes: on expiry the group's
 running jobs are cancelled and every later job in it, a retry included,
 is refused, so once a batch has failed none of its writes can still
@@ -83,6 +83,21 @@ _PLACEMENT = {
     "upsert": ("mode", "key_cols", "n_buckets"),
     "append": ("mode", "partition_type", "partition_field"),
 }
+
+
+def _check_destinations(dests) -> None:
+    """Raise ``ValueError`` unless every name in ``dests`` names a table
+    directly under the target root.  A null, empty, ``.``/``..`` or
+    ``/``-bearing destination (an event payload's, or one
+    ``destination-regexp-replace`` made) would commit the root itself, a
+    nested table that ``table_names`` does not list, or a table outside
+    the root."""
+    bad = sorted({repr(d) for d in dests if d in (None, "", ".", "..") or "/" in d})
+    if bad:
+        raise ValueError(
+            "batch rows with a null, empty or path-like destination have no table: "
+            + ", ".join(bad)
+        )
 
 
 @contextmanager
@@ -134,7 +149,8 @@ class CdcPipeline:
     concurrent_uploads: int = 4
     # debezium.sink.batch.concurrent-uploads.timeout-minutes
     # (CommonConfig.java:32-34): bound on every batch's writes, the shared
-    # append job or the per-destination uploads, at any concurrent_uploads;
+    # append job or the per-destination uploads and the dead-letter write,
+    # at any concurrent_uploads;
     # expiry cancels their Spark jobs, refuses any later one and fails the
     # micro-batch (the epoch replays, committed epochs make completed
     # tables no-ops).
@@ -216,8 +232,11 @@ class CdcPipeline:
         (``_PLACEMENT``) differs from this pipeline's config raises
         ``ValueError``: the shared append write partitions every
         destination by the pipeline's one partition column, and a keyed
-        write routes its keys by its own key columns and bucket count."""
+        write routes its keys by its own key columns and bucket count.  A
+        destination that names no table under the root raises too
+        (``_check_destinations``)."""
         if destination not in self.tables:
+            _check_destinations([destination])
             keyed = self._keyed()
             table = self._table(os.path.join(self.target_root, destination), keyed)
             layout = self._layout(keyed)
@@ -324,22 +343,26 @@ class CdcPipeline:
                 routed_src.unpersist()
 
     def _process_batch_inner(self, batch: DataFrame, epoch_id: int | None) -> None:
-        batch = self._divert_rejects(batch, epoch_id)
-        if self.heartbeat_skip:
-            batch = filter_heartbeats(batch, self.heartbeat_prefix)
-        batch = drop_tombstones(batch)
-        batch = self._coerce_meta(batch)
-        batch = rewrite_destination(
-            batch, self.destination_regexp, self.destination_regexp_replace
-        )
         # The field-addition gate, keyed writes and transforms all work on
         # one destination's slice; plain appends of every destination share
         # one write.
         shared = not (self._keyed() or self.transforms or not self.allow_field_addition)
-        write = self._append_all if shared else self._upload_each
+
+        def write() -> bool:
+            # the dead-letter write is one of the batch's writes: it runs
+            # inside the bound too
+            clean = self._divert_rejects(batch, epoch_id)
+            if self.heartbeat_skip:
+                clean = filter_heartbeats(clean, self.heartbeat_prefix)
+            clean = self._coerce_meta(drop_tombstones(clean))
+            clean = rewrite_destination(
+                clean, self.destination_regexp, self.destination_regexp_replace
+            )
+            return (self._append_all if shared else self._upload_each)(clean, epoch_id)
+
         landed = self._bounded(
             "upload of all destinations" if shared else "upload of each destination",
-            lambda: write(batch, epoch_id),
+            write,
         )
         if landed:
             self._maybe_compact(epoch_id)
@@ -390,7 +413,8 @@ class CdcPipeline:
         table that already committed it adopts nothing.  Tables that refuse
         the rows (missing under create-if-needed=false, or laid out
         otherwise: ``table_for``) are reported together after the others
-        commit, and a row with a null (or empty) destination fails the
+        commit, and a row whose destination names no table
+        (``_check_destinations``: null, empty, or path-like) fails the
         batch before any commit."""
         landing = self._table(self.target_root)  # layout only; never committed
         part_col = landing.partition_col()
@@ -413,8 +437,7 @@ class CdcPipeline:
                 for d in os.listdir(tmp)
                 if d.startswith("destination=")
             }
-            if _NULL_PARTITION in landed:
-                raise ValueError("batch rows with a null or empty destination have no table")
+            _check_destinations(None if d == _NULL_PARTITION else d for d in landed)
             schema = batch.drop("destination").schema
             epoch = None if epoch_id is None else f"{epoch_id}.0"
             failures = []
@@ -437,6 +460,7 @@ class CdcPipeline:
         dests = destinations_in(batch)
         if not dests:
             return False
+        _check_destinations(dests)
         sc = self.spark.sparkContext
         job_group = sc.getLocalProperty("spark.jobGroup.id")
         # the shared append write's epoch form: replays of batches

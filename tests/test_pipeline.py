@@ -519,15 +519,65 @@ def test_escaped_destination_round_trips_to_its_table(spark, tmp_path):
 
 
 def test_null_destination_fails_the_batch(spark, tmp_path):
-    """A row with a null destination fails the batch before any table
-    commits; no table named after Spark's null partition appears."""
-    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append", heartbeat_skip=False)
-    batch = _routed(spark, range(9)).withColumn(
-        "destination", F.when(F.col("id") == 4, F.lit(None)).otherwise(F.col("destination"))
-    )
-    with pytest.raises(ValueError, match="null"):
-        p.process_batch(batch, epoch_id=0)
-    assert os.listdir(p.target_root) == []
+    """A batch carrying a destination that names no table directly under
+    the root (null, empty, nested, absolute) fails before any table
+    commits, in append and upsert mode alike: nothing appears under the
+    root or outside it, the root's tables stay as they were, and
+    ``read_table`` refuses the name too."""
+    from debezium_server_bigquery_spark.operators.table import table_names
+
+    def tree(root):
+        return sorted(os.path.relpath(os.path.join(d, f), root)
+                      for d, _dirs, files in os.walk(root) for f in files)
+
+    outside = tmp_path / "outside"
+    for mode in ("append", "upsert"):
+        p = CdcPipeline(spark, str(tmp_path / f"tgt-{mode}"), mode=mode, heartbeat_skip=False,
+                        key_cols=("id",) if mode == "upsert" else ())
+
+        def batch(dest=None, bad=False):
+            df = _routed(spark, range(9)).withColumn(
+                "__source_ts_ns", F.col("__source_ts_ms") * 1_000_000)
+            if not bad:
+                return df
+            return df.withColumn("destination", F.when(
+                F.col("id") == 4, F.lit(dest).cast("string")).otherwise(F.col("destination")))
+
+        p.process_batch(batch(), epoch_id=0)
+        before = tree(p.target_root)
+        for bad in (None, "", "a/b", str(outside)):
+            with pytest.raises(ValueError, match="null, empty or path-like destination"):
+                p.process_batch(batch(bad, bad=True), epoch_id=1)
+            assert tree(p.target_root) == before, (mode, bad)
+            assert table_names(p.target_root) == ["d0", "d1", "d2"]
+            assert not outside.exists(), (mode, bad)
+            if bad is not None:
+                with pytest.raises(ValueError, match="path-like"):
+                    p.read_table(bad)
+
+
+def test_route_mode_batch_runs_every_job_in_its_group(spark, tmp_path):
+    """The dead-letter write is one of the batch's writes: a route-mode
+    batch runs its reject probe and DLQ append, like every other Spark job
+    of the batch, in the groups the pipeline sets (so the batch timeout
+    bounds them), and the reject still lands."""
+    schema = {"type": "struct", "fields": [
+        {"type": "int64", "field": "id"},
+        {"type": "string", "optional": True, "field": "destination"},
+        {"type": "int64", "optional": True, "field": "__ts_ms"},
+        {"type": "string", "optional": True, "field": "__op"},
+    ]}
+    good = [{"schema": schema, "payload": {"id": i, "destination": "t1",
+                                           "__ts_ms": 1700000000000 + i, "__op": "c"}}
+            for i in range(3)]
+    path = tmp_path / "events.ndjson"
+    path.write_text("\n".join([*(json.dumps(e) for e in good), "{broken"]) + "\n")
+    batch = read_cdc_ndjson(spark, str(path), schema_hint=schema, on_error="route")
+    p = CdcPipeline(spark, str(tmp_path / "tgt"), mode="append", rejects_destination="_rejects")
+    inner, outer = _jobs_in_groups(spark, lambda: p.process_batch(batch, epoch_id=0))
+    assert (inner >= 1, outer) == (True, 0)
+    assert [r.raw for r in p.rejects_table().read().collect()] == ["{broken"]
+    assert sorted(r.id for r in p.read_table("t1").collect()) == [0, 1, 2]
 
 
 @pytest.mark.parametrize(

@@ -277,7 +277,7 @@ def test_collect_sites_bounded():
 # the range partitioner's sampling pass (regex projections, JSON parsing,
 # even mapInPandas Python stages run twice — measured 2x end-to-end on
 # text_quality_score, round 11).  operators/rank.py::ordered_output is
-# the fix; tools/scan_range_sampling.py the interactive scanner.  Sorts
+# the fix; `tools/plans.py scan` the interactive scanner.  Sorts
 # whose child is a tiny just-written/readback table are exempt: the
 # double scan is O(result) and an extra exchange would only add latency.
 # Explicit allowlist (r12, VERDICT r11 ask #6): every query whose final
@@ -286,7 +286,7 @@ def test_collect_sites_bounded():
 # hiding in a pattern-skipped class.  The 11 e2e entries sort a parquet
 # readback of the tiny result table the e2e run just wrote (double scan
 # is O(result)); bpe_train_merges sorts the checkpointed k-row merge
-# table.  Regenerate candidates with tools/scan_range_sampling.py.
+# table.  Regenerate candidates with `tools/plans.py scan`.
 _MAP_ONLY_SORT_EXEMPT = {
     "bpe_train_merges",
     "cli_run_e2e",

@@ -127,6 +127,39 @@ def _append_table(spark, path, n=100, batches=1):
     return t, df
 
 
+def test_writes_keep_their_clustering_sort(spark, tmp_path):
+    """Each file of a partitioned write stores its rows in clustering
+    order: an append and a compaction of a time-partitioned table, and a
+    keyed table's first (bucketed) write.  Spark's planned write sorts an
+    input by its partition column unless the input is already sorted by
+    it, which would replace a sort that does not lead with it."""
+    from debezium_server_bigquery_spark.operators.table import ParquetTable
+
+    df = spark.range(3000).selectExpr(
+        "id", "CAST(rand(7) * 1000 AS BIGINT) AS k",
+        "timestamp_millis(1704067200000 + (id % 3) * 2678400000) AS __ts_ms",
+        "timestamp_millis(1704067200000 + CAST(rand(5) * 1e9 AS BIGINT)) AS __source_ts_ms",
+        "'c' AS __op",
+    ).repartition(3)
+
+    def clustered_files(t):
+        for rel in t.live_files():
+            rows = pq.read_table(os.path.join(t.path, rel), columns=["k", "__source_ts_ms"])
+            keys = list(zip(*(rows.column(c).to_pylist() for c in rows.column_names)))
+            assert keys == sorted(keys), rel
+        return len(t.live_files())
+
+    a = ParquetTable(spark, str(tmp_path / "a"), key_cols=("k",))
+    a.append(df, epoch_id=0)
+    a.append(df, epoch_id=1)
+    assert clustered_files(a) > 3
+    a.compact(max_files_per_partition=0)
+    assert clustered_files(a) == 3
+    u = ParquetTable(spark, str(tmp_path / "u"), key_cols=("k",), mode="upsert", n_buckets=4)
+    u.write_delta(u.with_partition_col(df), epoch_id=0)
+    assert clustered_files(u) == 4
+
+
 def test_optimize_zorder_overflow_fails_before_rewrite(spark, tmp_path):
     from debezium_server_bigquery_spark.cli import optimize
 
